@@ -68,7 +68,10 @@ def tbuild(name: str, mk, n: int = 2):
     """Guarded best-of-n for BUILD rows: ``mk(i)`` returns the zero-arg
     thunk for attempt ``i`` (attempts build into DISTINCT dirs — resume
     short-circuits a same-dir rebuild); each attempt starts behind the
-    quiet guard, min wins (interference only ever slows a run)."""
+    quiet guard, min wins (interference only ever slows a run). Returns
+    (best seconds, last attempt's index handle): read the directory an
+    attempt used from the handle's ``index_dir``, never by guessing the
+    attempt number."""
     best, out = None, None
     for i in range(max(1, n)):
         guard(name)
@@ -199,12 +202,12 @@ def main():
         if not os.environ.get("SPARK_GRAFT_SKIP_DOCS"):
             from engine.config import IndexConfig
             from engine.manifest import Manifest
-            t_merged, _ = tbuild(
+            t_merged, midx = tbuild(
                 "index_build_merged",
                 lambda i: lambda: build_index(
                     spark, corpus, f"{work}/merged{i}",
                     IndexConfig(pack_docs_per_slice=4096)))
-            man = Manifest.load(f"{work}/merged1")
+            man = Manifest.load(midx.index_dir)
             queries["index_build_merged"] = round(t_merged, 4)
             queries["merge_passes"] = man.n_passes
             queries["merged_turns_per_sec"] = round(n_turns / t_merged, 1)

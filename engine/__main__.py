@@ -57,9 +57,51 @@ def cmd_build(args) -> int:
     return 0
 
 
+def _search_flag_conflicts(args) -> "str | None":
+    """Flags a search form would silently ignore, as the error to print
+    (None when the combination is honored). Checked before any Spark
+    work, so a rejected command line costs no session start."""
+    if args.query_string:
+        ignored = [f for f, on in (
+            ("--query", args.query is not None),
+            ("--must/--should/--min-should-match",
+             any(x is not None for x in (args.must, args.should,
+                                         args.min_should_match))),
+            ("--dis-query", args.dis_query), ("--mm-field", args.mm_field),
+            ("--collapse", args.collapse), ("--sort-by", args.sort_by),
+            ("--asc", args.asc), ("--boost-field", args.boost_field),
+            ("--decay", args.decay), ("--boost-term", args.boost_term),
+            ("--synonyms", args.synonyms), ("--demote", args.demote),
+            ("--slop", args.slop), ("--after", args.after),
+            ("--snippets", args.snippets), ("--text", args.text),
+            ("--no-wand", args.no_wand), ("--exclude", args.exclude),
+            ("--mode", args.mode.upper() != "OR"),
+            ("--tie-breaker", args.tie_breaker != 0.0),
+            ("--match-type", args.match_type != "best_fields")) if on]
+        if ignored:
+            return (f"--query-string replaces --query and the shaping "
+                    f"flags (got {', '.join(ignored)}); it composes with "
+                    f"--k/--filter/--dv-filter/--min-match/"
+                    f"--max-expansions only")
+    if args.mm_field:
+        ignored = [f for f, on in (
+            ("--boost-field", args.boost_field),
+            ("--collapse", args.collapse), ("--sort-by", args.sort_by),
+            ("--snippets", args.snippets)) if on]
+        if ignored:
+            return (f"--mm-field composes with --exclude/--filter/"
+                    f"--dv-filter/--tie-breaker/--match-type only "
+                    f"(got {', '.join(ignored)})")
+    return None
+
+
 def cmd_search(args) -> int:
     from . import query as Q
     from .build import load_index
+    err = _search_flag_conflicts(args)
+    if err:
+        print(err, file=sys.stderr)
+        return 2
     spark = _spark(args)
     idx = load_index(spark, args.index_dir)
     bool_q = any(x is not None for x in
@@ -71,15 +113,6 @@ def cmd_search(args) -> int:
     if args.query_string:
         # the r5 mini-language: one string composes must/should/boost/
         # NOT/phrase/prefix/fuzzy (engine/querystring.py grammar)
-        if (args.query or bool_q or args.dis_query or args.mm_field
-                or args.collapse or args.sort_by or args.boost_field
-                or args.decay or args.boost_term or args.synonyms
-                or args.demote or args.slop or args.after
-                or args.snippets):
-            print("--query-string replaces --query and the shaping "
-                  "flags; it composes with --k/--filter/--dv-filter/"
-                  "--min-match/--max-expansions only", file=sys.stderr)
-            return 2
         from .querystring import QueryStringError, search_query_string
         try:
             top = search_query_string(idx, args.query_string, k=args.k,

@@ -191,6 +191,22 @@ def _parquet_rows(path: str) -> int:
         return -1
 
 
+def any_equal(field: str, values):
+    """pyarrow dataset filter ``field == v0 OR field == v1 ...`` as a
+    balanced OR tree. pyarrow 16 prunes parquet row groups (and hive
+    partition dirs) with an OR of equalities but NOT with ``is_in``: on a
+    2M-term sorted lexicon ``is_in`` kept 31 of 31 row groups (240 ms)
+    while the OR kept 3 (~30 ms)."""
+    import pyarrow.dataset as pads
+    exprs = [pads.field(field) == v for v in values]
+    if not exprs:
+        raise ValueError("any_equal needs at least one value")
+    while len(exprs) > 1:
+        exprs = [exprs[i] | exprs[i + 1] if i + 1 < len(exprs) else exprs[i]
+                 for i in range(0, len(exprs), 2)]
+    return exprs[0]
+
+
 def _acfg_dict(cfg: IndexConfig) -> dict:
     """Analyzer hooks as a manifest-storable dict ({} when no-op)."""
     a = cfg.analyzer
@@ -576,19 +592,43 @@ class PackedIndex:
             self._lex_df = self.spark.read.parquet(f"{self.index_dir}/lexicon")
         return self._lex_df
 
+    # In-process pyarrow views of the same files, for driver-side reads
+    # that must not pay a Spark job (lookup_terms, and the local query
+    # route in engine/query.py). Cached like postings()/lexicon(): file
+    # discovery and parquet footers are read once per handle; refresh()
+    # drops them, since compact() rewrites both.
+    def postings_dataset(self):
+        if getattr(self, "_post_ds", None) is None:
+            import pyarrow.dataset as pads
+            self._post_ds = pads.dataset(self.postings_path,
+                                         format="parquet",
+                                         partitioning="hive")
+        return self._post_ds
+
+    def lexicon_dataset(self):
+        if getattr(self, "_lex_ds", None) is None:
+            import pyarrow.dataset as pads
+            self._lex_ds = pads.dataset(f"{self.index_dir}/lexicon",
+                                        format="parquet")
+        return self._lex_ds
+
     def lookup_terms(self, terms: list[str]) -> dict[str, dict]:
-        """term -> {df, idf, bucket, max_tf} for query terms only
-        (predicate pushdown on term; tiny collect). Results are memoized
-        driver-side — query vocab is tiny vs the lexicon, so repeated
-        terms skip the lookup job entirely (absent terms memoized too)."""
+        """term -> {df, idf, bucket, max_tf} for query terms only, read
+        in-process from the term-sorted lexicon files (an OR of term
+        equalities prunes row groups on their min/max stats; no Spark
+        job). Results are memoized driver-side — query vocab is tiny vs
+        the lexicon, so repeated terms skip the read entirely (absent
+        terms memoized too)."""
         if not terms:
             return {}
         cache = getattr(self, "_term_cache", None)
         if cache is None:
             cache = self._term_cache = {}
-        missing = [t for t in terms if t not in cache]
+        missing = sorted({t for t in terms if t not in cache})
         if missing:
-            rows = self.lexicon().filter(F.col("term").isin(missing)).collect()
+            rows = self.lexicon_dataset().to_table(
+                columns=["term", "df", "idf", "bucket", "max_tf"],
+                filter=any_equal("term", missing)).to_pylist()
             for r in rows:
                 cache[r["term"]] = {"df": r["df"], "idf": r["idf"],
                                     "bucket": r["bucket"], "max_tf": r["max_tf"]}
@@ -744,6 +784,8 @@ class PackedIndex:
         self._plan_cache = {}  # prepared plans embed idf/avgdl closures
         self._post_df = None
         self._lex_df = None
+        self._post_ds = None
+        self._lex_ds = None
         self._corpus_df = None
         self._corpus_df_m = None
 

@@ -172,9 +172,11 @@ def percolate(qindex, doc_text: str) -> DataFrame:
 
 def _live_postings(qindex) -> "DataFrame | None":
     """The percolator's scan base: the final segment plus any
-    completed increment segments (each read infers its own bucket
-    partitioning; pruning pushes into every branch). None when no
-    segment exists yet."""
+    completed increment segments, each read from its own path (each
+    read infers its own bucket partitioning; pruning pushes into every
+    branch) — never through ``qindex.postings()``, which resolves the
+    manifest's final segment and so misses a percolator whose only
+    segment is an increment. None when no segment exists yet."""
     from .manifest import Manifest, _success_marker
     man = Manifest.load(qindex.index_dir)
     paths = []
@@ -188,8 +190,6 @@ def _live_postings(qindex) -> "DataFrame | None":
                   and s.status == "complete" and _success_marker(s.path)]
     if not paths:
         return None
-    if len(paths) == 1:
-        return qindex.postings()
     out = None
     for p in paths:
         d = qindex.spark.read.parquet(p)

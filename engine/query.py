@@ -53,11 +53,12 @@ def _empty_topk(spark, with_qid: bool = False,
     ``collect()`` schedules a real (empty) Spark job — measured ~0.6 s of
     pure scheduling on the bench box, which was the entire cost of the
     unknown-term query q04 (VERDICT r2 'What's wrong #2'). ``range(0)``
-    collapses to an empty LocalRelation: collect is driver-only."""
-    cols = ([F.lit("").alias("qid")] if with_qid else []) + [
-        F.col("id").alias("doc_id"),
-        F.lit(0.0).cast("double").alias(score_col)]
-    return spark.range(0).select(*cols)
+    still schedules one (empty) job in Spark 4.1; a literal row under
+    ``WHERE false`` is pruned to an empty LocalRelation, so collect is
+    driver-only."""
+    cols = (["'' AS qid"] if with_qid else []) + [
+        "0L AS doc_id", f"0.0D AS {score_col}"]
+    return spark.sql(f"SELECT {', '.join(cols)} WHERE false")
 
 
 def bm25_score_col(tf_col, dl_col, idf_col, qtf_col, avgdl: float,
@@ -585,12 +586,14 @@ def search_dis_max(index, queries: list, k: int = 10,
       rule). Routing is exhaustive-only: block-max bounds are per-term
       sums, not per-subquery maxima.
 
-    Plan: ONE job — the union of all subqueries' terms rides one
-    pruned postings scan; the shard kernel decodes each (term, shard)
-    payload ONCE, scatter-adds the shared tf-factor into every
-    subquery's accumulator scaled by that subquery's qtf, combines the
-    <= N width-bounded accumulators, and emits <= k rows; global
-    TakeOrderedAndProject."""
+    Plan: the union of all subqueries' terms rides one pruned postings
+    read; the shard kernel decodes each (term, shard) payload ONCE,
+    scatter-adds the shared tf-factor into every subquery's accumulator
+    scaled by that subquery's qtf, combines the <= N width-bounded
+    accumulators, and emits <= k rows; global top-k. Small queries run
+    on the driver with no Spark job, larger ones as ONE job ending in
+    TakeOrderedAndProject (``_run_shards``; ``doc_filter`` always takes
+    the job)."""
     _warn_if_stale(index)
     queries = [str(q) for q in queries]
     if not queries:
@@ -607,6 +610,7 @@ def _search_dis_max_impl(index, queries: list, k: int, tie: float,
                          exclude: str | None,
                          doc_filter: str | None,
                          dv_filter: str | None) -> DataFrame:
+    k = _doc_limit(index, k)
     spark = index.spark
     acfg = index.cfg.analyzer
     sub_qtfs = [query_terms(q, acfg) for q in queries]
@@ -628,11 +632,7 @@ def _search_dis_max_impl(index, queries: list, k: int, tie: float,
             for s in sub_qtfs]
     idfs = {t: float(lex[t]["idf"]) for t in known}
     scan_terms = sorted(set(known) | set(neg))
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select("term", "shard", "df", "doc_ids", "tfs", "dls"))
+    cols = ["term", "shard", "df", "doc_ids", "tfs", "dls"]
     width = index.shard_width
     cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
             "avgdl": index.avgdl}
@@ -730,14 +730,13 @@ def _search_dis_max_impl(index, queries: list, k: int, tie: float,
                    - shard * width)
             return _kernel(post_pdf, allowed_loc=loc)
 
-        scored = (post.groupBy("shard")
+        scored = (_pruned_postings(index, lex, scan_terms, cols)
+                  .groupBy("shard")
                   .cogroup(allowed.groupBy("shard"))
                   .applyInPandas(fnf, "doc_id long, score double"))
-    else:
-        scored = (post.groupBy("shard")
-                  .applyInPandas(lambda key, pdf: _kernel(pdf),
-                                 "doc_id long, score double"))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _run_shards(index, lex, scan_terms, cols,
+                       lambda key, pdf: _kernel(pdf), k)
 
 
 def search_multi_match(index, query: str, fields=None, k: int = 10,
@@ -1833,7 +1832,8 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
                  min_should: int = 0,
                  allowed_ids: "list[int] | None" = None,
                  demote: "tuple[str, float] | None" = None) -> DataFrame:
-    """BM25 top-k over the packed on-disk index — ONE Spark job.
+    """BM25 top-k over the packed on-disk index — scored on the driver
+    with NO Spark job when the query is small, else in ONE Spark job.
 
     ``use_wand``: ``"auto"`` (default) routes OR queries through
     Block-Max WAND only when the driver-side cost gate says pruning can
@@ -1860,14 +1860,23 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
     candidate set, so a selective filter SHRINKS pruning-phase work.
 
     Plan: memoized driver-side lexicon lookup of the <= |query| terms
-    (one tiny term-pushed job the FIRST time a term is seen; zero jobs
-    after) gives idf + exact bucket per term -> postings scan pruned to
-    those buckets (partition pruning) and terms (predicate pushdown) ->
-    per-shard Arrow scorer (idf inlined via the task closure — no lexicon
-    join, no broadcast exchange in the query job) emits <= k rows ->
-    orderBy(score desc, doc_id).limit(k) (TakeOrderedAndProject).
+    (an in-process pyarrow read of the term-sorted lexicon the FIRST
+    time a term is seen; nothing after) gives df + idf + exact bucket
+    per term -> postings pruned to those buckets (partition pruning) and
+    terms (predicate pushdown) -> per-shard scorer (idf inlined via the
+    closure — no lexicon join, no broadcast exchange) emits <= k rows per
+    shard -> global top-k by (score desc, doc_id asc). ``_run_shards``
+    picks the executor from the posting mass (sum of df over the scan
+    terms): at most LOCAL_MAX_POSTINGS, the driver reads the pruned rows
+    with pyarrow, runs the same scorer per shard, and returns a
+    LocalRelation (``search*()`` does the work; ``collect()`` runs no
+    job); above it, the scorer runs in applyInPandas tasks and the plan
+    ends in TakeOrderedAndProject. ``doc_filter``/``allowed_ids``
+    (cogrouped with a corpus-side relation) and ``collapse`` (a window
+    tail) always take the distributed plan.
     """
     from .build import PackedIndex  # noqa: F401 (typing)
+    k = _doc_limit(index, k)
     spark = index.spark
     mode = mode.upper()
     # docvalue-served restriction/boost (engine/docvalues.py): dv_filter
@@ -1964,7 +1973,6 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
     idfs = {t: float(lex[t]["idf"]) for t in known}
     n_required = len(terms)
     scan_terms = sorted(set(known) | set(neg) | set(dem))
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
     if mm is not None:
         if mm > len(known):
             return empty  # fewer known terms than the floor: no doc can hit
@@ -2005,10 +2013,6 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
                     and seed_df * WAND_SEED_FRAC < mass)
     cols = ["term", "shard", "df", "doc_ids", "tfs", "dls"] + (
         ["blocks", "max_tf"] if use_wand and mode == "OR" else [])
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select(*cols))
     width = index.shard_width
     cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b, "avgdl": index.avgdl}
     neg_set = frozenset(neg)
@@ -2133,7 +2137,8 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
                                             demote_factor=dem_factor)
             return r if r is not None else empty_r
 
-        scored = (post.groupBy("shard")
+        scored = (_pruned_postings(index, lex, scan_terms, cols)
+                  .groupBy("shard")
                   .cogroup(allowed.groupBy("shard"))
                   .applyInPandas(fn2, out_schema))
         return _finish(scored)
@@ -2186,9 +2191,10 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
             return r if r is not None else pd.DataFrame(
                 {c: [] for c in out_cols})
 
-    scored = (post.groupBy("shard")
-              .applyInPandas(fn, out_schema))
-    return _finish(scored)
+    if collapse is not None:
+        return _finish(_pruned_postings(index, lex, scan_terms, cols)
+                       .groupBy("shard").applyInPandas(fn, out_schema))
+    return _run_shards(index, lex, scan_terms, cols, fn, k)
 
 
 # WAND routing cost gate (shared by the single-query and batch paths).
@@ -2208,6 +2214,82 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
 # the bar, which is exactly the regime block-max pruning was built for.
 WAND_MIN_SHARD_POSTINGS = 1 << 18  # min posting mass per scorer task
 WAND_SEED_FRAC = 8                 # rarest list must be < mass / this
+
+# Executor cost gate (the query-side twin of the WAND gate above): a
+# query whose posting mass (sum of lexicon df over its scan terms, known
+# driver-side from lookup_terms — the check costs nothing) is at most
+# this many postings is scored on the driver, with no Spark job. The
+# shard kernel runs ~110 ns/posting on one core, so 2^20 postings cost
+# ~0.1 s in process — well under the ~0.5 s fixed cost of the Spark job
+# that the distributed plan pays (scheduling + Python task start), which
+# the kernel only amortizes for larger payloads.
+LOCAL_MAX_POSTINGS = 1 << 20
+
+
+def _doc_limit(index, k: int) -> int:
+    """``k`` clipped to the index's doc-id ceiling. A top-k never holds
+    more rows than the index has docs, while Spark's
+    TakeOrderedAndProject sizes each task's selection buffer from the
+    limit (2k slots): ``k = 10**9``, the usual "whole ranking" request,
+    asked for ~8 GB of heap per task and killed the driver JVM."""
+    return min(int(k), max(int(index.n_docs), int(index.n_ids or 0)))
+
+
+def _pruned_postings(index, lex: dict, scan_terms: list,
+                     cols: list) -> DataFrame:
+    """The scoring scan: postings pruned to the scan terms' buckets
+    (partition pruning) and terms (parquet predicate pushdown), reading
+    only ``cols``."""
+    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
+    return (index.postings()
+            .filter(F.col("bucket").isin(buckets)
+                    & F.col("term").isin(scan_terms))
+            .select(*cols))
+
+
+def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
+                k: int) -> DataFrame:
+    """Run the per-shard scorer ``fn(key, post_pdf) -> (doc_id, score)
+    rows`` over the pruned postings and return the global top-k in the
+    frozen (score desc, doc_id asc) order. Two routes, one ``fn``:
+
+    * posting mass <= LOCAL_MAX_POSTINGS: the driver reads the pruned
+      rows with pyarrow (bucket-partition and term filters), calls
+      ``fn`` once per shard, and cuts the top-k in pandas. The result
+      is a literal VALUES relation (a LocalRelation), so ``collect()``
+      runs no Spark job whatever the Arrow setting. Scores are
+      bit-identical to the distributed route: same kernel, same
+      per-shard input rows.
+    * above it: groupBy(shard).applyInPandas(fn) ->
+      orderBy(score desc, doc_id asc).limit(k), planned as
+      FlatMapGroupsInPandas + TakeOrderedAndProject.
+    """
+    mass = sum(int(lex[t]["df"]) for t in scan_terms)
+    if mass > LOCAL_MAX_POSTINGS:
+        return (_pruned_postings(index, lex, scan_terms, cols)
+                .groupBy("shard").applyInPandas(fn, "doc_id long, score double")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    import pandas as pd
+    from pyspark.sql.types import DoubleType
+
+    from .build import any_equal
+    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
+    pdf = index.postings_dataset().to_table(
+        columns=cols, filter=any_equal("bucket", buckets)
+        & any_equal("term", scan_terms)).to_pandas()
+    parts = [fn((shard,), g.reset_index(drop=True))
+             for shard, g in pdf.groupby("shard", sort=True)]
+    parts = [p for p in parts if len(p)]
+    if not parts:
+        return _empty_topk(index.spark)
+    top = (pd.concat(parts, ignore_index=True)
+           .sort_values(["score", "doc_id"], ascending=[False, True])
+           .head(k))
+    dbl = DoubleType()
+    rows = ",".join(f"({int(d)}L,{_sql_scalar(s, dbl)})"
+                    for d, s in zip(top["doc_id"], top["score"]))
+    return index.spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(doc_id, score)")
 
 
 def wand_routes(index, query: str) -> bool:

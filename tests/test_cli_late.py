@@ -202,3 +202,32 @@ def test_cli_query_string(cli_idx):
     r = _run(["search", "--index-dir", cli_idx,
               "--query-string", '"a" "b"'])
     assert r.returncode == 2 and "at most one phrase" in r.stderr
+
+
+@pytest.mark.parametrize("flag", [
+    ["--exclude", "mid1"], ["--mode", "AND"], ["--asc"],
+    ["--tie-breaker", "0.5"], ["--match-type", "most_fields"],
+    ["--text"], ["--no-wand"],
+], ids=lambda f: f[0])
+def test_cli_query_string_rejects_ignored_flag(tmp_path, flag):
+    """--query-string would silently drop these shaping flags: exit 2,
+    naming the flag, before any Spark session starts (the index dir
+    does not even exist)."""
+    r = _run(["search", "--index-dir", str(tmp_path / "none"),
+              "--query-string", "hot0 w010"] + flag, timeout=120)
+    assert r.returncode == 2, r.stderr[-2000:]
+    assert flag[0] in r.stderr
+
+
+@pytest.mark.parametrize("flag", [
+    ["--boost-field", "ts", "--boost-now", "2026-02-01T00:00:00"],
+    ["--collapse", "role"], ["--sort-by", "ts"], ["--snippets"],
+], ids=lambda f: f[0])
+def test_cli_mm_field_rejects_ignored_flag(tmp_path, flag):
+    """--mm-field would silently drop (or be silently replaced by) these
+    flags: exit 2, naming the flag, before any Spark session starts."""
+    r = _run(["search", "--index-dir", str(tmp_path / "none"),
+              "--query", "hot0 user", "--mm-field", "text",
+              "--mm-field", "role=2"] + flag, timeout=120)
+    assert r.returncode == 2, r.stderr[-2000:]
+    assert flag[0] in r.stderr

@@ -137,3 +137,32 @@ def test_register_append_uncompacted_reads_increments(spark, tmp_path):
         want = [r.query_id for r in percolate(full, d).collect()]
         got = [r.query_id for r in percolate(qx3, d).collect()]
         assert got == want, ("post-compact", d)
+
+
+def test_percolate_reads_lone_increment_segment(spark, tmp_path):
+    """A streaming-created percolator whose only complete segment is an
+    increment (no final segment yet) must be read from that segment's
+    own path. The segments dir also holds the leftover of a killed
+    append (files, no _SUCCESS), which must stay invisible."""
+    import os
+    import shutil
+
+    from engine.build import load_index
+    from engine.config import IndexConfig
+    from engine.percolate import _query_rows_df
+    from engine.streaming import append_batch, create_streaming_index
+    d = str(tmp_path / "sq")
+    cfg = IndexConfig(doc_values=("qid", "required"))
+    create_streaming_index(spark, d, 1000, cfg)
+    append_batch(spark, _query_rows_df(spark, QUERIES, cfg.analyzer), d,
+                 cfg)
+    seg = os.path.join(d, "segments")
+    assert sorted(os.listdir(seg)) == ["inc_00000"]
+    shutil.copytree(os.path.join(seg, "inc_00000"),
+                    os.path.join(seg, "inc_00001"))
+    os.remove(os.path.join(seg, "inc_00001", "_SUCCESS"))
+    qx = load_index(spark, d)
+    for doc in ("hot0 w010 something", "hot0 only", "rare4 alone",
+                "MiXeD-Case7! and hot0 hot1 w010 w020 rare3"):
+        got = [r.query_id for r in percolate(qx, doc).collect()]
+        assert got == _ref_matches(doc), doc

@@ -1,7 +1,9 @@
 """Physical-plan guards (SURVEY.md §4): the judge-able optimizer
 properties stay true — partition pruning, predicate pushdown, column
 pruning on the pruned postings scan; TakeOrderedAndProject top-k on both
-query paths. See PLANS.md for captured plans."""
+query paths (the packed path's distributed route — small queries take
+the driver-local route, a LocalTableScan). See PLANS.md for captured
+plans."""
 
 import re
 
@@ -37,11 +39,23 @@ def test_postings_scan_pruned(plan_idx):
     assert m and "blocks" not in m.group(1)  # column pruning
 
 
-def test_topk_is_take_ordered(plan_idx, flat_index):
+def test_topk_is_take_ordered(plan_idx, flat_index, monkeypatch):
+    # the distributed route (posting mass above LOCAL_MAX_POSTINGS)
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
     packed = Q.search(plan_idx, "hot0 rare3", k=10)
     assert "TakeOrderedAndProject" in _formatted(packed)
     flat = Q.search_flat(flat_index, "hot0 rare3", k=10)
     assert "TakeOrderedAndProject" in _formatted(flat)
+
+
+def test_small_query_is_local_table_scan(plan_idx, monkeypatch):
+    """Below LOCAL_MAX_POSTINGS the top-k is computed on the driver and
+    the plan is a bare literal relation: no file scan, no Python UDF."""
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    plan = _formatted(Q.search(plan_idx, "hot0 rare3", k=10))
+    assert "LocalTableScan" in plan, plan
+    assert "Scan parquet" not in plan and "InPandas" not in plan, plan
 
 
 def test_ann_layout_scan_is_partition_pruned(spark, tmp_path_factory):
@@ -214,11 +228,14 @@ def test_materialize_pruned_after_delete(spark, plan_idx, corpus_pdf,
 
 
 def test_late_r4_ops_ride_the_pruned_scan(spark, tmp_path_factory,
-                                          corpus_df):
+                                          corpus_df, monkeypatch):
     """The late-r4 operators (dis_max, composite, filters, percolate)
     all build on the SAME bucket-pruned, term-pushed postings scan —
-    plan-asserted here so a refactor can't silently widen their reads."""
+    plan-asserted here so a refactor can't silently widen their reads.
+    dis_max is pinned to its distributed route (LOCAL_MAX_POSTINGS 0)."""
     from engine.build import build_index
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
     from engine.matchops import match_composite, match_filters
     d = str(tmp_path_factory.mktemp("plans_late") / "idx")
     idx = build_index(spark, corpus_df, d,
@@ -265,11 +282,14 @@ def test_match_all_plan_scan_free(plan_idx):
 
 
 def test_multi_match_and_query_string_plans(spark, corpus_df,
-                                            tmp_path_factory):
+                                            tmp_path_factory, monkeypatch):
     """r5 surface keeps the frozen plan shape: multi_match's one scan is
     partition-pruned to the PREFIXED terms' buckets with the term list
-    pushed, and both new dispatchers end in TakeOrderedAndProject."""
+    pushed, and both new dispatchers end in TakeOrderedAndProject (the
+    search() dispatch pinned to its distributed route)."""
     from engine.build import build_index
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
     from engine.config import IndexConfig
     from engine.querystring import search_query_string
     d = str(tmp_path_factory.mktemp("plans_mm") / "idx")
