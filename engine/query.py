@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .analyzer import tokenize_py
 from .build import FlatIndex
@@ -53,12 +53,13 @@ def _empty_topk(spark, with_qid: bool = False,
     ``collect()`` schedules a real (empty) Spark job — measured ~0.6 s of
     pure scheduling on the bench box, which was the entire cost of the
     unknown-term query q04 (VERDICT r2 'What's wrong #2'). ``range(0)``
-    still schedules one (empty) job in Spark 4.1; a literal row under
-    ``WHERE false`` is pruned to an empty LocalRelation, so collect is
+    still schedules one (empty) job in Spark 4.1; ``_values_relation``
+    with no rows is pruned to an empty LocalRelation, so collect is
     driver-only."""
-    cols = (["'' AS qid"] if with_qid else []) + [
-        "0L AS doc_id", f"0.0D AS {score_col}"]
-    return spark.sql(f"SELECT {', '.join(cols)} WHERE false")
+    fields = ([T.StructField("qid", T.StringType())] if with_qid else []) + [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField(score_col, T.DoubleType())]
+    return _values_relation(spark, fields, [])
 
 
 def bm25_score_col(tf_col, dl_col, idf_col, qtf_col, avgdl: float,
@@ -1867,11 +1868,12 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
     closure — no lexicon join, no broadcast exchange) emits <= k rows per
     shard -> global top-k by (score desc, doc_id asc). ``_run_shards``
     picks the executor from the posting mass (sum of df over the scan
-    terms): at most LOCAL_MAX_POSTINGS, the driver reads the pruned rows
-    with pyarrow, runs the same scorer per shard, and returns a
-    LocalRelation (``search*()`` does the work; ``collect()`` runs no
-    job); above it, the scorer runs in applyInPandas tasks and the plan
-    ends in TakeOrderedAndProject. ``doc_filter``/``allowed_ids``
+    terms): at most LOCAL_MAX_POSTINGS, with a top-k of at most
+    LOCAL_MAX_ROWS rows, the driver reads the pruned rows with pyarrow,
+    runs the same scorer per shard, and returns a LocalRelation
+    (``search*()`` does the work; ``collect()`` runs no job); otherwise
+    the scorer runs in applyInPandas tasks and the plan ends in
+    TakeOrderedAndProject. ``doc_filter``/``allowed_ids``
     (cogrouped with a corpus-side relation) and ``collapse`` (a window
     tail) always take the distributed plan.
     """
@@ -2218,12 +2220,27 @@ WAND_SEED_FRAC = 8                 # rarest list must be < mass / this
 # Executor cost gate (the query-side twin of the WAND gate above): a
 # query whose posting mass (sum of lexicon df over its scan terms, known
 # driver-side from lookup_terms — the check costs nothing) is at most
-# this many postings is scored on the driver, with no Spark job. The
-# shard kernel runs ~110 ns/posting on one core, so 2^20 postings cost
-# ~0.1 s in process — well under the ~0.5 s fixed cost of the Spark job
-# that the distributed plan pays (scheduling + Python task start), which
-# the kernel only amortizes for larger payloads.
-LOCAL_MAX_POSTINGS = 1 << 20
+# this many postings is scored on the driver, with no Spark job. Set at
+# the measured crossover: both routes forced over a sweep of OR and AND
+# queries on the 650k-turn fixture index (32 shards, local[4], 4-core
+# box, median of 5). With the exhaustive kernel the driver won at every
+# mass up to 9.5M postings (0.13 vs 0.41 s at 1M, 0.43 vs 0.89 s at 4M,
+# 0.93 vs 1.24 s at 7.9M) and lost at 12.9M (3.1 vs 1.9 s). With the
+# WAND kernel (auto above WAND_MIN_SHARD_POSTINGS per shard, or forced)
+# the routes tie near 2.9M (0.80 vs 0.78 s) and the driver loses at
+# 5.7M (1.26 vs 1.20 s). At 2^22 the exhaustive kernel still wins by
+# half and the WAND kernel loses by under 5%. Memory does not bind: the
+# driver's peak RSS grew ~11 bytes per posting (140 MB at 12.9M).
+LOCAL_MAX_POSTINGS = 1 << 22
+# The local route also caps its result rows: its top-k is a literal
+# VALUES relation (_values_relation), which Spark parses and analyzes at
+# ~0.1 ms a row (0.02 s at 10 rows, 0.23 s at 2,000, 0.71 s at 8,000).
+# A whole ranking (k = 10**9) of 4,365 rows took 0.48 s locally against
+# 0.43 s distributed; 2^11 rows stays on the driver's side of that.
+LOCAL_MAX_ROWS = 1 << 11
+
+_TOPK_FIELDS = [T.StructField("doc_id", T.LongType()),
+                T.StructField("score", T.DoubleType())]
 
 
 def _doc_limit(index, k: int) -> int:
@@ -2253,24 +2270,24 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
     rows`` over the pruned postings and return the global top-k in the
     frozen (score desc, doc_id asc) order. Two routes, one ``fn``:
 
-    * posting mass <= LOCAL_MAX_POSTINGS: the driver reads the pruned
-      rows with pyarrow (bucket-partition and term filters), calls
-      ``fn`` once per shard, and cuts the top-k in pandas. The result
-      is a literal VALUES relation (a LocalRelation), so ``collect()``
-      runs no Spark job whatever the Arrow setting. Scores are
-      bit-identical to the distributed route: same kernel, same
-      per-shard input rows.
-    * above it: groupBy(shard).applyInPandas(fn) ->
+    * posting mass <= LOCAL_MAX_POSTINGS and at most LOCAL_MAX_ROWS
+      result rows (a top-k holds at most min(k, mass) rows): the driver
+      reads the pruned rows with pyarrow (bucket-partition and term
+      filters), calls ``fn`` once per shard, and cuts the top-k in
+      pandas. The result is a literal VALUES relation (a LocalRelation),
+      so ``collect()`` runs no Spark job whatever the Arrow setting.
+      Scores are bit-identical to the distributed route: same kernel,
+      same per-shard input rows.
+    * otherwise: groupBy(shard).applyInPandas(fn) ->
       orderBy(score desc, doc_id asc).limit(k), planned as
       FlatMapGroupsInPandas + TakeOrderedAndProject.
     """
     mass = sum(int(lex[t]["df"]) for t in scan_terms)
-    if mass > LOCAL_MAX_POSTINGS:
+    if mass > LOCAL_MAX_POSTINGS or min(k, mass) > LOCAL_MAX_ROWS:
         return (_pruned_postings(index, lex, scan_terms, cols)
                 .groupBy("shard").applyInPandas(fn, "doc_id long, score double")
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     import pandas as pd
-    from pyspark.sql.types import DoubleType
 
     from .build import any_equal
     buckets = sorted({lex[t]["bucket"] for t in scan_terms})
@@ -2285,11 +2302,9 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
     top = (pd.concat(parts, ignore_index=True)
            .sort_values(["score", "doc_id"], ascending=[False, True])
            .head(k))
-    dbl = DoubleType()
-    rows = ",".join(f"({int(d)}L,{_sql_scalar(s, dbl)})"
-                    for d, s in zip(top["doc_id"], top["score"]))
-    return index.spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(doc_id, score)")
+    return _values_relation(
+        index.spark, _TOPK_FIELDS,
+        list(zip(top["doc_id"].tolist(), top["score"].tolist())))
 
 
 def wand_routes(index, query: str) -> bool:
@@ -3736,6 +3751,31 @@ def _sql_scalar(v, dt) -> str:
     return None
 
 
+def _values_relation(spark, fields, rows) -> DataFrame | None:
+    """``rows`` (one value per field, typed by ``fields``) as ``SELECT *
+    FROM VALUES ... AS t(cols)``: ONE SQL string, so building it costs
+    one py4j round trip, and a LocalRelation, so collecting it runs no
+    Spark job (``range(1).select(explode(...))`` and ``createDataFrame``
+    each still schedule one in Spark 4.1). No rows: one typed dummy row
+    under ``WHERE false``, pruned to an empty LocalRelation with the
+    same non-nullable columns. Returns None when a value has no
+    ``_sql_scalar`` form, so callers can fall back. Parsing and analysis
+    cost grows with the row count: keep it metadata-sized (the local
+    route caps it at LOCAL_MAX_ROWS)."""
+    if rows:
+        lits = [[_sql_scalar(v, f.dataType) for v, f in zip(r, fields)]
+                for r in rows]
+    else:
+        lits = [[_sql_scalar("" if f.dataType.simpleString() == "string"
+                             else 0, f.dataType) for f in fields]]
+    if any(x is None for row in lits for x in row):
+        return None
+    body = ",".join("(" + ",".join(row) + ")" for row in lits)
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT * FROM VALUES {body} AS t({names}){where}")
+
+
 def _collect_topk(index, topk: DataFrame):
     """Driver-side collect of a top-k result (metadata-sized by contract)
     + a broadcast-ready DataFrame carrying the top-k's OWN columns plus
@@ -3743,32 +3783,22 @@ def _collect_topk(index, topk: DataFrame):
     ranking whatever its columns are (score, n_phrase, qid+score, ...;
     ADVICE r3: the old score-only select crashed on phrase results).
 
-    The small side is built as a LITERAL expression rather than
-    ``createDataFrame(rows)``: a Python-rows DataFrame plans as Scan
+    The small side is a literal relation (``_values_relation``) rather
+    than ``createDataFrame(rows)``: a Python-rows DataFrame plans as Scan
     ExistingRDD, whose broadcast build pays a Python-worker round trip
-    on EVERY downstream execution (~0.4 s/query measured); the literal
-    form is a jobless JVM-side LocalRelation-equivalent. The whole
-    ``explode(array(named_struct(...)))`` is ONE SQL string parsed by
-    one ``F.expr`` — per-node column composition (k rows x |cols|
-    ``F.lit().cast()`` + struct/array calls) paid one py4j round trip
-    per AST node, and plan CONSTRUCTION (not execution, 0.04 s) was
+    on EVERY downstream execution (~0.4 s/query measured), and per-node
+    column composition (k rows x |cols| ``F.lit().cast()`` + struct/array
+    calls) paid one py4j round trip per AST node — plan CONSTRUCTION was
     ~0.5 s of every materialization. Non-scalar top-k columns (none
     exist today) fall back to the per-node form."""
     rows = topk.collect()
     if not rows:
         return rows, None
     fields = topk.schema.fields
-    lits = [[_sql_scalar(r[f.name], f.dataType) for f in fields]
-            for r in rows]
-    if all(x is not None for row in lits for x in row):
-        structs = ",".join(
-            "named_struct(" + ",".join(
-                x for f, v in zip(fields, row)
-                for x in (f"'{f.name}'", v)) + f",'_rank',{i})"
-            for i, row in enumerate(lits))
-        small = (index.spark.range(1)
-                 .select(F.expr(f"explode(array({structs}))").alias("_s"))
-                 .select("_s.*"))
+    small = _values_relation(
+        index.spark, fields + [T.StructField("_rank", T.IntegerType())],
+        [tuple(r) + (i,) for i, r in enumerate(rows)])
+    if small is not None:
         return rows, small
     structs = [
         F.struct(*[F.lit(r[f.name]).cast(f.dataType).alias(f.name)
@@ -3783,25 +3813,15 @@ def _collect_topk(index, topk: DataFrame):
 
 def pin_topk(index, topk: DataFrame) -> DataFrame:
     """Execute a top-k query ONCE and pin its (metadata-sized) result as
-    a literal-form DataFrame with the same schema — downstream plans
-    (repeated materialization, joins, diagnostics) embed the rows as a
-    jobless JVM-side relation instead of re-running the search per
-    execution. Falls back to ``createDataFrame`` for non-scalar columns
-    (none exist in any top-k today)."""
+    a literal relation with the same columns (``_values_relation``) —
+    downstream plans (repeated materialization, joins, diagnostics)
+    embed the rows as a jobless JVM-side relation instead of re-running
+    the search per execution. Falls back to ``createDataFrame`` for
+    non-scalar columns (none exist in any top-k today)."""
     rows = topk.collect()
-    fields = topk.schema.fields
-    if rows:
-        lits = [[_sql_scalar(r[f.name], f.dataType) for f in fields]
-                for r in rows]
-        if all(x is not None for row in lits for x in row):
-            structs = ",".join(
-                "named_struct(" + ",".join(
-                    x for f, v in zip(fields, row)
-                    for x in (f"'{f.name}'", v)) + ")"
-                for row in lits)
-            return (index.spark.range(1)
-                    .select(F.expr(f"explode(array({structs}))").alias("_s"))
-                    .select("_s.*"))
+    pinned = _values_relation(index.spark, topk.schema.fields, rows)
+    if pinned is not None:
+        return pinned
     return index.spark.createDataFrame(rows, topk.schema)
 
 

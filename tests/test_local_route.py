@@ -12,8 +12,9 @@ Contracts under test:
   docvalue multipliers and tombstones);
 * a small query — plan construction, lexicon lookup and collect —
   schedules zero Spark jobs with Arrow on and off;
-* a query above the constant keeps the distributed plan
-  (FlatMapGroupsInPandas + TakeOrderedAndProject);
+* a query above the constant, or one whose top-k may hold more than
+  ``LOCAL_MAX_ROWS`` rows (a whole-ranking ``k``), keeps the
+  distributed plan (FlatMapGroupsInPandas + TakeOrderedAndProject);
 * after append + compact, local reads see the new segment and lexicon,
   through the returned handle and through an old handle after
   ``refresh()``.
@@ -227,6 +228,27 @@ def test_route_boundary_is_posting_mass(lidx, monkeypatch):
     plan = _plan(Q.search(lidx, "hot0 rare3"))
     assert "FlatMapGroupsInPandas" in plan
     assert "TakeOrderedAndProject" in plan
+
+
+def test_route_boundary_is_result_rows(lidx, monkeypatch):
+    """A whole-ranking request stays local only while its top-k (at most
+    min(k, mass) rows) fits LOCAL_MAX_ROWS: the result is a literal
+    VALUES relation, whose parse cost grows with its rows."""
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", BIG)
+    lex = lidx.lookup_terms(["hot0", "rare3"])
+    mass = sum(int(v["df"]) for v in lex.values())
+    monkeypatch.setattr(Q, "LOCAL_MAX_ROWS", mass)
+    local = Q.search(lidx, "hot0 rare3", k=10 ** 9)
+    assert "LocalTableScan" in _plan(local)
+    monkeypatch.setattr(Q, "LOCAL_MAX_ROWS", mass - 1)
+    dist = Q.search(lidx, "hot0 rare3", k=10 ** 9)
+    plan = _plan(dist)
+    assert "FlatMapGroupsInPandas" in plan
+    assert "TakeOrderedAndProject" in plan
+    assert _rows(local) == _rows(dist) and len(_rows(local)) > 10
+    # a top-10 of the same query stays local under a 10-row bound
+    monkeypatch.setattr(Q, "LOCAL_MAX_ROWS", 10)
+    assert "LocalTableScan" in _plan(Q.search(lidx, "hot0 rare3", k=10))
 
 
 def test_doc_filter_keeps_distributed_plan(lidx, monkeypatch):

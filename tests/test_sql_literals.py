@@ -1,6 +1,7 @@
 """The SQL-literal plan-construction fast path (r4: materialization and
 pin_topk build their small relations as ONE parsed SQL string instead of
-per-node column ops — engine/query.py _sql_scalar/_collect_topk/pin_topk).
+per-node column ops — engine/query.py _sql_scalar/_values_relation,
+shared by _collect_topk, pin_topk, _empty_topk and the local route).
 
 The fast path must be VALUE-EXACT vs the per-node ``F.lit().cast()``
 form it replaced: float scores round-trip bit-identically (repr is the
@@ -89,6 +90,25 @@ def test_pin_topk_is_jobless_literal(packed_index):
     pinned = Q.pin_topk(packed_index, top)
     plan = pinned._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan and "Scan parquet" not in plan
+
+
+def test_pin_topk_collect_runs_no_job(spark, packed_index):
+    """The pinned relation is a VALUES LocalRelation: collecting it
+    schedules no Spark job (``range(1).select(explode(...))``, the
+    earlier form, still scheduled one)."""
+    from engine import query as Q
+    pinned = Q.pin_topk(packed_index, Q.search(packed_index, "hot0 rare3",
+                                               k=5))
+    assert "LocalTableScan" in \
+        pinned._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    sc.setJobGroup("pin-topk", "pin-topk")
+    try:
+        rows = pinned.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup("pin-topk")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 5
 
 
 def test_pin_topk_empty(packed_index):
