@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .analyzer import tokenize_py
 from .query import (WAND_MIN_SHARD_POSTINGS, WAND_SEED_FRAC, _del_closure,
-                    _score_shard_exhaustive, query_terms)
+                    _doc_limit, _score_shard_exhaustive, query_terms)
 
 
 def _require_compat(indexes) -> None:
@@ -233,4 +233,5 @@ def search_multi(indexes: list, query: str, k: int = 10, mode: str = "OR",
     for p in parts[1:]:
         out = out.unionByName(p)
     return (out.orderBy(F.desc("score"), F.asc("index_id"),
-                        F.asc("doc_id")).limit(k))
+                        F.asc("doc_id"))
+            .limit(min(int(k), sum(_doc_limit(ix, k) for ix in indexes))))

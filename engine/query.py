@@ -136,6 +136,24 @@ def search_flat(idx: FlatIndex, query: str, k: int = 10,
 # DAAT scoring in Arrow UDFs -> global TakeOrderedAndProject
 # --------------------------------------------------------------------------
 
+def _decode_rows(post_pdf, start: int):
+    """Decode all (term, shard) rows of one shard's postings in ONE
+    vectorized pass per stream (``codec.decode_postings_many`` /
+    ``decode_many``; ``df`` is the row's posting count). Returns
+    ``(terms, bounds, loc, tf, dl)``: row i's shard-local doc offsets
+    (int64), tfs and doc lengths (float64) are ``[bounds[i]:bounds[i +
+    1]]`` of the flat arrays — the per-row ``decode_postings`` /
+    ``vbyte_decode`` values exactly, so scores stay bit-identical."""
+    import numpy as np
+    from . import codec as C
+    counts = post_pdf["df"].to_numpy(np.int64)
+    ids, tfs, bnd = C.decode_postings_many(post_pdf["doc_ids"].tolist(),
+                                           post_pdf["tfs"].tolist(), counts)
+    dls, _ = C.decode_many(post_pdf["dls"].tolist(), counts)
+    return (post_pdf["term"].tolist(), bnd.tolist(), ids - start,
+            tfs.astype(np.float64), dls.astype(np.float64))
+
+
 def _score_shard_exhaustive(post_pdf, qtfs, idfs, cfg, k, mode, width,
                             n_required, neg_terms=frozenset(),
                             allowed_loc=None, cursor=None, boost_vec=None,
@@ -178,13 +196,14 @@ def _score_shard_exhaustive(post_pdf, qtfs, idfs, cfg, k, mode, width,
     negmask = np.zeros(width, dtype=bool) if neg_terms else None
     demmask = np.zeros(width, dtype=bool) if demote_terms else None
     k1, b, avgdl = cfg["k1"], cfg["b"], cfg["avgdl"]
-    order = np.argsort(post_pdf["term"].to_numpy(object))  # ascending terms
-    for i in order:
-        term = post_pdf["term"].iloc[int(i)]
+    terms, bnd, locs, tfs_, dls_ = _decode_rows(post_pdf, start)
+    order = np.argsort(np.array(terms, dtype=object))  # ascending terms
+    for i in order.tolist():
+        term = terms[i]
+        lo, hi = bnd[i], bnd[i + 1]
+        loc = locs[lo:hi]
         if term in neg_terms:
-            ids, _ = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                       post_pdf["tfs"].iloc[int(i)])
-            negmask[ids - start] = True
+            negmask[loc] = True
             continue
         if demmask is not None and term in demote_terms:
             # boosting query (search_boosting): docs containing any
@@ -192,18 +211,12 @@ def _score_shard_exhaustive(post_pdf, qtfs, idfs, cfg, k, mode, width,
             # mask is marked here; a demote term that is ALSO a
             # positive query term still scores (no positive-wins rule:
             # demotion and contribution are not contradictory)
-            ids, _ = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                       post_pdf["tfs"].iloc[int(i)])
-            demmask[ids - start] = True
+            demmask[loc] = True
             if term not in qtfs:
                 continue
         idf = idfs[term]
         qtf = qtfs[term]
-        ids, tfs = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                     post_pdf["tfs"].iloc[int(i)])
-        dls = C.vbyte_decode(post_pdf["dls"].iloc[int(i)]).astype(np.float64)
-        loc = ids - start
-        tfs = tfs.astype(np.float64)
+        tfs, dls = tfs_[lo:hi], dls_[lo:hi]
         contrib = (qtf * idf * (tfs * (k1 + 1.0))
                    / (tfs + k1 * (1.0 - b + b * dls / avgdl)))
         acc[loc] += contrib   # doc_ids unique within one (term, shard) row
@@ -1106,7 +1119,8 @@ def _search_multi_match_impl(index, query: "str | None", fields: dict,
         scored = (post.groupBy("shard")
                   .applyInPandas(lambda key, pdf: _kernel(pdf),
                                  "doc_id long, score double"))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return (scored.orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(_doc_limit(index, k)))
 
 
 def search_boosting(index, positive: str, negative: str,
@@ -1514,7 +1528,8 @@ def _search_sorted_impl(index, query: str, field: str, k: int,
     ranked = (post.groupBy("shard")
               .applyInPandas(fn, "doc_id long, sort_val double"))
     key_order = F.asc("sort_val") if ascending else F.desc("sort_val")
-    return ranked.orderBy(key_order, F.asc("doc_id")).limit(k)
+    return (ranked.orderBy(key_order, F.asc("doc_id"))
+            .limit(_doc_limit(index, k)))
 
 
 def normalize_prefix(prefix: str) -> str:
@@ -2231,6 +2246,13 @@ WAND_SEED_FRAC = 8                 # rarest list must be < mass / this
 # 5.7M (1.26 vs 1.20 s). At 2^22 the exhaustive kernel still wins by
 # half and the WAND kernel loses by under 5%. Memory does not bind: the
 # driver's peak RSS grew ~11 bytes per posting (140 MB at 12.9M).
+# The same bound serves search_batch, where the mass is the set's
+# summed scan-term df: 24-entry OR/AND sets on the same index (both
+# routes forced, plan cache off, median of 3) took 0.40 s on the driver
+# vs 1.91 s distributed at 0.19M postings, 0.42 vs 1.34 s at 1.1M,
+# 0.80 vs 2.02 s at 2.1M, 1.54 vs 2.34 s at 4.2M and 1.83 vs 2.43 s at
+# 6.0M, and tied at 8.4M (2.97 vs 2.96 s): the driver wins at and below
+# the bound.
 LOCAL_MAX_POSTINGS = 1 << 22
 # The local route also caps its result rows: its top-k is a literal
 # VALUES relation (_values_relation), which Spark parses and analyzes at
@@ -2241,6 +2263,7 @@ LOCAL_MAX_ROWS = 1 << 11
 
 _TOPK_FIELDS = [T.StructField("doc_id", T.LongType()),
                 T.StructField("score", T.DoubleType())]
+_BATCH_FIELDS = [T.StructField("qid", T.StringType())] + _TOPK_FIELDS
 
 
 def _doc_limit(index, k: int) -> int:
@@ -2265,28 +2288,47 @@ def _pruned_postings(index, lex: dict, scan_terms: list,
 
 
 def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
-                k: int) -> DataFrame:
-    """Run the per-shard scorer ``fn(key, post_pdf) -> (doc_id, score)
-    rows`` over the pruned postings and return the global top-k in the
-    frozen (score desc, doc_id asc) order. Two routes, one ``fn``:
+                k: int, entries: "dict | None" = None) -> DataFrame:
+    """Run the per-shard scorer ``fn(key, post_pdf)`` over the pruned
+    postings and return the global top-k. ``entries`` is None for one
+    query: ``fn`` emits (doc_id, score) rows and the answer is in the
+    frozen (score desc, doc_id asc) order. For a query set it maps each
+    qid to ``(k_q, terms_q)`` (the entry's own limit and positive terms):
+    ``fn`` emits (qid, doc_id, score) rows, each entry keeps its own
+    top-k_q, and the answer is in (qid, score desc, doc_id asc) order.
+    Two routes, one ``fn``:
 
     * posting mass <= LOCAL_MAX_POSTINGS and at most LOCAL_MAX_ROWS
-      result rows (a top-k holds at most min(k, mass) rows): the driver
-      reads the pruned rows with pyarrow (bucket-partition and term
-      filters), calls ``fn`` once per shard, and cuts the top-k in
-      pandas. The result is a literal VALUES relation (a LocalRelation),
-      so ``collect()`` runs no Spark job whatever the Arrow setting.
-      Scores are bit-identical to the distributed route: same kernel,
-      same per-shard input rows.
-    * otherwise: groupBy(shard).applyInPandas(fn) ->
-      orderBy(score desc, doc_id asc).limit(k), planned as
-      FlatMapGroupsInPandas + TakeOrderedAndProject.
+      result rows (an entry's top-k holds at most min(k_q, mass_q)
+      rows): the driver reads the pruned rows with pyarrow
+      (bucket-partition and term filters), calls ``fn`` once per shard,
+      and cuts the top-k in pandas. The result is a literal VALUES
+      relation (a LocalRelation), so ``collect()`` runs no Spark job
+      whatever the Arrow setting. Scores are bit-identical to the
+      distributed route: same kernel, same per-shard input rows.
+    * otherwise: groupBy(shard).applyInPandas(fn), then
+      orderBy(score desc, doc_id asc).limit(k) for one query (planned
+      as FlatMapGroupsInPandas + TakeOrderedAndProject) or a per-qid
+      window rank for a set (``_batch_topk``).
     """
-    mass = sum(int(lex[t]["df"]) for t in scan_terms)
-    if mass > LOCAL_MAX_POSTINGS or min(k, mass) > LOCAL_MAX_ROWS:
-        return (_pruned_postings(index, lex, scan_terms, cols)
-                .groupBy("shard").applyInPandas(fn, "doc_id long, score double")
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    def mass_of(terms):
+        return sum(int(lex[t]["df"]) for t in terms if t in lex)
+
+    mass = mass_of(scan_terms)
+    if entries is None:
+        rows = min(k, mass)
+    else:
+        rows = sum(min(k_q, mass_of(ts)) for k_q, ts in entries.values())
+    if mass > LOCAL_MAX_POSTINGS or rows > LOCAL_MAX_ROWS:
+        post = _pruned_postings(index, lex, scan_terms, cols)
+        if entries is None:
+            return (post.groupBy("shard")
+                    .applyInPandas(fn, "doc_id long, score double")
+                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+        return _batch_topk(
+            post.groupBy("shard").applyInPandas(
+                fn, "qid string, doc_id long, score double"),
+            k, {q: k_q for q, (k_q, _) in entries.items() if k_q != k})
     import pandas as pd
 
     from .build import any_equal
@@ -2298,13 +2340,45 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
              for shard, g in pdf.groupby("shard", sort=True)]
     parts = [p for p in parts if len(p)]
     if not parts:
-        return _empty_topk(index.spark)
-    top = (pd.concat(parts, ignore_index=True)
-           .sort_values(["score", "doc_id"], ascending=[False, True])
-           .head(k))
+        return _empty_topk(index.spark, with_qid=entries is not None)
+    top = pd.concat(parts, ignore_index=True)
+    if entries is None:
+        top = top.sort_values(["score", "doc_id"],
+                              ascending=[False, True]).head(k)
+        return _values_relation(
+            index.spark, _TOPK_FIELDS,
+            list(zip(top["doc_id"].tolist(), top["score"].tolist())))
+    # Python str order is code-point order, which is Spark's (UTF-8
+    # byte) string order, so the qid sort matches the distributed plan
+    top = top.sort_values(["qid", "score", "doc_id"],
+                          ascending=[True, False, True])
+    lim = top["qid"].map({q: k_q for q, (k_q, _) in entries.items()})
+    top = top[top.groupby("qid", sort=False).cumcount() < lim]
     return _values_relation(
-        index.spark, _TOPK_FIELDS,
-        list(zip(top["doc_id"].tolist(), top["score"].tolist())))
+        index.spark, _BATCH_FIELDS,
+        list(zip(top["qid"].tolist(), top["doc_id"].tolist(),
+                 top["score"].tolist())))
+
+
+def _batch_topk(scored: DataFrame, k: int, ks: dict) -> DataFrame:
+    """Distributed tail of a query set: each qid's top-k (``ks`` holds
+    the entries whose own limit differs from ``k``) by a window rank
+    over the per-shard (qid, doc_id, score) partials, ordered (qid,
+    score desc, doc_id asc)."""
+    from pyspark.sql import Window
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    if ks:
+        # per-entry size: qid -> its own k via a tiny literal map
+        pairs = []
+        for qid_, k_ in ks.items():
+            pairs += [F.lit(qid_), F.lit(k_)]
+        k_col = F.coalesce(F.element_at(F.create_map(*pairs),
+                                        F.col("qid")), F.lit(k))
+    else:
+        k_col = F.lit(k)
+    return (scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k_col).drop("_rn")
+            .orderBy("qid", F.desc("score"), F.asc("doc_id")))
 
 
 def wand_routes(index, query: str) -> bool:
@@ -2360,16 +2434,12 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
     start = shard * width
     k1, b, avgdl = cfg["k1"], cfg["b"], cfg["avgdl"]
 
-    # ---- decode each (term, shard) row once ----
-    decoded: dict = {}   # term -> (loc:int64[], tf:float64[], dl:float64[])
-    rowidx: dict = {}    # term -> pdf row (lazy positions decode, phrase)
-    for i in range(len(post_pdf)):
-        term = post_pdf["term"].iloc[i]
-        rowidx[term] = i
-        ids, tfs = C.decode_postings(post_pdf["doc_ids"].iloc[i],
-                                     post_pdf["tfs"].iloc[i])
-        dls = C.vbyte_decode(post_pdf["dls"].iloc[i]).astype(np.float64)
-        decoded[term] = (ids - start, tfs.astype(np.float64), dls)
+    # ---- decode every (term, shard) row of the shard in ONE pass ----
+    terms_, bnd, loc_, tf_, dl_ = _decode_rows(post_pdf, start)
+    # term -> (loc:int64[], tf:float64[], dl:float64[])
+    decoded = {t: (loc_[lo:hi], tf_[lo:hi], dl_[lo:hi])
+               for t, lo, hi in zip(terms_, bnd[:-1], bnd[1:])}
+    rowidx = {t: i for i, t in enumerate(terms_)}  # lazy phrase decode
     occ: dict = {}       # term -> (occ_loc, pos): shared across phrase qids
 
     def _occ(term: str):
@@ -2452,7 +2522,14 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
     # counter for the must clause; allocated once per shard task and
     # reset at touched positions like acc/cnt
     cntm = np.zeros(width, dtype=np.int32) if musts else None
-    outs = []
+    # per-entry (qid, doc_ids, scores); ONE DataFrame per shard at the end
+    out_q, out_ids, out_sc = [], [], []
+
+    def _emit(qid, ids, scores):
+        out_q.append(qid)
+        out_ids.append(ids)
+        out_sc.append(scores)
+
     if use_wand:  # "auto" or True
         from .wand import score_shard_wand
     for qid, qt in per_q.items():
@@ -2487,11 +2564,8 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                 udocs, counts = hit
                 # score = n_phrase as double (exact for any real count) —
                 # one (qid, doc_id, score) contract for the whole batch
-                r = pd.DataFrame(
-                    {"doc_id": (udocs + start).astype(np.int64),
-                     "score": counts.astype(np.float64)})
-                r.insert(0, "qid", qid)
-                outs.append(r)
+                _emit(qid, (udocs + start).astype(np.int64),
+                      counts.astype(np.float64))
             continue
         q_mm = msm.get(qid, 1) if msm else 1
         q_dem = demotes.get(qid) if demotes else None
@@ -2552,11 +2626,7 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                 sc = sc + bv[hit] if bcomb == "sum" else sc * bv[hit]
             if hit.size:
                 hit_k, scores = C.topk_tiebreak(hit, sc, q_k)
-                r = pd.DataFrame(
-                    {"doc_id": (hit_k + start).astype(np.int64),
-                     "score": scores})
-                r.insert(0, "qid", qid)
-                outs.append(r)
+                _emit(qid, (hit_k + start).astype(np.int64), scores)
             continue
         if q_dm is not None:
             # DIS_MAX entry (same frozen combine as search_dis_max:
@@ -2612,11 +2682,7 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                 sc = sc + bv[hit] if bcomb == "sum" else sc * bv[hit]
             if hit.size:
                 hit_k, scores = C.topk_tiebreak(hit, sc, q_k)
-                r = pd.DataFrame(
-                    {"doc_id": (hit_k + start).astype(np.int64),
-                     "score": scores})
-                r.insert(0, "qid", qid)
-                outs.append(r)
+                _emit(qid, (hit_k + start).astype(np.int64), scores)
             continue
         if (use_wand and mode == "OR" and len(terms_here) > 1
                 and not q_negs and q_mm <= 1 and q_must is None
@@ -2630,8 +2696,8 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                                      idfs, cfg, q_k, width,
                                      allow_mask=allow)
                 if r is not None:
-                    r.insert(0, "qid", qid)
-                    outs.append(r)
+                    _emit(qid, r["doc_id"].to_numpy(np.int64),
+                          r["score"].to_numpy(np.float64))
                 continue
         locs = []
         for t in terms_here:     # ascending term order == oracle fp order
@@ -2693,15 +2759,18 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                 acc[hit[m_]] *= q_dem[1]
         if hit.size:
             hit_k, scores = C.topk_tiebreak(hit, acc[hit], q_k)
-            r = pd.DataFrame({"doc_id": (hit_k + start).astype(np.int64),
-                              "score": scores})
-            r.insert(0, "qid", qid)
-            outs.append(r)
+            _emit(qid, (hit_k + start).astype(np.int64), scores)
         acc[touched] = 0.0       # reset ONLY touched positions
         cnt[touched] = 0
         if q_must is not None:
             cntm[touched] = 0
-    return pd.concat(outs) if outs else None
+    if not out_ids:
+        return None
+    return pd.DataFrame({
+        "qid": np.repeat(np.array(out_q, dtype=object),
+                         [a.size for a in out_ids]),
+        "doc_id": np.concatenate(out_ids),
+        "score": np.concatenate(out_sc)})
 
 
 def search_batch(index, queries: list[dict], k: int = 10,
@@ -2722,7 +2791,9 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                        use_wand: "bool | str" = "auto",
                        doc_filter: str | None = None,
                        dv_filter: str | None = None) -> DataFrame:
-    """E9: execute a whole query set in ONE Spark job.
+    """E9: execute a whole query set with one pruned postings scan —
+    on the driver with NO Spark job when the set is small, else in ONE
+    Spark job.
 
     ``queries``: [{"id", "query", "mode"}]. One pruned postings scan
     covering the union of all query terms; the per-shard batch scorer
@@ -2730,9 +2801,18 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     (``_score_shard_batch``), routing individual OR queries through
     Block-Max WAND only when the per-shard cost gate says pruning beats
     the shared scatter-add (``use_wand=True`` forces WAND for every
-    multi-term OR query — test hook; ``False`` forces exhaustive);
-    global per-query top-k via window rank (single shuffle).
-    Returns (qid, doc_id, score).
+    multi-term OR query — test hook; ``False`` forces exhaustive).
+    Returns (qid, doc_id, score) in (qid, score desc, doc_id asc) order.
+
+    Routes (``_run_shards``, the same executor gate as ``search``): when
+    the set's summed posting mass is at most LOCAL_MAX_POSTINGS and its
+    result rows (sum over entries of min(k_q, posting mass_q)) at most
+    LOCAL_MAX_ROWS, the driver reads the pruned rows with pyarrow, runs
+    the batch scorer per shard, cuts each entry's top-k in pandas and
+    returns a LocalRelation (``collect()`` runs no job). Otherwise the
+    scorer runs in applyInPandas tasks and each entry's top-k comes
+    from a window rank (single shuffle). ``doc_filter`` batches always
+    take the distributed, cogrouped plan.
 
     ``doc_filter``: one SQL predicate applied to EVERY query of the set
     (same frozen semantics as ``search``: global stats, candidate
@@ -2775,8 +2855,6 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     qtf only, so boosted and unboosted queries share the scan and the
     decode cache unchanged.
     """
-    import pandas as pd
-    from pyspark.sql import Window
     spark = index.spark
     acfg = index.cfg.analyzer
     # {"mode": "PREFIX"} entries expand driver-side (memoized lexicon
@@ -3030,7 +3108,6 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     if not scan_terms:
         return _empty_topk(spark, with_qid=True)
     idfs = {t: float(lex[t]["idf"]) for t in scan_terms}
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
     # keep the "auto" / True distinction (plain `and` would collapse it)
     wand_mode = use_wand if any(m == "OR" for m in modes.values()) else False
     # (per-query NOT routing is handled inside the scorer: a query with
@@ -3040,10 +3117,6 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     cols = (["term", "shard", "df", "doc_ids", "tfs", "dls"]
             + (["blocks", "max_tf"] if wand_mode else [])
             + (["poss"] if phrases else []))
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select(*cols))
     width = index.shard_width
     cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
             "avgdl": index.avgdl}
@@ -3063,80 +3136,53 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     # tombstones (engine/deletes.py): None when the index has none
     del_locs = _del_closure(index)
 
-    if doc_filter is not None:
-        import numpy as np
-        allowed = _allowed_shards(index, doc_filter, width)
+    def _score(post_pdf, allowed_loc, denied_loc):
+        import pandas as pd
+        r = _score_shard_batch(post_pdf, per_q, modes, idfs, cfgd, k,
+                               width, wand_mode, allowed_loc=allowed_loc,
+                               denied_loc=denied_loc, negs=negs,
+                               phrases=phrases, msm=msm, slops=slops,
+                               musts=musts, minsh=minsh, demotes=demotes,
+                               dismaxes=dismaxes, multis=multis or None,
+                               dv_preds=dv_preds, dv_ctx=(dv_dir, dv_gen),
+                               boosts=boosts_by_qid or None,
+                               ks=ks_by_qid or None)
+        return r if r is not None else pd.DataFrame(
+            {"qid": [], "doc_id": [], "score": []})
 
-        def fnf(key, post_pdf, allowed_pdf):
-            import numpy as np
-            empty_r = pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return empty_r
-            shard = int(post_pdf["shard"].iloc[0])
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            dvl = _dv_loc(shard)
-            if dvl is not None:
-                loc = np.intersect1d(loc, dvl)
-            if del_locs is not None:
-                dl_ = del_locs(shard)
-                if dl_ is not None:
-                    loc = np.setdiff1d(loc, dl_)
-            r = _score_shard_batch(post_pdf, per_q, modes, idfs, cfgd, k,
-                                   width, wand_mode, allowed_loc=loc,
-                                   negs=negs, phrases=phrases, msm=msm,
-                                   slops=slops, musts=musts, minsh=minsh,
-                                   demotes=demotes, dismaxes=dismaxes,
-                                   multis=multis or None,
-                                   dv_preds=dv_preds,
-                                   dv_ctx=(dv_dir, dv_gen),
-                                   boosts=boosts_by_qid or None,
-                                   ks=ks_by_qid or None)
-            return r if r is not None else empty_r
-
-        scored = (post.groupBy("shard")
-                  .cogroup(allowed.groupBy("shard"))
-                  .applyInPandas(fnf,
-                                 "qid string, doc_id long, score double"))
-    else:
+    if doc_filter is None:
         def fn(key, post_pdf):
-            if len(post_pdf) == 0:
-                return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            r = _score_shard_batch(post_pdf, per_q, modes, idfs, cfgd, k,
-                                   width, wand_mode, negs=negs,
-                                   phrases=phrases,
-                                   allowed_loc=_dv_loc(shard),
-                                   denied_loc=(del_locs(shard)
-                                               if del_locs is not None
-                                               else None),
-                                   msm=msm, slops=slops,
-                                   musts=musts, minsh=minsh,
-                                   demotes=demotes, dismaxes=dismaxes,
-                                   multis=multis or None,
-                                   dv_preds=dv_preds,
-                                   dv_ctx=(dv_dir, dv_gen),
-                                   boosts=boosts_by_qid or None,
-                                   ks=ks_by_qid or None)
-            return r if r is not None else pd.DataFrame(
-                {"qid": [], "doc_id": [], "score": []})
+            shard = int(key[0])
+            return _score(post_pdf, _dv_loc(shard),
+                          del_locs(shard) if del_locs is not None else None)
 
-        scored = (post.groupBy("shard")
-                  .applyInPandas(fn,
-                                 "qid string, doc_id long, score double"))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    if ks_by_qid:
-        # per-entry size: qid -> its own k via a tiny literal map
-        pairs = []
-        for qid_, k_ in ks_by_qid.items():
-            pairs += [F.lit(qid_), F.lit(k_)]
-        k_col = F.coalesce(F.element_at(F.create_map(*pairs),
-                                        F.col("qid")), F.lit(k))
-    else:
-        k_col = F.lit(k)
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k_col).drop("_rn")
-            .orderBy("qid", F.desc("score"), F.asc("doc_id")))
+        entries = {qid: (ks_by_qid.get(qid, k), qt)
+                   for qid, qt in per_q.items()}
+        return _run_shards(index, lex, scan_terms, cols, fn, k, entries)
+
+    allowed = _allowed_shards(index, doc_filter, width)
+
+    def fnf(key, post_pdf, allowed_pdf):
+        import numpy as np
+        if len(post_pdf) == 0 or len(allowed_pdf) == 0:
+            # no postings / no doc passes the filter: an empty frame
+            return _score(post_pdf.iloc[:0], None, None)
+        shard = int(post_pdf["shard"].iloc[0])
+        loc = allowed_pdf["doc_id"].to_numpy(np.int64) - shard * width
+        dvl = _dv_loc(shard)
+        if dvl is not None:
+            loc = np.intersect1d(loc, dvl)
+        if del_locs is not None:
+            dl_ = del_locs(shard)
+            if dl_ is not None:
+                loc = np.setdiff1d(loc, dl_)
+        return _score(post_pdf, loc, None)
+
+    scored = (_pruned_postings(index, lex, scan_terms, cols)
+              .groupBy("shard")
+              .cogroup(allowed.groupBy("shard"))
+              .applyInPandas(fnf, "qid string, doc_id long, score double"))
+    return _batch_topk(scored, k, ks_by_qid)
 
 
 def _decode_occurrences(pdf, i: int, start: int):
@@ -3382,7 +3428,8 @@ def _search_phrase_impl(index, phrase: str, k: int = 10,
         scored = (post.groupBy("shard")
                   .applyInPandas(lambda key, pdf: _match(pdf),
                                  "doc_id long, n_phrase long"))
-    return scored.orderBy(F.desc("n_phrase"), F.asc("doc_id")).limit(k)
+    return (scored.orderBy(F.desc("n_phrase"), F.asc("doc_id"))
+            .limit(_doc_limit(index, k)))
 
 
 def search_phrase_prefix(index, phrase: str, k: int = 10,
@@ -3536,7 +3583,8 @@ def _search_phrase_prefix_impl(index, phrase: str, k: int = 10,
         scored = (post.groupBy("shard")
                   .applyInPandas(lambda key, pdf: _match(pdf),
                                  "doc_id long, n_phrase long"))
-    return scored.orderBy(F.desc("n_phrase"), F.asc("doc_id")).limit(k)
+    return (scored.orderBy(F.desc("n_phrase"), F.asc("doc_id"))
+            .limit(_doc_limit(index, k)))
 
 
 def search_span_first(index, term: str, n: int, k: int = 10,
@@ -3671,7 +3719,8 @@ def _search_span_first_impl(index, term: str, n: int, k: int = 10,
         scored = (post.groupBy("shard")
                   .applyInPandas(lambda key, pdf: _match(pdf),
                                  "doc_id long, n_within long"))
-    return scored.orderBy(F.desc("n_within"), F.asc("doc_id")).limit(k)
+    return (scored.orderBy(F.desc("n_within"), F.asc("doc_id"))
+            .limit(_doc_limit(index, k)))
 
 
 def _corpus_pruned(index, doc_ids: list[int]) -> DataFrame:

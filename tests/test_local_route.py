@@ -1,20 +1,23 @@
-"""Driver-local query route (engine/query.py ``_run_shards``): a query
-whose posting mass is at most ``LOCAL_MAX_POSTINGS`` is scored on the
-driver — pyarrow read of the pruned postings, the SAME per-shard kernel
-closure, top-k in pandas, a LocalRelation result — and runs no Spark
-job. Each route is forced by setting the constant to 0 (distributed) or
-to a huge value (local).
+"""Driver-local query route (engine/query.py ``_run_shards``): a query,
+or a ``search_batch`` query set, whose posting mass is at most
+``LOCAL_MAX_POSTINGS`` is scored on the driver — pyarrow read of the
+pruned postings, the SAME per-shard kernel closure, top-k in pandas, a
+LocalRelation result — and runs no Spark job. Each route is forced by
+setting the constant to 0 (distributed) or to a huge value (local).
 
 Contracts under test:
-* for every surface and modifier the local route serves, the local
-  answer equals the distributed answer exactly and matches the
-  pure-Python oracle (engine/oracle.py, plus recomputes for the
-  docvalue multipliers and tombstones);
-* a small query — plan construction, lexicon lookup and collect —
-  schedules zero Spark jobs with Arrow on and off;
+* for every surface, modifier and batch entry kind the local route
+  serves, the local answer equals the distributed answer exactly and
+  matches the pure-Python oracle (engine/oracle.py, plus recomputes for
+  the docvalue multipliers and tombstones);
+* a small query or query set — plan construction, lexicon lookup and
+  collect — schedules zero Spark jobs with Arrow on and off;
 * a query above the constant, or one whose top-k may hold more than
   ``LOCAL_MAX_ROWS`` rows (a whole-ranking ``k``), keeps the
-  distributed plan (FlatMapGroupsInPandas + TakeOrderedAndProject);
+  distributed plan (FlatMapGroupsInPandas + TakeOrderedAndProject, or
+  + Window for a query set); ``doc_filter`` keeps the cogrouped plan;
+* every remaining distributed top-k tail plans a limit of at most the
+  doc count for ``k = 10**9``;
 * after append + compact, local reads see the new segment and lexicon,
   through the returned handle and through an old handle after
   ``refresh()``.
@@ -68,7 +71,7 @@ def attrs(lidx):
             lidx.corpus().select("doc_id", "role", "ts").collect()}
 
 
-def both_routes(monkeypatch, run):
+def both_routes(monkeypatch, run, rows=_rows):
     """(distributed rows, local rows) of ``run()``, each route forced
     and plan-checked."""
     monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
@@ -78,7 +81,7 @@ def both_routes(monkeypatch, run):
     assert "FlatMapGroupsInPandas" in _plan(dist_df)
     lp = _plan(local_df)
     assert "LocalTableScan" in lp and "Scan parquet" not in lp, lp
-    return _rows(dist_df), _rows(local_df)
+    return rows(dist_df), rows(local_df)
 
 
 def _full(oracle, query, mode="OR"):
@@ -297,3 +300,274 @@ def test_distributed_limit_clipped_to_doc_count(lidx, monkeypatch):
     assert f"Arguments: {lidx.n_docs}, [score" in _plan(df)
     want = _rows(Q.search(lidx, "hot0 rare3", k=lidx.n_docs))
     assert _rows(df) == want and len(want) > 10
+
+
+# ---- search_batch: the same executor gate, per-entry limits ----
+
+def _by_qid(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["qid"], []).append((int(r["doc_id"]),
+                                              float(r["score"])))
+    return out
+
+
+def _batch_rows(df):
+    return [(r["qid"], int(r["doc_id"]), float(r["score"]))
+            for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def bidx(spark, corpus_df, tmp_path_factory):
+    """One index serving every batch entry kind: positions (PHRASE), an
+    extra field (MULTI_MATCH), fuzzy neighborhoods (FUZZY) and
+    docvalues (dv_filter, boost)."""
+    from engine.build import build_index
+    d = str(tmp_path_factory.mktemp("local_batch") / "idx")
+    return build_index(spark, corpus_df, d, cfg=IndexConfig(
+        doc_values=("role", "ts"), index_positions=True,
+        extra_fields=("role",), fuzzy_edits=1))
+
+
+def _phrase_single(i, q, slop=0):
+    return [(r["doc_id"], float(r["n_phrase"])) for r in
+            Q.search_phrase(i, q, k=10, slop=slop).collect()]
+
+
+# (case id, batch entry, use_wand, oracle answer or None). Each entry
+# rides in a set with a plain OR entry, so the set has two qids.
+BATCH_CASES = [
+    ("or", {"query": "hot0 rare3", "mode": "OR"}, "auto",
+     lambda o, a, i: o.search("hot0 rare3")),
+    ("and", {"query": "hot0 hot1", "mode": "AND"}, "auto",
+     lambda o, a, i: o.search("hot0 hot1", mode="AND")),
+    ("phrase", {"query": "hot0 hot1", "mode": "PHRASE"}, "auto",
+     lambda o, a, i: _phrase_single(i, "hot0 hot1")),
+    ("phrase_slop", {"query": "hot0 hot1", "mode": "PHRASE", "slop": 2},
+     "auto", lambda o, a, i: _phrase_single(i, "hot0 hot1", slop=2)),
+    ("prefix", {"query": "hot*", "mode": "PREFIX"}, "auto", None),
+    ("fuzzy", {"query": "hot0", "mode": "FUZZY"}, "auto", None),
+    ("regexp", {"query": "hot[01]", "mode": "REGEXP"}, "auto", None),
+    ("dis_max", {"mode": "DIS_MAX", "queries": ["hot0 hot1", "rare3 mid1"],
+                 "tie_breaker": 0.3}, "auto",
+     lambda o, a, i: o.search_dis_max(["hot0 hot1", "rare3 mid1"],
+                                      tie_breaker=0.3)),
+    ("multi_match", {"mode": "MULTI_MATCH", "query": "hot0 user",
+                     "fields": {"text": 1.0, "role": 2.0},
+                     "tie_breaker": 0.3}, "auto", None),
+    ("bool", {"mode": "BOOL", "must": "hot0", "should": "rare3 mid1",
+              "min_should_match": 1}, "auto",
+     lambda o, a, i: o.search_bool("hot0", "rare3 mid1",
+                                   min_should_match=1)),
+    ("exclude", {"query": "hot0 rare3", "mode": "OR", "exclude": "hot1"},
+     "auto", lambda o, a, i: [x for x in _full(o, "hot0 rare3")
+                              if x[0] not in _docs_with(o, ["hot1"])][:10]),
+    ("min_match", {"query": "hot0 hot1 rare3 mid1", "mode": "OR",
+                   "min_match": 2}, "auto",
+     lambda o, a, i: o.search("hot0 hot1 rare3 mid1", min_match=2)),
+    ("demote", {"query": "hot0 rare3", "mode": "OR", "demote": "hot1",
+                "demote_factor": 0.3}, "auto",
+     lambda o, a, i: o.search_boosting("hot0 rare3", "hot1",
+                                       negative_boost=0.3)),
+    # weight 2 on a qtf-1 term == the term written twice (qtf 2)
+    ("boosts", {"query": "hot0 mid1", "mode": "OR",
+                "boosts": {"hot0": 2.0}}, "auto",
+     lambda o, a, i: o.search("hot0 hot0 mid1")),
+    ("boost", {"query": "hot0 mid1", "mode": "OR", "boost": {
+        "field": "ts", "half_life_days": HL_DAYS, "now": NOW}}, "auto",
+     lambda o, a, i: _rescored(_full(o, "hot0 mid1"),
+                               lambda d: _recency(a[d]))),
+    ("dv_filter", {"query": "hot0 mid1", "mode": "OR",
+                   "dv_filter": "role = 'user'"}, "auto",
+     lambda o, a, i: [x for x in _full(o, "hot0 mid1")
+                      if a[x[0]].role == "user"][:10]),
+    ("k", {"query": "hot0 mid1", "mode": "OR", "k": 3}, "auto",
+     lambda o, a, i: o.search("hot0 mid1", k=3)),
+    ("wand", {"query": "hot0 hot1 mid1", "mode": "OR"}, True,
+     lambda o, a, i: o.search("hot0 hot1 mid1")),
+]
+
+
+@pytest.mark.parametrize("case", BATCH_CASES, ids=[c[0] for c in BATCH_CASES])
+def test_batch_local_equals_distributed_and_oracle(bidx, attrs, oracle_idx,
+                                                   monkeypatch, case):
+    _, entry, use_wand, oracle = case
+    qset = [dict(entry, id="e"), {"id": "o", "query": "w010 rare3",
+                                  "mode": "OR"}]
+    dist, local = both_routes(
+        monkeypatch, lambda: Q.search_batch(bidx, qset, k=10,
+                                            use_wand=use_wand),
+        rows=_batch_rows)
+    assert local == dist  # bit-identical, same (qid, score, doc) order
+    got = {}
+    for qid, d, sc in local:
+        got.setdefault(qid, []).append((d, sc))
+    assert got.get("e") and got.get("o")  # non-degenerate
+    assert got["o"] == oracle_idx.search("w010 rare3")
+    if oracle is not None:
+        _assert_oracle(got["e"], oracle(oracle_idx, attrs, bidx))
+
+
+def test_batch_tombstones_local_equals_distributed(spark, lidx, oracle_idx,
+                                                   monkeypatch, tmp_path):
+    import shutil
+
+    from engine.build import load_index
+    from engine.deletes import delete_ids
+    d = str(tmp_path / "bdel")
+    shutil.copytree(lidx.index_dir, d)
+    idx = load_index(spark, d)
+    full = _full(oracle_idx, "hot0 rare3")
+    gone = [full[0][0], full[3][0]]
+    delete_ids(idx, gone)
+    qset = [{"id": "a", "query": "hot0 rare3", "mode": "OR"},
+            {"id": "b", "query": "hot0 rare3", "mode": "OR",
+             "exclude": "hot1"}]
+    dist, local = both_routes(
+        monkeypatch, lambda: Q.search_batch(idx, qset, k=10),
+        rows=_batch_rows)
+    assert local == dist
+    got = {}
+    for qid, doc, sc in local:
+        got.setdefault(qid, []).append((doc, sc))
+    _assert_oracle(got["a"], [x for x in full if x[0] not in gone][:10])
+    ex = _docs_with(oracle_idx, ["hot1"])
+    _assert_oracle(got["b"], [x for x in full
+                              if x[0] not in gone and x[0] not in ex][:10])
+
+
+def test_batch_qid_literal_round_trips(lidx, oracle_idx, monkeypatch):
+    """A qid with a quote, a backslash and non-ASCII text survives the
+    local route's VALUES literal and sorts like the distributed plan
+    (code-point order == Spark's UTF-8 byte order)."""
+    odd = "it's a \\ tëst ✓ 語"
+    qset = [{"id": odd, "query": "hot0 rare3", "mode": "OR"},
+            {"id": "Z", "query": "hot1", "mode": "OR"},
+            {"id": "é", "query": "w010", "mode": "OR"}]
+    dist, local = both_routes(
+        monkeypatch, lambda: Q.search_batch(lidx, qset, k=5),
+        rows=_batch_rows)
+    assert local == dist
+    assert [q for q, _, _ in local] == sorted(q for q, _, _ in local)
+    got = {}
+    for qid, d, sc in local:
+        got.setdefault(qid, []).append((d, sc))
+    assert set(got) == {odd, "Z", "é"}
+    _assert_oracle(got[odd], oracle_idx.search("hot0 rare3", k=5))
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_small_batch_runs_no_spark_job(spark, lidx, arrow):
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    sc = spark.sparkContext
+    gid = f"local-batch-{arrow}"
+    spark.conf.set(key, arrow)
+    qset = [{"id": "a", "query": "hot0 rare3", "mode": "OR"},
+            {"id": "b", "query": "hot0 hot1", "mode": "AND",
+             "exclude": "rare3"},
+            {"id": "c", "mode": "DIS_MAX", "queries": ["hot0", "mid1"]},
+            {"id": "d", "mode": "BOOL", "must": "hot0", "should": "rare3"},
+            {"id": "e", "query": "zzzunknown", "mode": "OR"}]
+    try:
+        lidx.refresh()  # cold lexicon memo: the lookup must be job-free too
+        sc.setJobGroup(gid, gid)
+        out = _by_qid(Q.search_batch(lidx, qset, k=10))
+        empty = Q.search_batch(lidx, [qset[-1]], k=10).collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prev)
+    assert set(out) == {"a", "b", "c", "d"} and empty == []
+
+
+def _batch_mass(idx, terms):
+    return sum(int(v["df"]) for v in idx.lookup_terms(terms).values())
+
+
+BOUNDARY_SET = [{"id": "a", "query": "hot0 rare3", "mode": "OR"},
+                {"id": "b", "query": "w010", "mode": "OR", "k": 3}]
+
+
+def _assert_batch_distributed(df):
+    plan = _plan(df)
+    assert "FlatMapGroupsInPandas" in plan and "Window" in plan, plan
+
+
+def test_batch_route_boundary_is_posting_mass(lidx, monkeypatch):
+    """Local at the set's summed mass == constant, distributed one
+    posting below it — with the frozen groupBy + window plan."""
+    mass = _batch_mass(lidx, ["hot0", "rare3", "w010"])
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", mass)
+    local = Q.search_batch(lidx, BOUNDARY_SET, k=10)
+    assert "LocalTableScan" in _plan(local)
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", mass - 1)
+    dist = Q.search_batch(lidx, BOUNDARY_SET, k=10)
+    _assert_batch_distributed(dist)
+    assert _batch_rows(local) == _batch_rows(dist)
+
+
+def test_batch_route_boundary_is_result_rows(lidx, monkeypatch):
+    """A set stays local only while its result rows, the sum over
+    entries of min(k_q, mass_q), fit LOCAL_MAX_ROWS: each entry's own
+    "k" counts, and a whole-ranking k counts the entry's mass."""
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", BIG)
+    mass_a = _batch_mass(lidx, ["hot0", "rare3"])
+    qset = [dict(BOUNDARY_SET[0], k=10 ** 9), BOUNDARY_SET[1]]
+    rows = mass_a + 3
+    monkeypatch.setattr(Q, "LOCAL_MAX_ROWS", rows)
+    local = Q.search_batch(lidx, qset, k=10)
+    assert "LocalTableScan" in _plan(local)
+    monkeypatch.setattr(Q, "LOCAL_MAX_ROWS", rows - 1)
+    dist = Q.search_batch(lidx, qset, k=10)
+    _assert_batch_distributed(dist)
+    got = _by_qid(local)
+    assert _batch_rows(local) == _batch_rows(dist)
+    assert len(got["a"]) > 10 and len(got["b"]) == 3
+
+
+def test_batch_doc_filter_keeps_cogrouped_plan(lidx, monkeypatch):
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", BIG)
+    df = Q.search_batch(lidx, BOUNDARY_SET, k=10,
+                        doc_filter="turn_idx >= 1")
+    plan = _plan(df)
+    assert "FlatMapCoGroupsInPandas" in plan and "Window" in plan, plan
+    assert _by_qid(df)["a"]
+
+
+# ---- k = 10**9 on the remaining distributed top-k tails ----
+
+def _planned_limits(df) -> list[int]:
+    import re
+    plan = _plan(df)
+    assert "TakeOrderedAndProject" in plan, plan
+    return [int(n) for n in re.findall(r"Arguments: (\d+), \[", plan)]
+
+
+TAIL_CASES = [
+    ("sorted", lambda i: Q.search_sorted(i, "hot0", "ts", k=10 ** 9,
+                                         mode="OR")),
+    ("phrase", lambda i: Q.search_phrase(i, "hot0 hot1", k=10 ** 9)),
+    ("phrase_prefix", lambda i: Q.search_phrase_prefix(i, "hot0 ho",
+                                                       k=10 ** 9)),
+    ("span_first", lambda i: Q.search_span_first(i, "hot0", 3, k=10 ** 9)),
+    ("multi_match", lambda i: Q.search_multi_match(
+        i, "hot0 user", fields={"text": 1.0, "role": 2.0}, k=10 ** 9)),
+]
+
+
+@pytest.mark.parametrize("case", TAIL_CASES, ids=[c[0] for c in TAIL_CASES])
+def test_tail_limit_clipped_to_doc_count(bidx, case):
+    _, run = case
+    df = run(bidx)
+    limits = _planned_limits(df)
+    assert limits and max(limits) <= bidx.n_docs, limits
+    assert df.collect()  # non-degenerate
+
+
+def test_multi_index_limit_clipped_to_doc_count(lidx, bidx):
+    from engine.multi import search_multi
+    df = search_multi([lidx, bidx], "hot0 rare3", k=10 ** 9)
+    limits = _planned_limits(df)
+    assert limits and max(limits) <= lidx.n_docs + bidx.n_docs, limits
+    assert len(df.collect()) > 10
