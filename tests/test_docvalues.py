@@ -257,17 +257,13 @@ def test_batch_dv_and_doc_filter_intersect(dv_pos_index):
     assert a == b and a
 
 
-def test_cli_docvalue_flags(tmp_path):
+def test_cli_docvalue_flags(cli, tmp_path):
     """CLI: build --doc-values, then --dv-filter / --boost-* / --sort-by
     round-trips (engine/__main__.py)."""
     import json
-    import subprocess
-    import sys
 
     def run(*argv):
-        return subprocess.run([sys.executable, "-m", "engine", *argv],
-                              capture_output=True, text=True,
-                              cwd="/root/repo", timeout=300)
+        return cli(argv)
 
     d = str(tmp_path / "cli_dv_idx")
     r = run("build", "--input", "synthetic", "--convs", "120",

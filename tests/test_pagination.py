@@ -100,24 +100,19 @@ def test_prefix_pagination(packed_index, oracle_idx):
     assert [d for d, _ in got] == [d for d, _ in full]
 
 
-def test_cli_after_cursor(tmp_path):
+def test_cli_after_cursor(cli, tmp_path):
     import json
-    import subprocess
-    import sys
     d = str(tmp_path / "cli_idx")
-    r = subprocess.run(
-        [sys.executable, "-m", "engine", "build", "--input", "synthetic",
-         "--convs", "120", "--index-dir", d],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r = cli(["build", "--input", "synthetic", "--convs", "120",
+             "--index-dir", d])
     assert r.returncode == 0, r.stderr[-2000:]
 
     def page(after=None):
-        cmd = [sys.executable, "-m", "engine", "search", "--index-dir", d,
-               "--query", "hot0 hot1", "--k", "5"]
+        cmd = ["search", "--index-dir", d, "--query", "hot0 hot1",
+               "--k", "5"]
         if after:
             cmd += ["--after", after]
-        r = subprocess.run(cmd, capture_output=True, text=True,
-                           cwd="/root/repo", timeout=300)
+        r = cli(cmd)
         assert r.returncode == 0, r.stderr[-2000:]
         return [json.loads(l) for l in r.stdout.splitlines()
                 if l.startswith("{")]

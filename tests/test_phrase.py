@@ -295,23 +295,16 @@ def test_phrase_in_search_batch(spark, tmp_path):
                                "mode": "PHRASE"}])
 
 
-def test_cli_phrase_exclude_and_text(tmp_path):
+def test_cli_phrase_exclude_and_text(cli, tmp_path):
     """CLI: --mode PHRASE now composes with --exclude and --text
     (ADVICE r3 medium: these crashed or were refused)."""
     import json
-    import subprocess
-    import sys
     d = str(tmp_path / "cli_idx")
-    r = subprocess.run(
-        [sys.executable, "-m", "engine", "build", "--input", "synthetic",
-         "--convs", "120", "--index-dir", d, "--positions"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r = cli(["build", "--input", "synthetic", "--convs", "120",
+             "--index-dir", d, "--positions"])
     assert r.returncode == 0, r.stderr[-2000:]
-    r = subprocess.run(
-        [sys.executable, "-m", "engine", "search", "--index-dir", d,
-         "--query", "hot0 hot1", "--mode", "PHRASE",
-         "--exclude", "w005", "--text"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r = cli(["search", "--index-dir", d, "--query", "hot0 hot1",
+             "--mode", "PHRASE", "--exclude", "w005", "--text"])
     assert r.returncode == 0, r.stderr[-2000:]
     out = [json.loads(l) for l in r.stdout.splitlines() if l.startswith("{")]
     assert out and all("text" in o and "n_phrase" in o for o in out)

@@ -146,23 +146,16 @@ def test_prefix_in_search_batch(packed_index):
     assert got["o1"] == one
 
 
-def test_cli_prefix_snippets(tmp_path):
+def test_cli_prefix_snippets(cli, tmp_path):
     """CLI: --mode PREFIX with --max-expansions and --snippets (snippets
     highlight the EXPANDED terms, not the raw prefix)."""
     import json
-    import subprocess
-    import sys
     d = str(tmp_path / "cli_idx")
-    r = subprocess.run(
-        [sys.executable, "-m", "engine", "build", "--input", "synthetic",
-         "--convs", "120", "--index-dir", d],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r = cli(["build", "--input", "synthetic", "--convs", "120",
+             "--index-dir", d])
     assert r.returncode == 0, r.stderr[-2000:]
-    r = subprocess.run(
-        [sys.executable, "-m", "engine", "search", "--index-dir", d,
-         "--query", "w1*", "--mode", "PREFIX", "--max-expansions", "7",
-         "--k", "5", "--snippets"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r = cli(["search", "--index-dir", d, "--query", "w1*", "--mode",
+             "PREFIX", "--max-expansions", "7", "--k", "5", "--snippets"])
     assert r.returncode == 0, r.stderr[-2000:]
     out = [json.loads(l) for l in r.stdout.splitlines() if l.startswith("{")]
     assert out and all("snippet" in o and "score" in o for o in out)

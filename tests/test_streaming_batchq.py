@@ -2,8 +2,6 @@
 query execution, lineage DF, CLI entry points."""
 
 import json
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -214,19 +212,15 @@ def test_lineage_df(spark, corpus_df, tmp_path):
     assert all(r.rows > 0 for r in rows.values())
 
 
-def test_cli_build_and_search(tmp_path):
+def test_cli_build_and_search(cli, tmp_path):
     env_dir = str(tmp_path / "cliidx")
-    r = subprocess.run(
-        [sys.executable, "-m", "engine", "build", "--input", "synthetic",
-         "--convs", "100", "--index-dir", env_dir],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r = cli(["build", "--input", "synthetic", "--convs", "100",
+             "--index-dir", env_dir])
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
     assert out["n_docs"] > 0 and out["turns_per_sec"] > 0
-    r2 = subprocess.run(
-        [sys.executable, "-m", "engine", "search", "--index-dir", env_dir,
-         "--query", "hot0 hot1", "--k", "3", "--mode", "AND", "--text"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    r2 = cli(["search", "--index-dir", env_dir, "--query", "hot0 hot1",
+              "--k", "3", "--mode", "AND", "--text"])
     assert r2.returncode == 0, r2.stderr[-2000:]
     lines = [json.loads(l) for l in r2.stdout.splitlines() if l.startswith("{")]
     assert len(lines) == 3 and all("text" in l for l in lines)
