@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .analyzer import tokenize_py
-from .query import (_allowed_shards, _del_closure, _plan_cached,
-                    _require_dv, query_terms)
+from .query import (_allowed_shards, _del_closure, _doc_limit,
+                    _plan_cached, _require_dv, query_terms)
 
 COUNT_SCHEMA = "n_docs long"
 STATS_SCHEMA = ("n_docs long, n_with_value long, min_val double, "
@@ -1718,7 +1718,8 @@ def more_like_this(index, doc_id: int, k: int = 10, max_terms: int = 16,
                            doc_filter=doc_filter, dv_filter=dv_filter,
                            qtf_override={t: 1 for t in terms})
         return (top.filter(F.col("doc_id") != F.lit(doc_id))
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(_doc_limit(index, k)))
 
     return _plan_cached(index, key, build)
 
@@ -2434,6 +2435,7 @@ def search_groups(index, query: str, field: str, k: int = 10,
                  "count": F.col("n_docs").cast("double")}[score_mode]
         return (agg.select(F.col("g").alias("group_key"),
                            score.alias("score"), "n_docs")
-                .orderBy(F.desc("score"), F.asc("group_key")).limit(k))
+                .orderBy(F.desc("score"), F.asc("group_key"))
+                .limit(_doc_limit(index, k)))
 
     return _plan_cached(index, key, build)

@@ -36,8 +36,8 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from .analyzer import tokenize_py
-from .query import (WAND_MIN_SHARD_POSTINGS, WAND_SEED_FRAC, _del_closure,
-                    _doc_limit, _score_shard_exhaustive, query_terms)
+from .query import (_del_closure, _doc_limit, _score_shard_exhaustive,
+                    _wand_pays, query_terms)
 
 
 def _require_compat(indexes) -> None:
@@ -168,11 +168,7 @@ def search_multi(indexes: list, query: str, k: int = 10, mode: str = "OR",
         if routed == "auto" and mode == "OR":
             # the same per-member cost gate as search(): per-shard
             # posting mass + seed selectivity, from this member's df
-            mass = sum(int(lex[t]["df"]) for t in my_known)
-            seed_df = min(int(lex[t]["df"]) for t in my_known)
-            n_shards = max(1, -(-ix.n_docs // width))
-            routed = (mass // n_shards >= WAND_MIN_SHARD_POSTINGS
-                      and seed_df * WAND_SEED_FRAC < mass)
+            routed = _wand_pays([int(lex[t]["df"]) for t in my_known], ix)
         routed = bool(routed) and mode == "OR"
         cols = ["term", "shard", "df", "doc_ids", "tfs", "dls"] + (
             ["blocks", "max_tf"] if routed else [])

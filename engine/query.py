@@ -13,6 +13,7 @@ rank-identical results — that equivalence is itself a test.
 
 from __future__ import annotations
 
+import dataclasses
 from collections import Counter
 
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -600,21 +601,21 @@ def search_dis_max(index, queries: list, k: int = 10,
       rule). Routing is exhaustive-only: block-max bounds are per-term
       sums, not per-subquery maxima.
 
-    Plan: the union of all subqueries' terms rides one pruned postings
-    read; the shard kernel decodes each (term, shard) payload ONCE,
-    scatter-adds the shared tf-factor into every subquery's accumulator
-    scaled by that subquery's qtf, combines the <= N width-bounded
-    accumulators, and emits <= k rows; global top-k. Small queries run
-    on the driver with no Spark job, larger ones as ONE job ending in
-    TakeOrderedAndProject (``_run_shards``; ``doc_filter`` always takes
-    the job)."""
+    Plan: a one-entry query set (``_search_one``) scored by the shared
+    query-set kernel ``_score_shard_batch`` — the same code as a
+    ``search_batch`` DIS_MAX entry and as ``search_multi_match``, whose
+    slots here are the subqueries (boost 1.0, the index avgdl). The
+    union of all subqueries' terms rides one pruned postings read; each
+    (term, shard) payload is decoded ONCE per shard and each subquery
+    sums its terms' contributions; <= k rows per shard, then the global
+    top-k. Small queries run on the driver with no Spark job, larger
+    ones as ONE job ending in TakeOrderedAndProject (``_run_shards``;
+    ``doc_filter`` always takes the cogrouped job)."""
     _warn_if_stale(index)
     queries = [str(q) for q in queries]
     if not queries:
         raise ValueError("dis_max needs at least one subquery")
-    tie = float(tie_breaker)
-    if not (0.0 <= tie <= 1.0):
-        raise ValueError("tie_breaker must lie in [0, 1]")
+    tie = _tie_breaker(tie_breaker, "dis_max")
     key = ("dm", tuple(queries), k, tie, exclude, doc_filter, dv_filter)
     return _plan_cached(index, key, lambda: _search_dis_max_impl(
         index, queries, k, tie, exclude, doc_filter, dv_filter))
@@ -624,133 +625,10 @@ def _search_dis_max_impl(index, queries: list, k: int, tie: float,
                          exclude: str | None,
                          doc_filter: str | None,
                          dv_filter: str | None) -> DataFrame:
-    k = _doc_limit(index, k)
-    spark = index.spark
-    acfg = index.cfg.analyzer
-    sub_qtfs = [query_terms(q, acfg) for q in queries]
-    union_terms = sorted(set().union(*[set(s) for s in sub_qtfs]))
-    empty = _empty_topk(spark)
-    if not union_terms:
-        return empty
-    neg = (sorted(set(tokenize_py(exclude, acfg)) - set(union_terms))
-           if exclude else [])
-    lex = index.lookup_terms(sorted(set(union_terms) | set(neg)))
-    known = [t for t in union_terms if t in lex]
-    if not known:
-        return empty
-    neg = [t for t in neg if t in lex]
-    known_set = set(known)
-    # per-subquery known qtf maps; empty subqueries match nothing but
-    # keep their LIST SLOT (the total fold order is list order)
-    subs = [{t: float(n) for t, n in s.items() if t in known_set}
-            for s in sub_qtfs]
-    idfs = {t: float(lex[t]["idf"]) for t in known}
-    scan_terms = sorted(set(known) | set(neg))
-    cols = ["term", "shard", "df", "doc_ids", "tfs", "dls"]
-    width = index.shard_width
-    cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
-            "avgdl": index.avgdl}
-    neg_set = frozenset(neg)
-    del_locs = _del_closure(index)
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def _kernel(post_pdf, allowed_loc=None):
-        import numpy as np
-        import pandas as pd
-        from . import codec as C
-        out_empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(post_pdf) == 0:
-            return out_empty
-        shard = int(post_pdf["shard"].iloc[0])
-        start = shard * width
-        n_sub = len(subs)
-        accs = [np.zeros(width, dtype=np.float64) for _ in range(n_sub)]
-        hitany = np.zeros(width, dtype=bool)
-        negmask = np.zeros(width, dtype=bool) if neg_set else None
-        k1, b, avgdl = cfgd["k1"], cfgd["b"], cfgd["avgdl"]
-        order = np.argsort(post_pdf["term"].to_numpy(object))
-        for i in order:
-            term = post_pdf["term"].iloc[int(i)]
-            if term in neg_set:
-                ids, _ = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                           post_pdf["tfs"].iloc[int(i)])
-                negmask[ids - start] = True
-                continue
-            ids, tfs = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                         post_pdf["tfs"].iloc[int(i)])
-            dls = C.vbyte_decode(post_pdf["dls"].iloc[int(i)]).astype(
-                np.float64)
-            loc = ids - start
-            tfs = tfs.astype(np.float64)
-            # shared decode, per-subquery contribution with EXACTLY the
-            # single-query kernel's float64 grouping — ((qtf*idf)*A)/B —
-            # so each s_i is bit-identical to search(subquery_i)'s sum
-            num = tfs * (k1 + 1.0)
-            den = tfs + k1 * (1.0 - b + b * dls / avgdl)
-            hit_marked = False
-            for si, s in enumerate(subs):
-                qtf = s.get(term)
-                if qtf is None:
-                    continue
-                # terms arrive in global ascending order, so each
-                # accumulator receives ITS terms ascending too — the
-                # frozen per-subquery summation order
-                accs[si][loc] += (qtf * idfs[term]) * num / den
-                if not hit_marked:
-                    hitany[loc] = True
-                    hit_marked = True
-        if negmask is not None:
-            hitany[negmask] = False
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                hitany[dl_] = False
-        if dv_filter is not None:
-            from .docvalues import eval_filter
-            allow = np.zeros(width, dtype=bool)
-            allow[eval_filter(dv_dir, shard, dv_gen, dv_filter)] = True
-            hitany &= allow
-        if allowed_loc is not None:
-            allow = np.zeros(width, dtype=bool)
-            allow[np.asarray(allowed_loc, dtype=np.int64)] = True
-            hitany &= allow
-        hit = np.flatnonzero(hitany)
-        if hit.size == 0:
-            return out_empty
-        # combine: total = left-fold in subquery list order; best = max;
-        # score = best + tie * (total - best) — the twin's expression
-        total = accs[0][hit].copy()
-        best = accs[0][hit].copy()
-        for si in range(1, len(accs)):
-            v = accs[si][hit]
-            total = total + v
-            np.maximum(best, v, out=best)
-        scores = best + tie * (total - best)
-        hit, scores = C.topk_tiebreak(hit, scores, k)
-        import pandas as _pd
-        return _pd.DataFrame({"doc_id": (hit + start).astype(np.int64),
-                              "score": scores})
-
-    if doc_filter is not None:
-        allowed = _allowed_shards(index, doc_filter, width)
-
-        def fnf(key, post_pdf, allowed_pdf):
-            import numpy as np
-            import pandas as pd
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            return _kernel(post_pdf, allowed_loc=loc)
-
-        scored = (_pruned_postings(index, lex, scan_terms, cols)
-                  .groupBy("shard")
-                  .cogroup(allowed.groupBy("shard"))
-                  .applyInPandas(fnf, "doc_id long, score double"))
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return _run_shards(index, lex, scan_terms, cols,
-                       lambda key, pdf: _kernel(pdf), k)
+    subs = [query_terms(q, index.cfg.analyzer) for q in queries]
+    terms = {t: 1 for t in sorted(set().union(*subs))}
+    return _search_one(index, terms, k, exclude, doc_filter, dv_filter,
+                       dismaxes=(subs, tie))
 
 
 def search_multi_match(index, query: str, fields=None, k: int = 10,
@@ -802,44 +680,22 @@ def search_multi_match(index, query: str, fields=None, k: int = 10,
       Routing is exhaustive-only (like dis_max: block-max bounds are
       per-term sums, not cross-field maxima).
 
-    Plan: ONE job — all fields' prefixed terms ride one pruned
-    postings scan (same segment layout, same bucket pruning); the
-    shard kernel routes each (term, shard) payload to its field's
-    width-bounded accumulator (a term key belongs to exactly one
-    field), combines, and emits <= k rows; global
-    TakeOrderedAndProject. At 100 TB this is the same single-scan
-    cost shape as dis_max — fields multiply the query's term count,
-    never the corpus reads."""
+    Plan: a one-entry query set (``_search_one``) scored by the shared
+    query-set kernel ``_score_shard_batch`` — the same code as a
+    ``search_batch`` MULTI_MATCH entry and as ``search_dis_max`` (one
+    combine serves all three match types and dis_max). All fields'
+    prefixed terms ride one pruned postings scan (same segment layout,
+    same bucket pruning); each (term, shard) payload is decoded once
+    per shard and summed into its field's slot (a term key belongs to
+    exactly one field); <= k rows per shard, then the global top-k.
+    Small queries run on the driver with no Spark job, larger ones as
+    ONE job ending in TakeOrderedAndProject (``_run_shards``;
+    ``doc_filter`` always takes the cogrouped job). At 100 TB this is
+    the same single-scan cost shape as dis_max — fields multiply the
+    query's term count, never the corpus reads."""
     _warn_if_stale(index)
-    if fields is None:
-        fields = {"text": 1.0}
-        for f_ in (index.extra_fields or ()):
-            fields[f_] = 1.0
-    elif not isinstance(fields, dict):
-        fields = {str(f_): 1.0 for f_ in fields}
-    else:
-        fields = {str(f_): float(b_) for f_, b_ in fields.items()}
-    if not fields:
-        raise ValueError("multi_match needs at least one field")
-    known_fields = {"text", *(index.extra_fields or ())}
-    bad = [f_ for f_ in fields if f_ not in known_fields]
-    if bad:
-        raise ValueError(
-            f"multi_match fields {bad} not indexed (available: "
-            f"{sorted(known_fields)}; build with "
-            f"IndexConfig.extra_fields)")
-    if any(b_ <= 0 for b_ in fields.values()):
-        raise ValueError("field boosts must be > 0")
-    mt = str(match_type)
-    if mt not in ("best_fields", "most_fields", "cross_fields"):
-        raise ValueError("match_type must be "
-                         "best_fields|most_fields|cross_fields")
-    tie = float(tie_breaker)
-    if not (0.0 <= tie <= 1.0):
-        raise ValueError("tie_breaker must lie in [0, 1]")
-    if mt == "most_fields" and tie != 0.0:
-        raise ValueError("tie_breaker only applies to "
-                         "best_fields/cross_fields")
+    fields, mt, tie = _multi_match_args(index, fields, match_type,
+                                        tie_breaker, "multi_match")
     key = ("mm", query, tuple(fields.items()), k, mt, tie, exclude,
            doc_filter, dv_filter)
     return _plan_cached(index, key, lambda: _search_multi_match_impl(
@@ -859,10 +715,11 @@ def search_fielded(index, clauses: list, k: int = 10,
     combine, per-field boost 1.0 — weights live on the clauses).
     Duplicate (field, token) clauses merge by SUMMING weights (the
     Lucene repeated-clause qtf rule). ``exclude`` stays a text-space
-    NOT. Backed by the multi_match kernel: one pruned scan, per-field
-    width-bounded accumulators, TakeOrderedAndProject. The
-    query-string mini-language's ``field:term`` syntax routes here
-    (engine/querystring.py)."""
+    NOT. Scored like ``search_multi_match`` (most_fields): a one-entry
+    query set through the shared query-set kernel, one pruned scan,
+    on the driver when small, else ONE job ending in
+    TakeOrderedAndProject. The query-string mini-language's
+    ``field:term`` syntax routes here (engine/querystring.py)."""
     _warn_if_stale(index)
     norm: dict = {}
     order: list = []
@@ -899,228 +756,90 @@ def _search_multi_match_impl(index, query: "str | None", fields: dict,
                              k: int, mt: str, tie: float, exclude,
                              doc_filter, dv_filter,
                              fq: dict | None = None) -> DataFrame:
-    spark = index.spark
-    acfg = index.cfg.analyzer
-    empty = _empty_topk(spark)
+    # fq (search_fielded): per-field token->qtf maps prebuilt by the
+    # caller; the exclude positive-wins base is then the TEXT clauses'
+    # tokens, else the query's tokens (exclude is a text-space NOT)
     if fq is None:
-        qt = query_terms(query, acfg)
-        if not qt:
-            return empty
+        qt = query_terms(query, index.cfg.analyzer)
+        fq = {f_: qt for f_ in fields}
     else:
-        # search_fielded: per-field token->qtf maps prebuilt by the
-        # caller; qt (the exclude positive-wins base) is the TEXT
-        # clauses' tokens
-        qt = dict(fq.get("text", {}))
-        if not any(fq.values()):
-            return empty
-    field_list = list(fields)  # dict order == frozen fold order
+        qt = fq.get("text", {})
+    entry = _multi_match_entry(index, fields, fq, mt, tie)
+    terms = {t: 1 for _, _, m in entry[0] for t in sorted(m)}
+    return _search_one(index, terms, k, exclude, doc_filter, dv_filter,
+                       base=qt, multis=entry)
+
+
+def _tie_breaker(tie, what: str) -> float:
+    tie = float(tie)
+    if not (0.0 <= tie <= 1.0):
+        raise ValueError(f"{what}: tie_breaker must lie in [0, 1]")
+    return tie
+
+
+def _multi_match_args(index, fields, match_type, tie_breaker,
+                      what: str) -> tuple:
+    """Normalize and check a multi_match request (``search_multi_match``
+    and ``search_batch`` MULTI_MATCH entries) -> ``(fields, match_type,
+    tie)``. ``fields``: ``{field: boost}`` (dict order = fold order), a
+    list (boost 1.0 each), or None = ``text`` plus every extra field."""
+    if fields is None:
+        fields = {"text": 1.0}
+        for f_ in (index.extra_fields or ()):
+            fields[f_] = 1.0
+    elif not isinstance(fields, dict):
+        fields = {str(f_): 1.0 for f_ in fields}
+    else:
+        fields = {str(f_): float(b_) for f_, b_ in fields.items()}
+    if not fields:
+        raise ValueError(f"{what} needs at least one field")
+    known_fields = {"text", *(index.extra_fields or ())}
+    bad = [f_ for f_ in fields if f_ not in known_fields]
+    if bad:
+        raise ValueError(
+            f"{what}: fields {bad} not indexed (available: "
+            f"{sorted(known_fields)}; build with "
+            f"IndexConfig.extra_fields)")
+    if any(b_ <= 0 for b_ in fields.values()):
+        raise ValueError(f"{what}: field boosts must be > 0")
+    mt = str(match_type)
+    if mt not in ("best_fields", "most_fields", "cross_fields"):
+        raise ValueError(f"{what}: match_type must be "
+                         "best_fields|most_fields|cross_fields")
+    tie = _tie_breaker(tie_breaker, what)
+    if mt == "most_fields" and tie != 0.0:
+        raise ValueError(f"{what}: tie_breaker only applies to "
+                         "best_fields/cross_fields")
+    return fields, mt, tie
+
+
+def _multi_match_entry(index, fields: dict, fq: dict, mt: str,
+                       tie: float) -> tuple:
+    """The query-set kernel's entry for a multi-field query:
+    ``(slots, tie, match_type, groups)``. ``slots`` holds one ``(avgdl_f,
+    boost_f, {term key: qtf})`` per field in fields order (the fold
+    order), the keys being ``fq[f]``'s tokens in f's term space
+    (``f:token``; ``text`` is unprefixed); a field without length stats
+    keeps an empty slot. ``groups`` (cross_fields only) lists, per
+    token ascending, the ``(slot, key)`` pairs whose contributions
+    combine per token."""
     favg = {"text": float(index.avgdl)}
-    for f_ in field_list:
-        if f_ != "text":
-            favg[f_] = float((index.field_avgdl or {}).get(f_, 0.0))
+    for f_ in (index.extra_fields or ()):
+        favg[f_] = float((index.field_avgdl or {}).get(f_, 0.0))
 
     def tkey(f_, t):
         return t if f_ == "text" else f"{f_}:{t}"
 
-    # exclude applies in the text space (positive-wins vs text terms)
-    neg = (sorted(set(tokenize_py(exclude, acfg)) - set(qt))
-           if exclude else [])
-    if fq is None:
-        all_keys = sorted({tkey(f_, t) for f_ in field_list for t in qt
-                           if favg[f_] > 0.0} | set(neg))
-    else:
-        all_keys = sorted({tkey(f_, t) for f_ in field_list
-                           for t in fq.get(f_, {})
-                           if favg[f_] > 0.0} | set(neg))
-    if not all_keys:
-        return empty
-    lex = index.lookup_terms(all_keys)
-    neg = [t for t in neg if t in lex]
-    # per-field known (prefixed-term -> qtf) maps; empty fields keep
-    # their LIST SLOT (the total fold order is fields order)
-    subs = []
-    for f_ in field_list:
-        src = qt if fq is None else fq.get(f_, {})
-        m = {tkey(f_, t): float(n) for t, n in src.items()
-             if favg[f_] > 0.0 and tkey(f_, t) in lex}
-        subs.append((f_, m))
-    if not any(m for _, m in subs):
-        return empty
-    idfs = {t: float(lex[t]["idf"]) for t in lex}
-    scan_terms = sorted({t for _, m in subs for t in m} | set(neg))
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select("term", "shard", "df", "doc_ids", "tfs", "dls"))
-    width = index.shard_width
-    k1_, b_ = index.cfg.bm25.k1, index.cfg.bm25.b
-    boosts = [float(fields[f_]) for f_ in field_list]
-    avgdls = [favg[f_] for f_ in field_list]
-    # term key -> (field slot, qtf); a key belongs to exactly one slot
-    term_slot = {}
-    for si, (f_, m) in enumerate(subs):
-        for t, n in m.items():
-            term_slot[t] = (si, n)
-    # cross_fields: token-major grouping — per TOKEN, the field
-    # variants whose per-term contributions combine max+tie*(sum-max)
-    token_groups = []
+    slots = [(favg[f_], float(b_),
+              {tkey(f_, t): float(n) for t, n in fq.get(f_, {}).items()}
+              if favg[f_] > 0.0 else {})
+             for f_, b_ in fields.items()]
+    groups = None
     if mt == "cross_fields":
-        for t in sorted(qt):  # ascending tokens == the frozen fold
-            variants = [(si, tkey(f_, t), float(qt[t]))
-                        for si, (f_, m) in enumerate(subs)
-                        if tkey(f_, t) in m]
-            if variants:
-                token_groups.append((t, variants))
-    neg_set = frozenset(neg)
-    del_locs = _del_closure(index)
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def _kernel(post_pdf, allowed_loc=None):
-        import numpy as np
-        import pandas as pd
-        from . import codec as C
-        out_empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(post_pdf) == 0:
-            return out_empty
-        shard = int(post_pdf["shard"].iloc[0])
-        start = shard * width
-        n_sub = len(subs)
-        accs = [np.zeros(width, dtype=np.float64) for _ in range(n_sub)]
-        hitany = np.zeros(width, dtype=bool)
-        negmask = np.zeros(width, dtype=bool) if neg_set else None
-        cross_total = None
-        if mt == "cross_fields":
-            # decode once into a key map, then walk tokens ascending:
-            # v_t = max_f(c) + tie * (sum_f(c) - max_f(c)), c =
-            # boost_f * the frozen per-term contribution with the
-            # FIELD's avgdl; total[doc] += v_t per token — the twin's
-            # exact expression
-            dec = {}
-            for i in range(len(post_pdf)):
-                term = post_pdf["term"].iloc[i]
-                ids, tfs = C.decode_postings(
-                    post_pdf["doc_ids"].iloc[i],
-                    post_pdf["tfs"].iloc[i])
-                if term in neg_set:
-                    negmask[ids - start] = True
-                    continue
-                dls = C.vbyte_decode(
-                    post_pdf["dls"].iloc[i]).astype(np.float64)
-                dec[term] = (ids - start, tfs.astype(np.float64), dls)
-            cross_total = np.zeros(width, dtype=np.float64)
-            tmax = np.zeros(width, dtype=np.float64)
-            tsum = np.zeros(width, dtype=np.float64)
-            for _tok, variants in token_groups:
-                locs_t = []
-                for si, key, qtf in variants:
-                    d = dec.get(key)
-                    if d is None:
-                        continue
-                    loc, tfs, dls = d
-                    num = tfs * (k1_ + 1.0)
-                    den = tfs + k1_ * (1.0 - b_ + b_ * dls / avgdls[si])
-                    c = boosts[si] * ((qtf * idfs[key]) * num / den)
-                    tmax[loc] = np.maximum(tmax[loc], c)
-                    tsum[loc] += c
-                    hitany[loc] = True
-                    locs_t.append(loc)
-                if not locs_t:
-                    continue
-                tk = np.unique(np.concatenate(locs_t))
-                cross_total[tk] += (tmax[tk]
-                                    + tie * (tsum[tk] - tmax[tk]))
-                tmax[tk] = 0.0
-                tsum[tk] = 0.0
-        else:
-            order = np.argsort(post_pdf["term"].to_numpy(object))
-            for i in order:
-                term = post_pdf["term"].iloc[int(i)]
-                if term in neg_set:
-                    ids, _ = C.decode_postings(
-                        post_pdf["doc_ids"].iloc[int(i)],
-                        post_pdf["tfs"].iloc[int(i)])
-                    negmask[ids - start] = True
-                    continue
-                slot = term_slot.get(term)
-                if slot is None:
-                    continue
-                si, qtf = slot
-                ids, tfs = C.decode_postings(
-                    post_pdf["doc_ids"].iloc[int(i)],
-                    post_pdf["tfs"].iloc[int(i)])
-                dls = C.vbyte_decode(
-                    post_pdf["dls"].iloc[int(i)]).astype(np.float64)
-                loc = ids - start
-                tfs = tfs.astype(np.float64)
-                # EXACTLY the single-query kernel's float64 grouping —
-                # ((qtf*idf)*A)/B — with THIS FIELD's avgdl in the
-                # length norm (the dls stream already carries the
-                # field's dl); terms arrive in global ascending order,
-                # so each field's accumulator receives ITS terms
-                # ascending too
-                num = tfs * (k1_ + 1.0)
-                den = tfs + k1_ * (1.0 - b_ + b_ * dls / avgdls[si])
-                accs[si][loc] += (qtf * idfs[term]) * num / den
-                hitany[loc] = True
-        if negmask is not None:
-            hitany[negmask] = False
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                hitany[dl_] = False
-        if dv_filter is not None:
-            from .docvalues import eval_filter
-            allow = np.zeros(width, dtype=bool)
-            allow[eval_filter(dv_dir, shard, dv_gen, dv_filter)] = True
-            hitany &= allow
-        if allowed_loc is not None:
-            allow = np.zeros(width, dtype=bool)
-            allow[np.asarray(allowed_loc, dtype=np.int64)] = True
-            hitany &= allow
-        hit = np.flatnonzero(hitany)
-        if hit.size == 0:
-            return out_empty
-        if mt == "cross_fields":
-            scores = cross_total[hit]
-        else:
-            # combine: s_f = boost_f * sum_f; total = left-fold in
-            # fields order; best_fields = best + tie * (total - best);
-            # most_fields = total — the twin's expression verbatim
-            total = boosts[0] * accs[0][hit]
-            best = total.copy()
-            for si in range(1, n_sub):
-                v = boosts[si] * accs[si][hit]
-                total = total + v
-                np.maximum(best, v, out=best)
-            scores = total if mt == "most_fields" \
-                else best + tie * (total - best)
-        hit, scores = C.topk_tiebreak(hit, scores, k)
-        return pd.DataFrame({"doc_id": (hit + start).astype(np.int64),
-                             "score": scores})
-
-    if doc_filter is not None:
-        allowed = _allowed_shards(index, doc_filter, width)
-
-        def fnf(key, post_pdf, allowed_pdf):
-            import numpy as np
-            import pandas as pd
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            return _kernel(post_pdf, allowed_loc=loc)
-
-        scored = (post.groupBy("shard")
-                  .cogroup(allowed.groupBy("shard"))
-                  .applyInPandas(fnf, "doc_id long, score double"))
-    else:
-        scored = (post.groupBy("shard")
-                  .applyInPandas(lambda key, pdf: _kernel(pdf),
-                                 "doc_id long, score double"))
-    return (scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(_doc_limit(index, k)))
+        toks = sorted({t for m in fq.values() for t in m})
+        groups = [[(si, tkey(f_, t)) for si, f_ in enumerate(fields)
+                   if tkey(f_, t) in slots[si][2]] for t in toks]
+    return slots, tie, mt, groups
 
 
 def search_boosting(index, positive: str, negative: str,
@@ -2023,11 +1742,7 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
         # terms the rest-sum upper bound makes block pruning vacuous.
         # WAND is reserved for the big-shard regime it was built for
         # (2^21-doc shards at cluster scale) with a selective seed.
-        mass = sum(int(lex[t]["df"]) for t in known)
-        seed_df = min(int(lex[t]["df"]) for t in known)
-        n_shards = max(1, -(-index.n_docs // index.shard_width))
-        use_wand = (mass // n_shards >= WAND_MIN_SHARD_POSTINGS
-                    and seed_df * WAND_SEED_FRAC < mass)
+        use_wand = _wand_pays([int(lex[t]["df"]) for t in known], index)
     cols = ["term", "shard", "df", "doc_ids", "tfs", "dls"] + (
         ["blocks", "max_tf"] if use_wand and mode == "OR" else [])
     width = index.shard_width
@@ -2232,6 +1947,17 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
 WAND_MIN_SHARD_POSTINGS = 1 << 18  # min posting mass per scorer task
 WAND_SEED_FRAC = 8                 # rarest list must be < mass / this
 
+
+def _wand_pays(dfs: list, index=None) -> bool:
+    """The WAND cost gate over one query's posting-list lengths ``dfs``:
+    global df spread over ``index``'s doc-range shards, or (``index``
+    None) one shard's own lengths inside a scorer task."""
+    n_shards = (1 if index is None
+                else max(1, -(-index.n_docs // index.shard_width)))
+    mass = sum(dfs)
+    return (mass // n_shards >= WAND_MIN_SHARD_POSTINGS
+            and min(dfs) * WAND_SEED_FRAC < mass)
+
 # Executor cost gate (the query-side twin of the WAND gate above): a
 # query whose posting mass (sum of lexicon df over its scan terms, known
 # driver-side from lookup_terms — the check costs nothing) is at most
@@ -2390,11 +2116,7 @@ def wand_routes(index, query: str) -> bool:
     known = [t for t in qtf if t in lex]
     if len(known) < 2:
         return False
-    mass = sum(int(lex[t]["df"]) for t in known)
-    seed_df = min(int(lex[t]["df"]) for t in known)
-    n_shards = max(1, -(-index.n_docs // index.shard_width))
-    return (mass // n_shards >= WAND_MIN_SHARD_POSTINGS
-            and seed_df * WAND_SEED_FRAC < mass)
+    return _wand_pays([int(lex[t]["df"]) for t in known], index)
 
 
 def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
@@ -2423,7 +2145,9 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
     path and the pure-Python oracle. Dense accumulators are allocated once
     per shard and reset only at touched positions between queries
     (postings << width), so per-query cost is O(query's posting mass),
-    not O(width).
+    not O(width). ``search_dis_max``, ``search_multi_match`` and
+    ``search_fielded`` are scored here too, as one-entry sets
+    (``_search_one``).
     """
     import numpy as np
     import pandas as pd
@@ -2522,6 +2246,15 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
     # counter for the must clause; allocated once per shard task and
     # reset at touched positions like acc/cnt
     cntm = np.zeros(width, dtype=np.int32) if musts else None
+    tmax = tsum = None   # cross_fields per-token scratch, on first use
+    if dismaxes:
+        # a DIS_MAX entry is a slot entry whose slots are its subqueries
+        # at boost 1.0 and the index avgdl (1.0 * x == x, and the
+        # contribution cache key is a plain entry's), best_fields combine
+        multis = dict(multis or {})
+        for qid, (subs_, tie_) in dismaxes.items():
+            multis[qid] = ([(avgdl, 1.0, sq) for sq in subs_], tie_,
+                           "best_fields", None)
     # per-entry (qid, doc_ids, scores); ONE DataFrame per shard at the end
     out_q, out_ids, out_sc = [], [], []
 
@@ -2569,47 +2302,81 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
             continue
         q_mm = msm.get(qid, 1) if msm else 1
         q_dem = demotes.get(qid) if demotes else None
-        q_dm = dismaxes.get(qid) if dismaxes else None
         q_mul = multis.get(qid) if multis else None
         q_dvp = dv_preds.get(qid) if dv_preds else None
         q_bst = boosts.get(qid) if boosts else None
         if q_mul is not None:
-            # MULTI_MATCH entry (same frozen combine as
-            # search_multi_match: per-field boost * frozen sum with the
-            # FIELD's avgdl in the length norm, total folded in fields
-            # order, best_fields = best + tie * (total - best),
-            # most_fields = total); per-(term, qtf, avgdl) contribution
-            # vectors come from the shared cache
-            slots_, tie_, mt_ = q_mul
-            per_sub, all_t = [], []
-            for avg_f, bf_, tmap in slots_:
-                terms_i = [t for t in sorted(tmap) if t in decoded]
-                if not terms_i:
-                    per_sub.append(None)
+            # DIS_MAX / MULTI_MATCH entry — the frozen combine of
+            # search_dis_max and search_multi_match, for single queries
+            # and sets alike. A slot (a field, or a dis_max subquery:
+            # boost 1.0, the index avgdl) is (avgdl, boost, {term: qtf});
+            # s_slot = boost * its ascending-term BM25 sum with the
+            # slot's avgdl in the length norm, 0.0 where it misses;
+            # total = left-fold of s_slot in slot order, best = their
+            # max; best_fields = best + tie * (total - best), most_fields
+            # = total. cross_fields folds per TOKEN instead: v_t = max +
+            # tie * (sum - max) over the token's boosted per-field
+            # contributions, score = sum of v_t over tokens ascending.
+            # Contribution vectors come from the shared cache.
+            slots_, tie_, mt_, groups_ = q_mul
+            all_t = []
+            if mt_ == "cross_fields":
+                if tmax is None:
+                    tmax = np.zeros(width, dtype=np.float64)
+                    tsum = np.zeros(width, dtype=np.float64)
+                for variants in groups_:
+                    locs_t = []
+                    for si, t in variants:
+                        if t not in decoded:
+                            continue
+                        avg_f, bf_, tmap = slots_[si]
+                        loc = decoded[t][0]
+                        c = bf_ * _contrib(t, float(tmap[t]), avg_f)
+                        tmax[loc] = np.maximum(tmax[loc], c)
+                        tsum[loc] += c
+                        locs_t.append(loc)
+                    if not locs_t:
+                        continue
+                    t_k = np.unique(np.concatenate(locs_t))
+                    acc[t_k] += tmax[t_k] + tie_ * (tsum[t_k] - tmax[t_k])
+                    tmax[t_k] = 0.0
+                    tsum[t_k] = 0.0
+                    all_t.append(t_k)
+                if not all_t:
                     continue
-                locs_i = []
-                for t in terms_i:
-                    loc = decoded[t][0]
-                    acc[loc] += _contrib(t, float(tmap[t]), avg_f)
-                    locs_i.append(loc)
-                t_i = np.unique(np.concatenate(locs_i))
-                per_sub.append((t_i, bf_ * acc[t_i]))
-                acc[t_i] = 0.0
-                all_t.append(t_i)
-            if not all_t:
-                continue
-            union = np.unique(np.concatenate(all_t))
-            total = np.zeros(union.size, dtype=np.float64)
-            best = np.zeros(union.size, dtype=np.float64)
-            for ps in per_sub:
-                v = np.zeros(union.size, dtype=np.float64)
-                if ps is not None:
-                    t_i, vals = ps
-                    v[np.searchsorted(union, t_i)] = vals
-                total = total + v
-                np.maximum(best, v, out=best)
-            sc = total if mt_ == "most_fields" \
-                else best + tie_ * (total - best)
+                union = np.unique(np.concatenate(all_t))
+                sc = acc[union]
+                acc[union] = 0.0
+            else:
+                per_sub = []
+                for avg_f, bf_, tmap in slots_:
+                    terms_i = [t for t in sorted(tmap) if t in decoded]
+                    if not terms_i:
+                        per_sub.append(None)
+                        continue
+                    locs_i = []
+                    for t in terms_i:
+                        loc = decoded[t][0]
+                        acc[loc] += _contrib(t, float(tmap[t]), avg_f)
+                        locs_i.append(loc)
+                    t_i = np.unique(np.concatenate(locs_i))
+                    per_sub.append((t_i, bf_ * acc[t_i]))
+                    acc[t_i] = 0.0
+                    all_t.append(t_i)
+                if not all_t:
+                    continue
+                union = np.unique(np.concatenate(all_t))
+                total = np.zeros(union.size, dtype=np.float64)
+                best = np.zeros(union.size, dtype=np.float64)
+                for ps in per_sub:
+                    v = np.zeros(union.size, dtype=np.float64)
+                    if ps is not None:
+                        t_i, vals = ps
+                        v[np.searchsorted(union, t_i)] = vals
+                    total = total + v
+                    np.maximum(best, v, out=best)
+                sc = total if mt_ == "most_fields" \
+                    else best + tie_ * (total - best)
             hit = union
             keep = np.ones(hit.size, dtype=bool)
             if allow is not None:
@@ -2622,62 +2389,9 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                 keep &= ~np.isin(hit, ex, assume_unique=True)
             hit, sc = hit[keep], sc[keep]
             if q_bst is not None and hit.size:
-                bv, bcomb = _boost_v(q_bst)
-                sc = sc + bv[hit] if bcomb == "sum" else sc * bv[hit]
-            if hit.size:
-                hit_k, scores = C.topk_tiebreak(hit, sc, q_k)
-                _emit(qid, (hit_k + start).astype(np.int64), scores)
-            continue
-        if q_dm is not None:
-            # DIS_MAX entry (same frozen combine as search_dis_max:
-            # total folded in subquery LIST order over 0.0-defaulted
-            # vectors, score = best + tie * (total - best)); subquery
-            # sums reuse the shared per-(term, qtf) contribution cache
-            subs_, tie_ = q_dm
-            per_sub, all_t = [], []
-            for sq in subs_:
-                terms_i = [t for t in sorted(sq) if t in decoded]
-                if not terms_i:
-                    per_sub.append(None)
-                    continue
-                locs_i = []
-                for t in terms_i:
-                    loc = decoded[t][0]
-                    acc[loc] += _contrib(t, float(sq[t]))
-                    locs_i.append(loc)
-                t_i = np.unique(np.concatenate(locs_i))
-                per_sub.append((t_i, acc[t_i].copy()))
-                acc[t_i] = 0.0
-                all_t.append(t_i)
-            if not all_t:
-                continue
-            union = np.unique(np.concatenate(all_t))
-            total = np.zeros(union.size, dtype=np.float64)
-            best = np.zeros(union.size, dtype=np.float64)
-            for ps in per_sub:
-                v = np.zeros(union.size, dtype=np.float64)
-                if ps is not None:
-                    t_i, vals = ps
-                    v[np.searchsorted(union, t_i)] = vals
-                total = total + v
-                np.maximum(best, v, out=best)
-            sc = best + tie_ * (total - best)
-            hit = union
-            keep = np.ones(hit.size, dtype=bool)
-            if allow is not None:
-                keep &= allow[hit]
-            if q_dvp is not None:
-                keep &= _dv_mask(q_dvp)[hit]
-            if q_negs:
-                ex = np.unique(np.concatenate(
-                    [decoded[t][0] for t in q_negs]))
-                keep &= ~np.isin(hit, ex, assume_unique=True)
-            hit, sc = hit[keep], sc[keep]
-            if q_bst is not None and hit.size:
-                # per-entry decay/recency boost on a DIS_MAX entry —
-                # same frozen operation order as the plain-entry path
-                # below (boost AFTER the dis_max combine, before top-k);
-                # ADVICE r4: this branch used to drop the boost silently
+                # per-entry decay/recency boost: same frozen operation
+                # order as the plain-entry path below (boost AFTER the
+                # combine, before top-k)
                 bv, bcomb = _boost_v(q_bst)
                 sc = sc + bv[hit] if bcomb == "sum" else sc * bv[hit]
             if hit.size:
@@ -2687,10 +2401,8 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
         if (use_wand and mode == "OR" and len(terms_here) > 1
                 and not q_negs and q_mm <= 1 and q_must is None
                 and q_dem is None and q_dvp is None and q_bst is None):
-            mass = sum(decoded[t][0].size for t in terms_here)
-            seed = min(decoded[t][0].size for t in terms_here)
-            if use_wand is True or (mass >= WAND_MIN_SHARD_POSTINGS
-                                    and seed * WAND_SEED_FRAC < mass):
+            if use_wand is True or _wand_pays(
+                    [decoded[t][0].size for t in terms_here]):
                 sub = post_pdf[post_pdf["term"].isin(terms_here)]
                 r = score_shard_wand(sub, {t: float(n) for t, n in qt.items()},
                                      idfs, cfg, q_k, width,
@@ -2855,7 +2567,36 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     qtf only, so boosted and unboosted queries share the scan and the
     decode cache unchanged.
     """
-    spark = index.spark
+    return _score_query_set(index, _parse_query_set(index, queries), k,
+                            use_wand, doc_filter, dv_filter)
+
+
+@dataclasses.dataclass
+class _QuerySet:
+    """A parsed query set: each qid's positive ``{term: qtf}`` and mode
+    ("OR" | "AND" | "PHRASE"), plus the per-entry modifiers, each keyed
+    by qid and named like the ``_score_shard_batch`` keyword it feeds
+    (``boosts`` is the per-entry score boost, ``ks`` the per-entry
+    limit)."""
+    per_q: dict
+    modes: dict
+    negs: dict = dataclasses.field(default_factory=dict)
+    phrases: dict = dataclasses.field(default_factory=dict)
+    slops: dict = dataclasses.field(default_factory=dict)
+    msm: dict = dataclasses.field(default_factory=dict)
+    musts: dict = dataclasses.field(default_factory=dict)
+    minsh: dict = dataclasses.field(default_factory=dict)
+    demotes: dict = dataclasses.field(default_factory=dict)
+    dismaxes: dict = dataclasses.field(default_factory=dict)
+    multis: dict = dataclasses.field(default_factory=dict)
+    dv_preds: dict = dataclasses.field(default_factory=dict)
+    boosts: dict = dataclasses.field(default_factory=dict)
+    ks: dict = dataclasses.field(default_factory=dict)
+
+
+def _parse_query_set(index, queries: list[dict]) -> _QuerySet:
+    """``search_batch``'s entries -> a ``_QuerySet``; every entry check
+    happens here (see ``_search_batch_impl`` for the entry keys)."""
     acfg = index.cfg.analyzer
     # {"mode": "PREFIX"} entries expand driver-side (memoized lexicon
     # range scan, same frozen cap rule as search_prefix) and then ride
@@ -2863,6 +2604,7 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     # matched term — the expansion never touches the postings job
     per_q, modes = {}, {}
     musts, minsh, bool_floor, dismaxes, multis = {}, {}, {}, {}, {}
+    pos = {}  # MULTI_MATCH: the text-space terms exclude is checked against
     for q in queries:
         m = q["mode"].upper()
         if m == "PREFIX":
@@ -2892,10 +2634,8 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
             # "tie_breaker" in [0, 1]; the entry's scan terms are the
             # union, the kernel reuses the shared contribution cache
             subs_q = [query_terms(x, acfg) for x in q["queries"]]
-            tie_q = float(q.get("tie_breaker", 0.0))
-            if not (0.0 <= tie_q <= 1.0):
-                raise ValueError(f"tie_breaker on {q['id']!r} must lie "
-                                 "in [0, 1]")
+            tie_q = _tie_breaker(q.get("tie_breaker", 0.0),
+                                 f"DIS_MAX entry {q['id']!r}")
             if q.get("boosts") or q.get("min_match") or q.get("demote"):
                 raise ValueError(f"DIS_MAX entry {q['id']!r} composes "
                                  "with exclude only")
@@ -2911,58 +2651,19 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
             # every extra field at 1.0), "match_type", "tie_breaker".
             # The entry's scan terms are the union of the per-field
             # prefixed keys; routing is exhaustive (the dis_max rule)
-            flds = q.get("fields")
-            if flds is None:
-                flds = {"text": 1.0}
-                for f_ in (index.extra_fields or ()):
-                    flds[f_] = 1.0
-            elif not isinstance(flds, dict):
-                flds = {str(f_): 1.0 for f_ in flds}
-            else:
-                flds = {str(f_): float(b_) for f_, b_ in flds.items()}
-            known_f = {"text", *(index.extra_fields or ())}
-            bad_f = [f_ for f_ in flds if f_ not in known_f]
-            if bad_f:
-                raise ValueError(
-                    f"MULTI_MATCH entry {q['id']!r}: fields {bad_f} "
-                    f"not indexed (available: {sorted(known_f)})")
-            if not flds or any(b_ <= 0 for b_ in flds.values()):
-                raise ValueError(f"MULTI_MATCH entry {q['id']!r}: "
-                                 "field boosts must be > 0")
-            mt_q = str(q.get("match_type", "best_fields"))
-            if mt_q not in ("best_fields", "most_fields"):
-                raise ValueError(f"MULTI_MATCH entry {q['id']!r}: "
-                                 "match_type must be "
-                                 "best_fields|most_fields "
-                                 "(cross_fields is single-query only)")
-            tie_q = float(q.get("tie_breaker", 0.0))
-            if not (0.0 <= tie_q <= 1.0):
-                raise ValueError(f"tie_breaker on {q['id']!r} must lie "
-                                 "in [0, 1]")
-            if mt_q == "most_fields" and tie_q != 0.0:
-                raise ValueError(f"tie_breaker on {q['id']!r} only "
-                                 "applies to best_fields")
+            what = f"MULTI_MATCH entry {q['id']!r}"
+            flds, mt_q, tie_q = _multi_match_args(
+                index, q.get("fields"), q.get("match_type", "best_fields"),
+                q.get("tie_breaker", 0.0), what)
             if q.get("boosts") or q.get("min_match") or q.get("demote"):
-                raise ValueError(f"MULTI_MATCH entry {q['id']!r} "
-                                 "composes with exclude/dv_filter/"
+                raise ValueError(f"{what} composes with exclude/dv_filter/"
                                  "boost/k only")
             qt_mm = query_terms(q["query"], acfg)
-            mm_favg = {"text": float(index.avgdl)}
-            for f_ in (index.extra_fields or ()):
-                mm_favg[f_] = float(
-                    (index.field_avgdl or {}).get(f_, 0.0))
-            slots_q, union_keys = [], set()
-            for f_, b_ in flds.items():
-                avg_f = mm_favg[f_]
-                if avg_f <= 0.0 or not qt_mm:
-                    slots_q.append((1.0, float(b_), {}))
-                    continue
-                mkeys = {(t if f_ == "text" else f"{f_}:{t}"): float(nn)
-                         for t, nn in qt_mm.items()}
-                slots_q.append((avg_f, float(b_), mkeys))
-                union_keys |= set(mkeys)
-            per_q[q["id"]] = {t: 1 for t in sorted(union_keys)}
-            multis[q["id"]] = (slots_q, tie_q, mt_q)
+            multis[q["id"]] = _multi_match_entry(
+                index, flds, {f_: qt_mm for f_ in flds}, mt_q, tie_q)
+            per_q[q["id"]] = {t: 1 for _, _, mk in multis[q["id"]][0]
+                              for t in sorted(mk)}
+            pos[q["id"]] = qt_mm
             m = "OR"
         elif m == "BOOL":
             # ES bool entry (same frozen semantics as search_bool): keys
@@ -3024,8 +2725,11 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
         raise ValueError("query set contains PHRASE entries but the index "
                          "was built without positions "
                          "(IndexConfig.index_positions=True required)")
+    # exclude is positive-wins against the entry's own terms (for a
+    # MULTI_MATCH entry: its query's text-space tokens, like the single)
     negs = {q["id"]: sorted(set(tokenize_py(q.get("exclude"), acfg))
-                            - set(per_q.get(q["id"], ())))
+                            - set(pos.get(q["id"],
+                                          per_q.get(q["id"], ()))))
             for q in queries if q.get("exclude")}
     # optional per-entry "dv_filter" (ANSI-SQL predicate over the
     # stored docvalue columns — search(dv_filter=)'s frozen candidate
@@ -3067,18 +2771,53 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                     f"min_match on {q['id']!r}: OR-family entries only")
             msm[q["id"]] = m_
     msm.update(bool_floor)  # pure-should BOOL entries are OR + floor
-    per_q = {qid: qt for qid, qt in per_q.items() if qt}
-    negs = {qid: ts for qid, ts in negs.items() if qid in per_q and ts}
-    demotes = {qid: v for qid, v in demotes.items()
+    return _QuerySet(per_q, modes, negs=negs, phrases=phrases, slops=slops,
+                     msm=msm, musts=musts, minsh=minsh, demotes=demotes,
+                     dismaxes=dismaxes, multis=multis, dv_preds=dv_preds,
+                     boosts=boosts_by_qid, ks=ks_by_qid)
+
+
+def _search_one(index, terms: dict, k: int, exclude, doc_filter,
+                dv_filter, base: "dict | None" = None,
+                **entry) -> DataFrame:
+    """Score ONE dis_max / multi-field query as a one-entry query set:
+    ``terms`` are its scan terms, ``entry`` its kernel entry (``dismaxes=``
+    or ``multis=``), ``base`` the terms ``exclude`` is positive-wins
+    against (default ``terms``). Same kernel and executor gate as
+    ``search_batch``; the answer is (doc_id, score) in (score desc,
+    doc_id asc) order."""
+    neg = (sorted(set(tokenize_py(exclude, index.cfg.analyzer))
+                  - set(terms if base is None else base))
+           if exclude else [])
+    qs = _QuerySet({"": terms}, {"": "OR"}, negs={"": neg},
+                   **{kind: {"": v} for kind, v in entry.items()})
+    return _score_query_set(index, qs, _doc_limit(index, k), False,
+                            doc_filter, dv_filter, single=True)
+
+
+def _score_query_set(index, qs: _QuerySet, k: int, use_wand,
+                     doc_filter: str | None, dv_filter: str | None,
+                     single: bool = False) -> DataFrame:
+    """Score a parsed query set (``_search_batch_impl`` has the plan
+    notes): one memoized lexicon lookup, one pruned postings scan, the
+    ``_score_shard_batch`` kernel per shard, routed by ``_run_shards``
+    (or cogrouped with ``doc_filter``). ``single``: a one-entry set
+    answering a single query — (doc_id, score) rows, the distributed
+    tail is orderBy().limit(k) (TakeOrderedAndProject)."""
+    spark = index.spark
+    per_q = {qid: qt for qid, qt in qs.per_q.items() if qt}
+    modes, musts, minsh = qs.modes, qs.musts, qs.minsh
+    negs = {qid: ts for qid, ts in qs.negs.items() if qid in per_q and ts}
+    demotes = {qid: v for qid, v in qs.demotes.items()
                if qid in per_q and v[0]}
-    dismaxes = {qid: v for qid, v in dismaxes.items() if qid in per_q}
-    multis = {qid: v for qid, v in multis.items() if qid in per_q}
-    dv_preds = {qid: v for qid, v in dv_preds.items() if qid in per_q}
-    msm = {qid: m_ for qid, m_ in msm.items() if qid in per_q}
-    phrases = {qid: seq for qid, seq in phrases.items() if qid in per_q}
-    slops = {qid: s_ for qid, s_ in slops.items() if qid in phrases}
+    dismaxes = {qid: v for qid, v in qs.dismaxes.items() if qid in per_q}
+    multis = {qid: v for qid, v in qs.multis.items() if qid in per_q}
+    dv_preds = {qid: v for qid, v in qs.dv_preds.items() if qid in per_q}
+    msm = {qid: m_ for qid, m_ in qs.msm.items() if qid in per_q}
+    phrases = {qid: seq for qid, seq in qs.phrases.items() if qid in per_q}
+    slops = {qid: s_ for qid, s_ in qs.slops.items() if qid in phrases}
     if not per_q:
-        return _empty_topk(spark, with_qid=True)
+        return _empty_topk(spark, with_qid=not single)
     # ONE memoized lexicon lookup for the union of all query + NOT terms;
     # idf rides the task closure — the batch job is the pruned scan alone
     lex = index.lookup_terms(sorted(
@@ -3099,14 +2838,14 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
         minsh = {qid: v for qid, v in minsh.items() if qid in per_q}
         negs = {qid: ts for qid, ts in negs.items() if qid in per_q}
         if not per_q:
-            return _empty_topk(spark, with_qid=True)
+            return _empty_topk(spark, with_qid=not single)
     scan_terms = sorted(
         t for t in lex
         if t in {u for qt in per_q.values() for u in qt}
         | {u for ts in negs.values() for u in ts}
         | {u for v in demotes.values() for u in v[0]})
     if not scan_terms:
-        return _empty_topk(spark, with_qid=True)
+        return _empty_topk(spark, with_qid=not single)
     idfs = {t: float(lex[t]["idf"]) for t in scan_terms}
     # keep the "auto" / True distinction (plain `and` would collapse it)
     wand_mode = use_wand if any(m == "OR" for m in modes.values()) else False
@@ -3145,10 +2884,11 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                                musts=musts, minsh=minsh, demotes=demotes,
                                dismaxes=dismaxes, multis=multis or None,
                                dv_preds=dv_preds, dv_ctx=(dv_dir, dv_gen),
-                               boosts=boosts_by_qid or None,
-                               ks=ks_by_qid or None)
-        return r if r is not None else pd.DataFrame(
-            {"qid": [], "doc_id": [], "score": []})
+                               boosts=qs.boosts or None,
+                               ks=qs.ks or None)
+        if r is None:
+            r = pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return r.drop(columns="qid") if single else r
 
     if doc_filter is None:
         def fn(key, post_pdf):
@@ -3156,8 +2896,8 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
             return _score(post_pdf, _dv_loc(shard),
                           del_locs(shard) if del_locs is not None else None)
 
-        entries = {qid: (ks_by_qid.get(qid, k), qt)
-                   for qid, qt in per_q.items()}
+        entries = None if single else {qid: (qs.ks.get(qid, k), qt)
+                                       for qid, qt in per_q.items()}
         return _run_shards(index, lex, scan_terms, cols, fn, k, entries)
 
     allowed = _allowed_shards(index, doc_filter, width)
@@ -3181,8 +2921,12 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     scored = (_pruned_postings(index, lex, scan_terms, cols)
               .groupBy("shard")
               .cogroup(allowed.groupBy("shard"))
-              .applyInPandas(fnf, "qid string, doc_id long, score double"))
-    return _batch_topk(scored, k, ks_by_qid)
+              .applyInPandas(fnf, ("doc_id long, score double" if single
+                                   else "qid string, doc_id long, "
+                                        "score double")))
+    if single:
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _batch_topk(scored, k, qs.ks)
 
 
 def _decode_occurrences(pdf, i: int, start: int):

@@ -18,6 +18,9 @@ Contracts under test:
   + Window for a query set); ``doc_filter`` keeps the cogrouped plan;
 * every remaining distributed top-k tail plans a limit of at most the
   doc count for ``k = 10**9``;
+* ``search_multi_match`` (every match type) and ``search_fielded`` are
+  one-entry query sets: local == distributed with each modifier, and
+  a batch MULTI_MATCH entry equals the single bit-exactly;
 * after append + compact, local reads see the new segment and lexicon,
   through the returned handle and through an old handle after
   ``refresh()``.
@@ -28,6 +31,7 @@ import math
 
 import pytest
 
+from engine import matchops as M
 from engine import query as Q
 from engine.config import IndexConfig
 
@@ -385,6 +389,10 @@ BATCH_CASES = [
      lambda o, a, i: o.search("hot0 mid1", k=3)),
     ("wand", {"query": "hot0 hot1 mid1", "mode": "OR"}, True,
      lambda o, a, i: o.search("hot0 hot1 mid1")),
+    ("cross_fields", {"mode": "MULTI_MATCH", "query": "hot0 user",
+                      "fields": {"text": 1.0, "role": 2.0},
+                      "match_type": "cross_fields", "tie_breaker": 0.3},
+     "auto", None),
 ]
 
 
@@ -535,6 +543,119 @@ def test_batch_doc_filter_keeps_cogrouped_plan(lidx, monkeypatch):
     assert _by_qid(df)["a"]
 
 
+# ---- multi-field singles: one-entry sets through the batch kernel ----
+
+MULTI_FIELDS = {"text": 1.0, "role": 2.0}
+MULTI_SINGLES = [
+    ("best_fields", lambda i, **kw: Q.search_multi_match(
+        i, "hot0 user w010", fields=MULTI_FIELDS, tie_breaker=0.3, **kw)),
+    ("most_fields", lambda i, **kw: Q.search_multi_match(
+        i, "hot0 user w010", fields={"text": 1.0, "role": 1.5},
+        match_type="most_fields", **kw)),
+    ("cross_fields", lambda i, **kw: Q.search_multi_match(
+        i, "hot0 user w010", fields=MULTI_FIELDS,
+        match_type="cross_fields", tie_breaker=0.3, **kw)),
+    ("fielded", lambda i, **kw: Q.search_fielded(
+        i, [("text", "hot0", 1.0), ("role", "user", 2.0),
+            ("text", "w010", 0.5)], **kw)),
+]
+MULTI_IDS = [c[0] for c in MULTI_SINGLES]
+
+
+def _is_user(attrs):
+    return lambda d: attrs[d].role == "user"
+
+
+@pytest.mark.parametrize("case", MULTI_SINGLES, ids=MULTI_IDS)
+@pytest.mark.parametrize("mod", ["plain", "exclude", "dv_filter"])
+def test_multi_field_local_equals_distributed(bidx, attrs, oracle_idx,
+                                              monkeypatch, case, mod):
+    """Each route answers alike, and a modifier keeps its contract: the
+    unmodified whole ranking minus excluded (text-space hot1) or
+    non-user docs."""
+    _, run = case
+    kw = {"exclude": {"exclude": "hot1"},
+          "dv_filter": {"dv_filter": "role = 'user'"}}.get(mod, {})
+    dist, local = both_routes(monkeypatch, lambda: run(bidx, **kw))
+    assert local == dist and local
+    full = _rows(run(bidx, k=10 ** 9))
+    keep = {"plain": lambda d: True,
+            "exclude": lambda d: d not in _docs_with(oracle_idx, ["hot1"]),
+            "dv_filter": _is_user(attrs)}[mod]
+    assert local == [x for x in full if keep(x[0])][:10]
+
+
+@pytest.mark.parametrize("case", MULTI_SINGLES, ids=MULTI_IDS)
+def test_multi_field_doc_filter_is_cogrouped(bidx, attrs, monkeypatch,
+                                             case):
+    """doc_filter keeps the cogrouped job ending in
+    TakeOrderedAndProject, and restricts like the same dv_filter."""
+    _, run = case
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", BIG)
+    df = run(bidx, doc_filter="role = 'user'")
+    plan = _plan(df)
+    assert "FlatMapCoGroupsInPandas" in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
+    got = _rows(df)
+    assert got and got == _rows(run(bidx, dv_filter="role = 'user'"))
+    assert all(_is_user(attrs)(d) for d, _ in got)
+
+
+def test_multi_field_tombstones_local_equals_distributed(
+        spark, bidx, monkeypatch, tmp_path):
+    import shutil
+
+    from engine.build import load_index
+    from engine.deletes import delete_ids
+    d = str(tmp_path / "mdel")
+    shutil.copytree(bidx.index_dir, d)
+    idx = load_index(spark, d)
+    for _, run in MULTI_SINGLES:
+        full = _rows(run(idx, k=10 ** 9))
+        gone = [full[0][0], full[3][0]]
+        delete_ids(idx, gone)
+        dist, local = both_routes(monkeypatch, lambda: run(idx))
+        assert local == dist
+        assert local == [x for x in full if x[0] not in gone][:10]
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_small_multi_field_query_runs_no_spark_job(spark, bidx, arrow):
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    sc = spark.sparkContext
+    gid = f"local-multi-{arrow}"
+    spark.conf.set(key, arrow)
+    try:
+        bidx.refresh()  # cold lexicon memo: the lookup must be job-free
+        sc.setJobGroup(gid, gid)
+        out = [run(bidx).collect() for _, run in MULTI_SINGLES]
+        assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prev)
+    assert all(out)
+
+
+@pytest.mark.parametrize("mt", ["best_fields", "most_fields",
+                                "cross_fields"])
+def test_batch_multi_match_equals_single_exactly(bidx, monkeypatch, mt):
+    """A batch MULTI_MATCH entry and search_multi_match are one scorer:
+    bit-identical rows on both routes, for every match type."""
+    tie = 0.0 if mt == "most_fields" else 0.3
+    entry = {"id": "e", "mode": "MULTI_MATCH", "query": "hot0 user w010",
+             "fields": MULTI_FIELDS, "match_type": mt, "tie_breaker": tie,
+             "exclude": "hot1"}
+    for bound in (0, BIG):
+        monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", bound)
+        single = _rows(Q.search_multi_match(
+            bidx, entry["query"], fields=MULTI_FIELDS, match_type=mt,
+            tie_breaker=tie, exclude="hot1"))
+        batch = [(d, s) for _, d, s in
+                 _batch_rows(Q.search_batch(bidx, [entry], k=10))]
+        assert single and batch == single
+
+
 # ---- k = 10**9 on the remaining distributed top-k tails ----
 
 def _planned_limits(df) -> list[int]:
@@ -553,12 +674,21 @@ TAIL_CASES = [
     ("span_first", lambda i: Q.search_span_first(i, "hot0", 3, k=10 ** 9)),
     ("multi_match", lambda i: Q.search_multi_match(
         i, "hot0 user", fields={"text": 1.0, "role": 2.0}, k=10 ** 9)),
+    ("multi_match_doc_filter", lambda i: Q.search_multi_match(
+        i, "hot0 user", fields={"text": 1.0, "role": 2.0}, k=10 ** 9,
+        doc_filter="turn_idx >= 1")),
+    ("more_like_this", lambda i: M.more_like_this(i, 0, k=10 ** 9)),
+    ("search_groups", lambda i: M.search_groups(i, "hot0", "role",
+                                                k=10 ** 9)),
 ]
 
 
 @pytest.mark.parametrize("case", TAIL_CASES, ids=[c[0] for c in TAIL_CASES])
-def test_tail_limit_clipped_to_doc_count(bidx, case):
+def test_tail_limit_clipped_to_doc_count(bidx, monkeypatch, case):
     _, run = case
+    # a whole-ranking multi_match fits the driver route on this index;
+    # the tail under test is the distributed one
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
     df = run(bidx)
     limits = _planned_limits(df)
     assert limits and max(limits) <= bidx.n_docs, limits

@@ -196,8 +196,15 @@ def test_multi_match_batch_matches_single(mf_index):
         {"id": "m3", "mode": "MULTI_MATCH", "query": "hot0 user",
          "fields": {"text": 1.0, "role": 2.0},
          "dv_filter": "role = 'user'"},
+        # "text" not among the fields: exclude tokens are still text
+        # tokens and the query's tokens win, so "hot0" excludes nothing
+        {"id": "m4", "mode": "MULTI_MATCH", "query": "user hot0",
+         "fields": {"role": 1.0}, "exclude": "hot0"},
         {"id": "plain", "query": "hot0 hot1", "mode": "OR"},
     ]
+    assert Q.search_multi_match(mf_index, "user hot0",
+                                fields={"role": 1.0},
+                                exclude="hot0").collect()
     for use_wand in (True, False, "auto"):
         out = Q.search_batch(mf_index, qset, k=10,
                              use_wand=use_wand).collect()
