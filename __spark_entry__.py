@@ -743,7 +743,7 @@ def _bm25_sql(query_terms: list[str], mode: str, k: int = 10,
 
     ``boost_mult``: recency-boost twin — a SQL expression over doc_id
     multiplying the frozen BM25 sum AFTER summation (the engine's exact
-    operation order, engine/query.py _score_shard_exhaustive); ranking
+    operation order, engine/query.py _score_shard_batch); ranking
     and rounding both apply to the boosted score.
 
     ``corpus_where``: the PURGE twin (engine/deletes.py purge_deletes) —
@@ -1935,7 +1935,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recency boost: score = (frozen BM25 sum) * 0.5 ** (age / hl)
         # over the stored ts docvalue — multiplier applied AFTER the
         # frozen summation, inside the scorer task (engine/query.py
-        # _score_shard_exhaustive boost_vec)
+        # _score_shard_batch boosts)
         from engine import query as Q
         idx = _packed_index(spark, sf)
         top = Q.search(idx, "spark join fast", k=10, mode="OR",
@@ -1973,7 +1973,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def bm25_decay_sum(spark, sf):
         # ES function_score boost_mode=sum with a function weight:
         # score + w * gauss(ts) — additive combine AFTER the frozen
-        # summation (engine/query.py _score_shard_exhaustive)
+        # summation (engine/query.py _score_shard_batch)
         from engine import query as Q
         idx = _packed_index(spark, sf)
         top = Q.search(idx, "spark join fast", k=10, mode="OR",

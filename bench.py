@@ -252,7 +252,7 @@ def main():
             from pyspark.sql import functions as _F
             from engine.config import IndexConfig as _ICW
             from engine.fixtures import spark_wand_corpus, wand_query
-            from engine.query import _score_shard_exhaustive, wand_routes
+            from engine.query import _score_shard_batch, wand_routes
             from engine.wand import score_shard_wand
             # geometry: 1.3M docs x 10 hot terms -> ~7.2M-posting shard,
             # exhaustive kernel ~0.5 s vs WAND ~0.05 s — the end-to-end
@@ -300,9 +300,9 @@ def main():
                     "avgdl": widx.avgdl}
             t_kw, _ = tbest(lambda: score_shard_wand(
                 wpost, wqtfs, widfs, wcfg, 10, widx.shard_width), 3)
-            t_ke, _ = tbest(lambda: _score_shard_exhaustive(
-                wpost, wqtfs, widfs, wcfg, 10, "OR", widx.shard_width,
-                len(wqt)), 3)
+            t_ke, _ = tbest(lambda: _score_shard_batch(
+                wpost, {"": wqtfs}, {"": "OR"}, widfs, wcfg, 10,
+                widx.shard_width, False), 3)
             queries["wand_kernel_ms"] = round(t_kw * 1000, 2)
             queries["exhaustive_kernel_ms"] = round(t_ke * 1000, 2)
             queries["wand_kernel_speedup"] = round(t_ke / t_kw, 2)

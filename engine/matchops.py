@@ -2326,17 +2326,16 @@ def search_groups(index, query: str, field: str, k: int = 10,
 
     Plan (the 100 TB argument): ``search``'s pruned postings scan (same
     buckets/terms pushdown, dls stream included), ONE kernel pass per
-    doc-range shard scoring its dense accumulator exactly like
-    ``_score_shard_exhaustive`` (it IS that kernel at k=width — every
-    hit's score must exist, the collapse argument), then an in-task
-    pandas reduction over the shard's OWN docvalue slice emitting one
+    doc-range shard through ``search``'s kernel ``_score_shard_batch``
+    (called directly as a one-entry set at k=width — every hit's score
+    must exist, the collapse argument), then an in-task pandas
+    reduction over the shard's OWN docvalue slice emitting one
     partial row per (group, shard) — shuffle volume is
     groups-per-shard, never docs (the ``facet_stats`` emission class).
     One narrow final hash aggregation; the shard-ordered sum fold is a
     deterministic ``aggregate(array_sort(collect_list(...)))``
     expression over those partials."""
-    from .query import (_score_shard_exhaustive, _warn_if_stale,
-                        _empty_topk)  # noqa: F401
+    from .query import _score_shard_batch, _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
     score_mode = score_mode.lower()
@@ -2368,7 +2367,6 @@ def search_groups(index, query: str, field: str, k: int = 10,
         neg = [t for t in neg if t in lex]
         qtfs = {t: float(qtf[t]) for t in known}
         idfs = {t: float(lex[t]["idf"]) for t in known}
-        n_required = len(terms)
         scan_terms = sorted(set(known) | set(neg))
         buckets = sorted({lex[t]["bucket"] for t in scan_terms})
         post = (index.postings()
@@ -2378,7 +2376,6 @@ def search_groups(index, query: str, field: str, k: int = 10,
         width = index.shard_width
         cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
                 "avgdl": index.avgdl}
-        neg_set = frozenset(neg)
         dv_dir, dv_gen = index.index_dir, int(index.n_docs)
         del_locs = _del_closure(index)
         pcols = ["g", "shard", "n", "sm", "mx"]
@@ -2394,9 +2391,9 @@ def search_groups(index, query: str, field: str, k: int = 10,
             dvl = (eval_filter(dv_dir, shard, dv_gen, dv_filter)
                    if dv_filter is not None else None)
             dl_ = del_locs(shard) if del_locs is not None else None
-            r = _score_shard_exhaustive(
-                post_pdf, qtfs, idfs, cfgd, width, mode, width,
-                n_required, neg_set, allowed_loc=dvl, denied_loc=dl_)
+            r = _score_shard_batch(
+                post_pdf, {"": qtfs}, {"": mode}, idfs, cfgd, width, width,
+                False, allowed_loc=dvl, denied_loc=dl_, negs={"": neg})
             if r is None or len(r) == 0:
                 return empty_r
             ids = r["doc_id"].to_numpy(np.int64)

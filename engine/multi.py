@@ -36,7 +36,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from .analyzer import tokenize_py
-from .query import (_del_closure, _doc_limit, _score_shard_exhaustive,
+from .query import (_del_closure, _doc_limit, _score_shard_batch,
                     _wand_pays, query_terms)
 
 
@@ -151,7 +151,6 @@ def search_multi(indexes: list, query: str, k: int = 10, mode: str = "OR",
     qtfs = {t: float(qtf[t]) for t in known}
     cfgd = {"k1": indexes[0].cfg.bm25.k1, "b": indexes[0].cfg.bm25.b,
             "avgdl": avgdl_g}
-    n_required = len(terms)
     parts = []
     for i, (ix, lex) in enumerate(zip(indexes, lexes)):
         my_known = [t for t in known if t in lex]
@@ -161,7 +160,6 @@ def search_multi(indexes: list, query: str, k: int = 10, mode: str = "OR",
         scan_terms = sorted(set(my_known) | set(my_negs))
         buckets = sorted({lex[t]["bucket"] for t in scan_terms})
         width = ix.shard_width
-        neg_set = frozenset(my_negs)
         routed = use_wand
         if my_negs:
             routed = False
@@ -178,46 +176,25 @@ def search_multi(indexes: list, query: str, k: int = 10, mode: str = "OR",
                 .select(*cols))
         del_locs = _del_closure(ix)
         # bind the per-member loop state via a factory (applyInPandas
-        # inspects the signature: exactly (key, data) is allowed)
-        def _make_fn(width, neg_set, del_locs, routed):
-            if routed:
-                from .wand import score_shard_wand
-
-                def fn(key, post_pdf):
-                    import numpy as np
-                    import pandas as pd
-                    if len(post_pdf) == 0:
-                        return pd.DataFrame({"doc_id": [], "score": []})
-                    shard = int(post_pdf["shard"].iloc[0])
-                    dl_ = del_locs(shard) if del_locs is not None else None
-                    if dl_ is None:
-                        r = score_shard_wand(post_pdf, qtfs, idfs, cfgd, k,
-                                             width)
-                    else:
-                        allow = np.ones(width, dtype=bool)
-                        allow[dl_] = False
-                        r = score_shard_wand(post_pdf, qtfs, idfs, cfgd, k,
-                                             width, allow_mask=allow)
-                    return r if r is not None else pd.DataFrame(
-                        {"doc_id": [], "score": []})
-            else:
-                def fn(key, post_pdf):
-                    import pandas as pd
-                    if len(post_pdf) == 0:
-                        return pd.DataFrame({"doc_id": [], "score": []})
-                    shard = int(post_pdf["shard"].iloc[0])
-                    r = _score_shard_exhaustive(
-                        post_pdf, qtfs, idfs, cfgd, k, mode, width,
-                        n_required, neg_set,
-                        denied_loc=(del_locs(shard)
-                                    if del_locs is not None else None))
-                    return r if r is not None else pd.DataFrame(
-                        {"doc_id": [], "score": []})
+        # inspects the signature: exactly (key, data) is allowed); the
+        # member's shards score as one-entry sets with the GLOBAL idf
+        # and avgdl, WAND decided above for the whole member
+        def _make_fn(width, negs, del_locs, routed):
+            def fn(key, post_pdf):
+                import pandas as pd
+                shard = int(key[0])
+                r = _score_shard_batch(
+                    post_pdf, {"": qtfs}, {"": mode}, idfs, cfgd, k, width,
+                    routed, negs={"": negs},
+                    denied_loc=(del_locs(shard)
+                                if del_locs is not None else None))
+                return (pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+                        if r is None else r)
             return fn
 
         scored = (post.groupBy("shard")
-                  .applyInPandas(_make_fn(width, neg_set, del_locs, routed),
-                                 "doc_id long, score double"))
+                  .applyInPandas(_make_fn(width, my_negs, del_locs, routed),
+                                 "qid string, doc_id long, score double"))
         w_i = index_boosts[i] if index_boosts is not None else None
         score_col = (F.col("score") * F.lit(w_i)).alias("score") \
             if w_i is not None and w_i != 1.0 else F.col("score")

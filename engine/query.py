@@ -156,198 +156,14 @@ def _decode_rows(post_pdf, start: int):
 
 
 def _score_shard_exhaustive(post_pdf, qtfs, idfs, cfg, k, mode, width,
-                            n_required, neg_terms=frozenset(),
-                            allowed_loc=None, cursor=None, boost_vec=None,
-                            denied_loc=None, min_match=1,
-                            collapse_vals=None, collapse_n=1,
-                            must_terms=frozenset(), min_should=0,
-                            demote_terms=frozenset(),
-                            demote_factor=1.0):
-    """Score one doc-range shard: dense-offset accumulators, numpy only.
-
-    Per-posting document lengths come from the inlined ``dls`` stream and
-    idf from the ``idfs`` dict captured in the task closure (<= |query|
-    floats, collected once driver-side by ``lookup_terms`` and memoized)
-    — the scorer's job is the (pruned) postings scan ALONE: no lexicon
-    join, no broadcast exchange. Accumulation is per-term in ASCENDING
-    term order — the identical float64 summation order as the pure-Python
-    oracle (rank-identity). Emits at most k rows (per-shard top-k heap
-    analog).
-
-    ``n_required`` is the number of DISTINCT query terms; AND keeps docs
-    hitting all of them (a globally-absent term makes the count
-    unreachable, so AND with an unknown term is naturally empty).
-
-    ``must_terms``/``min_should`` (ES bool query, see ``search_bool``):
-    when ``must_terms`` is non-empty a doc qualifies iff it contains
-    EVERY must term and at least ``min_should`` of the remaining
-    (should) query terms; the score stays the plain OR sum over all
-    present query terms (both clause kinds contribute) — the frozen
-    per-term ascending summation order is unchanged.
-    """
-    import numpy as np
-    from . import codec as C
-    if len(post_pdf) == 0:
-        return None
-    shard = int(post_pdf["shard"].iloc[0])
-    start = shard * width
-    acc = np.zeros(width, dtype=np.float64)
-    cnt = np.zeros(width, dtype=np.int32)
-    cntm = np.zeros(width, dtype=np.int32) if must_terms else None
-    negmask = np.zeros(width, dtype=bool) if neg_terms else None
-    demmask = np.zeros(width, dtype=bool) if demote_terms else None
-    k1, b, avgdl = cfg["k1"], cfg["b"], cfg["avgdl"]
-    terms, bnd, locs, tfs_, dls_ = _decode_rows(post_pdf, start)
-    order = np.argsort(np.array(terms, dtype=object))  # ascending terms
-    for i in order.tolist():
-        term = terms[i]
-        lo, hi = bnd[i], bnd[i + 1]
-        loc = locs[lo:hi]
-        if term in neg_terms:
-            negmask[loc] = True
-            continue
-        if demmask is not None and term in demote_terms:
-            # boosting query (search_boosting): docs containing any
-            # demote term keep their score times demote_factor — the
-            # mask is marked here; a demote term that is ALSO a
-            # positive query term still scores (no positive-wins rule:
-            # demotion and contribution are not contradictory)
-            demmask[loc] = True
-            if term not in qtfs:
-                continue
-        idf = idfs[term]
-        qtf = qtfs[term]
-        tfs, dls = tfs_[lo:hi], dls_[lo:hi]
-        contrib = (qtf * idf * (tfs * (k1 + 1.0))
-                   / (tfs + k1 * (1.0 - b + b * dls / avgdl)))
-        acc[loc] += contrib   # doc_ids unique within one (term, shard) row
-        cnt[loc] += 1
-        if cntm is not None and term in must_terms:
-            cntm[loc] += 1
-    if negmask is not None:
-        cnt[negmask] = -1     # excluded docs can never hit
-    if denied_loc is not None and denied_loc.size:
-        # tombstoned docs (engine/deletes.py): same mechanism as NOT —
-        # they can never hit, while N/avgdl/idf stay the last build's
-        # (the frozen two-phase delete contract). O(|tombstones|).
-        cnt[denied_loc] = -1
-    if allowed_loc is not None:
-        # doc_filter restriction: docs OUTSIDE the allowed set can never
-        # hit (same mechanism as NOT). Applied after accumulation, so the
-        # per-term float summation order — and therefore every surviving
-        # score — is bit-identical to the unfiltered path.
-        allow = np.zeros(width, dtype=bool)
-        allow[allowed_loc] = True
-        cnt[~allow] = -1
-    if cntm is not None:
-        # bool query: every must term present AND >= min_should of the
-        # should terms. cnt counts ALL distinct present query terms, so
-        # cnt - cntm is the should-count; an exclusion/filter/tombstone
-        # sets cnt to -1, which fails (cnt - cntm >= min_should) for any
-        # doc whose cntm == n_must (min_should >= 0) — the masks compose.
-        hit = np.flatnonzero((cntm == len(must_terms))
-                             & ((cnt - cntm) >= min_should))
-    elif mode == "AND":
-        hit = np.flatnonzero(cnt == n_required)
-    elif min_match > 1:
-        # minimum_should_match (OR only): a doc qualifies with at least
-        # min_match DISTINCT query terms present; survivor scores are
-        # the plain OR scores (cnt already counts distinct terms —
-        # doc_ids are unique within one (term, shard) row)
-        hit = np.flatnonzero(cnt >= min_match)
-    else:
-        hit = np.flatnonzero(cnt > 0)
-    if hit.size == 0:
-        return None
-    if boost_vec is not None:
-        # score = (BM25 sum) * v or + v — combined AFTER the frozen
-        # per-term summation, mirroring the oracle twins exactly
-        # (docvalues.recency_multiplier / decay_multiplier document the
-        # function; v already carries the ES function weight). Applied
-        # at hit positions only; cursor compare and top-k use the
-        # boosted score (the ranking the caller pages through).
-        bv, bcomb = boost_vec
-        if bcomb == "sum":
-            acc[hit] += bv[hit]
-        else:
-            acc[hit] *= bv[hit]
-    if demmask is not None:
-        # boosting-query demotion — frozen operation order: the plain
-        # BM25 sum, then the recency multiplier (boost_vec), THEN the
-        # demote factor ((s * b) * d — the twin writes the identical
-        # grouping). Cursor compare and top-k see the demoted score.
-        dm = demmask[hit]
-        if dm.any():
-            acc[hit[dm]] *= demote_factor
-    if cursor is not None:
-        # search_after pagination: keep only docs STRICTLY after the
-        # cursor in the frozen (score desc, doc_id asc) total order.
-        # Raw float compare is exact because scores are bit-reproducible
-        # (frozen summation order): the caller passes back the previous
-        # page's last (score, doc_id) verbatim. Applied per shard BEFORE
-        # the top-k cut, so each shard re-emits its next k candidates —
-        # per-shard top-k stays globally sufficient on every page.
-        cs, cd = cursor
-        s = acc[hit]
-        ds = hit + start
-        hit = hit[(s < cs) | ((s == cs) & (ds > cd))]
-        if hit.size == 0:
-            return None
-    if collapse_vals is not None:
-        # field collapsing (ES collapse): reduce the shard's hits to the
-        # best doc per collapse key under the frozen (score desc, doc_id
-        # asc) order, then emit the shard's top-k GROUPS. Per-shard top-k
-        # groups is globally sufficient: if a global top-k group were
-        # outside its best-doc shard's top-k, that shard would hold k
-        # groups whose shard-best — hence global best — beats it,
-        # contradicting its global rank. Docs with a NULL/absent key are
-        # EXCLUDED (the search_sorted NULL rule).
-        vals = collapse_vals(hit)  # object ndarray of str|None
-        ok = np.asarray(vals != None, dtype=bool)  # noqa: E711 — elementwise
-        hit, vals = hit[ok], vals[ok]
-        if hit.size == 0:
-            return None
-        s = acc[hit]
-        if collapse_n > 1:
-            # top_hits aggregation (search_top_hits): emit the shard's
-            # top-collapse_n docs of EVERY group present — the same
-            # per-(group, shard) emission bound as facet_stats (collapse
-            # keys are categorical by design), because a group outside
-            # this shard's top-k can still be a global top-k group whose
-            # 2nd..Nth hits live here. Global group selection happens in
-            # the finishing window over these bounded partials.
-            import pandas as pd
-            uv, inv = np.unique(vals, return_inverse=True)
-            ordr = np.lexsort((hit, -s, inv))  # group, score desc, doc asc
-            g, h2, s2 = inv[ordr], hit[ordr], s[ordr]
-            firsts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
-            sizes = np.diff(np.r_[firsts, g.size])
-            grp_of = np.repeat(np.arange(firsts.size), sizes)
-            keep = (np.arange(g.size) - firsts[grp_of]) < collapse_n
-            return pd.DataFrame({
-                "group_key": uv[g[keep]].astype(object),
-                "doc_id": (h2[keep] + start).astype(np.int64),
-                "score": s2[keep]})
-        ordr = np.lexsort((hit, -s))  # score desc, then doc asc
-        h, s2, v2 = hit[ordr], s[ordr], vals[ordr]
-        uv, first = np.unique(v2, return_index=True)
-        # first = index of each group's FIRST row in the (score desc,
-        # doc asc) ordering == its best doc; full sort is fine here
-        # (one row per group survives the reduction)
-        bh, bs = h[first], s2[first]
-        cut = np.lexsort((bh, -bs))[:k]
-        import pandas as pd
-        return pd.DataFrame({
-            "group_key": uv[cut].astype(object),
-            "doc_id": (bh[cut] + start).astype(np.int64),
-            "score": bs[cut]})
-    # tie-SAFE per-shard top-k (r4): argpartition alone kept an arbitrary
-    # subset of k-boundary score ties — codec.topk_tiebreak widens to the
-    # tying ids and applies the frozen (score desc, doc_id asc) order
-    hit, scores = C.topk_tiebreak(hit, acc[hit], k)
-    import pandas as pd
-    return pd.DataFrame({"doc_id": (hit + start).astype(np.int64),
-                         "score": scores})
+                            n_required, neg_terms=frozenset(), min_match=1):
+    """One query on one shard through ``_score_shard_batch`` (a
+    one-entry set; ``n_required`` is implied by ``qtfs``). Kept only for
+    perfbench's traced kernel row, and goes away with ROADMAP direction
+    1 (the engine trace)."""
+    return _score_shard_batch(post_pdf, {"": qtfs}, {"": mode}, idfs, cfg,
+                              k, width, False, negs={"": sorted(neg_terms)},
+                              msm={"": min_match})
 
 
 def _allowed_shards(index, doc_filter: str, width: int) -> DataFrame:
@@ -489,7 +305,7 @@ def _apply_term_boosts(qtf: dict, term_boosts: "dict | None") -> dict:
     each weight multiplies its term's query-term-frequency factor, so a
     boosted term's per-doc contribution scales by exactly ``w`` — qtf is
     already a pure multiplier in the frozen score (bm25_score_col /
-    _score_shard_exhaustive), so no scorer change is needed and the
+    _score_shard_batch), so no scorer change is needed and the
     frozen per-term summation order is untouched.
 
     Weights must be finite and > 0 (zero/negative would break ranking
@@ -601,7 +417,7 @@ def search_dis_max(index, queries: list, k: int = 10,
       rule). Routing is exhaustive-only: block-max bounds are per-term
       sums, not per-subquery maxima.
 
-    Plan: a one-entry query set (``_search_one``) scored by the shared
+    Plan: a one-entry query set (``_search_impl``) scored by the shared
     query-set kernel ``_score_shard_batch`` — the same code as a
     ``search_batch`` DIS_MAX entry and as ``search_multi_match``, whose
     slots here are the subqueries (boost 1.0, the index avgdl). The
@@ -627,8 +443,9 @@ def _search_dis_max_impl(index, queries: list, k: int, tie: float,
                          dv_filter: str | None) -> DataFrame:
     subs = [query_terms(q, index.cfg.analyzer) for q in queries]
     terms = {t: 1 for t in sorted(set().union(*subs))}
-    return _search_one(index, terms, k, exclude, doc_filter, dv_filter,
-                       dismaxes=(subs, tie))
+    return _search_impl(index, "", k, "OR", False, exclude, doc_filter,
+                        qtf_override=terms, dv_filter=dv_filter,
+                        dismax=(subs, tie))
 
 
 def search_multi_match(index, query: str, fields=None, k: int = 10,
@@ -680,7 +497,7 @@ def search_multi_match(index, query: str, fields=None, k: int = 10,
       Routing is exhaustive-only (like dis_max: block-max bounds are
       per-term sums, not cross-field maxima).
 
-    Plan: a one-entry query set (``_search_one``) scored by the shared
+    Plan: a one-entry query set (``_search_impl``) scored by the shared
     query-set kernel ``_score_shard_batch`` — the same code as a
     ``search_batch`` MULTI_MATCH entry and as ``search_dis_max`` (one
     combine serves all three match types and dis_max). All fields'
@@ -766,8 +583,9 @@ def _search_multi_match_impl(index, query: "str | None", fields: dict,
         qt = fq.get("text", {})
     entry = _multi_match_entry(index, fields, fq, mt, tie)
     terms = {t: 1 for _, _, m in entry[0] for t in sorted(m)}
-    return _search_one(index, terms, k, exclude, doc_filter, dv_filter,
-                       base=qt, multis=entry)
+    return _search_impl(index, "", k, "OR", False, exclude, doc_filter,
+                        qtf_override=terms, dv_filter=dv_filter,
+                        multi=entry, exclude_base=qt)
 
 
 def _tie_breaker(tie, what: str) -> float:
@@ -1051,12 +869,13 @@ def search_collapsed(index, query: str, field: str, k: int = 10,
     (grouping by unknown key is undefined — the search_sorted NULL
     rule); scores are the unchanged frozen BM25 scores.
 
-    Plan: the per-shard scorer reduces its hits to best-doc-per-group
-    (vectorized lexsort + first-occurrence cut over the shard's cached
-    docvalue slice — zero corpus scan, zero extra shuffle) and emits its
-    top-k GROUPS; per-shard top-k groups is globally sufficient (if a
-    global top-k group were outside its best-doc shard's per-shard
-    top-k, that shard would hold k groups whose global best beats it —
+    Plan: the per-shard kernel scores every hit (k = shard width) and
+    ``_collapse_shard`` reduces them to best-doc-per-group (a
+    first-occurrence cut over the shard's cached docvalue slice — zero
+    corpus scan, zero extra shuffle), emitting the shard's top-k
+    GROUPS; per-shard top-k groups is globally sufficient (if a global
+    top-k group were outside its best-doc shard's per-shard top-k, that
+    shard would hold k groups whose global best beats it —
     contradiction), so <= k rows per shard feed a tiny window
     (row_number per group) + TakeOrderedAndProject. Routes exhaustive
     (the reduction needs every hit's score); ``exclude``/``doc_filter``/
@@ -1086,9 +905,10 @@ def search_top_hits(index, query: str, field: str, k: int = 10,
     NULL-keyed docs are excluded (the collapse contract —
     ``hits_per_group=1`` degenerates to ``search_collapsed``).
 
-    Plan: the per-shard scorer emits its top-N docs of EVERY group it
-    holds — per-(group, shard) bounded partials, the same emission class
-    as ``facet_stats`` (collapse keys are categorical by design; a group
+    Plan: each shard task (``_collapse_shard``) emits the top-N docs of
+    EVERY group it holds — per-(group, shard) bounded partials, the same
+    emission class as ``facet_stats`` (collapse keys are categorical by
+    design; a group
     outside one shard's local top-k can still be a global top-k group
     whose trailing hits live there, so the n=1 per-shard-top-k-groups
     cut is NOT sufficient for n > 1). A tiny window over those partials
@@ -1309,10 +1129,8 @@ def search_prefix(index, prefix: str, k: int = 10,
         if not rows:
             return _empty_topk(index.spark)
         qtf = {r["term"]: 1 for r in rows}
-        return _search_impl(index, "", k, "OR",
-                            False if cur is not None else use_wand,
-                            exclude, doc_filter, qtf_override=qtf,
-                            cursor=cur)
+        return _search_impl(index, "", k, "OR", use_wand, exclude,
+                            doc_filter, qtf_override=qtf, cursor=cur)
 
     return _plan_cached(index, key, build)
 
@@ -1354,10 +1172,9 @@ def search_regexp(index, pattern: str, k: int = 10,
         if not rows:
             return _empty_topk(index.spark)
         qtf = {r["term"]: 1 for r in rows}
-        return _search_impl(index, "", k, "OR",
-                            False if cur is not None else use_wand,
-                            exclude, doc_filter, qtf_override=qtf,
-                            cursor=cur, dv_filter=dv_filter)
+        return _search_impl(index, "", k, "OR", use_wand, exclude,
+                            doc_filter, qtf_override=qtf, cursor=cur,
+                            dv_filter=dv_filter)
 
     return _plan_cached(index, key, build)
 
@@ -1406,10 +1223,9 @@ def search_fuzzy(index, term: str, k: int = 10, max_edits: int = 1,
         if not rows:
             return _empty_topk(index.spark)
         qtf = {r["term"]: 1 for r in rows}
-        return _search_impl(index, "", k, "OR",
-                            False if cur is not None else use_wand,
-                            exclude, doc_filter, qtf_override=qtf,
-                            cursor=cur, dv_filter=dv_filter)
+        return _search_impl(index, "", k, "OR", use_wand, exclude,
+                            doc_filter, qtf_override=qtf, cursor=cur,
+                            dv_filter=dv_filter)
 
     return _plan_cached(index, key, build)
 
@@ -1566,15 +1382,28 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
                  must_terms: "frozenset | None" = None,
                  min_should: int = 0,
                  allowed_ids: "list[int] | None" = None,
-                 demote: "tuple[str, float] | None" = None) -> DataFrame:
-    """BM25 top-k over the packed on-disk index — scored on the driver
-    with NO Spark job when the query is small, else in ONE Spark job.
+                 demote: "tuple[str, float] | None" = None,
+                 dismax: "tuple | None" = None,
+                 multi: "tuple | None" = None,
+                 exclude_base: "dict | None" = None) -> DataFrame:
+    """BM25 top-k over the packed on-disk index: ONE query, scored as a
+    one-entry query set by the query-set kernel (``_score_query_set`` ->
+    ``_score_shard_batch``) — a single search and a ``search_batch``
+    entry are the same code. Every single surface lowers here: search,
+    bool, boosting, after, synonyms, prefix/regexp/fuzzy, collapsed,
+    top_hits, more_like_this, rescore, and dis_max (``dismax``: the
+    subqueries' ``{term: qtf}`` maps and the tie), multi_match and
+    fielded (``multi``: the kernel's slot entry, ``_multi_match_entry``;
+    ``exclude_base``: the text-space terms ``exclude`` is positive-wins
+    against, default the query's terms).
 
-    ``use_wand``: ``"auto"`` (default) routes OR queries through
-    Block-Max WAND only when the driver-side cost gate says pruning can
-    win (see WAND_MIN_SHARD_POSTINGS); ``True`` forces WAND (rank-safe
-    always — the tests pin it to keep WAND coverage non-vacuous at small
-    corpora); ``False`` forces the exhaustive scorer.
+    ``use_wand``: ``"auto"`` (default) routes a plain OR query (>= 2
+    known terms; no exclude, min_match, must, demote, boost, cursor or
+    slots) through Block-Max WAND only when the driver-side cost gate
+    says pruning can win (``_wand_route``; see WAND_MIN_SHARD_POSTINGS);
+    ``True`` forces WAND for such a query (rank-safe always — the tests
+    pin it to keep WAND coverage non-vacuous at small corpora);
+    ``False`` forces the exhaustive pass.
 
     ``doc_filter``: optional SQL predicate over the stored corpus's
     columns (the contract columns plus any extra metadata columns the
@@ -1593,44 +1422,32 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
     block supersets stay valid upper bounds for the allowed subset; θ
     seeds from allowed-only seed scores), and the mask intersects the
     candidate set, so a selective filter SHRINKS pruning-phase work.
+    ``dv_filter`` is the in-task alternative over the STORED docvalue
+    columns (zero corpus scan, zero extra shuffle); ``allowed_ids``
+    (rescore's window, engine/rescore.py) becomes a per-shard mask held
+    on the driver. All three intersect.
 
     Plan: memoized driver-side lexicon lookup of the <= |query| terms
-    (an in-process pyarrow read of the term-sorted lexicon the FIRST
-    time a term is seen; nothing after) gives df + idf + exact bucket
-    per term -> postings pruned to those buckets (partition pruning) and
-    terms (predicate pushdown) -> per-shard scorer (idf inlined via the
-    closure — no lexicon join, no broadcast exchange) emits <= k rows per
-    shard -> global top-k by (score desc, doc_id asc). ``_run_shards``
-    picks the executor from the posting mass (sum of df over the scan
-    terms): at most LOCAL_MAX_POSTINGS, with a top-k of at most
-    LOCAL_MAX_ROWS rows, the driver reads the pruned rows with pyarrow,
-    runs the same scorer per shard, and returns a LocalRelation
-    (``search*()`` does the work; ``collect()`` runs no job); otherwise
-    the scorer runs in applyInPandas tasks and the plan ends in
-    TakeOrderedAndProject. ``doc_filter``/``allowed_ids``
-    (cogrouped with a corpus-side relation) and ``collapse`` (a window
-    tail) always take the distributed plan.
+    gives df + idf + exact bucket per term -> postings pruned to those
+    buckets (partition pruning) and terms (predicate pushdown) -> the
+    per-shard kernel (idf inlined via the closure — no lexicon join, no
+    broadcast exchange) emits <= k rows per shard -> global top-k by
+    (score desc, doc_id asc). ``_run_shards`` picks the executor from
+    the posting mass: at most LOCAL_MAX_POSTINGS, with a top-k of at
+    most LOCAL_MAX_ROWS rows, the driver scores the pyarrow-read rows
+    and returns a LocalRelation (``collect()`` runs no job); otherwise
+    the kernel runs in applyInPandas tasks and the plan ends in
+    TakeOrderedAndProject. ``doc_filter`` (cogrouped) and ``collapse``
+    (a window tail) always take the distributed plan.
     """
-    from .build import PackedIndex  # noqa: F401 (typing)
-    k = _doc_limit(index, k)
-    spark = index.spark
     mode = mode.upper()
-    # docvalue-served restriction/boost (engine/docvalues.py): dv_filter
-    # is an ANSI-SQL predicate over the index's STORED docvalue columns,
-    # evaluated inside each scorer task over its own shard's column
-    # slice — zero corpus scan, zero extra shuffle (the scale-path
-    # alternative to doc_filter for indexed attributes; both compose:
-    # the masks intersect). ``boost`` multiplies each doc's BM25 score
-    # by the frozen recency decay (docvalues.recency_multiplier) —
-    # boosted queries route exhaustive (block-max bounds don't carry a
-    # per-doc multiplier).
+    # ``boost`` combines each doc's BM25 score with the frozen decay /
+    # recency multiplier (docvalues.recency_multiplier /
+    # decay_multiplier) after the frozen summation
     bst = _norm_boost(index, boost)
-    _require_dv(index, dv_filter)
-    # field collapsing (ES collapse, see search_collapsed): the kernel
-    # reduces each shard's hits to best-doc-per-group before its top-k
-    # cut, so every hit's score must exist -> exhaustive only; cursor
-    # pagination over groups is undefined (a group's best doc moves
-    # between pages) -> rejected
+    # field collapsing (ES collapse, see search_collapsed): every hit's
+    # score must exist -> exhaustive only; cursor pagination over groups
+    # is undefined (a group's best doc moves between pages) -> rejected
     if collapse is not None:
         if collapse not in (index.doc_values or ()):
             raise ValueError(
@@ -1655,278 +1472,94 @@ def _search_impl(index, query: str, k: int = 10, mode: str = "OR",
     # — terms are stored-vocabulary entries, not analyzer input
     qtf = dict(qtf_override) if qtf_override is not None \
         else query_terms(query, acfg)
-    empty = _empty_topk(spark)
-    if collapse is not None:
-        empty = spark.range(0).select(
-            F.lit("").alias("group_key"),
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("double").alias("score"))
-    if not qtf:
-        return empty
-    # per-term query boosting (term^w): a pure qtf multiplier — applied
-    # before the lexicon lookup so WAND bounds, routing, and every
-    # downstream path see the boosted weights transparently
-    qtf = _apply_term_boosts(qtf, term_boosts)
-    neg = sorted(set(tokenize_py(exclude, acfg)) - set(qtf)) if exclude else []
-    # boosting query (ES `boosting`, see search_boosting): demote =
-    # (negative_query, negative_boost). Docs containing ANY demote term
-    # keep their rank score times the factor; unknown demote terms
-    # demote nothing (the NOT rule); demotion invalidates block-max
-    # pruning (WAND would heap undemoted scores) -> exhaustive only.
-    dem = []
-    dem_factor = 1.0
+    # per-term query boosting (term^w): a pure qtf multiplier, so WAND
+    # bounds and routing see the boosted weights transparently
+    qtf = _apply_term_boosts(qtf, term_boosts) if qtf else qtf
+    base = qtf if exclude_base is None else exclude_base
+    neg = sorted(set(tokenize_py(exclude, acfg)) - set(base)) \
+        if exclude else []
+    # boosting query (ES `boosting`, see search_boosting): docs
+    # containing ANY demote term keep their score times the factor
+    dem = None
     if demote is not None:
-        dem_q, dem_factor = demote
-        dem_factor = float(dem_factor)
-        if dem_factor < 0.0:
+        if float(demote[1]) < 0.0:
             raise ValueError("demote factor must be >= 0")
-        dem = sorted(set(tokenize_py(dem_q, acfg)))
-    terms = sorted(qtf)
-    lex = index.lookup_terms(sorted(set(terms) | set(neg) | set(dem)))
-    known = [t for t in terms if t in lex]
-    if mode == "AND" and len(known) < len(terms):
-        return empty  # a required term is absent from the corpus
-    if not known:
-        return empty
-    mst = frozenset()
-    if must_terms:
-        # bool query (search_bool): every must term is required, so an
-        # unknown must term empties the result; a should floor above the
-        # number of KNOWN should terms is unreachable. The arity
-        # constraints invalidate WAND's theta pruning (same argument as
-        # min_match) -> exhaustive only.
-        if must_terms - set(known):
-            return empty
-        if min_should > sum(1 for t in known if t not in must_terms):
-            return empty
-        mst = frozenset(must_terms)
-        use_wand = False
-    neg = [t for t in neg if t in lex]  # absent NOT-terms exclude nothing
-    dem = [t for t in dem if t in lex]  # absent demote terms demote nothing
-    if dem:
-        use_wand = False  # per-doc demotion invalidates block bounds
-    qtfs = {t: float(qtf[t]) for t in known}
-    idfs = {t: float(lex[t]["idf"]) for t in known}
-    n_required = len(terms)
-    scan_terms = sorted(set(known) | set(neg) | set(dem))
-    if mm is not None:
-        if mm > len(known):
-            return empty  # fewer known terms than the floor: no doc can hit
-        use_wand = False  # a match-count floor invalidates WAND's theta
-        #                   pruning (its heap would seed from docs the
-        #                   floor later rejects) -> exhaustive only
-    if neg:
-        use_wand = False  # NOT queries score via the exhaustive path
-    if bst is not None:
-        use_wand = False  # per-doc multiplier invalidates block bounds
-    if cursor is not None:
-        # pagination needs docs BELOW page 1's threshold — Block-Max
-        # pruning targets the current top-k only, so cursor pages route
-        # exhaustive (they are as cheap as any other exhaustive query)
-        use_wand = False
-    # (doc_filter queries route through the same cost gate: masked WAND
-    # is rank-safe — wand.score_shard_wand(allowed_loc=...) — and a
-    # selective filter shrinks its candidate set further)
-    if use_wand == "auto" and mode == "OR":
-        # single-term queries resolve through the same formula: mass ==
-        # seed_df, so the seed-selectivity test fails -> exhaustive (the
-        # truthy string "auto" must never reach the scorer routing)
-        # Driver-side WAND cost gate from GLOBAL df (already in hand from
-        # the lexicon lookup — no extra job), on the PER-SHARD posting
-        # mass: the scorer task's dense scatter pass costs O(shard mass),
-        # while WAND's seed-scoring + block bounds + candidate re-decode
-        # is per-task overhead that only amortizes over a LARGE shard.
-        # Measured at 650 k docs (shard mass <= 45 k): exhaustive beats
-        # forced WAND 2-3x on every multi-term head-word query (q19
-        # 0.70 s vs 2.38 s, q20 0.78 s vs 1.82 s) — with many high-df
-        # terms the rest-sum upper bound makes block pruning vacuous.
-        # WAND is reserved for the big-shard regime it was built for
-        # (2^21-doc shards at cluster scale) with a selective seed.
-        use_wand = _wand_pays([int(lex[t]["df"]) for t in known], index)
-    cols = ["term", "shard", "df", "doc_ids", "tfs", "dls"] + (
-        ["blocks", "max_tf"] if use_wand and mode == "OR" else [])
-    width = index.shard_width
-    cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b, "avgdl": index.avgdl}
-    neg_set = frozenset(neg)
-    dem_set = frozenset(dem)
-    # docvalue closures: evaluated INSIDE the scorer task over its own
-    # shard's cached column slice. dv_gen (index generation) keys the
-    # worker cache so a refreshed handle never serves a stale slice.
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+        dem = (sorted(set(tokenize_py(demote[0], acfg))), float(demote[1]))
+    allowed = None
+    if allowed_ids is not None:
+        import numpy as np
+        ids = np.unique(np.asarray(allowed_ids, dtype=np.int64))
+        width = index.shard_width
+        allowed = {int(s): ids[ids // width == s] - s * width
+                   for s in np.unique(ids // width)}
 
-    def _dv_allowed(shard: int):
-        if dv_filter is None:
-            return None
-        from .docvalues import eval_filter
-        return eval_filter(dv_dir, shard, dv_gen, dv_filter)
+    def one(v):
+        return {"": v} if v else {}
 
-    def _boost_vec(shard: int):
-        if bst is None:
-            return None
-        if bst[0] == "decay":
-            from .docvalues import decay_multiplier
-            _, fld, kind, origin_s, scale_s, d, off_s, combine, w = bst
-            m = decay_multiplier(dv_dir, shard, dv_gen, width,
-                                 fld, kind, origin_s, scale_s, d, off_s)
-            if w != 1.0:
-                m = m * w
-            return (m, combine)
-        from .docvalues import recency_multiplier
-        return (recency_multiplier(dv_dir, shard, dv_gen, width,
-                                   bst[1], bst[2], bst[3]), "multiply")
+    qs = _QuerySet({"": qtf}, {"": mode}, negs=one(neg), msm=one(mm),
+                   musts=one(must_terms), minsh=one(min_should),
+                   demotes=one(dem), dismaxes=one(dismax),
+                   multis=one(multi), boosts=one(bst), cursors=one(cursor))
+    return _score_query_set(
+        index, qs, _doc_limit(index, k), use_wand, doc_filter, dv_filter,
+        single=True, allowed=allowed,
+        collapse=(collapse, collapse_n) if collapse is not None else None)
 
-    def _grp_closure(shard: int):
-        if collapse is None:
-            return None
 
-        def g(loc):
-            from .docvalues import group_values
-            return group_values(dv_dir, shard, dv_gen, collapse, loc)
+def _collapse_shard(r, vals, k: int, n: int):
+    """One shard's hits ``r`` — (doc_id, score) in the frozen (score
+    desc, doc_id asc) order, the kernel's output at k = shard width —
+    reduced to groups by their collapse keys ``vals`` (str | None per
+    hit; NULL keys are EXCLUDED, the search_sorted NULL rule).
 
-        return g
-
-    out_schema = ("group_key string, doc_id long, score double"
-                  if collapse is not None else "doc_id long, score double")
-    out_cols = (["group_key", "doc_id", "score"] if collapse is not None
-                else ["doc_id", "score"])
-
-    def _finish(scored: DataFrame) -> DataFrame:
-        """Global tail: plain top-k, or — when collapsing — one winner
-        per group (row_number over the frozen order; per-shard emissions
-        are <= k rows each, so the window input is tiny) then top-k
-        groups."""
-        if collapse is None:
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from pyspark.sql import Window
-        w = (Window.partitionBy("group_key")
-             .orderBy(F.desc("score"), F.asc("doc_id")))
-        if collapse_n > 1:
-            # top_hits: global top-collapse_n per group (window over the
-            # bounded per-(group, shard) partials), then top-k groups by
-            # their rank-1 representative; group order then hit order
-            ranked = (scored.withColumn("rn", F.row_number().over(w))
-                      .filter(F.col("rn") <= collapse_n))
-            reps = (ranked.filter(F.col("rn") == 1)
-                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .select("group_key", F.col("score").alias("_gs"),
-                            F.col("doc_id").alias("_gd")))
-            return (ranked.join(F.broadcast(reps), "group_key")
-                    .orderBy(F.desc("_gs"), F.asc("_gd"), F.asc("rn"))
-                    .select("group_key", "doc_id", "score"))
-        return (scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1).drop("rn")
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-
-    # tombstones (engine/deletes.py): None when the index has none
-    del_locs = _del_closure(index)
-
-    if doc_filter is not None or allowed_ids is not None:
-        if doc_filter is not None:
-            allowed = _allowed_shards(index, doc_filter, width)
-        else:
-            # explicit candidate ids (the rescore path, engine/rescore.py):
-            # the allowed side is a metadata-sized literal local relation —
-            # same cogrouped-mask plan as doc_filter, ZERO corpus scan
-            allowed = index.spark.createDataFrame(
-                [(int(d), int(d) // width) for d in allowed_ids],
-                "doc_id long, shard int")
-        wand_on = bool(use_wand) and mode == "OR"
-        if wand_on:
-            from .wand import score_shard_wand
-
-        def fn2(key, post_pdf, allowed_pdf):
-            import numpy as np
-            import pandas as pd
-            empty_r = pd.DataFrame({c: [] for c in out_cols})
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return empty_r  # no postings / no doc passes the filter
-            shard = int(post_pdf["shard"].iloc[0])
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            dvl = _dv_allowed(shard)
-            if dvl is not None:  # doc_filter AND dv_filter: intersect
-                loc = np.intersect1d(loc, dvl)
-            if del_locs is not None:
-                dl_ = del_locs(shard)
-                if dl_ is not None:  # tombstoned docs leave the allowed set
-                    loc = np.setdiff1d(loc, dl_)
-            if wand_on:
-                r = score_shard_wand(post_pdf, qtfs, idfs, cfgd, k, width,
-                                     allowed_loc=loc)
-            else:
-                r = _score_shard_exhaustive(post_pdf, qtfs, idfs, cfgd, k,
-                                            mode, width, n_required,
-                                            neg_set, allowed_loc=loc,
-                                            cursor=cursor,
-                                            boost_vec=_boost_vec(shard),
-                                            min_match=mm or 1,
-                                            collapse_vals=_grp_closure(
-                                                shard),
-                                            collapse_n=collapse_n,
-                                            must_terms=mst,
-                                            min_should=min_should,
-                                            demote_terms=dem_set,
-                                            demote_factor=dem_factor)
-            return r if r is not None else empty_r
-
-        scored = (_pruned_postings(index, lex, scan_terms, cols)
-                  .groupBy("shard")
-                  .cogroup(allowed.groupBy("shard"))
-                  .applyInPandas(fn2, out_schema))
-        return _finish(scored)
-
-    if use_wand and mode == "OR":
-        from .wand import score_shard_wand as scorer_fn
-
-        def fn(key, post_pdf):
-            import numpy as np
-            import pandas as pd
-            if len(post_pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            dvl = _dv_allowed(shard)
-            dl_ = del_locs(shard) if del_locs is not None else None
-            if dl_ is None:
-                r = scorer_fn(post_pdf, qtfs, idfs, cfgd, k, width,
-                              allowed_loc=dvl)
-            else:
-                # fold tombstones into an allow mask (masked WAND is
-                # rank-safe; block bounds over supersets stay valid)
-                if dvl is None:
-                    allow = np.ones(width, dtype=bool)
-                else:
-                    allow = np.zeros(width, dtype=bool)
-                    allow[dvl] = True
-                allow[dl_] = False
-                r = scorer_fn(post_pdf, qtfs, idfs, cfgd, k, width,
-                              allow_mask=allow)
-            return r if r is not None else pd.DataFrame(
-                {"doc_id": [], "score": []})
+    ``n == 1`` (search_collapsed): the shard's top-k groups, each as its
+    best doc. Per-shard top-k groups is globally sufficient: if a global
+    top-k group were outside its best-doc shard's top-k, that shard
+    would hold k groups whose shard-best — hence global best — beats
+    it. ``n > 1`` (search_top_hits): the top-n docs of EVERY group
+    present — the facet_stats emission bound (collapse keys are
+    categorical by design), because a group outside this shard's top-k
+    can still be a global top-k group whose 2nd..nth hits live here."""
+    import numpy as np
+    import pandas as pd
+    ok = np.asarray(vals != None, dtype=bool)  # noqa: E711 — elementwise
+    ids = r["doc_id"].to_numpy(np.int64)[ok]
+    sc = r["score"].to_numpy(np.float64)[ok]
+    vals = vals[ok]
+    if n == 1:
+        _, first = np.unique(vals, return_index=True)  # each group's best
+        keep = np.sort(first)[:k]                      # in rank order
     else:
-        def fn(key, post_pdf):
-            import pandas as pd
-            if len(post_pdf) == 0:
-                return pd.DataFrame({c: [] for c in out_cols})
-            shard = int(post_pdf["shard"].iloc[0])
-            r = _score_shard_exhaustive(
-                post_pdf, qtfs, idfs, cfgd, k, mode,
-                width, n_required, neg_set,
-                allowed_loc=_dv_allowed(shard),
-                cursor=cursor, boost_vec=_boost_vec(shard),
-                denied_loc=(del_locs(shard) if del_locs is not None
-                            else None),
-                min_match=mm or 1,
-                collapse_vals=_grp_closure(shard),
-                collapse_n=collapse_n,
-                must_terms=mst, min_should=min_should,
-                demote_terms=dem_set, demote_factor=dem_factor)
-            return r if r is not None else pd.DataFrame(
-                {c: [] for c in out_cols})
+        _, inv = np.unique(vals, return_inverse=True)
+        o = np.argsort(inv, kind="stable")  # group-major, rank order kept
+        g = inv[o]
+        keep = o[np.arange(g.size) - np.searchsorted(g, g) < n]
+    return pd.DataFrame({"group_key": vals[keep].astype(object),
+                         "doc_id": ids[keep], "score": sc[keep]})
 
-    if collapse is not None:
-        return _finish(_pruned_postings(index, lex, scan_terms, cols)
-                       .groupBy("shard").applyInPandas(fn, out_schema))
-    return _run_shards(index, lex, scan_terms, cols, fn, k)
+
+def _collapse_topk(scored: DataFrame, k: int, n: int) -> DataFrame:
+    """Global tail of search_collapsed (``n == 1``: one winner per group
+    by row_number over the frozen order, then the top-k groups) and
+    search_top_hits (each group's global top-n over the bounded
+    per-(group, shard) partials, then the top-k groups by their rank-1
+    row; group order, then hit order)."""
+    from pyspark.sql import Window
+    w = (Window.partitionBy("group_key")
+         .orderBy(F.desc("score"), F.asc("doc_id")))
+    if n > 1:
+        ranked = (scored.withColumn("rn", F.row_number().over(w))
+                  .filter(F.col("rn") <= n))
+        reps = (ranked.filter(F.col("rn") == 1)
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                .select("group_key", F.col("score").alias("_gs"),
+                        F.col("doc_id").alias("_gd")))
+        return (ranked.join(F.broadcast(reps), "group_key")
+                .orderBy(F.desc("_gs"), F.asc("_gd"), F.asc("rn"))
+                .select("group_key", "doc_id", "score"))
+    return (scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1).drop("rn")
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 # WAND routing cost gate (shared by the single-query and batch paths).
@@ -1958,18 +1591,53 @@ def _wand_pays(dfs: list, index=None) -> bool:
     return (mass // n_shards >= WAND_MIN_SHARD_POSTINGS
             and min(dfs) * WAND_SEED_FRAC < mass)
 
+
+def _wand_route(index, qs: "_QuerySet", lex: dict, use_wand, single: bool):
+    """The kernel's ``use_wand`` for a query set, decided on the driver
+    (``qs``'s exclude and demote terms already cut to known terms). An
+    entry may take WAND when it is plain OR with >= 2 known terms and no
+    exclude, min_match, must, demote, dv_filter, boost, cursor or slots
+    (dis_max / multi-field): a match floor or must clause rejects docs
+    WAND's heap would seed θ from, a per-doc multiplier is not in the
+    block bounds, a cursor page needs docs below the current top-k, and
+    block-max bounds are per-term sums, not per-slot maxima; NOT and a
+    per-entry dv_filter run in the exhaustive pass (the set-wide masks
+    — doc_filter, dv_filter, tombstones — keep WAND: masked WAND is
+    rank-safe). False — and the blocks/max_tf columns are
+    not read — when no entry may, when ``use_wand`` is False, or under
+    ``"auto"`` when no entry can pass the gate: a single query's gate is
+    ``_wand_pays`` on its global df; a set keeps the kernel's per-shard
+    gate (``"auto"``) while some eligible entry's global mass reaches
+    WAND_MIN_SHARD_POSTINGS (a shard's mass never exceeds it). Any other
+    truthy ``use_wand`` forces WAND."""
+    mods = (qs.negs, qs.msm, qs.musts, qs.demotes, qs.dv_preds, qs.boosts,
+            qs.cursors, qs.dismaxes, qs.multis)
+    dfs = [[int(lex[t]["df"]) for t in qt if t in lex]
+           for qid, qt in qs.per_q.items()
+           if qs.modes[qid] == "OR" and not any(qid in m for m in mods)]
+    dfs = [d for d in dfs if len(d) > 1]
+    if not dfs or not use_wand:
+        return False
+    if use_wand != "auto":
+        return True
+    if single:
+        return _wand_pays(dfs[0], index)
+    return "auto" if any(sum(d) >= WAND_MIN_SHARD_POSTINGS
+                         for d in dfs) else False
+
+
 # Executor cost gate (the query-side twin of the WAND gate above): a
 # query whose posting mass (sum of lexicon df over its scan terms, known
 # driver-side from lookup_terms — the check costs nothing) is at most
 # this many postings is scored on the driver, with no Spark job. Set at
 # the measured crossover: both routes forced over a sweep of OR and AND
 # queries on the 650k-turn fixture index (32 shards, local[4], 4-core
-# box, median of 5). With the exhaustive kernel the driver won at every
+# box, median of 5). With the exhaustive pass the driver won at every
 # mass up to 9.5M postings (0.13 vs 0.41 s at 1M, 0.43 vs 0.89 s at 4M,
 # 0.93 vs 1.24 s at 7.9M) and lost at 12.9M (3.1 vs 1.9 s). With the
 # WAND kernel (auto above WAND_MIN_SHARD_POSTINGS per shard, or forced)
 # the routes tie near 2.9M (0.80 vs 0.78 s) and the driver loses at
-# 5.7M (1.26 vs 1.20 s). At 2^22 the exhaustive kernel still wins by
+# 5.7M (1.26 vs 1.20 s). At 2^22 the exhaustive pass still wins by
 # half and the WAND kernel loses by under 5%. Memory does not bind: the
 # driver's peak RSS grew ~11 bytes per posting (140 MB at 12.9M).
 # The same bound serves search_batch, where the mass is the set's
@@ -1990,6 +1658,7 @@ LOCAL_MAX_ROWS = 1 << 11
 _TOPK_FIELDS = [T.StructField("doc_id", T.LongType()),
                 T.StructField("score", T.DoubleType())]
 _BATCH_FIELDS = [T.StructField("qid", T.StringType())] + _TOPK_FIELDS
+_GROUP_FIELDS = [T.StructField("group_key", T.StringType())] + _TOPK_FIELDS
 
 
 def _doc_limit(index, k: int) -> int:
@@ -2015,12 +1684,12 @@ def _pruned_postings(index, lex: dict, scan_terms: list,
 
 def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
                 k: int, entries: "dict | None" = None) -> DataFrame:
-    """Run the per-shard scorer ``fn(key, post_pdf)`` over the pruned
-    postings and return the global top-k. ``entries`` is None for one
-    query: ``fn`` emits (doc_id, score) rows and the answer is in the
-    frozen (score desc, doc_id asc) order. For a query set it maps each
-    qid to ``(k_q, terms_q)`` (the entry's own limit and positive terms):
-    ``fn`` emits (qid, doc_id, score) rows, each entry keeps its own
+    """Run the per-shard scorer ``fn(key, post_pdf)``, which emits the
+    kernel's (qid, doc_id, score) rows, over the pruned postings and
+    return the global top-k. ``entries`` is None for one query: the
+    answer is (doc_id, score) in the frozen (score desc, doc_id asc)
+    order. For a query set it maps each qid to ``(k_q, terms_q)`` (the
+    entry's own limit and positive terms): each entry keeps its own
     top-k_q, and the answer is in (qid, score desc, doc_id asc) order.
     Two routes, one ``fn``:
 
@@ -2046,15 +1715,15 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
     else:
         rows = sum(min(k_q, mass_of(ts)) for k_q, ts in entries.values())
     if mass > LOCAL_MAX_POSTINGS or rows > LOCAL_MAX_ROWS:
-        post = _pruned_postings(index, lex, scan_terms, cols)
+        scored = (_pruned_postings(index, lex, scan_terms, cols)
+                  .groupBy("shard")
+                  .applyInPandas(fn, T.StructType(_BATCH_FIELDS)))
         if entries is None:
-            return (post.groupBy("shard")
-                    .applyInPandas(fn, "doc_id long, score double")
+            return (scored.select("doc_id", "score")
                     .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         return _batch_topk(
-            post.groupBy("shard").applyInPandas(
-                fn, "qid string, doc_id long, score double"),
-            k, {q: k_q for q, (k_q, _) in entries.items() if k_q != k})
+            scored, k,
+            {q: k_q for q, (k_q, _) in entries.items() if k_q != k})
     import pandas as pd
 
     from .build import any_equal
@@ -2108,15 +1777,13 @@ def _batch_topk(scored: DataFrame, k: int, ks: dict) -> DataFrame:
 
 
 def wand_routes(index, query: str) -> bool:
-    """Replicates search()'s auto cost gate for a query WITHOUT running
-    it (bench/diagnostics: proves a measured row actually took the WAND
+    """Whether ``search(index, query)``'s auto cost gate takes WAND,
+    decided by the same ``_wand_route`` WITHOUT running the query
+    (bench/diagnostics: proves a measured row actually took the WAND
     path rather than silently degrading to exhaustive)."""
     qtf = query_terms(query, index.cfg.analyzer)
-    lex = index.lookup_terms(sorted(qtf))
-    known = [t for t in qtf if t in lex]
-    if len(known) < 2:
-        return False
-    return _wand_pays([int(lex[t]["df"]) for t in known], index)
+    return _wand_route(index, _QuerySet({"": qtf}, {"": "OR"}),
+                       index.lookup_terms(sorted(qtf)), "auto", True)
 
 
 def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
@@ -2132,22 +1799,29 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                        dv_preds: dict | None = None,
                        dv_ctx: tuple | None = None,
                        boosts: dict | None = None,
-                       ks: dict | None = None):
-    """Score EVERY query of the batch against one doc-range shard with a
-    shared decode cache (E9's scale design).
+                       ks: dict | None = None,
+                       cursors: dict | None = None):
+    """Score EVERY query of the set against one doc-range shard with a
+    shared decode cache (E9's scale design) — the engine's one BM25
+    shard kernel: a single query is a one-entry set (``_search_impl``),
+    so single and batch answers agree by construction.
 
     Each (term, shard) payload is VByte-decoded exactly ONCE per shard
     task, and the per-term BM25 contribution vector is computed once per
     distinct (term, qtf) — queries then reduce to scatter-adds of cached
-    float64 vectors. Float-op order is IDENTICAL to
-    ``_score_shard_exhaustive`` (same expression per term, ascending-term
-    accumulation), so batch scores are bit-identical to the single-query
-    path and the pure-Python oracle. Dense accumulators are allocated once
-    per shard and reset only at touched positions between queries
-    (postings << width), so per-query cost is O(query's posting mass),
-    not O(width). ``search_dis_max``, ``search_multi_match`` and
-    ``search_fielded`` are scored here too, as one-entry sets
-    (``_search_one``).
+    float64 vectors. Accumulation is per-term in ASCENDING term order —
+    the pure-Python oracle's float64 summation order (rank-identity).
+    Dense accumulators are allocated once per shard and reset only at
+    touched positions between queries (postings << width), so per-query
+    cost is O(query's posting mass), not O(width). An entry emits at
+    most its k rows (the per-shard top-k heap analog).
+
+    ``cursors``: per-entry ``search_after`` cursor ``(score, doc_id)``:
+    only docs STRICTLY after it in the frozen (score desc, doc_id asc)
+    order survive, applied just before the top-k cut, so each shard
+    re-emits its next k candidates — per-shard top-k stays globally
+    sufficient on every page. The raw float compare is exact because
+    scores are bit-reproducible (frozen summation order).
     """
     import numpy as np
     import pandas as pd
@@ -2172,7 +1846,7 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
             o = occ[term] = _decode_occurrences(post_pdf, rowidx[term], start)
         return o
 
-    contrib: dict = {}   # (term, qtf) -> float64[] (same order as exhaustive)
+    contrib: dict = {}   # (term, qtf, avgdl) -> float64[] contribution
 
     def _contrib(term: str, qtf: float, avg: float | None = None):
         # ``avg`` overrides the index-global avgdl for MULTI_MATCH
@@ -2305,6 +1979,7 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
         q_mul = multis.get(qid) if multis else None
         q_dvp = dv_preds.get(qid) if dv_preds else None
         q_bst = boosts.get(qid) if boosts else None
+        q_cur = cursors.get(qid) if cursors else None
         if q_mul is not None:
             # DIS_MAX / MULTI_MATCH entry — the frozen combine of
             # search_dis_max and search_multi_match, for single queries
@@ -2400,7 +2075,8 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
             continue
         if (use_wand and mode == "OR" and len(terms_here) > 1
                 and not q_negs and q_mm <= 1 and q_must is None
-                and q_dem is None and q_dvp is None and q_bst is None):
+                and q_dem is None and q_dvp is None and q_bst is None
+                and q_cur is None):
             if use_wand is True or _wand_pays(
                     [decoded[t][0].size for t in terms_here]):
                 sub = post_pdf[post_pdf["term"].isin(terms_here)]
@@ -2422,8 +2098,9 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
         touched = np.unique(np.concatenate(locs))
         if q_must is not None:
             # bool entry: every must term present AND >= min_should of
-            # the remaining (should) terms — same frozen rule as the
-            # single-query kernel (_score_shard_exhaustive)
+            # the remaining (should) terms (search_bool); cnt counts
+            # ALL distinct present query terms, so cnt - cntm is the
+            # should-count
             cm = cntm[touched]
             hit = touched[(cm == len(q_must))
                           & ((cnt[touched] - cm)
@@ -2431,9 +2108,9 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
         elif mode == "AND":
             hit = touched[cnt[touched] == len(qt)]
         elif q_mm > 1:
-            # minimum_should_match entry: same distinct-term floor as
-            # the single-query scorer (WAND is skipped for these — the
-            # floor invalidates theta pruning)
+            # minimum_should_match: at least q_mm DISTINCT query terms
+            # present (WAND is skipped for these — the floor
+            # invalidates theta pruning)
             hit = touched[cnt[touched] >= q_mm]
         else:
             hit = touched        # every touched doc has cnt > 0
@@ -2444,15 +2121,17 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
             # semantics: stats global, masks intersect)
             hit = hit[_dv_mask(q_dvp)[hit]]
         if q_negs and hit.size:
-            # NOT semantics (same contract as the single-query scorer):
-            # drop docs containing ANY excluded term, before top-k
+            # NOT semantics: drop docs containing ANY excluded term,
+            # before top-k
             ex = np.unique(np.concatenate([decoded[t][0] for t in q_negs]))
             hit = hit[~np.isin(hit, ex, assume_unique=True)]
         if q_bst is not None and hit.size:
-            # per-entry decay/recency boost — identical frozen combine
-            # and operation order as the single-query kernel (boost,
-            # THEN demote); boosted positions are a subset of touched,
-            # so the shared accumulator reset below covers them
+            # decay/recency boost, combined AFTER the frozen summation
+            # (docvalues.recency_multiplier / decay_multiplier; v
+            # already carries the ES function weight) — frozen
+            # operation order: boost, THEN demote, then the cursor
+            # compare and top-k. Boosted positions are a subset of
+            # touched, so the shared accumulator reset below covers them
             bv, bcomb = _boost_v(q_bst)
             if bcomb == "sum":
                 acc[hit] += bv[hit]
@@ -2469,7 +2148,13 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                     [decoded[t][0] for t in dts]))
                 m_ = np.isin(hit, dm, assume_unique=True)
                 acc[hit[m_]] *= q_dem[1]
+        if q_cur is not None and hit.size:
+            s = acc[hit]
+            hit = hit[(s < q_cur[0])
+                      | ((s == q_cur[0]) & (hit + start > q_cur[1]))]
         if hit.size:
+            # tie-SAFE top-k (codec.topk_tiebreak): the frozen (score
+            # desc, doc_id asc) order at the k boundary
             hit_k, scores = C.topk_tiebreak(hit, acc[hit], q_k)
             _emit(qid, (hit_k + start).astype(np.int64), scores)
         acc[touched] = 0.0       # reset ONLY touched positions
@@ -2577,7 +2262,7 @@ class _QuerySet:
     ("OR" | "AND" | "PHRASE"), plus the per-entry modifiers, each keyed
     by qid and named like the ``_score_shard_batch`` keyword it feeds
     (``boosts`` is the per-entry score boost, ``ks`` the per-entry
-    limit)."""
+    limit, ``cursors`` a single query's ``search_after`` cursor)."""
     per_q: dict
     modes: dict
     negs: dict = dataclasses.field(default_factory=dict)
@@ -2592,6 +2277,7 @@ class _QuerySet:
     dv_preds: dict = dataclasses.field(default_factory=dict)
     boosts: dict = dataclasses.field(default_factory=dict)
     ks: dict = dataclasses.field(default_factory=dict)
+    cursors: dict = dataclasses.field(default_factory=dict)
 
 
 def _parse_query_set(index, queries: list[dict]) -> _QuerySet:
@@ -2777,85 +2463,72 @@ def _parse_query_set(index, queries: list[dict]) -> _QuerySet:
                      boosts=boosts_by_qid, ks=ks_by_qid)
 
 
-def _search_one(index, terms: dict, k: int, exclude, doc_filter,
-                dv_filter, base: "dict | None" = None,
-                **entry) -> DataFrame:
-    """Score ONE dis_max / multi-field query as a one-entry query set:
-    ``terms`` are its scan terms, ``entry`` its kernel entry (``dismaxes=``
-    or ``multis=``), ``base`` the terms ``exclude`` is positive-wins
-    against (default ``terms``). Same kernel and executor gate as
-    ``search_batch``; the answer is (doc_id, score) in (score desc,
-    doc_id asc) order."""
-    neg = (sorted(set(tokenize_py(exclude, index.cfg.analyzer))
-                  - set(terms if base is None else base))
-           if exclude else [])
-    qs = _QuerySet({"": terms}, {"": "OR"}, negs={"": neg},
-                   **{kind: {"": v} for kind, v in entry.items()})
-    return _score_query_set(index, qs, _doc_limit(index, k), False,
-                            doc_filter, dv_filter, single=True)
-
-
 def _score_query_set(index, qs: _QuerySet, k: int, use_wand,
                      doc_filter: str | None, dv_filter: str | None,
-                     single: bool = False) -> DataFrame:
+                     single: bool = False, allowed: "dict | None" = None,
+                     collapse: "tuple | None" = None) -> DataFrame:
     """Score a parsed query set (``_search_batch_impl`` has the plan
     notes): one memoized lexicon lookup, one pruned postings scan, the
     ``_score_shard_batch`` kernel per shard, routed by ``_run_shards``
-    (or cogrouped with ``doc_filter``). ``single``: a one-entry set
-    answering a single query — (doc_id, score) rows, the distributed
-    tail is orderBy().limit(k) (TakeOrderedAndProject)."""
-    spark = index.spark
+    (or cogrouped with ``doc_filter``).
+
+    ``single``: a one-entry set answering a single query
+    (``_search_impl``) — (doc_id, score) rows; the distributed tail is
+    orderBy().limit(k) (TakeOrderedAndProject). ``allowed``: shard ->
+    shard-local doc offsets, a candidate mask held on the driver
+    (rescore's window), intersected like ``dv_filter``. ``collapse``:
+    ``(field, n)`` of search_collapsed / search_top_hits — the kernel
+    runs at k = shard width (every hit's score must exist),
+    ``_collapse_shard`` reduces each shard's hits to (group_key, doc_id,
+    score) rows and ``_collapse_topk`` is the tail; always distributed."""
+    _require_dv(index, dv_filter)
+    # each shard task emits the kernel's (qid, doc_id, score) rows, or
+    # (group_key, doc_id, score) rows when collapsing
+    shard_fields = _GROUP_FIELDS if collapse is not None else _BATCH_FIELDS
+    out_fields = (_TOPK_FIELDS if single and collapse is None
+                  else shard_fields)
     per_q = {qid: qt for qid, qt in qs.per_q.items() if qt}
-    modes, musts, minsh = qs.modes, qs.musts, qs.minsh
-    negs = {qid: ts for qid, ts in qs.negs.items() if qid in per_q and ts}
-    demotes = {qid: v for qid, v in qs.demotes.items()
-               if qid in per_q and v[0]}
-    dismaxes = {qid: v for qid, v in qs.dismaxes.items() if qid in per_q}
-    multis = {qid: v for qid, v in qs.multis.items() if qid in per_q}
-    dv_preds = {qid: v for qid, v in qs.dv_preds.items() if qid in per_q}
-    msm = {qid: m_ for qid, m_ in qs.msm.items() if qid in per_q}
-    phrases = {qid: seq for qid, seq in qs.phrases.items() if qid in per_q}
-    slops = {qid: s_ for qid, s_ in qs.slops.items() if qid in phrases}
-    if not per_q:
-        return _empty_topk(spark, with_qid=not single)
-    # ONE memoized lexicon lookup for the union of all query + NOT terms;
-    # idf rides the task closure — the batch job is the pruned scan alone
+    # ONE memoized lexicon lookup for the union of all query, NOT and
+    # demote terms; idf rides the task closure — the job is the pruned
+    # scan alone
     lex = index.lookup_terms(sorted(
         {t for qt in per_q.values() for t in qt}
-        | {t for ts in negs.values() for t in ts}
-        | {t for v in demotes.values() for t in v[0]}))
-    # bool entries: an unknown must term, or a should floor above the
-    # KNOWN should-term count, empties that entry globally (the same
-    # rule search_bool applies driver-side)
-    for qid in [q_ for q_ in per_q if q_ in musts]:
-        known_q = [t for t in per_q[qid] if t in lex]
-        if (musts[qid] - set(known_q)
-                or minsh[qid] > sum(1 for t in known_q
-                                    if t not in musts[qid])):
+        | {t for q, ts in qs.negs.items() if q in per_q for t in ts}
+        | {t for q, v in qs.demotes.items() if q in per_q for t in v[0]}))
+    # an entry no doc can match is dropped before the scan: an AND entry
+    # or a bool must clause with a corpus-unknown term, or a min_match /
+    # should floor above the entry's KNOWN term count
+    for qid, qt in list(per_q.items()):
+        known = [t for t in qt if t in lex]
+        must = qs.musts.get(qid, frozenset())
+        if ((qs.modes[qid] == "AND" and len(known) < len(qt))
+                or must - set(known)
+                or qs.minsh.get(qid, 0) > sum(t not in must for t in known)
+                or qs.msm.get(qid, 1) > len(known)):
             del per_q[qid]
-    if musts:
-        musts = {qid: v for qid, v in musts.items() if qid in per_q}
-        minsh = {qid: v for qid, v in minsh.items() if qid in per_q}
-        negs = {qid: ts for qid, ts in negs.items() if qid in per_q}
-        if not per_q:
-            return _empty_topk(spark, with_qid=not single)
+    # absent NOT terms exclude nothing, absent demote terms demote nothing
+    negs = {q: [t for t in ts if t in lex] for q, ts in qs.negs.items()}
+    demotes = {q: ([t for t in v[0] if t in lex], v[1])
+               for q, v in qs.demotes.items()}
+    qs = dataclasses.replace(
+        qs, per_q=per_q,
+        negs={q: ts for q, ts in negs.items() if q in per_q and ts},
+        demotes={q: v for q, v in demotes.items() if q in per_q and v[0]},
+        **{f: {q: v for q, v in getattr(qs, f).items() if q in per_q}
+           for f in ("phrases", "slops", "msm", "musts", "minsh",
+                     "dismaxes", "multis", "dv_preds", "boosts",
+                     "cursors")})
     scan_terms = sorted(
-        t for t in lex
-        if t in {u for qt in per_q.values() for u in qt}
-        | {u for ts in negs.values() for u in ts}
-        | {u for v in demotes.values() for u in v[0]})
+        {t for qt in per_q.values() for t in qt if t in lex}
+        | {t for ts in qs.negs.values() for t in ts}
+        | {t for v in qs.demotes.values() for t in v[0]})
     if not scan_terms:
-        return _empty_topk(spark, with_qid=not single)
+        return _values_relation(index.spark, out_fields, [])
     idfs = {t: float(lex[t]["idf"]) for t in scan_terms}
-    # keep the "auto" / True distinction (plain `and` would collapse it)
-    wand_mode = use_wand if any(m == "OR" for m in modes.values()) else False
-    # (per-query NOT routing is handled inside the scorer: a query with
-    # excludes skips the WAND branch; others in the set still route.
-    # Filtered batches route too — the per-shard WAND call carries the
-    # shared allowed mask, masked WAND being rank-safe.)
+    wand = _wand_route(index, qs, lex, use_wand, single)
     cols = (["term", "shard", "df", "doc_ids", "tfs", "dls"]
-            + (["blocks", "max_tf"] if wand_mode else [])
-            + (["poss"] if phrases else []))
+            + (["blocks", "max_tf"] if wand else [])
+            + (["poss"] if qs.phrases else []))
     width = index.shard_width
     cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
             "avgdl": index.avgdl}
@@ -2863,69 +2536,80 @@ def _score_query_set(index, qs: _QuerySet, k: int, use_wand,
     # per shard task, shared across the whole query set (same frozen
     # candidate-restriction semantics as doc_filter; the masks intersect
     # when both are given)
-    _require_dv(index, dv_filter)
     dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def _dv_loc(shard: int):
-        if dv_filter is None:
-            return None
-        from .docvalues import eval_filter
-        return eval_filter(dv_dir, shard, dv_gen, dv_filter)
-
     # tombstones (engine/deletes.py): None when the index has none
     del_locs = _del_closure(index)
 
-    def _score(post_pdf, allowed_loc, denied_loc):
+    def _cands(shard: int):
+        """The shard's candidate offsets (dv_filter AND ``allowed``);
+        None = every doc."""
+        import numpy as np
+        loc = None
+        if dv_filter is not None:
+            from .docvalues import eval_filter
+            loc = eval_filter(dv_dir, shard, dv_gen, dv_filter)
+        if allowed is not None:
+            a = allowed.get(shard, np.empty(0, np.int64))
+            loc = a if loc is None else np.intersect1d(loc, a)
+        return loc
+
+    def _score(shard: int, post_pdf, allowed_loc, denied_loc):
         import pandas as pd
-        r = _score_shard_batch(post_pdf, per_q, modes, idfs, cfgd, k,
-                               width, wand_mode, allowed_loc=allowed_loc,
-                               denied_loc=denied_loc, negs=negs,
-                               phrases=phrases, msm=msm, slops=slops,
-                               musts=musts, minsh=minsh, demotes=demotes,
-                               dismaxes=dismaxes, multis=multis or None,
-                               dv_preds=dv_preds, dv_ctx=(dv_dir, dv_gen),
-                               boosts=qs.boosts or None,
-                               ks=qs.ks or None)
+        r = _score_shard_batch(
+            post_pdf, idfs=idfs, cfg=cfgd,
+            k=width if collapse is not None else k, width=width,
+            use_wand=wand, allowed_loc=allowed_loc, denied_loc=denied_loc,
+            dv_ctx=(dv_dir, dv_gen), **vars(qs))
         if r is None:
-            r = pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-        return r.drop(columns="qid") if single else r
+            return pd.DataFrame({f.name: [] for f in shard_fields})
+        if collapse is not None:
+            from .docvalues import group_values
+            return _collapse_shard(r, group_values(
+                dv_dir, shard, dv_gen, collapse[0],
+                r["doc_id"].to_numpy() - shard * width), k, collapse[1])
+        return r
 
     if doc_filter is None:
         def fn(key, post_pdf):
             shard = int(key[0])
-            return _score(post_pdf, _dv_loc(shard),
+            return _score(shard, post_pdf, _cands(shard),
                           del_locs(shard) if del_locs is not None else None)
 
-        entries = None if single else {qid: (qs.ks.get(qid, k), qt)
-                                       for qid, qt in per_q.items()}
-        return _run_shards(index, lex, scan_terms, cols, fn, k, entries)
+        if collapse is None:
+            entries = None if single else {qid: (qs.ks.get(qid, k), qt)
+                                           for qid, qt in per_q.items()}
+            return _run_shards(index, lex, scan_terms, cols, fn, k, entries)
+        scored = (_pruned_postings(index, lex, scan_terms, cols)
+                  .groupBy("shard")
+                  .applyInPandas(fn, T.StructType(shard_fields)))
+    else:
+        allowed_docs = _allowed_shards(index, doc_filter, width)
 
-    allowed = _allowed_shards(index, doc_filter, width)
+        def fnf(key, post_pdf, allowed_pdf):
+            import numpy as np
+            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
+                # no postings / no doc passes the filter: an empty frame
+                return _score(0, post_pdf.iloc[:0], None, None)
+            shard = int(post_pdf["shard"].iloc[0])
+            loc = allowed_pdf["doc_id"].to_numpy(np.int64) - shard * width
+            c = _cands(shard)
+            if c is not None:
+                loc = np.intersect1d(loc, c)
+            if del_locs is not None:
+                dl_ = del_locs(shard)
+                if dl_ is not None:
+                    loc = np.setdiff1d(loc, dl_)
+            return _score(shard, post_pdf, loc, None)
 
-    def fnf(key, post_pdf, allowed_pdf):
-        import numpy as np
-        if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-            # no postings / no doc passes the filter: an empty frame
-            return _score(post_pdf.iloc[:0], None, None)
-        shard = int(post_pdf["shard"].iloc[0])
-        loc = allowed_pdf["doc_id"].to_numpy(np.int64) - shard * width
-        dvl = _dv_loc(shard)
-        if dvl is not None:
-            loc = np.intersect1d(loc, dvl)
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                loc = np.setdiff1d(loc, dl_)
-        return _score(post_pdf, loc, None)
-
-    scored = (_pruned_postings(index, lex, scan_terms, cols)
-              .groupBy("shard")
-              .cogroup(allowed.groupBy("shard"))
-              .applyInPandas(fnf, ("doc_id long, score double" if single
-                                   else "qid string, doc_id long, "
-                                        "score double")))
+        scored = (_pruned_postings(index, lex, scan_terms, cols)
+                  .groupBy("shard")
+                  .cogroup(allowed_docs.groupBy("shard"))
+                  .applyInPandas(fnf, T.StructType(shard_fields)))
+    if collapse is not None:
+        return _collapse_topk(scored, k, collapse[1])
     if single:
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return (scored.select("doc_id", "score")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     return _batch_topk(scored, k, qs.ks)
 
 

@@ -21,16 +21,17 @@ Frozen contract (mirrored by the DuckDB oracle twin in
 * the result is the top-``k`` of the window under
   (final desc, doc_id asc).
 
-Plan shape (the 100 TB argument): the primary is ONE unchanged pruned-
-scan job at ``k = window``; its <= window collected ids (metadata-
-sized, the ``_collect_topk`` class) become a literal local-relation
-allowed side for the secondary — the SAME cogrouped-mask kernel as
-``doc_filter`` but with ZERO corpus scan, so the secondary job reads
-only the rescore query's own pruned postings buckets. ``k = window``
-on the secondary guarantees every matching window doc survives its
-top-k cut (<= window candidates exist by construction). The weighted
-combine is driver-side over <= window rows; the result is a jobless
-local relation. Nothing corpus-sized moves at any scale.
+Plan shape (the 100 TB argument): the primary is ``search`` at
+``k = window``; its <= window collected ids (metadata-sized, the
+``_collect_topk`` class) become a per-shard candidate mask held on the
+driver for the secondary — ``search``'s own plan, masked like
+``dv_filter``, with ZERO corpus scan — so the secondary reads only the
+rescore query's own pruned postings buckets, and takes the driver-local
+route (no Spark job) when its posting mass is small. ``k = window`` on
+the secondary guarantees every matching window doc survives its top-k
+cut (<= window candidates exist by construction). The weighted combine
+is driver-side over <= window rows; the result is a jobless literal
+relation. Nothing corpus-sized moves at any scale.
 """
 
 from __future__ import annotations
@@ -68,7 +69,7 @@ def search_rescore(index, query: str, rescore_query: str, k: int = 10,
     fused = [(d, wq * float(r["score"]) + wr * smap.get(d, 0.0))
              for d, r in zip(ids, primary)]
     top = sorted(fused, key=lambda t: (-t[1], t[0]))[:int(k)]
-    return index.spark.createDataFrame(top, RESCORE_SCHEMA)
+    return Q._values_relation(index.spark, Q._TOPK_FIELDS, top)
 
 
 def search_rescore_vector(index, query: str, emb: DataFrame, query_vec,

@@ -10,8 +10,8 @@ Contracts under test:
   serves, the local answer equals the distributed answer exactly and
   matches the pure-Python oracle (engine/oracle.py, plus recomputes for
   the docvalue multipliers and tombstones);
-* a small query or query set — plan construction, lexicon lookup and
-  collect — schedules zero Spark jobs with Arrow on and off;
+* a small query, query set or rescore — plan construction, lexicon
+  lookup and collect — schedules zero Spark jobs with Arrow on and off;
 * a query above the constant, or one whose top-k may hold more than
   ``LOCAL_MAX_ROWS`` rows (a whole-ranking ``k``), keeps the
   distributed plan (FlatMapGroupsInPandas + TakeOrderedAndProject, or
@@ -66,7 +66,8 @@ def lidx(spark, corpus_df, tmp_path_factory):
     from engine.build import build_index
     d = str(tmp_path_factory.mktemp("local_route") / "idx")
     return build_index(spark, corpus_df, d,
-                       cfg=IndexConfig(doc_values=("role", "ts")))
+                       cfg=IndexConfig(doc_values=("role", "ts"),
+                                       fuzzy_edits=1))
 
 
 @pytest.fixture(scope="module")
@@ -120,6 +121,34 @@ def _rescored(full, mult, k=10):
     return out[:k]
 
 
+def _prefix_cursor(idx, prefix, k):
+    last = Q.search_prefix(idx, prefix, k=k).collect()[-1]
+    return (last.score, last.doc_id)
+
+
+def _vocab_or(oracle, keep):
+    """The OR query, qtf 1 per term, over the oracle's vocabulary terms
+    ``keep`` selects (an expansion typed out)."""
+    return " ".join(t for t in sorted(oracle.postings) if keep(t))
+
+
+def _fuzzy_or(oracle, term, cap=50):
+    from engine.fuzzy import levenshtein_py
+    cand = sorted((levenshtein_py(term, t), -len(p), t)
+                  for t, p in oracle.postings.items()
+                  if levenshtein_py(term, t) <= 1)
+    return " ".join(t for _, _, t in cand[:cap])
+
+
+def _mlt(oracle, doc_id, max_terms=16, k=10):
+    tf = {t: n for t, ps in oracle.postings.items()
+          for d, n in ps if d == doc_id}
+    terms = [t for _, t in sorted((-(n * oracle.idf(t)), t)
+                                  for t, n in tf.items())][:max_terms]
+    return [x for x in oracle.search(" ".join(terms), k=k + 1)
+            if x[0] != doc_id][:k]
+
+
 # (case id, engine call, oracle answer). Every query below has a
 # posting mass well under the real constant at this corpus size.
 CASES = [
@@ -167,6 +196,18 @@ CASES = [
      lambda o, a: o.search("hot0 hot0 mid1")),
     ("wand", lambda i: Q.search(i, "hot0 hot1 mid1", use_wand=True),
      lambda o, a: o.search("hot0 hot1 mid1")),
+    # each token adds its qtf to every member of its synonym group
+    ("synonyms", lambda i: Q.search_synonyms(i, "hot0 rare3",
+                                             {"hot0": ["hot1"]}),
+     lambda o, a: o.search("hot0 hot1 rare3")),
+    ("prefix_after", lambda i: Q.search_prefix(
+        i, "rare", k=5, after=_prefix_cursor(i, "rare", 5)),
+     lambda o, a: _full(o, _vocab_or(o, lambda t: t.startswith("rare")))
+     [5:10]),
+    ("fuzzy", lambda i: Q.search_fuzzy(i, "rare3"),
+     lambda o, a: o.search(_fuzzy_or(o, "rare3"))),
+    ("more_like_this", lambda i: M.more_like_this(i, 0),
+     lambda o, a: _mlt(o, 0)),
 ]
 
 
@@ -222,6 +263,34 @@ def test_small_query_runs_no_spark_job(spark, lidx, arrow):
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set(key, prev)
     assert out[0] and out[1] == [] and out[2] and out[3]
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_small_rescore_runs_no_spark_job(spark, lidx, monkeypatch, arrow):
+    """search_rescore's secondary query is search()'s one-entry plan
+    under a driver-held window mask: small, it runs no job, and answers
+    like its distributed route."""
+    from engine.rescore import search_rescore
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    sc = spark.sparkContext
+    gid = f"local-rescore-{arrow}"
+
+    def run():
+        return _rows(search_rescore(lidx, "hot0 rare3", "hot1 mid1", k=5,
+                                    window=20, rescore_weight=2.0))
+
+    spark.conf.set(key, arrow)
+    try:
+        lidx.refresh()  # cold lexicon memo: the lookup must be job-free
+        sc.setJobGroup(gid, gid)
+        local = run()
+        assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prev)
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    assert local and local == run()
 
 
 def test_route_boundary_is_posting_mass(lidx, monkeypatch):

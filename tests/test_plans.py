@@ -49,6 +49,31 @@ def test_topk_is_take_ordered(plan_idx, flat_index, monkeypatch):
     assert "TakeOrderedAndProject" in _formatted(flat)
 
 
+def test_batch_reads_wand_columns_only_when_routable(plan_idx,
+                                                     monkeypatch):
+    """A query set reads the WAND columns (blocks, max_tf) only when an
+    entry can take WAND: never for a dis_max-only set, not under "auto"
+    when no eligible entry's posting mass reaches the per-shard gate
+    (this corpus is far below it), always under use_wand=True."""
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    dis_max = [{"id": "d", "mode": "DIS_MAX",
+                "queries": ["hot0 hot1", "rare3 mid1"]}]
+    ors = [{"id": "a", "query": "hot0 hot1 rare3", "mode": "OR"},
+           {"id": "b", "query": "hot0 mid1", "mode": "OR"}]
+
+    def schema(qset, use_wand):
+        df = Q.search_batch(plan_idx, qset, k=10, use_wand=use_wand)
+        m = re.search(r"ReadSchema: (\S+)", _formatted(df))
+        assert m and "doc_ids" in m.group(1)
+        return m.group(1)
+
+    assert "blocks" not in schema(dis_max, "auto")
+    assert "blocks" not in schema(dis_max, True)
+    assert "blocks" not in schema(ors, "auto")
+    assert "blocks" in schema(ors, True)
+
+
 def test_small_query_is_local_table_scan(plan_idx, monkeypatch):
     """Below LOCAL_MAX_POSTINGS the top-k is computed on the driver and
     the plan is a bare literal relation: no file scan, no Python UDF."""
