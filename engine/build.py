@@ -35,7 +35,8 @@ from pyspark.sql import types as T
 
 from .config import DEFAULT, IndexConfig
 from .docids import (assign_doc_ids, corpus_offsets, read_with_doc_ids,
-                     write_sorted_corpus)
+                     write_sorted_corpus, write_sorted_corpus_arrow)
+from .manifest import write_parquet_dir
 
 _TOKENIZED_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -125,6 +126,110 @@ def idf_col(df_col, n_docs: int, variant: str):
     return F.log(F.lit(1.0) + x) if variant == "lucene" else F.log(x)
 
 
+def idf_np(df, n_docs: int, variant: str) -> np.ndarray:
+    """``idf_col`` on the driver, bit for bit: the same double arithmetic
+    in the same order, and Spark's ``log``, which is Java's
+    ``StrictMath.log`` (fdlibm), not the platform log ``np.log`` and
+    ``math.log`` call — those differ from it in the last bit on about a
+    quarter and 4% of idf values."""
+    d = np.asarray(df, np.float64)
+    x = (float(n_docs) - d + 0.5) / (d + 0.5)
+    return strict_log(1.0 + x) if variant == "lucene" else strict_log(x)
+
+
+_LN2_HI = 6.93147180369123816490e-01
+_LN2_LO = 1.90821492927058770002e-10
+_TWO54 = 1.80143985094819840000e+16
+_LG1, _LG2, _LG3, _LG4, _LG5, _LG6, _LG7 = (
+    6.666666666666735130e-01, 3.999999999940941908e-01,
+    2.857142874366239149e-01, 2.222219843214978396e-01,
+    1.818357216161805012e-01, 1.531383769920937332e-01,
+    1.479819860511658591e-01)
+
+
+def strict_log(x) -> np.ndarray:
+    """fdlibm's ``__ieee754_log`` (the algorithm of Java's
+    ``StrictMath.log``) over a float64 array, for finite x > 0; the C
+    branches become masks, the word surgery ``view``s. BM25 idf only
+    ever takes the log of a positive finite double."""
+    x = np.array(x, np.float64, ndmin=1)
+    if not (np.all(x > 0) and np.all(np.isfinite(x))):
+        raise ValueError("strict_log takes finite x > 0")
+    hx = (x.view(np.uint64) >> np.uint64(32)).astype(np.int64)
+    k = np.zeros(x.shape, np.int64)
+    sub = hx < 0x00100000          # subnormal: scale up by 2^54
+    if sub.any():
+        x = np.where(sub, x * _TWO54, x)
+        k -= np.where(sub, 54, 0)
+        hx = (x.view(np.uint64) >> np.uint64(32)).astype(np.int64)
+    k += (hx >> 20) - 1023
+    hx &= 0x000fffff
+    i = (hx + 0x95f64) & 0x100000
+    # normalize x or x/2: set the high word to hx | (i ^ 0x3ff00000)
+    hi = (hx | (i ^ 0x3ff00000)).astype(np.uint64) << np.uint64(32)
+    x = (hi | (x.view(np.uint64) & np.uint64(0xffffffff))).view(np.float64)
+    k += i >> 20
+    f = x - 1.0
+    dk = k.astype(np.float64)
+    k0 = k == 0
+    # |f| < 2^-20
+    r = f * f * (0.5 - 0.33333333333333333 * f)
+    tiny = np.where(
+        f == 0.0,
+        np.where(k0, 0.0, dk * _LN2_HI + dk * _LN2_LO),
+        np.where(k0, f - r, dk * _LN2_HI - ((r - dk * _LN2_LO) - f)))
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    t1 = w * (_LG2 + w * (_LG4 + w * _LG6))
+    t2 = z * (_LG1 + w * (_LG3 + w * (_LG5 + w * _LG7)))
+    r = t2 + t1
+    hfsq = 0.5 * f * f
+    big = np.where(
+        k0, f - (hfsq - s * (hfsq + r)),
+        dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f))
+    mid = np.where(k0, f - s * (f - r),
+                   dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f))
+    main = np.where(((hx - 0x6147a) | (0x6b851 - hx)) > 0, big, mid)
+    return np.where((0x000fffff & (2 + hx)) < 3, tiny, main)
+
+
+def write_lexicon(segment: DataFrame, path: str, n_docs: int,
+                  idf_variant: str) -> None:
+    """The lexicon of a packed segment: one row per (term, bucket) with
+    summed df and cf, max max_tf and the BM25 idf, written range-sorted
+    by term — each parquet file/row-group covers a contiguous vocab
+    slice, so term-equality lookups AND prefix range scans
+    (expand_prefix) prune on min/max stats instead of touching the
+    whole vocab; at web scale the lexicon is itself large, and every
+    query starts here. Every lexicon rewrite (build, compact, purge)
+    goes through here or, on the driver build, ``write_lexicon_arrow``."""
+    (segment.groupBy("term", "bucket")
+     .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
+          F.max("max_tf").alias("max_tf"))
+     .withColumn("idf", idf_col(F.col("df"), n_docs, idf_variant))
+     .sort("term").write.mode("overwrite").parquet(path))
+
+
+def write_lexicon_arrow(segment: pa.Table, path: str, n_docs: int,
+                        idf_variant: str) -> pa.Table:
+    """Driver twin of ``write_lexicon`` for a segment held in memory
+    (with its ``bucket`` column): the same rows, columns, term order and
+    idf bits. Returns the lexicon."""
+    import pyarrow.compute as pc
+    g = segment.group_by(["term", "bucket"]).aggregate(
+        [("df", "sum"), ("cf", "sum"), ("max_tf", "max")])
+    lex = pa.table({
+        "term": g.column("term"), "bucket": g.column("bucket"),
+        "df": g.column("df_sum"), "cf": g.column("cf_sum"),
+        "max_tf": g.column("max_tf_max")})
+    lex = lex.take(pc.sort_indices(lex, [("term", "ascending")]))
+    lex = lex.append_column("idf", pa.array(idf_np(
+        lex.column("df").to_numpy(), n_docs, idf_variant), pa.float64()))
+    write_parquet_dir(path, {"": lex})
+    return lex
+
+
 def lexicon_cf_by_field(lexdf: DataFrame) -> dict:
     """Vocab-scaled cf totals split by term space: unprefixed terms sum
     under "text", field-prefixed terms ("<field>:<token>" — ':' can
@@ -137,6 +242,18 @@ def lexicon_cf_by_field(lexdf: DataFrame) -> dict:
     rows = (lexdf.groupBy(fld.alias("fld"))
             .agg(F.sum("cf").alias("cf")).collect())
     return {r["fld"]: int(r["cf"] or 0) for r in rows}
+
+
+def lexicon_cf_by_field_arrow(lex: pa.Table) -> dict:
+    """Driver twin of ``lexicon_cf_by_field`` over a lexicon table."""
+    import pyarrow.compute as pc
+    term = lex.column("term")
+    fld = pc.if_else(pc.match_substring(term, ":"), pc.list_element(
+        pc.split_pattern(term, ":", max_splits=1), 0), "text")
+    g = pa.table({"fld": fld, "cf": lex.column("cf")}).group_by(
+        "fld").aggregate([("cf", "sum")])
+    return {f_: int(c or 0) for f_, c in zip(
+        g.column("fld").to_pylist(), g.column("cf_sum").to_pylist())}
 
 
 def corpus_stats(docmap: DataFrame) -> tuple[int, float]:
@@ -222,6 +339,33 @@ def effective_slices(cfg: IndexConfig, n_docs: int) -> int:
     return max(cfg.n_slices, -(-n_docs // max(1, cfg.docs_per_score_shard)))
 
 
+# The executor gate of build_index, the write-side twin of
+# query._run_shards: a corpus of at most this many rows is built on the
+# driver (build_index's docstring), a larger one by Spark jobs.
+# Sweep (make_transcripts corpora of 6.5k-520k turns read from parquet,
+# default IndexConfig, local[4] on a 4-core / 15 GB box, one session
+# warmed by a build on each route, each route forced; wall s, driver
+# route then Spark route, and the driver process's RSS growth during
+# the driver build):
+#     turns     driver   spark   driver RSS growth
+#     6,484     0.53     2.75     17-24 MB
+#    25,984     0.83     2.95    141-150 MB
+#    64,984     1.46     2.79    199-262 MB
+#   129,984     2.45     3.26    258-317 MB
+#   259,984     4.99     5.92    637 MB
+#   519,984     9.18     6.77  1,250 MB
+# The driver wins up to ~260k turns warm, and by far more on a cold
+# session (no Python worker or JIT warm-up); its memory grows ~2.4 KB a
+# turn. 2^17 keeps it under ~320 MB with a 25% margin on the crossover.
+# Above the bound the limited read is wasted: 0.31-0.33 s (limit
+# 2^17 + 1 on 260k and 520k turns), 5-10% of the Spark build there.
+BUILD_LOCAL_MAX_ROWS = 1 << 17
+# Rows per Arrow batch the driver route tokenizes at a time (the
+# session's spark.sql.execution.arrow.maxRecordsPerBatch): it bounds the
+# tokenizer's working set, as a mapInArrow batch does.
+LOCAL_BATCH_ROWS = 1 << 16
+
+
 def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
                 cfg: IndexConfig = DEFAULT, n_parts: int | None = None,
                 resume: bool = True) -> "PackedIndex":
@@ -232,6 +376,18 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
     pass count, shard width) is stored in the manifest; a resume under a
     cfg that resolves a DIFFERENT plan is refused (shard geometry would
     silently disagree with the completed segments).
+
+    Two routes, one pipeline. The corpus is first read once with
+    ``corpus.limit(BUILD_LOCAL_MAX_ROWS + 1).toArrow()`` (one JVM-only
+    job). When it holds at most BUILD_LOCAL_MAX_ROWS rows, the driver
+    runs every stage on that Arrow table: it sorts the rows in Spark's
+    (conv_id, turn_idx) order, numbers them, and calls the distributed
+    route's own closures (``pack.pack_partial_batches``,
+    ``merge._merge_batches``, ``idf_np`` for ``idf_col``) and their
+    pyarrow writers, so both routes write the same rows. Otherwise
+    Spark runs each stage. A resumed build takes the route its stored
+    n_docs selects. The docvalue and fuzzy stores are written by Spark
+    on both routes.
     """
     import os
     import time
@@ -250,6 +406,10 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
     docmap_path = os.path.join(index_dir, "docmap")
     base_done = (man is not None and man.n_docs > 0
                  and _success_marker(corpus_path) and _success_marker(docmap_path))
+    # local: the build runs on the driver; held: the sorted corpus with
+    # doc_id as an Arrow table (read back only if a resumed driver build
+    # still has to pack)
+    held = None
     if base_done:
         # resume: corpus+docmap+stats already on disk. Refuse if the
         # current cfg resolves a different shard plan than the one the
@@ -291,9 +451,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
                     f"with {what}={old!r}, current cfg resolves {new!r}; "
                     f"pass the original cfg or delete the index dir to "
                     f"rebuild")
-        docs = (read_with_doc_ids(spark, corpus_path, man.corpus_offsets)
-                if man.corpus_offsets is not None
-                else spark.read.parquet(corpus_path))  # doc_id stored
+        local = n_docs <= BUILD_LOCAL_MAX_ROWS
     else:
         man = Manifest(n_buckets=cfg.n_buckets, n_slices=cfg.n_slices,
                        merge_fanin=cfg.merge_fanin,
@@ -318,19 +476,38 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
         # stats come AFTER pack from the lexicon (avgdl == sum(cf)/n_docs,
         # an identity).
         with timer.time("docids"):
-            write_sorted_corpus(corpus, corpus_path, n_parts=n_parts)
-        with timer.time("base_counts"):
-            offsets, n_docs = corpus_offsets(spark, corpus_path)
-            avgdl = 0.0  # exact value derived from the lexicon below
-        docs = read_with_doc_ids(spark, corpus_path, offsets)
+            head = (corpus.limit(BUILD_LOCAL_MAX_ROWS + 1).toArrow()
+                    if BUILD_LOCAL_MAX_ROWS > 0 else None)
+            local = head is not None and head.num_rows <= BUILD_LOCAL_MAX_ROWS
+            if local:
+                held = write_sorted_corpus_arrow(head, corpus_path)
+                offsets, n_docs = [0], held.num_rows
+            else:
+                write_sorted_corpus(corpus, corpus_path, n_parts=n_parts)
+        if not local:
+            with timer.time("base_counts"):
+                offsets, n_docs = corpus_offsets(spark, corpus_path)
+        avgdl = 0.0  # exact value derived from the lexicon below
         with timer.time("write_docmap"):
-            docs.select("doc_id", "conv_id", "turn_idx") \
-                .write.mode("overwrite").parquet(docmap_path)
+            if local:
+                write_parquet_dir(docmap_path, {"": held.select(
+                    ["doc_id", "conv_id", "turn_idx"])})
+            else:
+                read_with_doc_ids(spark, corpus_path, offsets) \
+                    .select("doc_id", "conv_id", "turn_idx") \
+                    .write.mode("overwrite").parquet(docmap_path)
         man.n_docs, man.avgdl = n_docs, avgdl
         man.corpus_offsets = offsets
         man.n_slices = effective_slices(cfg, n_docs)
         man.shard_width = pack_mod.shard_width(n_docs, man.n_slices)
         man.save(index_dir)
+
+    def docs() -> DataFrame:
+        """The stored corpus with doc_id, as Spark reads it."""
+        return (read_with_doc_ids(spark, corpus_path, man.corpus_offsets)
+                if man.corpus_offsets is not None
+                else spark.read.parquet(corpus_path))  # doc_id stored
+
     # n_shards: the resolved scoring-shard count — data-scaled (bounded
     # accumulator width) and frozen in the manifest for resume replay
     n_shards = man.n_slices
@@ -366,19 +543,22 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
         dvp = dv_path(index_dir)
         if not _success_marker(dvp):
             with timer.time("docvalues"):
-                write_doc_values(docs, index_dir, list(cfg.doc_values),
+                write_doc_values(docs(), index_dir, list(cfg.doc_values),
                                  man.shard_width, mode="overwrite")
         man.doc_values = list(cfg.doc_values)
         man.save(index_dir)
 
     # ---- pass 0: pack at fine-slice grain ----
+    # seg: the last segment written, held as an Arrow table (with its
+    # bucket column) on the driver route; None when it is only on disk
+    seg = None
     seg0_id = "seg_p0"
     seg0_path = os.path.join(index_dir, "segments", seg0_id)
     if man.segment(seg0_id) is None:
         man.segments.append(Segment(seg0_id, 0, seg0_path))
         man.save(index_dir)
-    seg = man.segment(seg0_id)
-    if not (seg.status == "complete" and _success_marker(seg0_path)):
+    s0 = man.segment(seg0_id)
+    if not (s0.status == "complete" and _success_marker(seg0_path)):
         t0 = time.perf_counter()
         with timer.time("pack"):
             # map-side run generation: tokenize + pack PARTIAL runs per
@@ -389,14 +569,26 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
             # (term, shard). Shuffle width scales with the data; avgdl is
             # exact on resume (manifest), a nominal 64 tokens/doc sizes
             # the estimate otherwise (max() floors make it benign).
-            est_rows = int(n_docs * (avgdl or 64.0))
-            parts = max(cfg.pack_partitions, fine_slices,
-                        -(-est_rows // cfg.pack_rows_per_task))
-            partial = pack_mod.tokenize_pack_partial(docs, w_fine, cfg)
-            packed = merge_mod.merge_pass(partial, fanin=1, cfg=cfg,
-                                          n_parts=parts)
-            pack_mod.write_segment(packed, seg0_path, cfg)
-        rows = _parquet_rows(seg0_path)
+            if local:
+                if held is None:
+                    held = docs().toArrow().sort_by("doc_id")
+                runs = pa.Table.from_batches(
+                    list(pack_mod.pack_partial_batches(
+                        held.select(["doc_id", "text",
+                                     *cfg.extra_fields]).to_batches(
+                            max_chunksize=LOCAL_BATCH_ROWS),
+                        w_fine, cfg)), schema=pack_mod.ARROW_PACKED)
+                seg = pack_mod.write_segment_arrow(
+                    merge_mod.merge_arrow(runs, 1, cfg), seg0_path, cfg)
+            else:
+                est_rows = int(n_docs * (avgdl or 64.0))
+                parts = max(cfg.pack_partitions, fine_slices,
+                            -(-est_rows // cfg.pack_rows_per_task))
+                partial = pack_mod.tokenize_pack_partial(docs(), w_fine, cfg)
+                packed = merge_mod.merge_pass(partial, fanin=1, cfg=cfg,
+                                              n_parts=parts)
+                pack_mod.write_segment(packed, seg0_path, cfg)
+        rows = seg.num_rows if seg is not None else _parquet_rows(seg0_path)
         man.mark_complete(seg0_id, rows, time.perf_counter() - t0)
         man.save(index_dir)
 
@@ -412,36 +604,40 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
         if not (s.status == "complete" and _success_marker(seg_path)):
             t0 = time.perf_counter()
             with timer.time(f"merge_pass{p}"):
-                src = spark.read.parquet(prev_path)
-                shards_after = n_shards * cfg.merge_fanin ** (passes - p)
-                est_rows = int(n_docs * (avgdl or 64.0))
-                merged = merge_mod.merge_pass(
-                    src, cfg.merge_fanin, cfg,
-                    n_parts=max(cfg.pack_partitions, shards_after,
-                                -(-est_rows // cfg.pack_rows_per_task)))
-                pack_mod.write_segment(merged, seg_path, cfg)
-            rows = _parquet_rows(seg_path)
+                if local:
+                    src = seg if seg is not None else _segment_arrow(prev_path)
+                    seg = pack_mod.write_segment_arrow(
+                        merge_mod.merge_arrow(src, cfg.merge_fanin, cfg),
+                        seg_path, cfg)
+                else:
+                    src = spark.read.parquet(prev_path)
+                    shards_after = n_shards * cfg.merge_fanin ** (passes - p)
+                    est_rows = int(n_docs * (avgdl or 64.0))
+                    merged = merge_mod.merge_pass(
+                        src, cfg.merge_fanin, cfg,
+                        n_parts=max(cfg.pack_partitions, shards_after,
+                                    -(-est_rows // cfg.pack_rows_per_task)))
+                    pack_mod.write_segment(merged, seg_path, cfg)
+            rows = seg.num_rows if local else _parquet_rows(seg_path)
             man.mark_complete(seg_id, rows, time.perf_counter() - t0)
             man.save(index_dir)
+        else:
+            seg = None  # the held segment is older than this one
         prev_path = seg_path
     man.final_segment = f"seg_p{passes}"
 
     # ---- lexicon from the final segment ----
     lex_path = os.path.join(index_dir, "lexicon")
+    lex = None  # the lexicon as an Arrow table on the driver route
     if not _success_marker(lex_path):
         with timer.time("lexicon"):
-            final = spark.read.parquet(prev_path)
-            lex = (final.groupBy("term", "bucket")
-                   .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-                        F.max("max_tf").alias("max_tf"))
-                   .withColumn("idf", idf_col(F.col("df"), n_docs,
-                                              cfg.bm25.idf_variant)))
-            # range-sorted by term: each parquet file/row-group covers a
-            # contiguous vocab slice, so term-equality lookups AND prefix
-            # range scans (expand_prefix) prune on min/max stats instead
-            # of touching the whole vocab — at web scale the lexicon is
-            # itself large, and every query starts here
-            lex.sort("term").write.mode("overwrite").parquet(lex_path)
+            if local:
+                lex = write_lexicon_arrow(
+                    seg if seg is not None else _segment_arrow(prev_path),
+                    lex_path, n_docs, cfg.bm25.idf_variant)
+            else:
+                write_lexicon(spark.read.parquet(prev_path), lex_path,
+                              n_docs, cfg.bm25.idf_variant)
 
     # ---- fuzzy deletion-neighborhood (optional; engine/fuzzy.py) ----
     # derived from the lexicon just written, so it can never drift from
@@ -466,17 +662,23 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
         # avgdl_f = sum(cf_f) / n_docs (corpus-global denominator,
         # documented divergence from Lucene's docCount(field)).
         with timer.time("stats"):
-            lexdf = spark.read.parquet(lex_path)
+            if local and lex is None:
+                import pyarrow.parquet as pq
+                lex = pq.read_table(lex_path, columns=["term", "cf"])
             if cfg.extra_fields:
-                cfs = lexicon_cf_by_field(lexdf)
+                cfs = (lexicon_cf_by_field_arrow(lex) if local else
+                       lexicon_cf_by_field(spark.read.parquet(lex_path)))
                 total_cf = cfs.get("text", 0)
                 man.field_sum_dl = {f_: cfs.get(f_, 0)
                                     for f_ in cfg.extra_fields}
                 man.field_avgdl = {
                     f_: (cfs.get(f_, 0) / n_docs if n_docs else 0.0)
                     for f_ in cfg.extra_fields}
+            elif local:
+                total_cf = int(lex.column("cf").to_numpy().sum())
             else:
-                total_cf = lexdf.agg(F.sum("cf")).first()[0] or 0
+                total_cf = (spark.read.parquet(lex_path)
+                            .agg(F.sum("cf")).first()[0] or 0)
             man.avgdl = float(total_cf) / n_docs if n_docs else 0.0
             # seed the exact token total so a later streaming
             # append_batch maintains avgdl from the true base, not 0
@@ -492,6 +694,13 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
     man.completed = True
     man.save(index_dir)
     return load_index(spark, index_dir)
+
+
+def _segment_arrow(path: str) -> pa.Table:
+    """A segment written by either route, read back on the driver with
+    its ``bucket`` partition column."""
+    import pyarrow.dataset as pads
+    return pads.dataset(path, format="parquet", partitioning="hive").to_table()
 
 
 @dataclass

@@ -157,7 +157,7 @@ def purge_deletes(index, cfg=None):
     import pyarrow as pa
 
     from . import codec
-    from .build import idf_col, load_index
+    from .build import load_index, write_lexicon
     from .manifest import Manifest, Segment
     from .pack import PACKED_SCHEMA, _ARROW_BLOCKS, write_segment
 
@@ -263,15 +263,9 @@ def purge_deletes(index, cfg=None):
     write_segment(seg.mapInArrow(rewrite, PACKED_SCHEMA), out_path, cfg)
 
     n_live = int(man.n_docs) - int(man.n_deleted)
-    lex = (spark.read.parquet(out_path)
-           .groupBy("term", "bucket")
-           .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-                F.max("max_tf").alias("max_tf"))
-           .withColumn("idf", idf_col(F.col("df"), n_live,
-                                      (man.bm25 or {}).get("idf_variant",
-                                                           "lucene"))))
-    lex.sort("term").write.mode("overwrite").parquet(
-        os.path.join(index_dir, "lexicon"))
+    write_lexicon(spark.read.parquet(out_path),
+                  os.path.join(index_dir, "lexicon"), n_live,
+                  (man.bm25 or {}).get("idf_variant", "lucene"))
     if int(man.fuzzy_edits or 0) > 0:
         # vocab may have SHRUNK (terms whose every posting was purged):
         # regenerate the neighborhood so fuzzy never resurrects them

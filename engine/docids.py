@@ -106,6 +106,30 @@ def write_sorted_corpus(df: DataFrame, path: str,
     part.mapInArrow(tag, out_schema).write.mode("overwrite").parquet(path)
 
 
+def write_sorted_corpus_arrow(tbl: pa.Table, path: str,
+                              keys: tuple[str, ...] = ("conv_id",
+                                                       "turn_idx")
+                              ) -> pa.Table:
+    """Driver twin of ``write_sorted_corpus`` for a corpus held in
+    memory: sorted by ``keys`` in Spark's order (ascending, nulls first,
+    strings by UTF-8 bytes; the sort is stable) and written as ONE part,
+    so part_id is 0, local_idx is the global rank and the offsets are
+    ``[0]``. Returns the sorted rows with their ``doc_id``."""
+    import pyarrow.compute as pc
+
+    from .manifest import write_parquet_dir
+    tbl = tbl.take(pc.sort_indices(
+        tbl, [(k, "ascending") for k in keys], null_placement="at_start"))
+    n = tbl.num_rows
+    ids = pa.array(np.arange(n, dtype=np.int64), pa.int64())
+    write_parquet_dir(path, {"": tbl.append_column(
+        pa.field("part_id", pa.int32(), nullable=False),
+        pa.array(np.zeros(n, np.int32), pa.int32()))
+        .append_column(pa.field("local_idx", pa.int64(), nullable=False),
+                       ids)})
+    return tbl.append_column("doc_id", ids)
+
+
 def corpus_offsets(spark, path: str) -> tuple[list[int], int]:
     """Per-part_id base offsets + total row count for a written sorted
     corpus — ONE aggregation over a single int column (column-pruned

@@ -191,7 +191,7 @@ def expand_fuzzy(index, term: str, max_edits: int = 1,
     (seeds the shared term memo: the downstream scoring job launches
     zero lexicon jobs). Memoized per (term, d, cap); refresh() drops it.
     """
-    from .xxh import xxh64
+    from .xxh import term_bucket
     if max_edits < 1:
         raise ValueError("max_edits must be >= 1")
     if max_expansions < 1:
@@ -217,7 +217,8 @@ def expand_fuzzy(index, term: str, max_edits: int = 1,
 
     variants = deletion_variants_py(term, max_edits)
     nb = int(index.n_buckets)
-    fbuckets = sorted({xxh64(v.encode()) % nb for v in variants})
+    # the writer's pmod(xxhash64(variant), nb) — Spark's SIGNED hash
+    fbuckets = sorted({term_bucket(v, nb) for v in variants})
     spark = index.spark
     cand_rows = (spark.read.parquet(fuzzy_path(index.index_dir))
                  .filter(F.col("fbucket").isin(fbuckets)

@@ -132,6 +132,29 @@ def _success_marker(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def write_parquet_dir(path: str, parts: dict) -> None:
+    """Write Arrow tables as a Spark-style parquet directory from the
+    driver: ``parts`` maps a sub-directory ("" for ``path`` itself, or a
+    hive partition like "bucket=3") to its table, one file each. Like
+    Spark's ``mode("overwrite")`` the old directory goes first, and like
+    its output committer the ``_SUCCESS`` marker comes last, so a killed
+    write is never taken for a complete one."""
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    job = uuid.uuid4()
+    for sub, tbl in parts.items():
+        d = os.path.join(path, sub) if sub else path
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(tbl, os.path.join(
+            d, f"part-00000-{job}.c000.snappy.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
 def lineage_df(spark, index_dir: str):
     """Segment lineage as a DataFrame (SURVEY.md §1 row 5 `_lineage`):
     (segment_id, pass, status, rows, src_segments, wall_s)."""

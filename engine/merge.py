@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import codec
 from .config import DEFAULT, IndexConfig
-from .pack import PACKED_SCHEMA, _ARROW_BLOCKS
+from .pack import ARROW_PACKED, PACKED_SCHEMA, _ARROW_BLOCKS
 
 
 def _merge_batches(batches, block_size: int):
@@ -133,3 +133,20 @@ def merge_pass(segments: DataFrame, fanin: int,
             .sortWithinPartitions("term", "shard"))
     return part.mapInArrow(
         lambda it: _merge_batches(it, cfg.block_size), PACKED_SCHEMA)
+
+
+def merge_arrow(segment: pa.Table, fanin: int,
+                cfg: IndexConfig = DEFAULT) -> pa.Table:
+    """Driver twin of ``merge_pass`` for a segment held in memory: the
+    same shard coarsening, (term, shard) order and ``_merge_batches``,
+    over the whole segment as one partition."""
+    import pyarrow.compute as pc
+    tbl = segment.select(ARROW_PACKED.names)
+    if fanin != 1:
+        tbl = tbl.set_column(1, "shard", pc.divide(
+            tbl.column("shard"), np.int32(fanin)))
+    tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending"),
+                                         ("shard", "ascending")]))
+    return pa.Table.from_batches(
+        list(_merge_batches(tbl.to_batches(), cfg.block_size)),
+        schema=ARROW_PACKED)

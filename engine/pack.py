@@ -63,6 +63,13 @@ PACKED_SCHEMA = T.StructType([
 
 _ARROW_BLOCKS = pa.binary()  # packed codec.BLOCK_DTYPE records
 
+# PACKED_SCHEMA as the Arrow schema its batches carry
+ARROW_PACKED = pa.schema([
+    ("term", pa.string()), ("shard", pa.int32()), ("df", pa.int64()),
+    ("cf", pa.int64()), ("max_tf", pa.int32()), ("doc_ids", pa.binary()),
+    ("tfs", pa.binary()), ("dls", pa.binary()), ("blocks", _ARROW_BLOCKS),
+    ("poss", pa.binary())])
+
 
 def shard_width(n_docs: int, n_slices: int) -> int:
     return max(1, -(-n_docs // n_slices))  # ceil div
@@ -148,133 +155,138 @@ def tokenize_pack_partial(docs: DataFrame, width: int,
     (term, shard) group, concatenate, re-encode. Final packed content is
     byte-identical to the raw-shuffle path (tested across parallelism).
     """
+    return docs.select("doc_id", "text", *cfg.extra_fields).mapInArrow(
+        lambda it: pack_partial_batches(it, width, cfg), PACKED_SCHEMA)
+
+
+def pack_partial_batches(batches, width: int, cfg: IndexConfig = DEFAULT):
+    """The per-batch body of ``tokenize_pack_partial``: Arrow batches of
+    (doc_id, text, *extra_fields) -> packed partial runs, one row per
+    (term, shard) run of each batch. The distributed build runs it in
+    ``mapInArrow`` tasks; the driver build (build.build_index below
+    BUILD_LOCAL_MAX_ROWS) calls it on the corpus held in memory."""
+    from .analyzer import doc_term_freqs_arrow, doc_token_positions_arrow
     acfg = cfg.analyzer
     block_size = cfg.block_size
     with_pos = cfg.index_positions
     extra_fields = tuple(cfg.extra_fields)
     names = [f.name for f in PACKED_SCHEMA.fields]
 
-    def fn(batches):
-        from .analyzer import doc_term_freqs_arrow, doc_token_positions_arrow
-
-        def emit(doc_ids_b, text_arr, prefix=None, use_pos=None):
-            if use_pos is None:
-                use_pos = with_pos
-            if use_pos:
-                # occurrence-level kernel: one entry per token occurrence,
-                # lexsorted with pos innermost -> postings fall out as
-                # (term, doc) runs and positions stay sorted per posting
-                rows, terms, pos, dl = doc_token_positions_arrow(text_arr, acfg)
-                if rows.size == 0:
-                    return None
-                occ_docs = doc_ids_b[rows].astype(np.int64)
-                occ_dls = dl[rows].astype(np.int64)
-                occ_shards = (occ_docs // width).astype(np.int64)
-                tdict = pa.array(terms, pa.string()).dictionary_encode()
-                occ_codes = tdict.indices.to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                order = np.lexsort((pos, occ_docs, occ_shards, occ_codes))
-                occ_codes, occ_shards = occ_codes[order], occ_shards[order]
-                occ_docs, occ_dls, pos = (
-                    occ_docs[order], occ_dls[order], pos[order])
-                no = occ_codes.size
-                pch = np.empty(no, dtype=bool)
-                pch[0] = True
-                pch[1:] = ((occ_codes[1:] != occ_codes[:-1])
-                           | (occ_docs[1:] != occ_docs[:-1]))
-                posting_starts = np.flatnonzero(pch)  # occurrence index
-                post_docs = occ_docs[posting_starts]
-                post_tfs = np.diff(np.append(posting_starts, no)).astype(np.int64)
-                post_dls = occ_dls[posting_starts]
-                codes = occ_codes[posting_starts]
-                shards = occ_shards[posting_starts]
-            else:
-                rows, terms, tfs, dl = doc_term_freqs_arrow(text_arr, acfg)
-                if rows.size == 0:
-                    return None
-                post_docs = doc_ids_b[rows].astype(np.int64)
-                post_dls = dl[rows].astype(np.int64)
-                post_tfs = tfs.astype(np.int64)
-                shards = (post_docs // width).astype(np.int64)
-                tdict = pa.array(terms, pa.string()).dictionary_encode()
-                codes = tdict.indices.to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                order = np.lexsort((post_docs, shards, codes))
-                codes, shards = codes[order], shards[order]
-                post_docs, post_tfs, post_dls = (
-                    post_docs[order], post_tfs[order], post_dls[order])
-            n = codes.size
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
-            starts = np.flatnonzero(change)
-            bounds = np.append(starts, n).astype(np.int64)
-            df_ = (bounds[1:] - bounds[:-1]).astype(np.int64)
-            cf = np.add.reduceat(post_tfs, starts)
-            max_tf = np.maximum.reduceat(post_tfs, starts).astype(np.int32)
-            doc_pl, tf_pl, dl_pl, blocks = codec.pack_lists(
-                bounds, post_docs, post_tfs, post_dls, block_size)
-            if use_pos:
-                occ_bounds = np.append(posting_starts[starts],
-                                       no).astype(np.int64)
-                pos_pl = codec.encode_positions_groups(
-                    occ_bounds, posting_starts, pos)
-            else:
-                pos_pl = [b""] * starts.size
-            term_arr = tdict.dictionary.take(
-                pa.array(codes[starts])).cast(pa.string())
-            if prefix is not None:
-                # field-prefixed term space (IndexConfig.extra_fields):
-                # the prefix lands on the GROUP-level term strings only
-                # (vocab-sized, never per posting)
-                import pyarrow.compute as pc
-                term_arr = pc.binary_join_element_wise(
-                    pa.array([prefix] * len(term_arr), pa.string()),
-                    term_arr, "")
-            return pa.RecordBatch.from_arrays([
-                term_arr,
-                pa.array(shards[starts].astype(np.int32), pa.int32()),
-                pa.array(df_, pa.int64()),
-                pa.array(cf, pa.int64()),
-                pa.array(max_tf, pa.int32()),
-                pa.array(doc_pl, pa.binary()),
-                pa.array(tf_pl, pa.binary()),
-                pa.array(dl_pl, pa.binary()),
-                pa.array(blocks, _ARROW_BLOCKS),
-                pa.array(pos_pl, pa.binary()),
-            ], names=names)
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            doc_ids_b = b.column("doc_id").to_numpy(
+    def emit(doc_ids_b, text_arr, prefix=None, use_pos=None):
+        if use_pos is None:
+            use_pos = with_pos
+        if use_pos:
+            # occurrence-level kernel: one entry per token occurrence,
+            # lexsorted with pos innermost -> postings fall out as
+            # (term, doc) runs and positions stay sorted per posting
+            rows, terms, pos, dl = doc_token_positions_arrow(text_arr, acfg)
+            if rows.size == 0:
+                return None
+            occ_docs = doc_ids_b[rows].astype(np.int64)
+            occ_dls = dl[rows].astype(np.int64)
+            occ_shards = (occ_docs // width).astype(np.int64)
+            tdict = pa.array(terms, pa.string()).dictionary_encode()
+            occ_codes = tdict.indices.to_numpy(
                 zero_copy_only=False).astype(np.int64)
-            # (field_column, term_prefix, positions?) — extra fields
-            # index without positions (phrase is a text-field query)
-            streams = [(b.column("text").cast(pa.string()), None, None)]
-            streams += [(b.column(f_).cast(pa.string()), f_ + ":", False)
-                        for f_ in extra_fields]
-            # split at doc-id discontinuities (run-disjointness guarantee
-            # — see the docstring): realistic scans yield few pieces
-            # (doc_ids are +1-contiguous within a file/split)
-            cuts = np.flatnonzero(np.diff(doc_ids_b) != 1) + 1
-            if cuts.size == 0:
+            order = np.lexsort((pos, occ_docs, occ_shards, occ_codes))
+            occ_codes, occ_shards = occ_codes[order], occ_shards[order]
+            occ_docs, occ_dls, pos = (
+                occ_docs[order], occ_dls[order], pos[order])
+            no = occ_codes.size
+            pch = np.empty(no, dtype=bool)
+            pch[0] = True
+            pch[1:] = ((occ_codes[1:] != occ_codes[:-1])
+                       | (occ_docs[1:] != occ_docs[:-1]))
+            posting_starts = np.flatnonzero(pch)  # occurrence index
+            post_docs = occ_docs[posting_starts]
+            post_tfs = np.diff(np.append(posting_starts, no)).astype(np.int64)
+            post_dls = occ_dls[posting_starts]
+            codes = occ_codes[posting_starts]
+            shards = occ_shards[posting_starts]
+        else:
+            rows, terms, tfs, dl = doc_term_freqs_arrow(text_arr, acfg)
+            if rows.size == 0:
+                return None
+            post_docs = doc_ids_b[rows].astype(np.int64)
+            post_dls = dl[rows].astype(np.int64)
+            post_tfs = tfs.astype(np.int64)
+            shards = (post_docs // width).astype(np.int64)
+            tdict = pa.array(terms, pa.string()).dictionary_encode()
+            codes = tdict.indices.to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            order = np.lexsort((post_docs, shards, codes))
+            codes, shards = codes[order], shards[order]
+            post_docs, post_tfs, post_dls = (
+                post_docs[order], post_tfs[order], post_dls[order])
+        n = codes.size
+        change = np.empty(n, dtype=bool)
+        change[0] = True
+        change[1:] = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
+        starts = np.flatnonzero(change)
+        bounds = np.append(starts, n).astype(np.int64)
+        df_ = (bounds[1:] - bounds[:-1]).astype(np.int64)
+        cf = np.add.reduceat(post_tfs, starts)
+        max_tf = np.maximum.reduceat(post_tfs, starts).astype(np.int32)
+        doc_pl, tf_pl, dl_pl, blocks = codec.pack_lists(
+            bounds, post_docs, post_tfs, post_dls, block_size)
+        if use_pos:
+            occ_bounds = np.append(posting_starts[starts],
+                                   no).astype(np.int64)
+            pos_pl = codec.encode_positions_groups(
+                occ_bounds, posting_starts, pos)
+        else:
+            pos_pl = [b""] * starts.size
+        term_arr = tdict.dictionary.take(
+            pa.array(codes[starts])).cast(pa.string())
+        if prefix is not None:
+            # field-prefixed term space (IndexConfig.extra_fields):
+            # the prefix lands on the GROUP-level term strings only
+            # (vocab-sized, never per posting)
+            import pyarrow.compute as pc
+            term_arr = pc.binary_join_element_wise(
+                pa.array([prefix] * len(term_arr), pa.string()),
+                term_arr, "")
+        return pa.RecordBatch.from_arrays([
+            term_arr,
+            pa.array(shards[starts].astype(np.int32), pa.int32()),
+            pa.array(df_, pa.int64()),
+            pa.array(cf, pa.int64()),
+            pa.array(max_tf, pa.int32()),
+            pa.array(doc_pl, pa.binary()),
+            pa.array(tf_pl, pa.binary()),
+            pa.array(dl_pl, pa.binary()),
+            pa.array(blocks, _ARROW_BLOCKS),
+            pa.array(pos_pl, pa.binary()),
+        ], names=names)
+
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        doc_ids_b = b.column("doc_id").to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        # (field_column, term_prefix, positions?) — extra fields
+        # index without positions (phrase is a text-field query)
+        streams = [(b.column("text").cast(pa.string()), None, None)]
+        streams += [(b.column(f_).cast(pa.string()), f_ + ":", False)
+                    for f_ in extra_fields]
+        # split at doc-id discontinuities (run-disjointness guarantee
+        # — see the docstring): realistic scans yield few pieces
+        # (doc_ids are +1-contiguous within a file/split)
+        cuts = np.flatnonzero(np.diff(doc_ids_b) != 1) + 1
+        if cuts.size == 0:
+            for arr, pfx, upos in streams:
+                rb = emit(doc_ids_b, arr, prefix=pfx, use_pos=upos)
+                if rb is not None:
+                    yield rb
+        else:
+            bounds = np.concatenate(
+                ([0], cuts, [doc_ids_b.size])).astype(np.int64)
+            for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
                 for arr, pfx, upos in streams:
-                    rb = emit(doc_ids_b, arr, prefix=pfx, use_pos=upos)
+                    rb = emit(doc_ids_b[s:e], arr.slice(s, e - s),
+                              prefix=pfx, use_pos=upos)
                     if rb is not None:
                         yield rb
-            else:
-                bounds = np.concatenate(
-                    ([0], cuts, [doc_ids_b.size])).astype(np.int64)
-                for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
-                    for arr, pfx, upos in streams:
-                        rb = emit(doc_ids_b[s:e], arr.slice(s, e - s),
-                                  prefix=pfx, use_pos=upos)
-                        if rb is not None:
-                            yield rb
-
-    return docs.select("doc_id", "text", *extra_fields).mapInArrow(
-        fn, PACKED_SCHEMA)
 
 
 def pack_postings(postings: DataFrame, n_docs: int,
@@ -335,10 +347,30 @@ def write_segment(packed: DataFrame, path: str,
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
-def term_buckets(spark, terms: list[str], cfg: IndexConfig = DEFAULT) -> dict[str, int]:
-    """bucket ids for query terms, via the same JVM xxhash64 (one tiny job)."""
-    if not terms:
-        return {}
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    rows = with_bucket(df, cfg).collect()
-    return {r["term"]: r["bucket"] for r in rows}
+def write_segment_arrow(packed: pa.Table, path: str,
+                        cfg: IndexConfig = DEFAULT) -> pa.Table:
+    """Driver twin of ``write_segment`` for a segment held in memory:
+    the same ``bucket=`` directories (``xxh.term_bucket``, the driver
+    form of ``with_bucket``), one file per bucket sorted by (term,
+    shard), and the ``_SUCCESS`` marker. Returns the rows with their
+    ``bucket`` column, in (bucket, term, shard) order."""
+    import pyarrow.compute as pc
+
+    from .manifest import write_parquet_dir
+    from .xxh import term_bucket
+    terms = packed.column("term").combine_chunks().dictionary_encode()
+    vocab = terms.dictionary.to_pylist()
+    by_code = np.array([term_bucket(t, cfg.n_buckets) for t in vocab],
+                       np.int32)
+    codes = terms.indices.to_numpy(zero_copy_only=False)
+    tbl = packed.append_column("bucket", pa.array(by_code[codes], pa.int32()))
+    tbl = tbl.take(pc.sort_indices(tbl, [("bucket", "ascending"),
+                                         ("term", "ascending"),
+                                         ("shard", "ascending")]))
+    buckets = tbl.column("bucket").to_numpy()
+    cuts = np.flatnonzero(np.diff(buckets)) + 1
+    bounds = np.concatenate(([0], cuts, [len(buckets)])).tolist()
+    write_parquet_dir(path, {
+        f"bucket={int(buckets[s])}": tbl.slice(s, e - s).drop_columns("bucket")
+        for s, e in zip(bounds[:-1], bounds[1:]) if e > s})
+    return tbl

@@ -14,9 +14,13 @@ rank-identical results — that equivalence is itself a test.
 from __future__ import annotations
 
 import dataclasses
+import functools
 from collections import Counter
 
+import numpy as np
+
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from .analyzer import tokenize_py
 from .build import FlatIndex
@@ -3230,15 +3234,18 @@ def _sql_scalar(v, dt) -> str:
 
 def _values_relation(spark, fields, rows) -> DataFrame | None:
     """``rows`` (one value per field, typed by ``fields``) as ``SELECT *
-    FROM VALUES ... AS t(cols)``: ONE SQL string, so building it costs
-    one py4j round trip, and a LocalRelation, so collecting it runs no
-    Spark job (``range(1).select(explode(...))`` and ``createDataFrame``
-    each still schedule one in Spark 4.1). No rows: one typed dummy row
-    under ``WHERE false``, pruned to an empty LocalRelation with the
-    same non-nullable columns. Returns None when a value has no
-    ``_sql_scalar`` form, so callers can fall back. Parsing and analysis
-    cost grows with the row count: keep it metadata-sized (the local
-    route caps it at LOCAL_MAX_ROWS)."""
+    FROM VALUES ... AS t(cols)`` that keeps its rows on the driver
+    (``_HeldRows``): ``collect()`` and ``toPandas()`` answer from them
+    without a JVM call, and the SQL string is parsed only when a caller
+    composes on the frame. Parsed, it is ONE SQL string, so building it
+    costs one py4j round trip, and a LocalRelation, so collecting it
+    runs no Spark job (``range(1).select(explode(...))`` and
+    ``createDataFrame`` each still schedule one in Spark 4.1). No rows:
+    one typed dummy row under ``WHERE false``, pruned to an empty
+    LocalRelation with the same non-nullable columns. Returns None when
+    a value has no ``_sql_scalar`` form, so callers can fall back.
+    Parsing and analysis cost grows with the row count: keep it
+    metadata-sized (the local route caps it at LOCAL_MAX_ROWS)."""
     if rows:
         lits = [[_sql_scalar(v, f.dataType) for v, f in zip(r, fields)]
                 for r in rows]
@@ -3250,7 +3257,60 @@ def _values_relation(spark, fields, rows) -> DataFrame | None:
     body = ",".join("(" + ",".join(row) + ")" for row in lits)
     names = ", ".join(f"`{f.name}`" for f in fields)
     where = "" if rows else " WHERE false"
-    return spark.sql(f"SELECT * FROM VALUES {body} AS t({names}){where}")
+    conv = [_HELD_PY[f.dataType.simpleString()] for f in fields]
+    held = [tuple(None if v is None else c(v) for v, c in zip(r, conv))
+            for r in rows]
+    return _HeldRows(spark, fields, held,
+                     f"SELECT * FROM VALUES {body} AS t({names}){where}")
+
+
+# the Python value Spark's collect() returns for a _sql_scalar literal
+_HELD_PY = {"bigint": int, "int": int, "double": float, "string": str,
+            "float": lambda v: float(np.float32(v))}
+# the pandas dtype Spark's toPandas() gives a non-null column, with Arrow
+# on or off
+_HELD_PD = {"bigint": "int64", "int": "int32", "double": "float64",
+            "float": "float32", "string": object}
+
+
+class _HeldRows(ClassicDataFrame):
+    """A ``_values_relation`` frame. Its rows stay on the driver, and
+    the two actions callers read results with, ``collect()`` and
+    ``toPandas()``, answer from them with no JVM call. Everything else
+    (select, join, explain, schema, show, ...) works on the ``VALUES``
+    plan, parsed on first use and kept."""
+
+    def __new__(cls, *args):
+        return object.__new__(cls)
+
+    def __init__(self, spark, fields, rows, sql: str):
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._held_fields = list(fields)
+        self._held_rows = rows
+        self._held_sql = sql
+
+    @functools.cached_property
+    def _jdf(self):
+        return self._session.sql(self._held_sql)._jdf
+
+    def collect(self):
+        from pyspark.sql import Row
+        make = Row(*[f.name for f in self._held_fields])
+        return [make(*r) for r in self._held_rows]
+
+    def toPandas(self):
+        if any(v is None for r in self._held_rows for v in r):
+            return super().toPandas()  # Spark's null-aware dtypes
+        import pandas as pd
+        cols = list(zip(*self._held_rows)) or [()] * len(self._held_fields)
+        out = pd.DataFrame({i: pd.Series(c, dtype=_HELD_PD[
+            f.dataType.simpleString()]) for i, (c, f) in enumerate(
+                zip(cols, self._held_fields))})
+        out.columns = [f.name for f in self._held_fields]
+        return out
 
 
 def _collect_topk(index, topk: DataFrame):
@@ -3271,7 +3331,8 @@ def _collect_topk(index, topk: DataFrame):
     rows = topk.collect()
     if not rows:
         return rows, None
-    fields = topk.schema.fields
+    fields = (topk._held_fields if isinstance(topk, _HeldRows)
+              else topk.schema.fields)
     small = _values_relation(
         index.spark, fields + [T.StructField("_rank", T.IntegerType())],
         [tuple(r) + (i,) for i, r in enumerate(rows)])
@@ -3294,7 +3355,10 @@ def pin_topk(index, topk: DataFrame) -> DataFrame:
     downstream plans (repeated materialization, joins, diagnostics)
     embed the rows as a jobless JVM-side relation instead of re-running
     the search per execution. Falls back to ``createDataFrame`` for
-    non-scalar columns (none exist in any top-k today)."""
+    non-scalar columns (none exist in any top-k today). A driver-route
+    answer is pinned already and comes back as it is."""
+    if isinstance(topk, _HeldRows):
+        return topk
     rows = topk.collect()
     pinned = _values_relation(index.spark, topk.schema.fields, rows)
     if pinned is not None:

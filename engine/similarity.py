@@ -38,11 +38,22 @@ def _query_lit(vec) -> "F.Column":
     return F.array(*[F.lit(float(x)) for x in vec])
 
 
+# Limits up to this size keep TakeOrderedAndProject's buffers under a
+# few MB a task, which costs less than the count job a clip would run.
+TOPK_COUNT_FROM = 1 << 16
+
+
 def cosine_topk(emb: DataFrame, query_vec, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 exclude_id: int | None = None) -> DataFrame:
     """Exact brute-force cosine top-k: full scan, JVM-side arithmetic,
-    per-partition top-k heap via TakeOrderedAndProject."""
+    per-partition top-k heap via TakeOrderedAndProject. A ``k`` above
+    ``TOPK_COUNT_FROM`` is clipped to the frame's row count first (one
+    count job): TakeOrderedAndProject sizes each task's selection buffer
+    from the limit (2k slots), so ``k = 10**9``, the usual "whole
+    ranking" request, would ask for gigabytes of heap per task."""
+    if k > TOPK_COUNT_FROM:
+        k = min(int(k), emb.count())
     q = [float(x) for x in query_vec]
     qn = math.sqrt(sum(x * x for x in q))
     cos = (dot_expr(F.col(vec_col).cast("array<double>"), _query_lit(q))

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import merge as merge_mod
 from . import pack as pack_mod
-from .build import idf_col, load_index, PackedIndex
+from .build import load_index, PackedIndex, write_lexicon
 from .config import DEFAULT, IndexConfig
 from .docids import assign_doc_ids
 from .manifest import Manifest, Segment, _success_marker
@@ -173,17 +173,9 @@ def compact(spark: SparkSession, index_dir: str,
     out_id = f"seg_c{sum(1 for s in man.segments if s.segment_id.startswith('seg_c')):03d}"
     out_path = os.path.join(index_dir, "segments", out_id)
     pack_mod.write_segment(merged, out_path, cfg)
-    lex = (spark.read.parquet(out_path)
-           .groupBy("term", "bucket")
-           .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-                F.max("max_tf").alias("max_tf"))
-           .withColumn("idf", idf_col(F.col("df"), man.n_docs,
-                                      (man.bm25 or {}).get("idf_variant",
-                                                           "lucene"))))
-    # term-sorted like the batch build (build_index): equality lookups
-    # and expand_prefix range scans prune on parquet min/max stats
-    lex.sort("term").write.mode("overwrite").parquet(
-        os.path.join(index_dir, "lexicon"))
+    write_lexicon(spark.read.parquet(out_path),
+                  os.path.join(index_dir, "lexicon"), man.n_docs,
+                  (man.bm25 or {}).get("idf_variant", "lucene"))
     if int(man.fuzzy_edits or 0) > 0:
         # the vocabulary may have grown: regenerate the deletion
         # neighborhood from the fresh lexicon (vocab-scaled, like the

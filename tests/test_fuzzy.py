@@ -334,3 +334,34 @@ def test_suggest_phrase_validation(fz_index):
     with pytest.raises(ValueError, match="per_term"):
         suggest_phrase(fz_index, "hot0", per_term=0)
     assert suggest_phrase(fz_index, "").collect() == []
+
+
+def test_expansion_complete_when_buckets_not_power_of_two(spark, tmp_path):
+    """The query-side fbucket prune must use the writer's signed
+    pmod(xxhash64(v), nb): an unsigned modulus agrees with it only when
+    n_buckets is a power of two, and at 12 buckets most deletion
+    variants of these words sit in another dir, so candidates went
+    missing without an error. The expansion must equal a Levenshtein
+    scan of the whole vocabulary."""
+    from engine.build import build_index
+    from engine.config import IndexConfig
+    words = {"hello": ["hello", "hell", "hallo", "jello", "hellos", "helo",
+                       "yello", "cello"],
+             "search": ["search", "serch", "searches", "starch", "sear",
+                        "searcn", "seach", "reach"],
+             "engine": ["engine", "engines", "engin", "engind", "ingine",
+                        "engie", "enzine"],
+             "query": ["query", "queri", "quary", "querys", "quer",
+                       "equery", "guery"]}
+    vocab = sorted({w for ws in words.values() for w in ws})
+    rows = [(f"c{i:03d}", j, " ".join(vocab[(i + j) % len(vocab):]
+                                      + vocab[:j]))
+            for i in range(8) for j in range(3)]
+    corpus = spark.createDataFrame(rows, "conv_id string, turn_idx int, "
+                                         "text string")
+    idx = build_index(spark, corpus, str(tmp_path / "nb12"),
+                      IndexConfig(n_buckets=12, fuzzy_edits=1))
+    for q in words:
+        got = {c["term"] for c in expand_fuzzy(idx, q, 1, 10**6)}
+        want = {t for t in vocab if levenshtein_py(q, t) <= 1}
+        assert got == want, q

@@ -770,3 +770,43 @@ def test_multi_index_limit_clipped_to_doc_count(lidx, bidx):
     limits = _planned_limits(df)
     assert limits and max(limits) <= lidx.n_docs + bidx.n_docs, limits
     assert len(df.collect()) > 10
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_driver_answers_collect_without_a_jvm_relation(spark, lidx,
+                                                       monkeypatch, arrow):
+    """A driver-route answer holds its rows: search(...).collect(),
+    search_batch(...).collect() and toPandas() parse no VALUES plan (no
+    spark.sql call at all), while composing on the same frame — schema,
+    explain, join — works on exactly the VALUES plan it stands for."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    qset = [{"id": "a", "query": "hot0 rare3", "mode": "OR"},
+            {"id": "b", "query": "hot0 hot1", "mode": "AND"}]
+    try:
+        single = Q.search(lidx, "hot0 rare3")
+        batch = Q.search_batch(lidx, qset, k=5)
+        empty = Q.search(lidx, "zzzunknown")
+        frames = (single, batch, empty)
+
+        def refuse(*a, **kw):
+            raise AssertionError("a VALUES relation was parsed")
+        with monkeypatch.context() as m:
+            m.setattr(type(spark), "sql", refuse)
+            got = [f.collect() for f in frames]
+            pdfs = [f.toPandas() for f in frames]
+        assert got[0] and got[1] and got[2] == []
+        for f, rows, pdf in zip(frames, got, pdfs):
+            plan = spark.sql(f._held_sql)
+            assert rows == plan.collect()
+            assert f.schema == plan.schema
+            import pandas as pd
+            pd.testing.assert_frame_equal(pdf, plan.toPandas())
+        assert "LocalTableScan" in _plan(single)
+        # entry "a" is the single's top 5
+        joined = single.join(batch.filter("qid = 'a'"), "doc_id")
+        assert sorted(r.doc_id for r in joined.collect()) == \
+            sorted(r.doc_id for r in got[0][:5])
+    finally:
+        spark.conf.set(key, prev)

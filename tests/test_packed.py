@@ -135,12 +135,15 @@ def test_not_mode_packed_equals_flat(spark, packed_index, flat_index):
 
 
 def test_index_identical_across_parallelism(spark, corpus_df, oracle_idx,
-                                            tmp_path):
+                                            tmp_path, monkeypatch):
     """The north rule's cross-cluster-size determinism, directly: building
     the index at different parallelism (partition counts) yields
     IDENTICAL packed content — same (term, shard) rows, byte-identical
-    payloads — hence identical ranking everywhere."""
+    payloads — hence identical ranking everywhere. Pinned to the
+    distributed build (the driver build has no partitions)."""
+    from engine import build as B
     from engine.build import build_index
+    monkeypatch.setattr(B, "BUILD_LOCAL_MAX_ROWS", 0)
 
     def content(idx):
         return {(r["term"], r["shard"]):

@@ -314,3 +314,17 @@ def test_adaptive_lsh_planes_bound_bucket_size(spark):
                   .groupBy("bkt").count().agg(F.max("count")).first()[0])
         # gaussian data + random hyperplanes: buckets stay near target
         assert counts <= 32 * 8, (n, p, counts)
+
+
+def test_cosine_topk_whole_ranking_k_is_clipped(spark, emb):
+    """k = 10**9 (a whole ranking) on a small frame returns every row,
+    ranked, instead of sizing TakeOrderedAndProject's buffers from k."""
+    from engine.similarity import cosine_topk
+    small = emb.limit(50).cache()
+    q = [1.0] * len(small.first()["embedding"])
+    got = cosine_topk(small, q, k=10**9)
+    assert "limit=50" in got._jdf.queryExecution().executedPlan().toString()
+    rows = got.collect()
+    assert len(rows) == 50
+    assert [r.cos for r in rows] == sorted((r.cos for r in rows),
+                                           reverse=True)
