@@ -308,6 +308,19 @@ def _parquet_rows(path: str) -> int:
         return -1
 
 
+def _parquet_bytes(path: str) -> int:
+    """Uncompressed bytes of a parquet directory, summed over its
+    footers' row groups (driver-side metadata read — no Spark job)."""
+    import pyarrow.dataset as pads
+    total = 0
+    for frag in pads.dataset(path, format="parquet",
+                             partitioning="hive").get_fragments():
+        md = frag.metadata
+        total += sum(md.row_group(i).total_byte_size
+                     for i in range(md.num_row_groups))
+    return total
+
+
 def any_equal(field: str, values):
     """pyarrow dataset filter ``field == v0 OR field == v1 ...`` as a
     balanced OR tree. pyarrow 16 prunes parquet row groups (and hive
@@ -340,30 +353,77 @@ def effective_slices(cfg: IndexConfig, n_docs: int) -> int:
 
 
 # The executor gate of build_index, the write-side twin of
-# query._run_shards: a corpus of at most this many rows is built on the
-# driver (build_index's docstring), a larger one by Spark jobs.
-# Sweep (make_transcripts corpora of 6.5k-520k turns read from parquet,
-# default IndexConfig, local[4] on a 4-core / 15 GB box, one session
-# warmed by a build on each route, each route forced; wall s, driver
-# route then Spark route, and the driver process's RSS growth during
-# the driver build):
-#     turns     driver   spark   driver RSS growth
-#     6,484     0.53     2.75     17-24 MB
-#    25,984     0.83     2.95    141-150 MB
-#    64,984     1.46     2.79    199-262 MB
-#   129,984     2.45     3.26    258-317 MB
-#   259,984     4.99     5.92    637 MB
-#   519,984     9.18     6.77  1,250 MB
-# The driver wins up to ~260k turns warm, and by far more on a cold
-# session (no Python worker or JIT warm-up); its memory grows ~2.4 KB a
-# turn. 2^17 keeps it under ~320 MB with a 25% margin on the crossover.
-# Above the bound the limited read is wasted: 0.31-0.33 s (limit
-# 2^17 + 1 on 260k and 520k turns), 5-10% of the Spark build there.
+# query._run_shards: a corpus of at most BUILD_LOCAL_MAX_ROWS rows and
+# BUILD_LOCAL_MAX_BYTES Arrow bytes is built on the driver
+# (``_driver_corpus``), a larger one by Spark jobs.
+# Sweep (``python bench/build_routes.py``, committed as BUILD_ROUTES.json:
+# make_transcripts corpora read from parquet, one turn a row ("short",
+# ~210 Arrow bytes) or 32 turns a row ("wide", ~5.2 KB), default
+# IndexConfig, local[4] on a 4-core / 15 GB box, one warm session, each
+# route forced, 2 builds each; wall s driver / Spark, and the driver
+# Python process's peak RSS growth on the driver route):
+#     shape   rows     Arrow MB   driver     spark      driver RSS growth
+#     short     6,484     1.4    0.56-0.61  4.28-4.35     17-24 MB
+#     short    64,984    13.6    1.48-1.62  3.88-4.53    215-277 MB
+#     short   129,984    27.3    2.54-2.60  5.47-5.50    260-350 MB
+#     short   259,984    54.6    4.72-4.74  4.38-5.09    618-753 MB
+#     wide      2,031    10.6    1.05-1.06  2.78-2.79     78-89 MB
+#     wide      4,062    21.3    1.65-1.67  2.82-2.83    186-248 MB
+#     wide      8,125    42.6    2.99       3.42-3.43    504-545 MB
+#     wide     16,250    85.2    5.66-5.69  4.33-4.39  1,137-1,299 MB
+# Wall time crosses over near 2^18 short rows and between 43 and 85 MB
+# of wide rows, and driver memory grows ~12x the Arrow bytes. 2^17 rows
+# and 32 MiB keep either shape below its crossover and within the
+# ~350 MB 2^17 short rows take.
+# The route choice itself (``_driver_corpus``, the sweep's
+# route_choice): under 1 ms when the plan estimate (parquet's compressed
+# size, ~0.4x the Arrow bytes here) is above 32 MiB; otherwise the
+# limited read, wasted when the rows or their bytes then exceed a bound:
+# 0.31 s on 260k short rows and 0.42 s on 8k wide rows, 6-12% of the
+# Spark build there.
 BUILD_LOCAL_MAX_ROWS = 1 << 17
+BUILD_LOCAL_MAX_BYTES = 1 << 25
 # Rows per Arrow batch the driver route tokenizes at a time (the
 # session's spark.sql.execution.arrow.maxRecordsPerBatch): it bounds the
 # tokenizer's working set, as a mapInArrow batch does.
 LOCAL_BATCH_ROWS = 1 << 16
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` from its optimized plan: the
+    files' on-disk bytes for a file source, rows times default column
+    widths for a local relation, Long.MaxValue when it cannot tell (an
+    RDD). Driver-side; no Spark job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+
+
+def _driver_corpus(corpus: DataFrame) -> pa.Table | None:
+    """The build's route, decided before any stage runs: the corpus as
+    an Arrow table when the driver builds it, None when Spark does.
+
+    A corpus whose plan estimate is above BUILD_LOCAL_MAX_BYTES (or
+    unknown) goes to Spark without moving a row. Otherwise it is read
+    once with ``limit(BUILD_LOCAL_MAX_ROWS + 1).toArrow()`` (one
+    JVM-only job) and kept when it holds at most BUILD_LOCAL_MAX_ROWS
+    rows and BUILD_LOCAL_MAX_BYTES bytes. An estimate can undercount
+    (compressed files, wide strings in a local relation); a read that
+    outgrows ``spark.driver.maxResultSize`` is refused by Spark, and the
+    Spark route builds that corpus."""
+    from py4j.protocol import Py4JJavaError
+    if (BUILD_LOCAL_MAX_ROWS <= 0
+            or _plan_bytes(corpus) > BUILD_LOCAL_MAX_BYTES):
+        return None
+    try:
+        head = corpus.limit(BUILD_LOCAL_MAX_ROWS + 1).toArrow()
+    except Py4JJavaError as e:
+        if "maxResultSize" not in str(e):
+            raise
+        return None
+    if (head.num_rows > BUILD_LOCAL_MAX_ROWS
+            or head.nbytes > BUILD_LOCAL_MAX_BYTES):
+        return None
+    return head
 
 
 def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
@@ -377,17 +437,18 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
     cfg that resolves a DIFFERENT plan is refused (shard geometry would
     silently disagree with the completed segments).
 
-    Two routes, one pipeline. The corpus is first read once with
-    ``corpus.limit(BUILD_LOCAL_MAX_ROWS + 1).toArrow()`` (one JVM-only
-    job). When it holds at most BUILD_LOCAL_MAX_ROWS rows, the driver
-    runs every stage on that Arrow table: it sorts the rows in Spark's
-    (conv_id, turn_idx) order, numbers them, and calls the distributed
-    route's own closures (``pack.pack_partial_batches``,
+    Two routes, one pipeline, chosen by ``_driver_corpus`` before any
+    stage runs: a corpus that Catalyst sizes at most
+    BUILD_LOCAL_MAX_BYTES is read once with one JVM-only job, and when
+    it holds at most BUILD_LOCAL_MAX_ROWS rows and BUILD_LOCAL_MAX_BYTES
+    Arrow bytes the driver runs every stage on that table: it sorts the
+    rows in Spark's (conv_id, turn_idx) order, numbers them, and calls
+    the distributed route's own closures (``pack.pack_partial_batches``,
     ``merge._merge_batches``, ``idf_np`` for ``idf_col``) and their
     pyarrow writers, so both routes write the same rows. Otherwise
     Spark runs each stage. A resumed build takes the route its stored
-    n_docs selects. The docvalue and fuzzy stores are written by Spark
-    on both routes.
+    corpus (rows, and bytes from its parquet footers) selects. The
+    docvalue and fuzzy stores are written by Spark on both routes.
     """
     import os
     import time
@@ -451,7 +512,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
                     f"with {what}={old!r}, current cfg resolves {new!r}; "
                     f"pass the original cfg or delete the index dir to "
                     f"rebuild")
-        local = n_docs <= BUILD_LOCAL_MAX_ROWS
+        local = (n_docs <= BUILD_LOCAL_MAX_ROWS
+                 and _parquet_bytes(corpus_path) <= BUILD_LOCAL_MAX_BYTES)
     else:
         man = Manifest(n_buckets=cfg.n_buckets, n_slices=cfg.n_slices,
                        merge_fanin=cfg.merge_fanin,
@@ -476,9 +538,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, index_dir: str,
         # stats come AFTER pack from the lexicon (avgdl == sum(cf)/n_docs,
         # an identity).
         with timer.time("docids"):
-            head = (corpus.limit(BUILD_LOCAL_MAX_ROWS + 1).toArrow()
-                    if BUILD_LOCAL_MAX_ROWS > 0 else None)
-            local = head is not None and head.num_rows <= BUILD_LOCAL_MAX_ROWS
+            head = _driver_corpus(corpus)
+            local = head is not None
             if local:
                 held = write_sorted_corpus_arrow(head, corpus_path)
                 offsets, n_docs = [0], held.num_rows

@@ -3260,7 +3260,13 @@ def _values_relation(spark, fields, rows) -> DataFrame | None:
     conv = [_HELD_PY[f.dataType.simpleString()] for f in fields]
     held = [tuple(None if v is None else c(v) for v, c in zip(r, conv))
             for r in rows]
-    return _HeldRows(spark, fields, held,
+    # the VALUES plan's schema: a column is nullable when any of its
+    # literals is a CAST (a null, a float, a NaN or infinity)
+    schema = T.StructType([
+        T.StructField(f.name, f.dataType,
+                      any(row[i].startswith("CAST(") for row in lits))
+        for i, f in enumerate(fields)])
+    return _HeldRows(spark, schema, held,
                      f"SELECT * FROM VALUES {body} AS t({names}){where}")
 
 
@@ -3274,21 +3280,27 @@ _HELD_PD = {"bigint": "int64", "int": "int32", "double": "float64",
 
 
 class _HeldRows(ClassicDataFrame):
-    """A ``_values_relation`` frame. Its rows stay on the driver, and
-    the two actions callers read results with, ``collect()`` and
-    ``toPandas()``, answer from them with no JVM call. Everything else
-    (select, join, explain, schema, show, ...) works on the ``VALUES``
-    plan, parsed on first use and kept."""
+    """A ``_values_relation`` frame. Its rows and schema stay on the
+    driver, and ``schema`` and the two actions callers read results
+    with, ``collect()`` and ``toPandas()``, answer from them with no JVM
+    call. Everything else (select, join, explain, show, ...) works on
+    the ``VALUES`` plan, parsed on first use and kept.
+
+    Written against pyspark 4.1's classic ``DataFrame``: ``__init__``
+    is skipped (it needs the parsed plan), so the attributes it sets
+    (``_session``, ``_sc``, ``is_cached``, ``_support_repr_html``) are set
+    here, and ``_jdf`` and ``schema`` are overridden. Re-check them on a
+    Spark upgrade."""
 
     def __new__(cls, *args):
         return object.__new__(cls)
 
-    def __init__(self, spark, fields, rows, sql: str):
+    def __init__(self, spark, schema, rows, sql: str):
         self._session = spark
         self._sc = spark.sparkContext
         self.is_cached = False
         self._support_repr_html = False
-        self._held_fields = list(fields)
+        self._held_schema = schema
         self._held_rows = rows
         self._held_sql = sql
 
@@ -3296,20 +3308,25 @@ class _HeldRows(ClassicDataFrame):
     def _jdf(self):
         return self._session.sql(self._held_sql)._jdf
 
+    @property
+    def schema(self):
+        return self._held_schema
+
     def collect(self):
         from pyspark.sql import Row
-        make = Row(*[f.name for f in self._held_fields])
+        make = Row(*self._held_schema.names)
         return [make(*r) for r in self._held_rows]
 
     def toPandas(self):
         if any(v is None for r in self._held_rows for v in r):
             return super().toPandas()  # Spark's null-aware dtypes
         import pandas as pd
-        cols = list(zip(*self._held_rows)) or [()] * len(self._held_fields)
+        fields = self._held_schema.fields
+        cols = list(zip(*self._held_rows)) or [()] * len(fields)
         out = pd.DataFrame({i: pd.Series(c, dtype=_HELD_PD[
             f.dataType.simpleString()]) for i, (c, f) in enumerate(
-                zip(cols, self._held_fields))})
-        out.columns = [f.name for f in self._held_fields]
+                zip(cols, fields))})
+        out.columns = self._held_schema.names
         return out
 
 
@@ -3331,8 +3348,7 @@ def _collect_topk(index, topk: DataFrame):
     rows = topk.collect()
     if not rows:
         return rows, None
-    fields = (topk._held_fields if isinstance(topk, _HeldRows)
-              else topk.schema.fields)
+    fields = topk.schema.fields
     small = _values_relation(
         index.spark, fields + [T.StructField("_rank", T.IntegerType())],
         [tuple(r) + (i,) for i, r in enumerate(rows)])
@@ -3356,9 +3372,7 @@ def pin_topk(index, topk: DataFrame) -> DataFrame:
     embed the rows as a jobless JVM-side relation instead of re-running
     the search per execution. Falls back to ``createDataFrame`` for
     non-scalar columns (none exist in any top-k today). A driver-route
-    answer is pinned already and comes back as it is."""
-    if isinstance(topk, _HeldRows):
-        return topk
+    answer collects and re-pins from its held rows, with no JVM call."""
     rows = topk.collect()
     pinned = _values_relation(index.spark, topk.schema.fields, rows)
     if pinned is not None:

@@ -316,14 +316,22 @@ def test_adaptive_lsh_planes_bound_bucket_size(spark):
         assert counts <= 32 * 8, (n, p, counts)
 
 
-def test_cosine_topk_whole_ranking_k_is_clipped(spark, emb):
-    """k = 10**9 (a whole ranking) on a small frame returns every row,
-    ranked, instead of sizing TakeOrderedAndProject's buffers from k."""
-    from engine.similarity import cosine_topk
+@pytest.mark.parametrize("k", ["10**9", "TOPK_COUNT_FROM + 1",
+                               "TOPK_COUNT_FROM"])
+def test_cosine_topk_whole_ranking_k_is_clipped(spark, emb, k):
+    """A k above TOPK_COUNT_FROM (a whole ranking, or just above it) on
+    a small frame is clipped to its row count instead of sizing
+    TakeOrderedAndProject's buffers from k; a k at the threshold is
+    planned as asked. Either returns every row, ranked."""
+    from engine import similarity as S
+    k = {"10**9": 10**9, "TOPK_COUNT_FROM + 1": S.TOPK_COUNT_FROM + 1,
+         "TOPK_COUNT_FROM": S.TOPK_COUNT_FROM}[k]
+    limit = 50 if k > S.TOPK_COUNT_FROM else k
     small = emb.limit(50).cache()
     q = [1.0] * len(small.first()["embedding"])
-    got = cosine_topk(small, q, k=10**9)
-    assert "limit=50" in got._jdf.queryExecution().executedPlan().toString()
+    got = S.cosine_topk(small, q, k=k)
+    assert f"limit={limit}," in \
+        got._jdf.queryExecution().executedPlan().toString()
     rows = got.collect()
     assert len(rows) == 50
     assert [r.cos for r in rows] == sorted((r.cos for r in rows),
