@@ -1,9 +1,6 @@
-"""Index build pipeline (SURVEY.md §2.B-D, §3 entry point 1).
-
-M1 layer: corpus -> deterministic doc_ids -> flat postings IR
-``(doc_id, term, tf, dl)`` + docmap + lexicon + corpus stats, all as
-DataFrames. The packed/compressed segment index (M2+) builds on top of the
-same flat IR.
+"""Index build pipeline (SURVEY.md §2.B-D, §3 entry point 1): corpus ->
+deterministic doc_ids -> tokenize -> packed/compressed segments + docmap +
+lexicon + corpus stats.
 
 Scale notes (100 TB design):
 * The corpus-sized flat-postings IR is never materialized in the packed
@@ -19,8 +16,6 @@ Scale notes (100 TB design):
   np.unique; pandas fallback for non-ASCII); nothing per-row in Python.
 * Lexicon/stats are classic partial+final hash aggregations (Catalyst
   splits them automatically — map-side combine before the shuffle).
-* ``build_flat_index`` (the interactive/M1 layer) keeps the cached-IR
-  layout — right for corpora that fit memory and repeated ad-hoc queries.
 """
 
 from __future__ import annotations
@@ -29,95 +24,12 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from .config import DEFAULT, IndexConfig
-from .docids import (assign_doc_ids, corpus_offsets, read_with_doc_ids,
-                     write_sorted_corpus, write_sorted_corpus_arrow)
+from .docids import (corpus_offsets, read_with_doc_ids, write_sorted_corpus,
+                     write_sorted_corpus_arrow)
 from .manifest import write_parquet_dir
-
-_TOKENIZED_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("conv_id", T.StringType(), True),
-    T.StructField("turn_idx", T.IntegerType(), True),
-    T.StructField("term", T.StringType(), True),   # NULL on docmap sentinel rows
-    T.StructField("tf", T.IntegerType(), False),
-    T.StructField("dl", T.IntegerType(), False),
-])
-
-
-def tokenize_corpus(docs: DataFrame,
-                    cfg: IndexConfig = DEFAULT) -> DataFrame:
-    """(..., doc_id, conv_id, turn_idx, text) -> flat postings IR + sentinels.
-
-    Output: one row per (doc, term) with tf and dl, plus one term=NULL row
-    per doc carrying (conv_id, turn_idx, dl) for the docmap. The analyzer
-    config (stopwords/stem hooks) rides the task closure so build and
-    query analysis cannot drift.
-    """
-
-    names = [f.name for f in _TOKENIZED_SCHEMA.fields]
-    acfg = cfg.analyzer
-
-    def fn(batches):
-        from .analyzer import doc_term_freqs_arrow
-        for b in batches:
-            doc_ids = b.column("doc_id").to_numpy(zero_copy_only=False)
-            conv = b.column("conv_id").cast(pa.string())
-            turn = b.column("turn_idx").cast(pa.int32())
-            rows, terms, tfs, dl = doc_term_freqs_arrow(
-                b.column("text").cast(pa.string()), acfg)
-            n = b.num_rows
-            npost = rows.size
-            cols = [
-                pa.array(np.concatenate([doc_ids[rows], doc_ids]), pa.int64()),
-                pa.concat_arrays([pa.nulls(npost, pa.string()), conv]),
-                pa.concat_arrays([pa.nulls(npost, pa.int32()), turn]),
-                pa.concat_arrays([pa.array(terms, pa.string()),
-                                  pa.nulls(n, pa.string())]),
-                pa.array(np.concatenate([tfs, np.zeros(n, np.int64)])
-                         .astype(np.int32), pa.int32()),
-                pa.array(np.concatenate([dl[rows], dl]).astype(np.int32),
-                         pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return docs.select("doc_id", "conv_id", "turn_idx", "text").mapInArrow(
-        fn, _TOKENIZED_SCHEMA)
-
-
-@dataclass
-class FlatIndex:
-    """M1 in-memory index: flat postings + docmap + lexicon + stats."""
-    docs: DataFrame        # corpus columns + doc_id
-    postings: DataFrame    # doc_id, term, tf, dl
-    docmap: DataFrame      # doc_id, conv_id, turn_idx, dl
-    lexicon: DataFrame     # term, df, cf, max_tf, idf
-    n_docs: int
-    avgdl: float
-    cfg: IndexConfig
-
-    def lookup_terms(self, terms: list[str]) -> dict[str, dict]:
-        """term -> {df, idf} for query terms only — ONE driver-side
-        collect of <= |query| lexicon rows, memoized (absent terms too).
-        Serves the broadcast side, the AND-arity check, and idf without
-        scheduling a separate count job per query (the query vocab is
-        tiny vs the lexicon; never a full-lexicon collect)."""
-        if not terms:
-            return {}
-        cache = getattr(self, "_term_cache", None)
-        if cache is None:
-            cache = self._term_cache = {}
-        missing = [t for t in terms if t not in cache]
-        if missing:
-            rows = self.lexicon.filter(F.col("term").isin(missing)).collect()
-            for r in rows:
-                cache[r["term"]] = {"df": r["df"], "idf": r["idf"]}
-            for t in missing:
-                cache.setdefault(t, None)  # absent from corpus
-        return {t: cache[t] for t in terms if cache.get(t) is not None}
 
 
 def idf_col(df_col, n_docs: int, variant: str):
@@ -254,43 +166,6 @@ def lexicon_cf_by_field_arrow(lex: pa.Table) -> dict:
         "fld").aggregate([("cf", "sum")])
     return {f_: int(c or 0) for f_, c in zip(
         g.column("fld").to_pylist(), g.column("cf_sum").to_pylist())}
-
-
-def corpus_stats(docmap: DataFrame) -> tuple[int, float]:
-    n_docs, sum_dl = docmap.agg(F.count("*"), F.sum("dl")).first()
-    return int(n_docs), (float(sum_dl or 0) / n_docs if n_docs else 0.0)
-
-
-def build_flat_index(spark: SparkSession, corpus: DataFrame,
-                     cfg: IndexConfig = DEFAULT,
-                     n_parts: int | None = None) -> FlatIndex:
-    if cfg.extra_fields:
-        raise ValueError("extra_fields (multi-field search) requires the "
-                         "packed build — use build_index")
-    docs = assign_doc_ids(corpus, n_parts=n_parts)
-    docs.persist(StorageLevel.MEMORY_AND_DISK)
-    tokenized = tokenize_corpus(docs, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    postings = tokenized.filter(F.col("term").isNotNull()).select(
-        "doc_id", "term", "tf", "dl")
-    docmap = tokenized.filter(F.col("term").isNull()).select(
-        "doc_id", "conv_id", "turn_idx", "dl")
-    n_docs, avgdl = corpus_stats(docmap)
-    # docs + tokenized are materialized now; the sort base behind
-    # assign_doc_ids is no longer needed
-    base = getattr(docs, "_graft_cached_base", None)
-    if base is not None:
-        base.unpersist()
-    lexicon = (postings.groupBy("term")
-               .agg(F.count("*").alias("df"),
-                    F.sum("tf").alias("cf"),
-                    F.max("tf").alias("max_tf"))
-               .withColumn("idf", idf_col(F.col("df"), n_docs, cfg.bm25.idf_variant)))
-    # the lexicon is vocab-sized (small) and hit by every query — cache the
-    # aggregated result so repeated searches skip the groupBy shuffle
-    lexicon = lexicon.persist(StorageLevel.MEMORY_AND_DISK)
-    return FlatIndex(docs=docs, postings=postings, docmap=docmap,
-                     lexicon=lexicon, n_docs=int(n_docs), avgdl=float(avgdl),
-                     cfg=cfg)
 
 
 # --------------------------------------------------------------------------

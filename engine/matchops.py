@@ -1,209 +1,377 @@
-"""Match-set operators beyond ranked retrieval: exact hit counting,
-docvalue statistics over the match set, and more-like-this expansion.
+"""Match-set operators beyond ranked retrieval: the exact count, docvalue
+aggregations over the match set (stats, cardinality, missing, string
+stats, histograms and their pipelines, ranges, facet stats, rare terms,
+composite, filters, adjacency, percentiles, MAD), group-level ranking,
+the match-set export, more-like-this and significant terms.
 
-These are the Elasticsearch `_count` / metric-aggregation / MLT
-counterparts, built on the SAME pruned-scan + per-shard-kernel plan as
-``engine.query`` (one partition-pruned, term-pushed postings read; a
-vectorized Arrow kernel per doc-range shard; metadata-sized rows out):
+Every aggregation runs through one scaffold, ``_aggregate``, built from
+three parts:
 
-* ``match_count``: the total number of documents matching a boolean
-  query — ONE job whose shard tasks emit a single int64 each (the
-  minimum any exact count can move); composes with ``exclude``,
-  ``doc_filter``, ``dv_filter`` and tombstones exactly like ``search``.
-* ``match_stats``: (n_docs, n_with_value, min, max, sum, avg) of a
-  STORED docvalue column over the match set — served from each shard's
-  own cached columnar slice (engine/docvalues.py): zero corpus scan,
-  zero extra shuffle. Restricted to timestamp/integer columns so the
-  cross-shard sum is an exact int64 reduction: float columns would make
-  the total depend on shard reduction order, breaking the engine's
-  bit-reproducibility contract (the oracle twin sums the same int64s).
-  Timestamps aggregate in epoch MICROseconds and convert to seconds
-  only at the end (one identical float division on both sides).
-* ``more_like_this``: rank docs similar to a given document — the
-  source doc's terms are scored tf x idf (corpus-global idf), the top
-  ``max_terms`` survive under a frozen deterministic cap (tf*idf desc,
-  term asc — the same cap-rule pattern as ``search_prefix``), and the
-  selection runs as a standard OR query with qtf=1 per term, the
-  source doc itself excluded. Everything driver-side is metadata-sized
-  (one pruned corpus-row read + one memoized lexicon lookup); the
-  scoring job is ``search``'s unchanged single-job plan.
+* the match set (``_prep_match``): the query's terms for the pruned
+  postings scan and one ``hits(shard, post_pdf)`` closure with
+  ``search``'s exact match semantics (AND/OR arity, NOT via ``exclude``,
+  ``dv_filter``, tombstones). ``"*"`` (the ES ``match_all``) is every
+  live doc, zero-token docs included, and reads no positive postings;
+* a per-shard ``partial(shard, hit_locs, gather)`` that reduces one
+  shard's hits to a small pandas frame, reading docvalues only through
+  ``gather`` (``_gatherer``: values aligned with the hits, from the
+  shard's own cached docvalue slice — no corpus scan);
+* one pandas ``combine(partials)`` that turns every shard's partial
+  rows into the answer. An empty match set is the case with no partial
+  rows, so no surface builds its empty result by hand.
+
+The route is the one search takes (``query._driver_route``), with the
+match set's posting mass (``n_docs`` for ``"*"``) as the work:
+
+* at most ``LOCAL_MAX_POSTINGS``: ``partial`` runs on the driver over a
+  pyarrow read of the pruned postings (``query._driver_shards``, the
+  loop the driver scorer uses) and no Spark job runs;
+* above it: one ``groupBy("shard").applyInPandas`` job runs ``partial``
+  in the shard tasks, and its partial rows are collected (``toArrow``).
+  A ``doc_filter`` count is always this job, cogrouped with the
+  filtered corpus side.
+
+Partial rows are metadata-sized — one per shard, or one per bucket,
+group or distinct value of a shard — never one per doc, so what moves
+is bounded by what the answer holds. Every reduction is exact int64
+(timestamps at the frozen whole-second grain) or a float fold in a
+frozen order, so both routes give identical rows, and each surface's
+DuckDB twin in ``__spark_entry__`` reduces the same integers.
+
+Aggregations are eager: they run when called, and the answer is a
+driver-held ``VALUES`` relation (``query._values_relation``) whose
+``collect()`` runs nothing. Repeated identical calls return the same
+answer (``_plan_cached``) until the index changes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import dataclasses
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from . import query as Q
 from .analyzer import tokenize_py
-from .query import (_allowed_shards, _del_closure, _doc_limit,
-                    _plan_cached, _require_dv, query_terms)
+from .query import (_allowed_shards, _del_closure, _doc_limit, _plan_cached,
+                    _require_dv, _values_relation, _warn_if_stale,
+                    query_terms)
 
 COUNT_SCHEMA = "n_docs long"
 STATS_SCHEMA = ("n_docs long, n_with_value long, min_val double, "
                 "max_val double, sum_val double, avg_val double")
+HISTOGRAM_SCHEMA = "bucket_start long, n_docs long"
+PIPELINE_SCHEMA = ("bucket_start long, n_docs long, cum_docs long, "
+                   "delta_docs long")
+PCT_SCHEMA = "p double, value long"
+GROUPS_SCHEMA = "group_key string, score double, n_docs long"
+
+_SPARK_T = {"long": T.LongType(), "double": T.DoubleType(),
+            "string": T.StringType(), "int": T.IntegerType()}
+_ARROW_T = {"long": pa.int64(), "double": pa.float64(),
+            "string": pa.string(), "int": pa.int32()}
+_POST_COLS = ["term", "shard", "df", "doc_ids", "tfs"]
 
 
-def _match_kernel(index, qtf: dict, mode: str, exclude: str | None,
-                  dv_filter: str | None):
-    """Shared driver-side prep for the count/stats kernels: resolve the
-    pruned scan + a per-shard ``hits(post_pdf, extra_allowed) ->
-    int64 locs`` closure implementing search()'s exact match semantics
-    (AND/OR arity, NOT, dv_filter, tombstones). Returns (post, fn) or
-    None when the match set is provably empty."""
-    acfg = index.cfg.analyzer
-    neg = sorted(set(tokenize_py(exclude, acfg)) - set(qtf)) if exclude else []
-    terms = sorted(qtf)
-    lex = index.lookup_terms(sorted(set(terms) | set(neg)))
-    known = [t for t in terms if t in lex]
-    if not known or (mode == "AND" and len(known) < len(terms)):
-        return None
-    neg = [t for t in neg if t in lex]
-    n_required = len(terms)
-    scan_terms = sorted(set(known) | set(neg))
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select("term", "shard", "doc_ids", "tfs"))
-    width = index.shard_width
-    neg_set = frozenset(neg)
-    is_and = mode == "AND"
+def _columns(ddl: str) -> list:
+    """``"a long, b string"`` -> ``[("a", "long"), ("b", "string")]``."""
+    return [tuple(c.split()) for c in ddl.split(",")]
+
+
+def _schema(ddl: str) -> pa.Schema:
+    return pa.schema([(n, _ARROW_T[t]) for n, t in _columns(ddl)])
+
+
+def _held(index, ddl: str, rows) -> DataFrame:
+    """The answer: ``rows`` (Python values, None for NULL) as a held
+    VALUES relation with schema ``ddl``."""
+    return _values_relation(
+        index.spark, [T.StructField(n, _SPARK_T[t]) for n, t in
+                      _columns(ddl)], [tuple(r) for r in rows])
+
+
+@dataclasses.dataclass
+class _MatchSet:
+    """What the scaffold runs over: the pruned postings scan and the
+    shard function's membership rule."""
+    lex: dict          # lexicon rows of the scan terms
+    scan_terms: list   # every term the postings scan reads
+    cols: list         # the postings columns the shard function reads
+    mass: int          # postings decoded (+ n_docs for "*"): the gate's work
+    hits: object       # (shard, post_pdf, allowed_loc=None) -> int64 locs
+    n_shards: "int | None" = None  # "*": every shard runs, postings or not
+
+
+def _hits_closure(index, neg: list, need: "int | None", dv_filter,
+                  match_all: bool):
+    """``hits(shard, post_pdf, allowed_loc=None)``: the sorted
+    shard-local offsets of the matching docs, from the shard's postings
+    rows decoded in one ``codec.decode_postings_many`` pass. A doc
+    matches when it holds ``need`` positive terms (AND; any one for OR;
+    every live offset for ``"*"``) and no ``neg`` term, is not
+    tombstoned, passes ``dv_filter`` and is in ``allowed_loc`` (the
+    ``doc_filter`` side, when given)."""
     _require_dv(index, dv_filter)
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+    width, n_docs = index.shard_width, int(index.n_docs)
+    dv_dir, neg = index.index_dir, frozenset(neg)
     del_locs = _del_closure(index)
 
-    def hits(post_pdf, allowed_loc=None):
-        """int64 shard-local offsets of matching docs (sorted)."""
-        import numpy as np
+    def hits(shard, post_pdf, allowed_loc=None):
         from . import codec as C
-        shard = int(post_pdf["shard"].iloc[0])
+        from .docvalues import eval_filter
         start = shard * width
         cnt = np.zeros(width, dtype=np.int32)
-        negmask = np.zeros(width, dtype=bool) if neg_set else None
-        for i in range(len(post_pdf)):
-            ids, _ = C.decode_postings(post_pdf["doc_ids"].iloc[i],
-                                       post_pdf["tfs"].iloc[i])
+        if match_all:
+            cnt[:max(0, min(width, n_docs - start))] = 1
+        rows = post_pdf[post_pdf["doc_ids"].notna()]
+        if len(rows):
+            ids, _, bnd = C.decode_postings_many(
+                rows["doc_ids"].tolist(), rows["tfs"].tolist(),
+                rows["df"].to_numpy(np.int64))
             loc = ids - start
-            if post_pdf["term"].iloc[i] in neg_set:
-                negmask[loc] = True
-            else:
-                cnt[loc] += 1
-        if negmask is not None:
-            cnt[negmask] = -1
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                cnt[dl_] = -1
-        if dv_filter is not None:
-            from .docvalues import eval_filter
-            allow = np.zeros(width, dtype=bool)
-            allow[eval_filter(dv_dir, shard, dv_gen, dv_filter)] = True
-            cnt[~allow] = -1
-        if allowed_loc is not None:
-            allow = np.zeros(width, dtype=bool)
-            allow[allowed_loc] = True
-            cnt[~allow] = -1
-        return np.flatnonzero(cnt == n_required) if is_and \
+            is_neg = np.repeat(rows["term"].isin(neg).to_numpy(),
+                               np.diff(bnd))
+            cnt += np.bincount(loc[~is_neg], minlength=width).astype(
+                np.int32)
+            cnt[loc[is_neg]] = -1
+        gone = None if del_locs is None else del_locs(shard)
+        if gone is not None:
+            cnt[gone] = -1
+        for keep in (None if dv_filter is None else
+                     eval_filter(dv_dir, shard, n_docs, dv_filter),
+                     allowed_loc):
+            if keep is not None:
+                allow = np.zeros(width, dtype=bool)
+                allow[keep] = True
+                cnt[~allow] = -1
+        return np.flatnonzero(cnt == need) if need \
             else np.flatnonzero(cnt > 0)
 
-    return post, hits, width
-
-
-def _match_all_kernel(index, exclude: str | None, dv_filter: str | None):
-    """``query == "*"`` (the ES ``match_all``) prep for the agg surface:
-    the match set is EVERY live doc — including zero-token docs that
-    appear in no posting list — so no positive postings scan runs at
-    all. Each shard's candidates are the dense offsets
-    ``arange(valid_width)``; ``exclude`` terms (if any) ride a postings
-    scan pruned to just those terms, LEFT-joined onto the full shard
-    list so shards without negative postings still emit their docs;
-    tombstones and ``dv_filter`` compose exactly as in _match_kernel.
-
-    Dense-ids precondition: refused after ``purge_deletes`` (purge
-    leaves doc_id gaps that only the postings know about — a dense
-    arange would resurrect purged docs). Tombstoned-but-unpurged docs
-    are excluded via the shared del_closure, so the pre-purge lifecycle
-    works fine.
-
-    The 100 TB argument: match-all over N docs is O(N) by definition;
-    this plan's only data movement is the per-shard partial rows the
-    caller's aggregation emits — the postings and the corpus are never
-    read (the one scanned input is the |exclude|-term slice, usually
-    nothing)."""
-    spark = index.spark
-    width = index.shard_width
-    n_docs = int(index.n_docs)
-    n_ids = int(getattr(index, "n_ids", 0) or 0)
-    if n_ids > n_docs:
-        raise ValueError(
-            "match-all ('*') is undefined after purge_deletes: purged "
-            "doc_ids leave gaps a dense scan cannot see — aggregate "
-            "with an explicit query, or reindex")
-    if n_docs == 0:
-        return None
-    acfg = index.cfg.analyzer
-    neg = sorted(set(tokenize_py(exclude, acfg))) if exclude else []
-    lex = index.lookup_terms(neg) if neg else {}
-    neg = [t for t in neg if t in lex]
-    n_shards = (n_docs + width - 1) // width
-    base = spark.createDataFrame([(s,) for s in range(n_shards)],
-                                 "shard int")
-    if neg:
-        buckets = sorted({lex[t]["bucket"] for t in neg})
-        negpost = (index.postings()
-                   .filter(F.col("bucket").isin(buckets)
-                           & F.col("term").isin(sorted(neg)))
-                   .select("shard", "term", "doc_ids", "tfs"))
-        post = base.join(negpost, "shard", "left")
-    else:
-        post = (base.withColumn("term", F.lit(None).cast("string"))
-                .withColumn("doc_ids", F.lit(None).cast("binary"))
-                .withColumn("tfs", F.lit(None).cast("binary")))
-    _require_dv(index, dv_filter)
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-    del_locs = _del_closure(index)
-
-    def hits(post_pdf, allowed_loc=None):
-        import numpy as np
-        from . import codec as C
-        shard = int(post_pdf["shard"].iloc[0])
-        start = shard * width
-        valid = min(width, n_docs - start)
-        cnt = np.zeros(width, dtype=np.int32)
-        cnt[:valid] = 1
-        for i in range(len(post_pdf)):
-            if post_pdf["doc_ids"].iloc[i] is None:
-                continue
-            ids, _ = C.decode_postings(post_pdf["doc_ids"].iloc[i],
-                                       post_pdf["tfs"].iloc[i])
-            cnt[ids - start] = -1
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                cnt[dl_] = -1
-        if dv_filter is not None:
-            from .docvalues import eval_filter
-            allow = np.zeros(width, dtype=bool)
-            allow[eval_filter(dv_dir, shard, dv_gen, dv_filter)] = True
-            cnt[~allow] = -1
-        if allowed_loc is not None:
-            allow = np.zeros(width, dtype=bool)
-            allow[allowed_loc] = True
-            cnt[~allow] = -1
-        return np.flatnonzero(cnt > 0)
-
-    return post, hits, width
+    return hits
 
 
 def _prep_match(index, query: str, mode: str, exclude, dv_filter):
-    """Shared query->kernel dispatch for every match-set aggregation:
-    ``"*"`` routes to the match-all kernel (no positive postings scan),
-    anything else analyzes and routes to _match_kernel; None = provably
-    empty."""
-    if (query or "").strip() == "*":
-        return _match_all_kernel(index, exclude, dv_filter)
-    qtf = query_terms(query, index.cfg.analyzer)
-    return _match_kernel(index, qtf, mode, exclude, dv_filter) \
-        if qtf else None
+    """The match set of a boolean query, or None when it is provably
+    empty (no analyzable term, an unknown term under AND, no live doc).
+    ``"*"`` is every live doc: its shards run whether or not they hold
+    postings, and only the ``exclude`` terms are scanned. It is refused
+    after ``purge_deletes``, whose doc_id gaps only the postings know
+    about (a dense scan would resurrect purged docs)."""
+    acfg = index.cfg.analyzer
+    n_docs = int(index.n_docs)
+    match_all = (query or "").strip() == "*"
+    if match_all:
+        if int(getattr(index, "n_ids", 0) or 0) > n_docs:
+            raise ValueError(
+                "match-all ('*') is undefined after purge_deletes: purged "
+                "doc_ids leave gaps a dense scan cannot see — aggregate "
+                "with an explicit query, or reindex")
+        terms = []
+    else:
+        terms = sorted(query_terms(query, acfg))
+        if not terms:
+            return None
+    neg = sorted(set(tokenize_py(exclude, acfg)) - set(terms)) \
+        if exclude else []
+    lex = index.lookup_terms(sorted(set(terms) | set(neg))) \
+        if terms or neg else {}
+    known = [t for t in terms if t in lex]
+    if (not match_all and not known) or n_docs == 0 \
+            or (mode == "AND" and len(known) < len(terms)):
+        return None
+    neg = [t for t in neg if t in lex]
+    scan = sorted(set(known) | set(neg))
+    width = index.shard_width
+    return _MatchSet(
+        lex, scan, _POST_COLS,
+        sum(int(lex[t]["df"]) for t in scan) + (n_docs if match_all else 0),
+        _hits_closure(index, neg, len(terms) if mode == "AND" else None,
+                      dv_filter, match_all),
+        -(-n_docs // width) if match_all else None)
+
+
+def _shard_job(index, m: _MatchSet, fn, ddl: str,
+               doc_filter=None) -> DataFrame:
+    """The distributed route's one job: ``fn(key, post_pdf,
+    allowed_loc=None)`` in every shard task of the pruned postings scan
+    (for ``"*"``: the shard list, left-joined with the negative terms'
+    postings), cogrouped with the filtered corpus when ``doc_filter`` is
+    given."""
+    post = Q._pruned_postings(index, m.lex, m.scan_terms, m.cols) \
+        if m.scan_terms else None
+    if m.n_shards is not None:
+        base = index.spark.range(m.n_shards).select(
+            F.col("id").cast("int").alias("shard"))
+        post = base.join(post, "shard", "left") if post is not None \
+            else base.select("shard", *[
+                F.lit(None).cast(t).alias(c) for c, t in (
+                    ("term", "string"), ("df", "long"),
+                    ("doc_ids", "binary"), ("tfs", "binary"))])
+    grouped = post.groupBy("shard")
+    if doc_filter is None:  # a grouped map takes exactly (key, data)
+        return grouped.applyInPandas(lambda key, pdf: fn(key, pdf), ddl)
+    width = index.shard_width
+
+    def fnf(key, post_pdf, allowed_pdf):
+        return fn(key, post_pdf, allowed_pdf["doc_id"].to_numpy(np.int64)
+                  - int(key[0]) * width)
+
+    allowed = _allowed_shards(index, doc_filter, width)
+    return grouped.cogroup(allowed.groupBy("shard")).applyInPandas(fnf, ddl)
+
+
+def _partials(index, m: _MatchSet, fn, ddl: str,
+              doc_filter=None) -> pd.DataFrame:
+    """Every shard's ``fn`` rows as one pandas frame typed by ``ddl``
+    (through the same Arrow schema on both routes): on the driver when
+    ``query._driver_route`` takes the match set's mass and no
+    ``doc_filter`` needs the corpus, else collected from one
+    ``_shard_job``."""
+    schema = _schema(ddl)
+    if doc_filter is None and Q._driver_route(m.mass):
+        parts = [p for p in Q._driver_shards(
+            index, m.lex, m.scan_terms, m.cols, fn,
+            None if m.n_shards is None else range(m.n_shards)) if len(p)]
+        table = pa.Table.from_pandas(
+            pd.concat(parts, ignore_index=True), schema=schema,
+            preserve_index=False) if parts else schema.empty_table()
+    else:
+        table = _shard_job(index, m, fn, ddl, doc_filter).toArrow()
+    return table.to_pandas()
+
+
+def _gatherer(dv_dir: str, dv_gen: int, shard: int, hit):
+    """The one docvalue extractor: ``gather(field, as_str=False) ->
+    (values, present)`` for the hits ``hit`` of ``shard``, aligned with
+    ``hit``, from the shard's cached docvalue slice (read on the first
+    call only, so a partial that reads no docvalues reads no slice).
+    ``present`` is False where the value is NULL or the doc has no
+    docvalue row (both mean "unknown"; callers skip those). Values are
+    int64 (timestamps at the frozen whole-second grain) or, for a string
+    column or with ``as_str`` (any column's Arrow string rendering),
+    strings with None where not present."""
+    import functools
+
+    import pyarrow.compute as pc
+
+    from .docvalues import _load_shard
+
+    @functools.cache
+    def rows():
+        tbl = _load_shard(dv_dir, shard, dv_gen)
+        if tbl is None or tbl.num_rows == 0:
+            return None
+        sloc = tbl.column("loc").to_numpy(zero_copy_only=False)
+        row = np.minimum(np.searchsorted(sloc, hit), sloc.size - 1)
+        return tbl, pa.array(row), sloc[row] == hit
+
+    def gather(field, as_str=False):
+        if rows() is None:
+            return (np.full(hit.size, None, dtype=object),
+                    np.zeros(hit.size, dtype=bool))
+        tbl, take, has_row = rows()
+        col = tbl.column(field).take(take)
+        present = has_row & ~col.is_null().to_numpy(zero_copy_only=False)
+        if as_str or pa.types.is_string(col.type) \
+                or pa.types.is_large_string(col.type):
+            vals = pc.cast(col, pa.string()).to_numpy(zero_copy_only=False)
+            return np.where(present, vals, None), present
+        if pa.types.is_timestamp(col.type):
+            micros = pc.fill_null(pc.cast(col, pa.timestamp("us"))
+                                  .cast(pa.int64()), 0)
+            return np.floor_divide(micros.to_numpy(zero_copy_only=False),
+                                   1_000_000), present
+        return pc.fill_null(col, 0).to_numpy(
+            zero_copy_only=False).astype(np.int64), present
+
+    return gather
+
+
+def _aggregate(index, m: "_MatchSet | None", ddl: str, partial, combine,
+               doc_filter=None):
+    """The scaffold: ``combine`` over the partial rows (schema ``ddl``)
+    that ``partial(shard, hit_locs, gather)`` makes of each shard's hits
+    in match set ``m``. A shard without hits, or a None ``partial``,
+    adds no rows; a None ``m`` (provably empty) gives ``combine`` none
+    at all."""
+    names = [n for n, _ in _columns(ddl)]
+    if m is None:
+        return combine(_schema(ddl).empty_table().to_pandas())
+    hits, dv_dir, dv_gen = m.hits, index.index_dir, int(index.n_docs)
+
+    def fn(key, post_pdf, allowed_loc=None):
+        shard = int(key[0])
+        hit = hits(shard, post_pdf, allowed_loc)
+        out = partial(shard, hit, _gatherer(dv_dir, dv_gen, shard, hit)) \
+            if hit.size else None
+        return pd.DataFrame({n: [] for n in names}) if out is None else out
+
+    return combine(_partials(index, m, fn, ddl, doc_filter))
+
+
+def _dv_kind(index, field: str, label: str, kinds=None) -> str:
+    """Check that ``field`` is a stored docvalue column and return its
+    kind: ``"str"``, ``"ts"``, ``"int"`` or the Arrow type's name. With
+    ``kinds``, any other kind is refused. ``label`` names the surface in
+    the errors."""
+    import pyarrow.dataset as pads
+
+    from .docvalues import dv_path
+    stored = list(index.doc_values or ())
+    if field not in stored:
+        raise ValueError(
+            f"{label} field {field!r} is not a docvalue column of this "
+            f"index (stored: {stored}; build with "
+            f"IndexConfig(doc_values=...))")
+    t = pads.dataset(dv_path(index.index_dir), format="parquet",
+                     partitioning="hive").schema.field(field).type
+    kind = ("str" if pa.types.is_string(t) or pa.types.is_large_string(t)
+            else "ts" if pa.types.is_timestamp(t)
+            else "int" if pa.types.is_integer(t) else str(t))
+    if kinds is not None and kind not in kinds:
+        names = {"str": "string", "int": "integer", "ts": "timestamp"}
+        raise ValueError(
+            f"{label}({field!r}): only "
+            f"{'/'.join(names[k] for k in kinds)} docvalue columns are "
+            f"supported; stored type is {t}")
+    return kind
+
+
+def _present(values, present):
+    """The present values of a ``gather`` result."""
+    return values[present]
+
+
+def _sum_by(p: pd.DataFrame, keys, col: str = "n") -> list:
+    """``col`` summed per ``keys`` over every shard's partial rows, as
+    ``(*keys, sum)`` tuples in key order."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    g = p.groupby(keys, sort=True)[col].sum().reset_index()
+    return list(zip(*[g[c].tolist() for c in keys + [col]]))
+
+
+def _stats_partial(n: int, values) -> tuple:
+    """(n, nv, mn, mx, sm): ``n`` docs and the count, min, max and exact
+    int64 sum of their present ``values``."""
+    v = values.astype(np.int64)
+    if not v.size:
+        return n, 0, 0, 0, 0
+    return n, v.size, int(v.min()), int(v.max()), int(v.sum())
+
+
+def _stats_row(p: pd.DataFrame) -> tuple:
+    """(n_docs, n_with_value, min_val, max_val, sum_val, avg_val) over
+    partial (n, nv, mn, mx, sm) rows: exact int64 reductions, then one
+    int -> double conversion each and one double division for avg."""
+    n, has = int(p["n"].sum()), p[p["nv"] > 0]
+    nv = int(has["nv"].sum())
+    if not nv:
+        return n, 0, None, None, None, None
+    sm = int(has["sm"].sum())
+    return (n, nv, float(has["mn"].min()), float(has["mx"].max()),
+            float(sm), float(sm) / nv)
 
 
 def match_count(index, query: str, mode: str = "OR",
@@ -217,55 +385,23 @@ def match_count(index, query: str, mode: str = "OR",
     via ``exclude``; ``doc_filter``/``dv_filter`` candidate
     restriction; tombstones excluded) — search and count can never
     disagree, because the arity/mask logic is one shared kernel shape.
-
-    Plan (the 100 TB argument): the same pruned postings scan as
-    ``search`` reading ONLY the doc_ids/tfs streams (no dls, no WAND
-    columns), then each shard task emits ONE int64 — a count moves the
-    least data any exact answer can. No corpus scan unless
-    ``doc_filter`` asks for one (same cogrouped allowed-set plan as
-    search, predicate pushed into the corpus read).
+    A ``doc_filter`` count runs the cogrouped job (the predicate pushed
+    into the corpus read, one int64 per allowed doc shuffled on the
+    shard key), whatever its size.
     """
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
-    key = ("mc", query, mode, exclude, doc_filter, dv_filter)
 
     def build():
-        spark = index.spark
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:  # empty match set: a driver-only LocalRelation
-            return spark.range(1).select(
-                F.lit(0).cast("long").alias("n_docs"))
-        post, hits, width = prep
+        n = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "n long", lambda shard, hit, gather: pd.DataFrame(
+                {"n": [hit.size]}),
+            lambda p: int(p["n"].sum()), doc_filter)
+        return _held(index, COUNT_SCHEMA, [(n,)])
 
-        if doc_filter is not None:
-            allowed = _allowed_shards(index, doc_filter, width)
-
-            def fnf(key_, post_pdf, allowed_pdf):
-                import numpy as np
-                import pandas as pd
-                if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                    return pd.DataFrame({"n": []})
-                shard = int(post_pdf["shard"].iloc[0])
-                loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                       - shard * width)
-                return pd.DataFrame({"n": [int(hits(post_pdf, loc).size)]})
-
-            partial = (post.groupBy("shard")
-                       .cogroup(allowed.groupBy("shard"))
-                       .applyInPandas(fnf, "n long"))
-        else:
-            def fn(key_, post_pdf):
-                import pandas as pd
-                if len(post_pdf) == 0:
-                    return pd.DataFrame({"n": []})
-                return pd.DataFrame({"n": [int(hits(post_pdf).size)]})
-
-            partial = post.groupBy("shard").applyInPandas(fn, "n long")
-        return partial.agg(F.coalesce(F.sum("n"), F.lit(0))
-                           .cast("long").alias("n_docs"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("mc", query, mode, exclude, doc_filter, dv_filter), build)
 
 
 def match_stats(index, query: str, field: str, mode: str = "OR",
@@ -282,122 +418,30 @@ def match_stats(index, query: str, field: str, mode: str = "OR",
     granularity; sub-second fractions would force float partial sums).
     NULL/absent values are excluded from the value stats but counted in
     ``n_docs``. Only timestamp/integer docvalue columns are accepted: a
-    float column's cross-shard sum would depend on Spark's reduction
-    order — the engine's results are bit-reproducible everywhere else,
-    and a nondeterministic aggregate would be the one liar in the API.
-    The whole pipeline reduces exact int64s (epoch-seconds x docs stays
+    float column's cross-shard sum would depend on the reduction order —
+    the engine's results are bit-reproducible everywhere else, and a
+    nondeterministic aggregate would be the one liar in the API. The
+    whole pipeline reduces exact int64s (epoch-seconds x docs stays
     within int64 up to ~5e9 matched docs); the DuckDB oracle twin
     reduces the identical integers, and the final avg is one identical
     int/int double division on both sides.
-
-    Plan: pruned postings scan -> per-shard kernel resolves the match
-    set and gathers values from its OWN shard's cached docvalue slice
-    (no corpus scan, no cogroup, no extra shuffle) -> each task emits
-    ONE partial row (count/min/max/sum as int64) -> a single tiny final
-    aggregation.
     """
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"stats field {field!r} is not a docvalue column of this "
-            f"index (stored: {list(index.doc_values or ())}; build with "
-            f"IndexConfig(doc_values=...))")
-    # type gate from the store's parquet schema (driver-side metadata)
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    ftype = schema.field(field).type
-    is_ts = pa.types.is_timestamp(ftype)
-    if not (is_ts or pa.types.is_integer(ftype)):
-        raise ValueError(
-            f"match_stats({field!r}): only timestamp/integer docvalue "
-            f"columns are supported — a float column's cross-shard sum "
-            f"would depend on reduction order (non-reproducible); "
-            f"stored type is {ftype}")
-    key = ("ms", query, field, mode, exclude, dv_filter)
+    _dv_kind(index, field, "match_stats", ("ts", "int"))
 
     def build():
-        spark = index.spark
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        empty = spark.range(1).select(
-            F.lit(0).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_with_value"),
-            *[F.lit(None).cast("double").alias(c)
-              for c in ("min_val", "max_val", "sum_val", "avg_val")])
-        if prep is None:
-            return empty
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+        row = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "n long, nv long, mn long, mx long, sm long",
+            lambda shard, hit, gather: pd.DataFrame(
+                [_stats_partial(hit.size, _present(*gather(field)))],
+                columns=["n", "nv", "mn", "mx", "sm"]),
+            _stats_row)
+        return _held(index, STATS_SCHEMA, [row])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            cols = ["n", "nv", "mn", "mx", "sm"]
-            if len(post_pdf) == 0:
-                return pd.DataFrame({c: [] for c in cols})
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return pd.DataFrame({c: [] for c in cols})
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return pd.DataFrame({"n": [int(hit.size)], "nv": [0],
-                                     "mn": [0], "mx": [0], "sm": [0]})
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            col = slice_tbl.column(field)
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            if is_ts:
-                # fill_null BEFORE to_numpy keeps the array int64 (a
-                # nullable cast would surface as lossy float64); whole
-                # seconds via floor division — exact
-                micros = pc.fill_null(
-                    pc.cast(col, _pa.timestamp("us")).cast(_pa.int64()),
-                    0).to_numpy(zero_copy_only=False)
-                vals = np.floor_divide(micros, 1_000_000)
-            else:
-                vals = pc.fill_null(col, 0).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-            # hit loc -> slice row (sloc is written sorted)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            rows = rows[~nulls[rows]]
-            if rows.size == 0:
-                return pd.DataFrame({"n": [int(hit.size)], "nv": [0],
-                                     "mn": [0], "mx": [0], "sm": [0]})
-            v = vals[rows]
-            return pd.DataFrame({"n": [int(hit.size)],
-                                 "nv": [int(v.size)],
-                                 "mn": [int(v.min())],
-                                 "mx": [int(v.max())],
-                                 "sm": [int(v.sum())]})
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "n long, nv long, mn long, mx long, sm long")
-        agg = partial.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("nv"), F.lit(0)).cast("long").alias("_nv"),
-            F.min(F.when(F.col("nv") > 0, F.col("mn"))).alias("_mn"),
-            F.max(F.when(F.col("nv") > 0, F.col("mx"))).alias("_mx"),
-            F.sum(F.when(F.col("nv") > 0, F.col("sm"))).alias("_sm"))
-        return agg.select(
-            "n_docs", F.col("_nv").alias("n_with_value"),
-            F.col("_mn").cast("double").alias("min_val"),
-            F.col("_mx").cast("double").alias("max_val"),
-            F.col("_sm").cast("double").alias("sum_val"),
-            F.when(F.col("_nv") > 0,
-                   F.col("_sm").cast("double") / F.col("_nv"))
-            .alias("avg_val"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("ms", query, field, mode, exclude, dv_filter), build)
 
 
 def match_cardinality(index, query: str, field: str, mode: str = "OR",
@@ -409,91 +453,30 @@ def match_cardinality(index, query: str, field: str, mode: str = "OR",
 
     Returns one row ``(n_values:long)`` — the number of distinct
     non-NULL values of ``field`` among docs matching the boolean query
-    (same shared arity/NOT/dv_filter/tombstone kernel as match_count,
-    so count surfaces can never disagree on membership). The oracle
-    twin is ``COUNT(DISTINCT field)`` over the matching docs.
-
-    Plan (the 100 TB argument): pruned postings scan -> each shard task
-    resolves its match set and emits its OWN shard's DISTINCT values
-    (np.unique over the gathered docvalue slice — in-task, the map-side
-    combine of a distinct) -> one hash-distinct exchange over per-shard
-    distinct values -> count. Shuffle volume is bounded by
-    sum(per-shard distinct values): for low-cardinality fields it is
-    shards x values; for unique-per-doc fields it degrades to the match
-    set size — the information-theoretic floor for an EXACT distinct
-    (Spark's own COUNT DISTINCT moves the same), which is why engines
-    offer HLL when approximation is acceptable. Exactness keeps the
-    result bit-reproducible (the engine's contract) and DuckDB-checkable.
+    (timestamps at the whole-second grain), with match_count's
+    membership. The oracle twin is ``COUNT(DISTINCT field)`` over the
+    matching docs. Each shard emits its own distinct values, so the
+    partial rows are bounded by the per-shard distinct values — for a
+    unique-per-doc field, the match set: the floor for an EXACT
+    distinct, which is why engines offer HLL when approximation is
+    acceptable.
     """
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"cardinality field {field!r} is not a docvalue column of "
-            f"this index (stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    ftype = schema.field(field).type
-    is_ts = pa.types.is_timestamp(ftype)
-    key = ("mcard", query, field, mode, exclude, dv_filter)
+    kind = _dv_kind(index, field, "match_cardinality")
+
+    def partial(shard, hit, gather):
+        return pd.DataFrame({"v": np.unique(_present(*gather(field)))})
 
     def build():
-        spark = index.spark
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.range(1).select(
-                F.lit(0).cast("long").alias("n_values"))
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-        out_t = "v string" if pa.types.is_string(ftype) else "v long"
+        n = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "v string" if kind == "str" else "v long", partial,
+            lambda p: int(p["v"].nunique()))
+        return _held(index, "n_values long", [(n,)])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({"v": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return empty
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            col = slice_tbl.column(field)
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            rows = rows[~nulls[rows]]
-            if rows.size == 0:
-                return empty
-            if is_ts:
-                # whole-second epoch — the same frozen granularity as
-                # match_stats/match_histogram (the twin uses epoch(ts))
-                micros = pc.fill_null(
-                    pc.cast(col, _pa.timestamp("us")).cast(_pa.int64()),
-                    0).to_numpy(zero_copy_only=False)
-                vals = np.unique(np.floor_divide(micros[rows], 1_000_000))
-                return pd.DataFrame({"v": vals.astype(np.int64)})
-            arr = col.take(_pa.array(rows, _pa.int64()))
-            uniq = pc.unique(arr)
-            return pd.DataFrame({"v": uniq.to_pandas()})
-
-        partial = post.groupBy("shard").applyInPandas(fn, out_t)
-        return partial.agg(
-            F.count_distinct("v").cast("long").alias("n_values"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("mcard", query, field, mode, exclude, dv_filter), build)
 
 
 def match_missing(index, query: str, field: str, mode: str = "OR",
@@ -508,65 +491,25 @@ def match_missing(index, query: str, field: str, mode: str = "OR",
     Returns one row ``(n_docs:long, n_missing:long)`` — match-set size
     and its missing-value count; works for ANY stored column type
     (unlike match_stats, which is numeric-only — a missing count has no
-    reduction-order hazard).
-
-    Plan: the shared match kernel; each shard task counts its own
-    missing offsets against its cached docvalue slice (two searchsorted
-    passes, no value materialization) and emits ONE partial row; a tiny
-    final sum. Shuffle volume = one row per shard."""
-    from .query import _warn_if_stale
+    reduction-order hazard)."""
     _warn_if_stale(index)
     mode = mode.upper()
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"missing-agg field {field!r} is not a docvalue column of "
-            f"this index (stored: {list(index.doc_values or ())})")
-    key = ("mmiss", query, field, mode, exclude, dv_filter)
+    _dv_kind(index, field, "match_missing")
+
+    def partial(shard, hit, gather):
+        present = gather(field)[1]
+        return pd.DataFrame({"n": [hit.size],
+                             "miss": [hit.size - int(present.sum())]})
 
     def build():
-        spark = index.spark
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.range(1).select(
-                F.lit(0).cast("long").alias("n_docs"),
-                F.lit(0).cast("long").alias("n_missing"))
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+        row = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "n long, miss long", partial,
+            lambda p: (int(p["n"].sum()), int(p["miss"].sum())))
+        return _held(index, "n_docs long, n_missing long", [row])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({"n": [], "miss": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                # no docvalue rows in this shard: everything is missing
-                return pd.DataFrame({"n": [int(hit.size)],
-                                     "miss": [int(hit.size)]})
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            nulls = slice_tbl.column(field).is_null() \
-                .to_numpy(zero_copy_only=False)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            n_present = int(np.count_nonzero(~nulls[idx_[ok]]))
-            return pd.DataFrame({"n": [int(hit.size)],
-                                 "miss": [int(hit.size) - n_present]})
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "n long, miss long")
-        return partial.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("miss"), F.lit(0)).cast("long")
-            .alias("n_missing"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("mmiss", query, field, mode, exclude, dv_filter), build)
 
 
 def match_string_stats(index, query: str, field: str, mode: str = "OR",
@@ -580,132 +523,74 @@ def match_string_stats(index, query: str, field: str, mode: str = "OR",
     reductions are exact int64s (char counts, length sum); the only
     float math is the final entropy/avg division, computed ONCE
     driver-side over the globally-merged counts in frozen char-asc
-    order — bit-reproducible regardless of shard count.
-
-    Plan: shared match kernel; each shard emits its length partial (one
-    row) plus its own char-count rows (bounded by its alphabet, never
-    docs); one tiny hash agg merges counts; the alphabet-sized result is
-    collected driver-side (metadata-sized) for the frozen-order entropy
-    sum. The returned single row is a LocalRelation — no further job."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
+    order — bit-reproducible regardless of shard count. Each shard
+    emits one length row (``c`` NULL) plus one row per character it
+    holds (bounded by its alphabet, never docs)."""
+    import math
+    from collections import Counter
     _warn_if_stale(index)
     mode = mode.upper()
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"string_stats field {field!r} is not a docvalue column of "
-            f"this index (stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    if not pa.types.is_string(schema.field(field).type):
-        raise ValueError(
-            f"match_string_stats({field!r}) wants a string docvalue "
-            f"(stored type: {schema.field(field).type}); use match_stats "
-            f"for numeric/timestamp columns")
-    key = ("msstr", query, field, mode, exclude, dv_filter)
+    _dv_kind(index, field, "match_string_stats", ("str",))
 
-    def build():
-        import math
-        spark = index.spark
+    def partial(shard, hit, gather):
+        vals = _present(*gather(field)).tolist()
+        lens = [len(v) for v in vals]
+        chars = Counter("".join(vals))
+        return pd.DataFrame(
+            [(None, 0, hit.size, len(lens), min(lens, default=0),
+              max(lens, default=0), sum(lens))]
+            + [(c, n, 0, 0, 0, 0, 0) for c, n in chars.items()],
+            columns=["c", "cnt", "n", "nv", "mn", "mx", "sm"])
 
-        def _result(n, nv, mn, mx, sm, ent):
-            return spark.range(1).select(
-                F.lit(n).cast("long").alias("n_docs"),
-                F.lit(nv).cast("long").alias("n_with_value"),
-                F.lit(mn).cast("long").alias("min_len"),
-                F.lit(mx).cast("long").alias("max_len"),
-                (F.lit(float(sm) / nv) if nv else F.lit(None))
-                .cast("double").alias("avg_len"),
-                F.lit(ent).cast("double").alias("entropy"))
-
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return _result(0, 0, None, None, 0, 0.0)
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            from .docvalues import _load_shard
-            cols = ("c", "cnt", "n", "nv", "mn", "mx", "sm")
-            empty = pd.DataFrame({k: [] for k in cols})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return pd.DataFrame(
-                    {"c": [None], "cnt": [0], "n": [int(hit.size)],
-                     "nv": [0], "mn": [0], "mx": [0], "sm": [0]})
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            col = slice_tbl.column(field)
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            rows = rows[~nulls[rows]]
-            if rows.size == 0:
-                return pd.DataFrame(
-                    {"c": [None], "cnt": [0], "n": [int(hit.size)],
-                     "nv": [0], "mn": [0], "mx": [0], "sm": [0]})
-            vals = col.take(_pa.array(rows, _pa.int64())) \
-                .to_pandas().tolist()
-            lens = [len(v) for v in vals]
-            from collections import Counter
-            cc = Counter("".join(vals))
-            out = pd.DataFrame({"c": list(cc.keys()),
-                                "cnt": list(cc.values())})
-            out["n"] = 0
-            out["nv"] = 0
-            out["mn"] = 0
-            out["mx"] = 0
-            out["sm"] = 0
-            head = pd.DataFrame(
-                {"c": [None], "cnt": [0], "n": [int(hit.size)],
-                 "nv": [int(len(lens))], "mn": [int(min(lens))],
-                 "mx": [int(max(lens))], "sm": [int(sum(lens))]})
-            return pd.concat([head, out], ignore_index=True)
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "c string, cnt long, n long, nv long, mn long, mx long, "
-                "sm long")
-        merged = partial.groupBy("c").agg(
-            F.sum("cnt").alias("cnt"), F.sum("n").alias("n"),
-            F.sum("nv").alias("nv"),
-            F.min(F.when(F.col("nv") > 0, F.col("mn"))).alias("mn"),
-            F.max(F.when(F.col("nv") > 0, F.col("mx"))).alias("mx"),
-            F.sum("sm").alias("sm")).collect()  # alphabet-sized
-        n = nv = sm = 0
-        mn = mx = None
-        counts = {}
-        for r in merged:
-            if r.c is None:
-                n, nv, sm = int(r.n), int(r.nv), int(r.sm)
-                mn = None if r.mn is None else int(r.mn)
-                mx = None if r.mx is None else int(r.mx)
-            elif r.cnt:
-                counts[r.c] = counts.get(r.c, 0) + int(r.cnt)
-        if not merged:
-            return _result(0, 0, None, None, 0, 0.0)
+    def combine(p):
+        lens = p[p["c"].isna()]
+        n, nv, sm = (int(lens[c].sum()) for c in ("n", "nv", "sm"))
+        has = lens[lens["nv"] > 0]
+        counts = {c: int(x) for c, x in
+                  _sum_by(p[p["c"].notna()], "c", "cnt")}
         total = sum(counts.values())
         ent = 0.0
         for ch in sorted(counts):  # frozen order: char asc
-            p = counts[ch] / total
-            ent -= p * math.log2(p)
-        return _result(n, nv, mn, mx, sm, ent)
+            q = counts[ch] / total
+            ent -= q * math.log2(q)
+        return (n, nv, int(has["mn"].min()) if nv else None,
+                int(has["mx"].max()) if nv else None,
+                float(sm) / nv if nv else None, ent)
 
-    return _plan_cached(index, key, build)
+    def build():
+        row = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "c string, cnt long, n long, nv long, mn long, mx long, "
+            "sm long", partial, combine)
+        return _held(index, "n_docs long, n_with_value long, min_len long, "
+                            "max_len long, avg_len double, entropy double",
+                     [row])
+
+    return _plan_cached(
+        index, ("msstr", query, field, mode, exclude, dv_filter), build)
 
 
-HISTOGRAM_SCHEMA = "bucket_start long, n_docs long"
+def _histogram_rows(index, query, field, interval_s, mode, exclude,
+                    dv_filter) -> list:
+    """Sorted ``(bucket_start, n_docs)`` pairs of ``match_histogram``."""
+    def partial(shard, hit, gather):
+        b = np.floor_divide(_present(*gather(field)).astype(np.int64),
+                            interval_s) * interval_s
+        ub, cnt = np.unique(b, return_counts=True)
+        return pd.DataFrame({"b": ub, "n": cnt})
+
+    return _aggregate(
+        index, _prep_match(index, query, mode, exclude, dv_filter),
+        "b long, n long", partial, lambda p: _sum_by(p, "b"))
+
+
+def _histogram_args(index, field: str, interval_s, label: str) -> int:
+    interval_s = int(interval_s)
+    if interval_s <= 0:
+        raise ValueError("interval_s must be a positive whole number "
+                         "of seconds")
+    _dv_kind(index, field, label, ("ts", "int"))
+    return interval_s
 
 
 def match_histogram(index, query: str, field: str, interval_s: int,
@@ -722,96 +607,32 @@ def match_histogram(index, query: str, field: str, interval_s: int,
     precision, floor semantics — the frozen rule the SQL twin
     replicates with integer division). Docs with NULL/absent values
     contribute no bucket (count them via ``match_count`` if needed).
-
-    Plan: the same pruned postings scan + shared arity kernel as
-    ``match_count``; each shard task histograms its OWN docvalue slice
-    in-task (np.unique over int64 bucket ids) and emits one
-    (bucket, partial-count) row per NON-EMPTY bucket — shuffle volume
-    is bounded by buckets-per-shard, never docs. One narrow hash
-    aggregation finishes; everything reduced is an exact int64.
+    Each shard emits one row per NON-EMPTY bucket it holds.
     """
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
-    interval_s = int(interval_s)
-    if interval_s <= 0:
-        raise ValueError("interval_s must be a positive whole number "
-                         "of seconds")
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"histogram field {field!r} is not a docvalue column of this "
-            f"index (stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    ftype = schema.field(field).type
-    is_ts = pa.types.is_timestamp(ftype)
-    if not (is_ts or pa.types.is_integer(ftype)):
-        raise ValueError(
-            f"match_histogram({field!r}): only timestamp/integer "
-            f"docvalue columns are supported; stored type is {ftype}")
-    key = ("mh", query, field, interval_s, mode, exclude, dv_filter)
-
-    def build():
-        spark = index.spark
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.createDataFrame([], HISTOGRAM_SCHEMA)
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({"b": [], "n": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return empty
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            col = slice_tbl.column(field)
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            if is_ts:
-                micros = pc.fill_null(
-                    pc.cast(col, _pa.timestamp("us")).cast(_pa.int64()),
-                    0).to_numpy(zero_copy_only=False)
-                vals = np.floor_divide(micros, 1_000_000)
-            else:
-                vals = pc.fill_null(col, 0).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            rows = rows[~nulls[rows]]
-            if rows.size == 0:
-                return empty
-            buckets = np.floor_divide(vals[rows], interval_s) * interval_s
-            ub, cnt = np.unique(buckets, return_counts=True)
-            return pd.DataFrame({"b": ub.astype(np.int64),
-                                 "n": cnt.astype(np.int64)})
-
-        partial = post.groupBy("shard").applyInPandas(fn, "b long, n long")
-        return (partial.groupBy("b")
-                .agg(F.sum("n").cast("long").alias("n_docs"))
-                .select(F.col("b").alias("bucket_start"), "n_docs")
-                .orderBy("bucket_start"))
-
-    return _plan_cached(index, key, build)
+    interval_s = _histogram_args(index, field, interval_s,
+                                 "match_histogram")
+    return _plan_cached(
+        index, ("mh", query, field, interval_s, mode, exclude, dv_filter),
+        lambda: _held(index, HISTOGRAM_SCHEMA, _histogram_rows(
+            index, query, field, interval_s, mode, exclude, dv_filter)))
 
 
-PIPELINE_SCHEMA = ("bucket_start long, n_docs long, cum_docs long, "
-                   "delta_docs long")
+def _pipeline_rows(index, query, field, interval_s, mode, exclude,
+                   dv_filter) -> list:
+    """``match_histogram_pipeline``'s rows: the histogram densified from
+    its first to its last bucket, with running total and derivative."""
+    counts = dict(_histogram_rows(index, query, field, interval_s, mode,
+                                  exclude, dv_filter))
+    rows, cum, prev = [], 0, None
+    for b in range(min(counts), max(counts) + 1, interval_s) \
+            if counts else ():
+        n = counts.get(b, 0)
+        cum += n
+        rows.append((b, n, cum, None if prev is None else n - prev))
+        prev = n
+    return rows
 
 
 def match_histogram_pipeline(index, query: str, field: str, interval_s: int,
@@ -827,44 +648,19 @@ def match_histogram_pipeline(index, query: str, field: str, interval_s: int,
     contract, which is only well-defined over a gap-free bucket axis).
 
     Returns ``(bucket_start, n_docs, cum_docs, delta_docs)`` ordered by
-    ``bucket_start``; all counts exact int64.
-
-    Plan (the 100 TB argument): the heavy work is ``match_histogram``'s
-    unchanged one-job plan — pruned postings scan, per-shard IN-TASK
-    histogramming, shuffle bounded by buckets-per-shard. Densification
-    and the two window columns run over that RESULT, a relation bounded
-    by ``(max - min) / interval_s`` rows — the queried time range, never
-    the corpus — so the ``sequence``/``explode`` grid and the
-    single-partition window cost metadata. (A corpus 100x larger with
-    the same time span yields the same number of bucket rows.)
+    ``bucket_start``; all counts exact int64. The pipeline runs in
+    pandas over ``match_histogram``'s combined rows, which the queried
+    time range bounds, never the corpus (the ES pipeline aggs also run
+    over the reduced buckets).
     """
-    h = match_histogram(index, query, field, interval_s, mode, exclude,
-                        dv_filter)
-    key = ("mhp", query, field, int(interval_s), mode.upper(), exclude,
-           dv_filter)
-
-    def build():
-        from pyspark.sql import Window
-        step = int(interval_s)
-        grid = (h.agg(F.min("bucket_start").alias("lo"),
-                      F.max("bucket_start").alias("hi"))
-                .where(F.col("lo").isNotNull())
-                .select(F.explode(F.sequence("lo", "hi", F.lit(step)))
-                        .alias("bucket_start")))
-        dense = (grid.join(h, "bucket_start", "left")
-                 .select("bucket_start",
-                         F.coalesce("n_docs", F.lit(0)).cast("long")
-                         .alias("n_docs")))
-        w = Window.orderBy("bucket_start")
-        return (dense
-                .withColumn("cum_docs",
-                            F.sum("n_docs").over(w).cast("long"))
-                .withColumn("delta_docs",
-                            (F.col("n_docs") - F.lag("n_docs").over(w))
-                            .cast("long"))
-                .orderBy("bucket_start"))
-
-    return _plan_cached(index, key, build)
+    _warn_if_stale(index)
+    mode = mode.upper()
+    interval_s = _histogram_args(index, field, interval_s,
+                                 "match_histogram_pipeline")
+    return _plan_cached(
+        index, ("mhp", query, field, interval_s, mode, exclude, dv_filter),
+        lambda: _held(index, PIPELINE_SCHEMA, _pipeline_rows(
+            index, query, field, interval_s, mode, exclude, dv_filter)))
 
 
 def match_histogram_having(index, query: str, field: str, interval_s: int,
@@ -879,19 +675,30 @@ def match_histogram_having(index, query: str, field: str, interval_s: int,
     bucket, and a predicate over NULL drops the bucket — standard SQL
     three-valued logic, the frozen rule the DuckDB twin shares).
 
-    Keep the predicate to the ANSI subset Spark SQL and DuckDB parse
-    identically (the dv_filter rule) so the oracle twin is the literal
-    same string. Plan: the parent pipeline's unchanged one-job plan +
-    a Filter over the bucket-bounded result — selection never touches
-    the corpus, exactly like the ES pipeline agg (which runs driver-side
-    over the reduced buckets)."""
-    h = match_histogram_pipeline(index, query, field, interval_s, mode,
-                                 exclude, dv_filter)
-    key = ("mhh", query, field, int(interval_s), having, mode.upper(),
-           exclude, dv_filter)
-    return _plan_cached(index, key,
-                        lambda: h.where(F.expr(having))
-                        .orderBy("bucket_start"))
+    The predicate runs in the embedded DuckDB over the pipeline rows
+    (the ``dv_filter`` machinery), so keep it to the ANSI subset Spark
+    SQL and DuckDB parse identically; the oracle twin is the literal
+    same string."""
+    from .docvalues import _con
+    _warn_if_stale(index)
+    mode = mode.upper()
+    interval_s = _histogram_args(index, field, interval_s,
+                                 "match_histogram_having")
+
+    def build():
+        rows = _pipeline_rows(index, query, field, interval_s, mode,
+                              exclude, dv_filter)
+        buckets = pa.table(  # noqa: F841 — DuckDB reads it by name
+            [pa.array(c, pa.int64()) for c in zip(*rows)] if rows
+            else [pa.array([], pa.int64())] * 4,
+            names=["bucket_start", "n_docs", "cum_docs", "delta_docs"])
+        kept = _con().execute(f"SELECT * FROM buckets WHERE {having} "
+                              f"ORDER BY bucket_start").fetchall()
+        return _held(index, PIPELINE_SCHEMA, kept)
+
+    return _plan_cached(
+        index, ("mhh", query, field, interval_s, having, mode, exclude,
+                dv_filter), build)
 
 
 def match_histogram_top(index, query: str, field: str, interval_s: int,
@@ -906,20 +713,24 @@ def match_histogram_top(index, query: str, field: str, interval_s: int,
     contract — bucket_sort runs over the parent's emitted buckets, and
     the parent emits min_doc_count >= 1 here).
 
-    Returns ``(bucket_start, n_docs)``, ordered by the sort above.
-    Plan: the parent histogram's one-job plan + TakeOrderedAndProject
-    over the bucket-bounded result — the sort input is |buckets| rows,
-    never docs (the 100 TB argument is the parent's)."""
-    h = match_histogram(index, query, field, interval_s, mode, exclude,
-                        dv_filter)
+    Returns ``(bucket_start, n_docs)``, ordered by the sort above."""
+    _warn_if_stale(index)
+    mode = mode.upper()
     n = int(n)
     if n <= 0:
         raise ValueError("n must be >= 1")
-    key = ("mht", query, field, int(interval_s), n, bool(asc),
-           mode.upper(), exclude, dv_filter)
-    order = [F.col("n_docs").asc() if asc else F.col("n_docs").desc(),
-             F.col("bucket_start").asc()]
-    return _plan_cached(index, key, lambda: h.orderBy(*order).limit(n))
+    interval_s = _histogram_args(index, field, interval_s,
+                                 "match_histogram_top")
+
+    def build():
+        rows = _histogram_rows(index, query, field, interval_s, mode,
+                               exclude, dv_filter)
+        rows.sort(key=lambda r: (r[1] if asc else -r[1], r[0]))
+        return _held(index, HISTOGRAM_SCHEMA, rows[:n])
+
+    return _plan_cached(
+        index, ("mht", query, field, interval_s, n, bool(asc), mode,
+                exclude, dv_filter), build)
 
 
 def match_ranges(index, query: str, field: str, edges,
@@ -936,103 +747,34 @@ def match_ranges(index, query: str, field: str, edges,
     bucket ``searchsorted(edges, v, right)``; the SQL twin replicates it
     with a CASE chain of ``v < e`` tests). Returns ``(lo, hi, n_docs)``
     ordered by bucket position, NULL lo/hi on the unbounded ends; empty
-    buckets emit no row; NULL/absent values contribute nothing.
-
-    Plan: identical to ``match_histogram`` — pruned scan + shared arity
-    kernel, each shard bincounts its OWN docvalue slice in-task and
-    emits one (bucket, partial) row per non-empty bucket (shuffle volume
-    <= n+1 rows per shard), one narrow final aggregation, then a
-    broadcast join against the <= n+1-row driver-built edge table."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
+    buckets emit no row; NULL/absent values contribute nothing."""
     _warn_if_stale(index)
     mode = mode.upper()
     edges = [int(e) for e in edges]
     if not edges or sorted(set(edges)) != edges:
         raise ValueError("edges must be a non-empty sorted list of "
                          "distinct integers")
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"range field {field!r} is not a docvalue column of this "
-            f"index (stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    ftype = schema.field(field).type
-    is_ts = pa.types.is_timestamp(ftype)
-    if not (is_ts or pa.types.is_integer(ftype)):
-        raise ValueError(
-            f"match_ranges({field!r}): only timestamp/integer docvalue "
-            f"columns are supported; stored type is {ftype}")
-    key = ("mr", query, field, tuple(edges), mode, exclude, dv_filter)
+    _dv_kind(index, field, "match_ranges", ("ts", "int"))
+    bounds = [None] + edges + [None]
+
+    def partial(shard, hit, gather):
+        b = np.searchsorted(np.asarray(edges, dtype=np.int64),
+                            _present(*gather(field)).astype(np.int64),
+                            side="right")
+        cnt = np.bincount(b, minlength=len(edges) + 1)
+        nz = np.flatnonzero(cnt)
+        return pd.DataFrame({"b": nz, "n": cnt[nz]})
 
     def build():
-        spark = index.spark
-        out_schema = "lo long, hi long, n_docs long"
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.createDataFrame([], out_schema)
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-        n_edges = len(edges)
+        rows = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "b long, n long", partial, lambda p: _sum_by(p, "b"))
+        return _held(index, "lo long, hi long, n_docs long",
+                     [(bounds[b], bounds[b + 1], n) for b, n in rows])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({"b": [], "n": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return empty
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            col = slice_tbl.column(field)
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            if is_ts:
-                micros = pc.fill_null(
-                    pc.cast(col, _pa.timestamp("us")).cast(_pa.int64()),
-                    0).to_numpy(zero_copy_only=False)
-                vals = np.floor_divide(micros, 1_000_000)
-            else:
-                vals = pc.fill_null(col, 0).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            rows = rows[~nulls[rows]]
-            if rows.size == 0:
-                return empty
-            b = np.searchsorted(np.asarray(edges, dtype=np.int64),
-                                vals[rows], side="right")
-            cnt = np.bincount(b, minlength=n_edges + 1)
-            nz = np.flatnonzero(cnt)
-            return pd.DataFrame({"b": nz.astype(np.int64),
-                                 "n": cnt[nz].astype(np.int64)})
-
-        partial = post.groupBy("shard").applyInPandas(fn, "b long, n long")
-        # <= n+1-row driver-built edge table; the broadcast join decorates
-        # bucket ids with their bounds (NULL on the unbounded ends)
-        bounds = spark.createDataFrame(
-            [(i,
-              edges[i - 1] if i > 0 else None,
-              edges[i] if i < n_edges else None)
-             for i in range(n_edges + 1)],
-            "b long, lo long, hi long")
-        return (partial.groupBy("b")
-                .agg(F.sum("n").cast("long").alias("n_docs"))
-                .join(F.broadcast(bounds), "b")
-                .orderBy("b").select("lo", "hi", "n_docs"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("mr", query, field, tuple(edges), mode, exclude, dv_filter),
+        build)
 
 
 def facet_stats(index, query: str, group_field: str, stat_field: str,
@@ -1055,131 +797,58 @@ def facet_stats(index, query: str, group_field: str, stat_field: str,
     columns are gated to timestamp/integer exactly like ``match_stats``
     (exact int64 reduction; timestamps at whole-second precision).
 
-    Plan: pruned scan + shared arity kernel; each shard task reduces its
-    OWN docvalue slice per group in-task (pandas groupby over <= |shard
-    hits| rows) and emits one partial row per (group, shard) — shuffle
-    volume is groups-per-shard, never docs; one narrow final hash
-    aggregation over group values."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
+    ``order_by`` (the ES terms-agg ``_order_`` on a stats sub-agg
+    metric): ``count`` (default), ``min``, ``max``, ``sum`` or ``avg``,
+    descending unless ``ascending``. Frozen rule: a NULL metric (a group
+    with no stat values) ranks LAST either direction, ties break on
+    facet_value asc with the NULL group first; ``n`` keeps the first n
+    groups."""
     _warn_if_stale(index)
     mode = mode.upper()
-    for f_ in (group_field, stat_field):
-        if f_ not in (index.doc_values or ()):
-            raise ValueError(
-                f"{f_!r} is not a docvalue column of this index "
-                f"(stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    stype = schema.field(stat_field).type
-    is_ts = pa.types.is_timestamp(stype)
-    if not (is_ts or pa.types.is_integer(stype)):
-        raise ValueError(
-            f"facet_stats(stat_field={stat_field!r}): only timestamp/"
-            f"integer docvalue columns are supported; stored type is "
-            f"{stype}")
+    _dv_kind(index, group_field, "facet_stats")
+    _dv_kind(index, stat_field, "facet_stats", ("ts", "int"))
     order_by = order_by.lower()
-    if order_by not in ("count", "min", "max", "sum", "avg"):
+    metrics = ("count", "min", "max", "sum", "avg")
+    if order_by not in metrics:
         raise ValueError(f"order_by must be count/min/max/sum/avg "
                          f"(got {order_by!r})")
     if n is not None and int(n) <= 0:
         raise ValueError("n must be >= 1")
-    key = ("fs", query, group_field, stat_field, mode, exclude, dv_filter,
-           order_by, bool(ascending), None if n is None else int(n))
+    pos = {"count": 1, "min": 3, "max": 4, "sum": 5, "avg": 6}[order_by]
+
+    def partial(shard, hit, gather):
+        groups = pd.Series(gather(group_field, as_str=True)[0])
+        vals, present = gather(stat_field)
+        return pd.DataFrame(
+            [(None if pd.isna(g) else g,
+              *_stats_partial(idx.size, vals[idx][present[idx]]))
+             for g, idx in groups.groupby(groups, dropna=False,
+                                          sort=False).indices.items()],
+            columns=["g", "n", "nv", "mn", "mx", "sm"])
+
+    def order(row):
+        m = row[pos]
+        return (m is None, 0 if m is None else m if ascending else -m,
+                row[0] is not None, row[0] or "")
 
     def build():
-        spark = index.spark
-        out_schema = ("facet_value string, n_docs long, n_with_value long, "
-                      "min_val double, max_val double, sum_val double, "
-                      "avg_val double")
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.createDataFrame([], out_schema)
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-        cols = ["g", "n", "nv", "mn", "mx", "sm"]
+        rows = _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "g string, n long, nv long, mn long, mx long, sm long", partial,
+            lambda p: [(None if pd.isna(g) else g, *_stats_row(grp))
+                       for g, grp in p.groupby("g", dropna=False,
+                                               sort=False)])
+        rows.sort(key=order)
+        return _held(index, "facet_value string, n_docs long, "
+                            "n_with_value long, min_val double, "
+                            "max_val double, sum_val double, "
+                            "avg_val double",
+                     rows if n is None else rows[:int(n)])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({c: [] for c in cols})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return empty
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            gcol = pc.cast(slice_tbl.column(group_field), _pa.string())
-            scol = slice_tbl.column(stat_field)
-            snull = scol.is_null().to_numpy(zero_copy_only=False)
-            if is_ts:
-                micros = pc.fill_null(
-                    pc.cast(scol, _pa.timestamp("us")).cast(_pa.int64()),
-                    0).to_numpy(zero_copy_only=False)
-                vals = np.floor_divide(micros, 1_000_000)
-            else:
-                vals = pc.fill_null(scol, 0).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            if rows.size == 0:
-                return empty
-            pdf = pd.DataFrame({
-                "g": gcol.take(_pa.array(rows)).to_pandas().astype(object),
-                "v": vals[rows],
-                "has": ~snull[rows]})
-            # per-(group, shard) partials; dropna=False keeps the NULL
-            # group row (SQL GROUP BY semantics, the facets() rule)
-            out = []
-            for g, grp in pdf.groupby("g", dropna=False, sort=False):
-                v = grp["v"][grp["has"]]
-                out.append((None if pd.isna(g) else g, len(grp), len(v),
-                            int(v.min()) if len(v) else 0,
-                            int(v.max()) if len(v) else 0,
-                            int(v.sum()) if len(v) else 0))
-            return pd.DataFrame(out, columns=cols)
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "g string, n long, nv long, mn long, mx long, sm long")
-        agg = (partial.groupBy("g")
-               .agg(F.sum("n").cast("long").alias("n_docs"),
-                    F.sum("nv").cast("long").alias("_nv"),
-                    F.min(F.when(F.col("nv") > 0, F.col("mn"))).alias("_mn"),
-                    F.max(F.when(F.col("nv") > 0, F.col("mx"))).alias("_mx"),
-                    F.sum(F.when(F.col("nv") > 0, F.col("sm"))).alias("_sm")))
-        out = (agg.select(
-            F.col("g").alias("facet_value"), "n_docs",
-            F.col("_nv").alias("n_with_value"),
-            F.col("_mn").cast("double").alias("min_val"),
-            F.col("_mx").cast("double").alias("max_val"),
-            F.col("_sm").cast("double").alias("sum_val"),
-            F.when(F.col("_nv") > 0,
-                   F.col("_sm").cast("double") / F.col("_nv"))
-            .alias("avg_val")))
-        # ES terms-agg ordering: by doc count (default) or by a stats
-        # sub-agg metric (_order_: {"stats.avg": ...}); frozen rule —
-        # metric NULLs (groups with no stat values) rank LAST either
-        # direction, tiebreak facet_value asc (NULL group first, the
-        # facets() rule)
-        col = {"count": "n_docs", "min": "min_val", "max": "max_val",
-               "sum": "sum_val", "avg": "avg_val"}[order_by]
-        primary = (F.asc_nulls_last(col) if ascending
-                   else F.desc_nulls_last(col))
-        out = out.orderBy(primary, F.asc_nulls_first("facet_value"))
-        return out.limit(int(n)) if n is not None else out
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("fs", query, group_field, stat_field, mode, exclude,
+                dv_filter, order_by, bool(ascending),
+                None if n is None else int(n)), build)
 
 
 def rare_terms(index, query: str, field: str, max_doc_count: int = 1,
@@ -1194,16 +863,9 @@ def rare_terms(index, query: str, field: str, max_doc_count: int = 1,
     bucket (the ES contract: rare_terms skips missing).
 
     Returns ``(facet_value:string, n_docs:long)`` ordered
-    (n_docs asc, facet_value asc), limited to ``n`` rows.
-
-    Plan: the shared match kernel; each shard emits its OWN distinct
-    (value, count) rows (map-side combine, shuffle bounded by per-shard
-    distinct values — the same exact-answer floor as
-    match_cardinality); one hash agg merges counts; the rarity filter
-    runs AFTER the global merge (a value can be locally rare but
-    globally common), then TakeOrderedAndProject."""
-    import pyarrow as pa
-    from .query import _warn_if_stale
+    (n_docs asc, facet_value asc), limited to ``n`` rows. The rarity
+    filter runs after the global merge (a value can be rare in one
+    shard and common overall)."""
     _warn_if_stale(index)
     mode = mode.upper()
     max_doc_count = int(max_doc_count)
@@ -1212,65 +874,24 @@ def rare_terms(index, query: str, field: str, max_doc_count: int = 1,
     n = int(n)
     if n < 1:
         raise ValueError("n must be >= 1")
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"rare_terms field {field!r} is not a docvalue column of "
-            f"this index (stored: {list(index.doc_values or ())})")
-    key = ("rare", query, field, max_doc_count, n, mode, exclude,
-           dv_filter)
+    _dv_kind(index, field, "rare_terms")
+
+    def partial(shard, hit, gather):
+        v, cnt = np.unique(_present(*gather(field, as_str=True)).astype(str),
+                           return_counts=True)
+        return pd.DataFrame({"v": v, "cnt": cnt})
 
     def build():
-        spark = index.spark
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.createDataFrame(
-                [], "facet_value string, n_docs long")
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+        rows = [(v, c) for v, c in _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "v string, cnt long", partial, lambda p: _sum_by(p, "v", "cnt"))
+            if c <= max_doc_count]
+        rows.sort(key=lambda r: (r[1], r[0]))
+        return _held(index, "facet_value string, n_docs long", rows[:n])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({"v": [], "cnt": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return empty
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            col = slice_tbl.column(field)
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            rows = rows[~nulls[rows]]
-            if rows.size == 0:
-                return empty
-            vals = pc.cast(col.take(_pa.array(rows, _pa.int64())),
-                           _pa.string())
-            vc = pc.value_counts(vals)
-            return pd.DataFrame(
-                {"v": vc.field("values").to_pandas(),
-                 "cnt": vc.field("counts").to_pandas()})
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "v string, cnt long")
-        return (partial.groupBy("v")
-                .agg(F.sum("cnt").cast("long").alias("n_docs"))
-                .where(F.col("n_docs") <= max_doc_count)
-                .select(F.col("v").alias("facet_value"), "n_docs")
-                .orderBy(F.asc("n_docs"), F.asc("facet_value"))
-                .limit(n))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("rare", query, field, max_doc_count, n, mode, exclude,
+                dv_filter), build)
 
 
 def match_composite(index, query: str, fields, size: int = 10,
@@ -1282,8 +903,7 @@ def match_composite(index, query: str, fields, size: int = 10,
     key sources, ordered by the key tuple, resumable from an
     ``after`` key. Where ``facets``/``facet_stats`` present the top of
     one dimension, composite walks EVERY (k1, k2, ...) combination in
-    deterministic pages — the building block for exporting a complete
-    aggregation without ever materializing it driver-side.
+    deterministic pages.
 
     Frozen contract (mirrored by the DuckDB twin in
     ``__spark_entry__._composite_sql``):
@@ -1303,21 +923,10 @@ def match_composite(index, query: str, fields, size: int = 10,
     * counts are exact int64 over ``search``'s exact match set
       (AND/OR arity, NOT via ``exclude``, ``dv_filter``, tombstones).
 
-    Plan (the 100 TB argument): the same pruned postings scan + shared
-    arity kernel as ``match_count``; each shard task reduces its OWN
-    docvalue slice to per-(tuple, shard) partial counts in-task
-    (pandas groupby over <= |shard hits| rows), so shuffle volume is
-    distinct-tuples-per-shard, never docs; the after-key predicate is
-    applied INSIDE the shard task (already-walked buckets never leave
-    it — page N's shuffle volume shrinks as the walk advances, the
-    property that makes a full walk of a 10^9-bucket axis
-    O(total buckets) in shuffled rows, not O(pages x buckets)) and
-    again on the aggregated axis as a guard; the page cut is one
-    TakeOrderedAndProject. Page N never rescans pages 1..N-1's docs.
+    The after key also filters inside each shard, so buckets an earlier
+    page walked never leave their shard: a full walk moves every bucket
+    once, not once per page.
     """
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
     fields = list(fields)
@@ -1332,119 +941,38 @@ def match_composite(index, query: str, fields, size: int = 10,
             raise ValueError(
                 f"after key has {len(after)} values for {len(fields)} "
                 f"fields — pass the previous page's last row's keys")
-    for f_ in fields:
-        if f_ not in (index.doc_values or ()):
-            raise ValueError(
-                f"{f_!r} is not a docvalue column of this index "
-                f"(stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    kinds = []  # per field: "str" | "int" | "ts"
-    for f_ in fields:
-        t = schema.field(f_).type
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            kinds.append("str")
-        elif pa.types.is_timestamp(t):
-            kinds.append("ts")
-        elif pa.types.is_integer(t):
-            kinds.append("int")
-        else:
-            raise ValueError(
-                f"match_composite({f_!r}): only string/integer/"
-                f"timestamp key columns are supported; stored type "
-                f"is {t}")
-    key = ("cmp", query, tuple(fields), size,
-           tuple(after) if after is not None else None, mode, exclude,
-           dv_filter)
+    kinds = [_dv_kind(index, f_, "match_composite", ("str", "int", "ts"))
+             for f_ in fields]
+    if after is not None:
+        after = tuple(str(v) if k_ == "str" else int(v)
+                      for v, k_ in zip(after, kinds))
+    ddl = ", ".join(f"{f_} {'string' if k_ == 'str' else 'long'}"
+                    for f_, k_ in zip(fields, kinds))
+
+    def walked(keys) -> bool:
+        return after is not None and tuple(keys) <= after
+
+    def partial(shard, hit, gather):
+        cols = [gather(f_) for f_ in fields]
+        keep = np.logical_and.reduce([present for _, present in cols])
+        if not keep.any():
+            return None
+        keys = pd.DataFrame({f_: vals[keep] for f_, (vals, _) in
+                             zip(fields, cols)})
+        out = keys.groupby(fields, sort=False).size().reset_index(name="n")
+        return out[np.array([not walked(k) for k in zip(
+            *[out[f_].tolist() for f_ in fields])], dtype=bool)]
 
     def build():
-        spark = index.spark
-        sql_t = {"str": "string", "int": "long", "ts": "long"}
-        out_schema = ", ".join(
-            [f"{f_} {sql_t[k_]}" for f_, k_ in zip(fields, kinds)]
-            + ["n_docs long"])
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.createDataFrame([], out_schema)
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-        part_schema = ", ".join(
-            [f"{f_} {sql_t[k_]}" for f_, k_ in zip(fields, kinds)]
-            + ["n long"])
+        rows = [r for r in _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            ddl + ", n long", partial, lambda p: _sum_by(p, fields))
+            if not walked(r[:-1])]
+        return _held(index, ddl + ", n_docs long", rows[:size])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            import pyarrow as _pa
-            import pyarrow.compute as pc
-            from .docvalues import _load_shard
-            empty = pd.DataFrame({c: [] for c in fields + ["n"]})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-            if slice_tbl is None or slice_tbl.num_rows == 0:
-                return empty
-            sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-            idx_ = np.searchsorted(sloc, hit)
-            ok = idx_ < sloc.size
-            ok[ok] &= sloc[idx_[ok]] == hit[ok]
-            rows = idx_[ok]
-            if rows.size == 0:
-                return empty
-            take = _pa.array(rows)
-            data, keep = {}, np.ones(rows.size, dtype=bool)
-            for f_, k_ in zip(fields, kinds):
-                col = slice_tbl.column(f_).take(take)
-                keep &= ~col.is_null().to_numpy(zero_copy_only=False)
-                if k_ == "ts":
-                    micros = pc.fill_null(
-                        pc.cast(col, _pa.timestamp("us"))
-                        .cast(_pa.int64()), 0).to_numpy(
-                            zero_copy_only=False)
-                    data[f_] = np.floor_divide(micros, 1_000_000)
-                elif k_ == "int":
-                    data[f_] = pc.fill_null(col, 0).to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                else:
-                    data[f_] = col.to_pandas().astype(object)
-            if not keep.any():
-                return empty
-            pdf = pd.DataFrame(data)[keep]
-            out = pdf.groupby(fields, sort=False).size().reset_index()
-            out.columns = fields + ["n"]
-            if after is not None:
-                # after-key filter applied AT THE SOURCE: partial rows
-                # for already-walked buckets never leave the shard
-                # task, so page N's shuffle volume SHRINKS as the walk
-                # advances (the final-agg filter below stays as a
-                # belt-and-braces guard)
-                import numpy as np
-                gt = np.zeros(len(out), dtype=bool)
-                eq = np.ones(len(out), dtype=bool)
-                for f_, av in zip(fields, after):
-                    col = out[f_]
-                    gt |= eq & (col > av).to_numpy(dtype=bool)
-                    eq &= (col == av).to_numpy(dtype=bool)
-                out = out[gt]
-            return out
-
-        partial = post.groupBy("shard").applyInPandas(fn, part_schema)
-        agg = (partial.groupBy(*fields)
-               .agg(F.sum("n").cast("long").alias("n_docs")))
-        if after is not None:
-            lits = [F.lit(v).cast(sql_t[k_]).alias(f_)
-                    for v, k_, f_ in zip(after, kinds, fields)]
-            agg = agg.filter(F.struct(*[F.col(f_) for f_ in fields])
-                             > F.struct(*lits))
-        return (agg.orderBy(*[F.asc(f_) for f_ in fields])
-                .limit(size))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("cmp", query, tuple(fields), size, after, mode, exclude,
+                dv_filter), build)
 
 
 # frozen auto_date_histogram interval ladder (seconds) — the ES rounding
@@ -1470,33 +998,35 @@ def match_auto_histogram(index, query: str, field: str,
     largest entry when none qualifies. Returns ``(bucket_start:long,
     n_docs:long, interval_s:long)`` — ``match_histogram``'s exact rows
     (floor semantics, empty buckets omitted) plus the constant chosen
-    interval; an empty match set returns no rows.
-
-    Plan: one ``match_stats`` job for (min, max) — per-shard int64
-    partials, one row per task — then ``match_histogram``'s unchanged
-    one-job plan at the chosen grain. The interval choice itself is
-    driver arithmetic over two ints."""
-    from .query import _warn_if_stale
+    interval; an empty match set returns no rows. Two passes over the
+    match set: ``match_stats`` for (min, max), then ``match_histogram``
+    at the chosen grain."""
     _warn_if_stale(index)
     if int(target_buckets) < 1:
         raise ValueError("target_buckets must be >= 1")
     target = int(target_buckets)
     stats = match_stats(index, query, field, mode=mode, exclude=exclude,
                         dv_filter=dv_filter).collect()[0]
-    spark = index.spark
-    out_schema = "bucket_start long, n_docs long, interval_s long"
+    out = "bucket_start long, n_docs long, interval_s long"
     if stats["n_with_value"] == 0:
-        return spark.createDataFrame([], out_schema)
+        return _held(index, out, [])
     mn, mx = int(stats["min_val"]), int(stats["max_val"])
-    interval = AUTO_HISTOGRAM_LADDER[-1]
-    for i in AUTO_HISTOGRAM_LADDER:
-        if (mx // i) - (mn // i) + 1 <= target:
-            interval = i
-            break
+    interval = next((i for i in AUTO_HISTOGRAM_LADDER
+                     if (mx // i) - (mn // i) + 1 <= target),
+                    AUTO_HISTOGRAM_LADDER[-1])
     h = match_histogram(index, query, field, interval, mode=mode,
-                        exclude=exclude, dv_filter=dv_filter)
-    return h.select("bucket_start", "n_docs",
-                    F.lit(int(interval)).cast("long").alias("interval_s"))
+                        exclude=exclude, dv_filter=dv_filter).collect()
+    return _held(index, out, [(*r, interval) for r in h])
+
+
+def _named_filters(index, filters: dict, what: str) -> list:
+    filters = sorted((str(n), str(p)) for n, p in filters.items())
+    if not filters:
+        raise ValueError(f"{what} needs at least one named filter")
+    if not (index.doc_values or ()):
+        raise ValueError("this index has no docvalue store — build with "
+                         "IndexConfig(doc_values=...)")
+    return filters
 
 
 def match_filters(index, query: str, filters: dict,
@@ -1506,8 +1036,10 @@ def match_filters(index, query: str, filters: dict,
     buckets over ONE boolean query's match set ("of the turns matching
     Q: how many are user turns, how many tool turns, how many from this
     week"). Each bucket is an independent ANSI-SQL predicate over the
-    STORED docvalue columns; buckets overlap freely (a doc can count in
-    several) — unlike ``facets``, which partitions by a column's values.
+    STORED docvalue columns, evaluated per shard by the embedded DuckDB
+    (the dv_filter machinery); buckets overlap freely (a doc can count
+    in several) — unlike ``facets``, which partitions by a column's
+    values.
 
     Frozen contract (mirrored by the DuckDB twin in
     ``__spark_entry__``): returns ``(bucket:string, n_docs:long)`` with
@@ -1515,71 +1047,29 @@ def match_filters(index, query: str, filters: dict,
     behavior) — ordered by bucket name ascending. Match semantics are
     ``search``'s exact set (AND/OR arity, NOT via ``exclude``,
     ``dv_filter`` restriction, tombstones).
-
-    Plan: the shared pruned-scan arity kernel; each shard task
-    evaluates every named predicate ONCE over its own cached docvalue
-    slice (embedded DuckDB, the dv_filter machinery) and emits one
-    (bucket, partial-count) row per filter — shuffle volume is
-    |filters| rows per shard, never docs; a tiny final aggregation
-    LEFT-joins the driver-built name table so empty buckets survive.
     """
-    from .query import _warn_if_stale
+    from .docvalues import eval_filter
     _warn_if_stale(index)
     mode = mode.upper()
-    filters = {str(n): str(p) for n, p in filters.items()}
-    if not filters:
-        raise ValueError("match_filters needs at least one named filter")
-    if not (index.doc_values or ()):
-        raise ValueError("this index has no docvalue store — build with "
-                         "IndexConfig(doc_values=...)")
-    key = ("mf", query, tuple(sorted(filters.items())), mode, exclude,
-           dv_filter)
+    preds = _named_filters(index, filters, "match_filters")
+    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+
+    def partial(shard, hit, gather):
+        return pd.DataFrame(
+            [(n, np.intersect1d(hit, eval_filter(dv_dir, shard, dv_gen, p),
+                                assume_unique=True).size) for n, p in preds],
+            columns=["bucket", "n"])
 
     def build():
-        spark = index.spark
-        names = sorted(filters)
-        name_df = spark.createDataFrame([(n,) for n in names],
-                                        "bucket string")
-        zero = name_df.select(
-            "bucket", F.lit(0).cast("long").alias("n_docs"))
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:  # empty match set: every bucket counts 0
-            return zero.orderBy("bucket")
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-        preds = [(n, filters[n]) for n in names]
+        counts = dict(_aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "bucket string, n long", partial,
+            lambda p: _sum_by(p, "bucket")))
+        return _held(index, "bucket string, n_docs long",
+                     [(n, counts.get(n, 0)) for n, _ in preds])
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            from .docvalues import eval_filter
-            empty = pd.DataFrame({"bucket": [], "n": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            out = []
-            for n, p in preds:
-                locs = eval_filter(dv_dir, shard, dv_gen, p)
-                c = int(np.intersect1d(hit, locs,
-                                       assume_unique=True).size)
-                if c:
-                    out.append((n, c))
-            return pd.DataFrame(out, columns=["bucket", "n"])
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "bucket string, n long")
-        agg = partial.groupBy("bucket").agg(
-            F.sum("n").cast("long").alias("_n"))
-        return (name_df.join(agg, "bucket", "left")
-                .select("bucket",
-                        F.coalesce(F.col("_n"), F.lit(0))
-                        .cast("long").alias("n_docs"))
-                .orderBy("bucket"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("mf", query, tuple(preds), mode, exclude, dv_filter), build)
 
 
 def match_adjacency(index, query: str, filters: dict,
@@ -1596,73 +1086,36 @@ def match_adjacency(index, query: str, filters: dict,
     for every name pair ``a <= b`` (diagonal = the filter's own count),
     ZERO-count pairs omitted (the ES behavior — unlike
     ``match_filters``, which keeps empty named buckets), ordered
-    (a asc, b asc). Match semantics are ``search``'s exact set.
-
-    Plan: the shared pruned-scan arity kernel; each shard evaluates
-    every named predicate ONCE over its cached docvalue slice, builds
-    |filters| boolean masks over its hits, and emits one partial row
-    per non-empty pair — shuffle volume <= |filters|^2/2 rows per
-    shard (ES caps the agg at 100 filters for the same quadratic
-    reason), never docs."""
-    from .query import _warn_if_stale
+    (a asc, b asc). Match semantics are ``search``'s exact set. Each
+    shard emits at most |filters|^2/2 rows (ES caps the agg at 100
+    filters for the same quadratic reason)."""
+    from .docvalues import eval_filter
     _warn_if_stale(index)
     mode = mode.upper()
-    filters = {str(n): str(p) for n, p in filters.items()}
-    if not filters:
-        raise ValueError("match_adjacency needs at least one named "
-                         "filter")
-    if len(filters) > 100:
+    preds = _named_filters(index, filters, "match_adjacency")
+    if len(preds) > 100:
         raise ValueError("match_adjacency caps at 100 filters (the "
                          "pair count is quadratic)")
-    if not (index.doc_values or ()):
-        raise ValueError("this index has no docvalue store — build with "
-                         "IndexConfig(doc_values=...)")
-    key = ("madj", query, tuple(sorted(filters.items())), mode, exclude,
-           dv_filter)
+    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
+
+    def partial(shard, hit, gather):
+        masks = [np.isin(hit, eval_filter(dv_dir, shard, dv_gen, p))
+                 for _, p in preds]
+        out = [(a, preds[j][0], int(np.count_nonzero(masks[i] & masks[j])))
+               for i, (a, _) in enumerate(preds)
+               for j in range(i, len(preds))]
+        return pd.DataFrame([r for r in out if r[2]],
+                            columns=["a", "b", "n"])
 
     def build():
-        spark = index.spark
-        out_schema = "a string, b string, n_docs long"
-        prep = _prep_match(index, query, mode, exclude, dv_filter)
-        if prep is None:
-            return spark.createDataFrame([], out_schema)
-        post, hits, width = prep
-        dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-        names = sorted(filters)
-        preds = [(n, filters[n]) for n in names]
+        return _held(index, "a string, b string, n_docs long", _aggregate(
+            index, _prep_match(index, query, mode, exclude, dv_filter),
+            "a string, b string, n long", partial,
+            lambda p: _sum_by(p, ["a", "b"])))
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
-            from .docvalues import eval_filter
-            empty = pd.DataFrame({"a": [], "b": [], "n": []})
-            if len(post_pdf) == 0:
-                return empty
-            shard = int(post_pdf["shard"].iloc[0])
-            hit = hits(post_pdf)
-            if hit.size == 0:
-                return empty
-            masks = []
-            for n, p in preds:
-                locs = eval_filter(dv_dir, shard, dv_gen, p)
-                m = np.zeros(width, dtype=bool)
-                m[locs] = True
-                masks.append(m[hit])
-            out = []
-            for i, a in enumerate(names):
-                for j in range(i, len(names)):
-                    c = int(np.count_nonzero(masks[i] & masks[j]))
-                    if c:
-                        out.append((a, names[j], c))
-            return pd.DataFrame(out, columns=["a", "b", "n"])
-
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "a string, b string, n long")
-        return (partial.groupBy("a", "b")
-                .agg(F.sum("n").cast("long").alias("n_docs"))
-                .orderBy("a", "b"))
-
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("madj", query, tuple(preds), mode, exclude, dv_filter),
+        build)
 
 
 def mlt_terms(index, doc_id: int, max_terms: int = 16) -> list[str]:
@@ -1818,6 +1271,7 @@ def significant_terms(index, query: str, n: int = 10, sample: int = 100,
     return _plan_cached(index, key, build)
 
 
+
 def export_matches(index, query: str, out_dir: str, mode: str = "OR",
                    exclude: str | None = None,
                    doc_filter: str | None = None,
@@ -1828,24 +1282,22 @@ def export_matches(index, query: str, out_dir: str, mode: str = "OR",
     not a top-k — to ``out_dir`` as parquet, fully distributed, and
     return a DataFrame handle over the written data.
 
-    Match semantics are ``search``'s exactly (same shared kernel as
-    match_count: AND/OR arity, NOT via ``exclude``, ``doc_filter``/
-    ``dv_filter`` restriction, tombstones excluded). ``columns`` picks
-    the exported corpus columns (default: all stored columns); doc_id
-    is always included.
+    Match semantics are ``search``'s exactly (the shared ``hits``:
+    AND/OR arity, NOT via ``exclude``, ``doc_filter``/``dv_filter``
+    restriction, tombstones excluded). ``columns`` picks the exported
+    corpus columns (default: all stored columns); doc_id is always
+    included.
 
-    Plan (the 100 TB argument): the pruned postings scan resolves the
-    match set per shard and each task emits bare int64 doc_ids — the
-    minimum any exact match set can move. The ids join back to the
-    stored corpus COLUMN-PRUNED to the requested fields; with AQE on,
-    a selective match set broadcasts (the corpus side then streams
-    scan->write with no shuffle), while a huge one degrades to a
-    sort-merge join — either way nothing wider than the exported rows
-    themselves crosses the cluster, and the parquet write is the
-    dominant cost at scale, as an export should be. Driver memory
-    never holds the match set.
+    Plan: ``_shard_job`` resolves the match set per shard and each task
+    emits bare int64 doc_ids — the minimum any exact match set can move.
+    The ids join back to the stored corpus COLUMN-PRUNED to the
+    requested fields; with AQE on, a selective match set broadcasts (the
+    corpus side then streams scan->write with no shuffle), while a huge
+    one degrades to a sort-merge join — either way nothing wider than
+    the exported rows themselves crosses the cluster, and the parquet
+    write is the dominant cost at scale, as an export should be. Driver
+    memory never holds the match set.
     """
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
     spark = index.spark
@@ -1857,157 +1309,21 @@ def export_matches(index, query: str, out_dir: str, mode: str = "OR",
                              f"stored corpus ({corpus.columns})")
         corpus = corpus.select(
             "doc_id", *[c for c in columns if c != "doc_id"])
-    prep = _prep_match(index, query, mode, exclude, dv_filter)
-    if prep is None:  # provably empty: write just the schema
+    m = _prep_match(index, query, mode, exclude, dv_filter)
+    if m is None:  # provably empty: write just the schema
         corpus.limit(0).write.mode("overwrite").parquet(out_dir)
         return spark.read.parquet(out_dir)
-    post, hits, width = prep
+    hits, width = m.hits, index.shard_width
 
-    if doc_filter is not None:
-        allowed = _allowed_shards(index, doc_filter, width)
+    def fn(key, post_pdf, allowed_loc=None):
+        shard = int(key[0])
+        return pd.DataFrame(
+            {"doc_id": hits(shard, post_pdf, allowed_loc) + shard * width})
 
-        def fnf(key_, post_pdf, allowed_pdf):
-            import pandas as pd
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return pd.DataFrame({"doc_id": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            import numpy as np
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            return pd.DataFrame(
-                {"doc_id": hits(post_pdf, loc) + shard * width})
-
-        ids = (post.groupBy("shard")
-               .cogroup(allowed.groupBy("shard"))
-               .applyInPandas(fnf, "doc_id long"))
-    else:
-        def fn(key_, post_pdf):
-            import pandas as pd
-            if len(post_pdf) == 0:
-                return pd.DataFrame({"doc_id": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            return pd.DataFrame(
-                {"doc_id": hits(post_pdf) + shard * width})
-
-        ids = post.groupBy("shard").applyInPandas(fn, "doc_id long")
+    ids = _shard_job(index, m, fn, "doc_id long", doc_filter)
     (corpus.join(ids, "doc_id")
      .write.mode("overwrite").parquet(out_dir))
     return spark.read.parquet(out_dir)
-
-
-PCT_SCHEMA = "p double, value long"
-
-
-def _shard_field_vals(post_pdf, hits, field: str, is_ts: bool,
-                      dv_dir: str, dv_gen: int):
-    """Worker-side shared extractor for the value-distribution kernels:
-    the int64 values (timestamps at the frozen whole-second grain) of
-    docvalue ``field`` for this shard's match set, NULLs dropped.
-    Returns an np.int64 array (possibly empty)."""
-    import numpy as np
-    import pyarrow as _pa
-    import pyarrow.compute as pc
-
-    from .docvalues import _load_shard
-    empty = np.empty(0, dtype=np.int64)
-    if len(post_pdf) == 0:
-        return empty
-    shard = int(post_pdf["shard"].iloc[0])
-    hit = hits(post_pdf)
-    if hit.size == 0:
-        return empty
-    slice_tbl = _load_shard(dv_dir, shard, dv_gen)
-    if slice_tbl is None or slice_tbl.num_rows == 0:
-        return empty
-    sloc = slice_tbl.column("loc").to_numpy(zero_copy_only=False)
-    col = slice_tbl.column(field)
-    nulls = col.is_null().to_numpy(zero_copy_only=False)
-    idx_ = np.searchsorted(sloc, hit)
-    ok = idx_ < sloc.size
-    ok[ok] &= sloc[idx_[ok]] == hit[ok]
-    rows = idx_[ok]
-    rows = rows[~nulls[rows]]
-    if rows.size == 0:
-        return empty
-    if is_ts:
-        micros = pc.fill_null(
-            pc.cast(col, _pa.timestamp("us")).cast(_pa.int64()),
-            0).to_numpy(zero_copy_only=False)
-        return np.floor_divide(micros[rows], 1_000_000)
-    return pc.fill_null(col, 0).to_numpy(
-        zero_copy_only=False).astype(np.int64)[rows]
-
-
-def _gather_value_hist(index, query: str, field: str, is_ts: bool,
-                       mode: str, exclude, dv_filter):
-    """Driver-side sorted (value, count) histogram of a stored int64/
-    timestamp docvalue over the match set — the shared reduction under
-    match_percentiles and match_mad. One job: pruned scan + shared
-    arity kernel, each shard emits its OWN distinct (value, count) rows
-    (shuffle bounded by per-shard distinct values — the exact-answer
-    floor), one hash agg, then an ordered metadata-sized collect.
-    Returns a list of Rows (possibly empty)."""
-    prep = _prep_match(index, query, mode, exclude, dv_filter)
-    if prep is None:
-        return []
-    post, hits, width = prep
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def fn(key_, post_pdf):
-        import numpy as np
-        import pandas as pd
-        vals = _shard_field_vals(post_pdf, hits, field, is_ts,
-                                 dv_dir, dv_gen)
-        if vals.size == 0:
-            return pd.DataFrame({"v": [], "cnt": []})
-        uv, cnt = np.unique(vals, return_counts=True)
-        return pd.DataFrame({"v": uv.astype(np.int64),
-                             "cnt": cnt.astype(np.int64)})
-
-    return (post.groupBy("shard").applyInPandas(fn, "v long, cnt long")
-            .groupBy("v").agg(F.sum("cnt").alias("cnt"))
-            .orderBy("v").collect())
-
-
-def _gather_field_bounds(index, query: str, field: str, is_ts: bool,
-                         mode: str, exclude, dv_filter):
-    """The guard/edges job shared by the binned percentile family: ONE
-    job where each shard task emits a single row
-    ``(n, vmin, vmax, n_distinct)`` over its own match-set values —
-    four int64s per shard, the metadata-sized floor. Returns
-    ``(n, vmin, vmax, distinct_bound)`` or None for an empty match
-    set. ``distinct_bound`` is the SUM of per-shard distinct counts —
-    an upper bound on the global distinct count, which is exactly the
-    quantity that bounds the exact path's driver collect (global
-    distinct <= sum over shards), so it is the right guard signal."""
-    prep = _prep_match(index, query, mode, exclude, dv_filter)
-    if prep is None:
-        return None
-    post, hits, width = prep
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def fn(key_, post_pdf):
-        import numpy as np
-        import pandas as pd
-        vals = _shard_field_vals(post_pdf, hits, field, is_ts,
-                                 dv_dir, dv_gen)
-        if vals.size == 0:
-            return pd.DataFrame(
-                {"n": [], "vmin": [], "vmax": [], "nd": []})
-        return pd.DataFrame(
-            {"n": [int(vals.size)], "vmin": [int(vals.min())],
-             "vmax": [int(vals.max())],
-             "nd": [int(np.unique(vals).size)]})
-
-    row = (post.groupBy("shard")
-           .applyInPandas(fn, "n long, vmin long, vmax long, nd long")
-           .agg(F.sum("n").alias("n"), F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"), F.sum("nd").alias("nd"))
-           .collect()[0])
-    if row["n"] is None or row["n"] == 0:
-        return None
-    return (int(row["n"]), int(row["vmin"]), int(row["vmax"]),
-            int(row["nd"]))
 
 
 def _bin_width(vmin: int, vmax: int, n_bins: int) -> int:
@@ -2018,39 +1334,6 @@ def _bin_width(vmin: int, vmax: int, n_bins: int) -> int:
     [0, n_bins-1]."""
     span = vmax - vmin + 1
     return max(1, -(-span // n_bins))
-
-
-def _gather_binned_hist(index, query: str, field: str, is_ts: bool,
-                        mode: str, exclude, dv_filter,
-                        vmin: int, width_b: int):
-    """Bounded-state sibling of _gather_value_hist (VERDICT r4 #2/#3):
-    the same one-job pruned-scan kernel, but each shard bins its values
-    with the frozen integer rule BEFORE the distinct-count — shuffle
-    rows and the driver collect are bounded by n_bins regardless of
-    field cardinality (the 100 TB fix for near-unique fields, where the
-    exact path's driver histogram grows with the match set). Returns a
-    sorted list of (bin, count) Rows."""
-    prep = _prep_match(index, query, mode, exclude, dv_filter)
-    if prep is None:
-        return []
-    post, hits, width = prep
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def fn(key_, post_pdf):
-        import numpy as np
-        import pandas as pd
-        vals = _shard_field_vals(post_pdf, hits, field, is_ts,
-                                 dv_dir, dv_gen)
-        if vals.size == 0:
-            return pd.DataFrame({"b": [], "cnt": []})
-        bins = (vals - vmin) // width_b
-        ub, cnt = np.unique(bins, return_counts=True)
-        return pd.DataFrame({"b": ub.astype(np.int64),
-                             "cnt": cnt.astype(np.int64)})
-
-    return (post.groupBy("shard").applyInPandas(fn, "b long, cnt long")
-            .groupBy("b").agg(F.sum("cnt").alias("cnt"))
-            .orderBy("b").collect())
 
 
 def _disc_value(hist, p: float, n: int):
@@ -2064,6 +1347,62 @@ def _disc_value(hist, p: float, n: int):
         if cum >= need:
             return int(v)
     return int(hist[-1][0])
+
+
+def _value_args(index, field: str, label: str, method: str,
+                n_bins: int) -> None:
+    _dv_kind(index, field, label, ("ts", "int"))
+    if method not in ("auto", "exact", "binned"):
+        raise ValueError(f"{label} method must be auto|exact|binned, "
+                         f"got {method!r}")
+    if n_bins < 2:
+        raise ValueError("n_bins must be >= 2")
+
+
+def _value_hist(index, query: str, field: str, mode: str, exclude,
+                dv_filter, method: str, n_bins: int,
+                binned_threshold: int) -> list:
+    """The shared reduction under match_percentiles and match_mad: the
+    sorted ``(value, count)`` histogram of a timestamp/integer docvalue
+    over the match set, [] when it has no values.
+
+    ``"exact"``: one pass, each shard emitting its distinct values with
+    counts — the exact-answer floor, but the driver holds one row per
+    distinct value. ``"binned"``: a bounds pass (four int64s per shard:
+    count, min, max, distinct count) freezes the integer bin edges
+    (``_bin_width``), then each value counts under its bin's LOWER EDGE
+    ``vmin + width * bin`` — at most n_bins rows, each reported value
+    off by less than one bin width (exact when the width is 1).
+    ``"auto"`` runs the bounds pass and bins only when the sum of the
+    per-shard distinct counts (an upper bound on the global distinct
+    count, so on the exact histogram's size) exceeds
+    ``binned_threshold``."""
+    m = _prep_match(index, query, mode, exclude, dv_filter)
+    vmin, wd = 0, 1
+    if method != "exact":
+        def bounds(shard, hit, gather):
+            v = _present(*gather(field)).astype(np.int64)
+            return pd.DataFrame(
+                [(v.size, v.min(), v.max(), np.unique(v).size)],
+                columns=["n", "vmin", "vmax", "nd"]) if v.size else None
+
+        b = _aggregate(
+            index, m, "n long, vmin long, vmax long, nd long", bounds,
+            lambda p: (int(p["vmin"].min()), int(p["vmax"].max()),
+                       int(p["nd"].sum())) if len(p) else None)
+        if b is None:
+            return []
+        if method == "binned" or b[2] > binned_threshold:
+            vmin, wd = b[0], _bin_width(b[0], b[1], n_bins)
+
+    def partial(shard, hit, gather):
+        v = _present(*gather(field)).astype(np.int64)
+        ub, cnt = np.unique((v - vmin) // wd, return_counts=True)
+        return pd.DataFrame({"b": ub, "cnt": cnt})
+
+    return [(vmin + wd * b, c) for b, c in _aggregate(
+        index, m, "b long, cnt long", partial,
+        lambda p: _sum_by(p, "b", "cnt"))]
 
 
 def match_mad(index, query: str, field: str, mode: str = "OR",
@@ -2082,104 +1421,37 @@ def match_mad(index, query: str, field: str, mode: str = "OR",
     out identically in the DuckDB twin — so every returned number is an
     exact int64 and bit-reproducible. Returns one row
     ``(n_values, median, mad)``, NULLs when the match set has no
-    values.
+    values. The deviation histogram is derived from the value
+    histogram (|v - median| merges symmetric values), so MAD costs no
+    second pass over the data.
 
-    Plan: the same shared distinct-value histogram reduction as
-    match_percentiles; the deviation histogram is derived driver-side
-    from the collected value histogram (|v - median| merges symmetric
-    values), so MAD costs no second pass over the data.
-
-    ``method`` (r5, VERDICT r4 #2): ``"exact"`` = the one-job
-    distinct-value path above (driver state grows with field
-    cardinality); ``"binned"`` = bounded-state fixed-width-histogram
-    path (one metadata-sized bounds job for the frozen integer bin
-    edges, one <= n_bins-row histogram job; both medians DISC-walk the
-    bin histogram with each value represented by its bin's lower edge
-    — median off by <= one bin width, MAD by <= two); ``"auto"``
-    (default) = run the cheap bounds job and pick exact while the
-    per-shard-distinct-sum stays <= ``binned_threshold``, binned above
-    it — the guard that closes the one unbounded-driver-state path at
-    100 TB."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
+    ``method`` (``_value_hist``): ``"exact"``, ``"binned"`` (both
+    medians walk the bin histogram with lower-edge representatives —
+    the median off by less than one bin width, MAD by less than two) or
+    ``"auto"`` (default: exact while the per-shard-distinct sum stays
+    <= ``binned_threshold``)."""
     _warn_if_stale(index)
     mode = mode.upper()
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"mad field {field!r} is not a docvalue column of this "
-            f"index (stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    ftype = schema.field(field).type
-    is_ts = pa.types.is_timestamp(ftype)
-    if not (is_ts or pa.types.is_integer(ftype)):
-        raise ValueError(
-            f"match_mad({field!r}): only timestamp/integer docvalue "
-            f"columns are supported (stored type {ftype})")
-    if method not in ("auto", "exact", "binned"):
-        raise ValueError(f"match_mad method must be auto|exact|binned, "
-                         f"got {method!r}")
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-    key = ("mmad", query, field, mode, exclude, dv_filter, method,
-           n_bins, binned_threshold)
+    _value_args(index, field, "match_mad", method, n_bins)
 
     def build():
-        spark = index.spark
-
-        def _result(n, med, mad):
-            return spark.range(1).select(
-                F.lit(n).cast("long").alias("n_values"),
-                F.lit(med).cast("long").alias("median"),
-                F.lit(mad).cast("long").alias("mad"))
-
-        use_binned, bounds = False, None
-        if method != "exact":
-            bounds = _gather_field_bounds(index, query, field, is_ts,
-                                          mode, exclude, dv_filter)
-            if bounds is None:
-                return _result(0, None, None)
-            use_binned = (method == "binned"
-                          or bounds[3] > binned_threshold)
-        if not use_binned:
-            hist = _gather_value_hist(index, query, field, is_ts, mode,
-                                      exclude, dv_filter)
-            if not hist:
-                return _result(0, None, None)
-            pairs = [(int(r["v"]), int(r["cnt"])) for r in hist]
-            n = sum(c for _, c in pairs)
-            med = _disc_value(pairs, 0.5, n)
-            devs = {}
-            for v, c in pairs:
-                d = abs(v - med)
-                devs[d] = devs.get(d, 0) + c
-            dev_hist = sorted(devs.items())
-            return _result(n, med, _disc_value(dev_hist, 0.5, n))
-        # bounded-state path (VERDICT r4 #2/#3): both medians run the
-        # SAME frozen DISC rule over the fixed-width bin histogram,
-        # every value represented by its bin's LOWER EDGE — driver
-        # state is <= n_bins rows regardless of field cardinality, and
-        # each reported number is off by at most one bin width (the
-        # deviation median by at most two). The rule is pure int64
-        # arithmetic, so the DuckDB twin reproduces it bit-exactly.
-        n, vmin, vmax, _nd = bounds
-        wd = _bin_width(vmin, vmax, n_bins)
-        hist = _gather_binned_hist(index, query, field, is_ts, mode,
-                                   exclude, dv_filter, vmin, wd)
-        if not hist:
-            return _result(0, None, None)
-        pairs = [(int(r["b"]), int(r["cnt"])) for r in hist]
-        med = vmin + wd * _disc_value(pairs, 0.5, n)
+        pairs = _value_hist(index, query, field, mode, exclude, dv_filter,
+                            method, n_bins, binned_threshold)
+        if not pairs:
+            return _held(index, "n_values long, median long, mad long",
+                         [(0, None, None)])
+        n = sum(c for _, c in pairs)
+        med = _disc_value(pairs, 0.5, n)
         devs = {}
-        for b, c in pairs:
-            d = abs(vmin + wd * b - med)
-            devs[d] = devs.get(d, 0) + c
-        dev_hist = sorted(devs.items())
-        return _result(n, med, _disc_value(dev_hist, 0.5, n))
+        for v, c in pairs:
+            devs[abs(v - med)] = devs.get(abs(v - med), 0) + c
+        mad = _disc_value(sorted(devs.items()), 0.5, n)
+        return _held(index, "n_values long, median long, mad long",
+                     [(n, med, mad)])
 
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("mmad", query, field, mode, exclude, dv_filter, method,
+                n_bins, binned_threshold), build)
 
 
 def match_percentiles(index, query: str, field: str, ps=(0.5, 0.9, 0.99),
@@ -2204,95 +1476,29 @@ def match_percentiles(index, query: str, field: str, ps=(0.5, 0.9, 0.99),
     set has no values. Only timestamp/integer columns (exact int64s —
     the engine's bit-reproducibility contract).
 
-    Plan: the same pruned-scan + shared-arity kernel as match_count;
-    each shard task emits its OWN (value, count) histogram rows
-    (shuffle bounded by distinct values per shard — the exact-answer
-    floor, same as match_cardinality); one hash aggregation merges, and
-    the cumulative walk runs driver-side over the DISTINCT-VALUE
-    histogram (metadata-sized for bounded-cardinality fields).
-
-    ``method`` (r5, VERDICT r4 #2 — the cardinality guard): ``"exact"``
-    = the path above; ``"binned"`` = bounded-state fixed-width
-    histogram — one bounds job freezes integer bin edges
-    (``width = max(1, ceil(span / n_bins))``, ``bin = (v - vmin) //
-    width``), one job collects <= n_bins (bin, count) rows, and the
-    DISC walk reports the containing bin's LOWER EDGE (error <= one
-    bin width, exact when width == 1); ``"auto"`` (default) runs the
-    cheap bounds job and picks exact while the per-shard-distinct-sum
-    guard stays <= ``binned_threshold``, binned above it — driver
-    state is bounded by n_bins on near-unique fields instead of the
-    match-set size.
+    ``method`` (``_value_hist``): ``"exact"``; ``"binned"`` — the walk
+    reports the containing bin's LOWER EDGE (error < one bin width,
+    exact when the width is 1), driver state <= n_bins rows whatever
+    the field's cardinality; ``"auto"`` (default) — exact while the
+    per-shard-distinct sum stays <= ``binned_threshold``, binned above.
     """
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    from .query import _warn_if_stale
     _warn_if_stale(index)
     mode = mode.upper()
     ps = tuple(float(p) for p in ps)
     if not ps or any(not (0.0 < p <= 1.0) for p in ps):
         raise ValueError(f"percentiles must lie in (0, 1]: {ps}")
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"percentile field {field!r} is not a docvalue column of "
-            f"this index (stored: {list(index.doc_values or ())})")
-    from .docvalues import dv_path
-    schema = pads.dataset(dv_path(index.index_dir),
-                          format="parquet", partitioning="hive").schema
-    ftype = schema.field(field).type
-    is_ts = pa.types.is_timestamp(ftype)
-    if not (is_ts or pa.types.is_integer(ftype)):
-        raise ValueError(
-            f"match_percentiles({field!r}): only timestamp/integer "
-            f"docvalue columns are supported (stored type {ftype})")
-    if method not in ("auto", "exact", "binned"):
-        raise ValueError(f"match_percentiles method must be "
-                         f"auto|exact|binned, got {method!r}")
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-    key = ("mpct", query, field, ps, mode, exclude, dv_filter, method,
-           n_bins, binned_threshold)
+    _value_args(index, field, "match_percentiles", method, n_bins)
 
     def build():
-        spark = index.spark
-        empty = spark.createDataFrame(
-            [(p, None) for p in ps], PCT_SCHEMA)
-        use_binned, bounds = False, None
-        if method != "exact":
-            bounds = _gather_field_bounds(index, query, field, is_ts,
-                                          mode, exclude, dv_filter)
-            if bounds is None:
-                return empty
-            use_binned = (method == "binned"
-                          or bounds[3] > binned_threshold)
-        if not use_binned:
-            hist = _gather_value_hist(index, query, field, is_ts, mode,
-                                      exclude, dv_filter)
-            if not hist:
-                return empty
-            n = sum(r["cnt"] for r in hist)
-            pairs = [(int(r["v"]), int(r["cnt"])) for r in hist]
-            out = [(p, _disc_value(pairs, p, n)) for p in ps]
-            return spark.createDataFrame(out, PCT_SCHEMA)
-        # bounded-state path (VERDICT r4 #2/#3): the DISC walk runs
-        # over the fixed-width bin histogram and reports the containing
-        # bin's LOWER EDGE (vmin + width * bin) — deterministic int64,
-        # error <= one bin width, driver state <= n_bins rows
-        # regardless of field cardinality. Engages automatically when
-        # the per-shard-distinct-sum guard exceeds binned_threshold.
-        n, vmin, vmax, _nd = bounds
-        wd = _bin_width(vmin, vmax, n_bins)
-        hist = _gather_binned_hist(index, query, field, is_ts, mode,
-                                   exclude, dv_filter, vmin, wd)
-        if not hist:
-            return empty
-        pairs = [(int(r["b"]), int(r["cnt"])) for r in hist]
-        out = [(p, vmin + wd * _disc_value(pairs, p, n)) for p in ps]
-        return spark.createDataFrame(out, PCT_SCHEMA)
+        pairs = _value_hist(index, query, field, mode, exclude, dv_filter,
+                            method, n_bins, binned_threshold)
+        n = sum(c for _, c in pairs)
+        return _held(index, PCT_SCHEMA, [
+            (p, _disc_value(pairs, p, n) if pairs else None) for p in ps])
 
-    return _plan_cached(index, key, build)
-
-
-GROUPS_SCHEMA = "group_key string, score double, n_docs long"
+    return _plan_cached(
+        index, ("mpct", query, field, ps, mode, exclude, dv_filter, method,
+                n_bins, binned_threshold), build)
 
 
 def search_groups(index, query: str, field: str, k: int = 10,
@@ -2324,115 +1530,87 @@ def search_groups(index, query: str, field: str, k: int = 10,
     * result: top-``k`` groups under (score desc, group_key asc),
       columns (group_key, score, n_docs).
 
-    Plan (the 100 TB argument): ``search``'s pruned postings scan (same
-    buckets/terms pushdown, dls stream included), ONE kernel pass per
-    doc-range shard through ``search``'s kernel ``_score_shard_batch``
-    (called directly as a one-entry set at k=width — every hit's score
-    must exist, the collapse argument), then an in-task pandas
-    reduction over the shard's OWN docvalue slice emitting one
-    partial row per (group, shard) — shuffle volume is
-    groups-per-shard, never docs (the ``facet_stats`` emission class).
-    One narrow final hash aggregation; the shard-ordered sum fold is a
-    deterministic ``aggregate(array_sort(collect_list(...)))``
-    expression over those partials."""
-    from .query import _score_shard_batch, _warn_if_stale
+    It runs on the aggregation scaffold's routes (``_partials``) with a
+    scoring shard function in place of ``hits``: ``search``'s kernel
+    ``_score_shard_batch`` scores every hit of the shard (a one-entry
+    set at k=width), and the shard emits one partial row per group.
+    """
+    from .query import _score_shard_batch
     _warn_if_stale(index)
     mode = mode.upper()
     score_mode = score_mode.lower()
     if score_mode not in ("max", "sum", "avg", "count"):
         raise ValueError(f"unknown score_mode {score_mode!r} "
                          "(max | sum | avg | count)")
-    if field not in (index.doc_values or ()):
-        raise ValueError(
-            f"group field {field!r} is not a docvalue column of this "
-            f"index (stored: {list(index.doc_values or ())}; build with "
-            f"IndexConfig(doc_values=...))")
+    _dv_kind(index, field, "search_groups")
     _require_dv(index, dv_filter)
-    key = ("sg", query, field, k, score_mode, mode, exclude, dv_filter)
+    ddl = "g string, shard int, n long, sm double, mx double"
+
+    def combine(p):
+        rows = []
+        for g, grp in p.sort_values("shard").groupby("g", sort=False):
+            n, sm = int(grp["n"].sum()), 0.0
+            for x in grp["sm"].tolist():  # shard order: the frozen fold
+                sm += x
+            rows.append((g, {"max": float(grp["mx"].max()), "sum": sm,
+                             "avg": sm / n, "count": float(n)}[score_mode],
+                         n))
+        rows.sort(key=lambda r: (-r[1], r[0]))
+        return rows[:_doc_limit(index, k)]
 
     def build():
-        spark = index.spark
-        empty = spark.createDataFrame([], GROUPS_SCHEMA)
         acfg = index.cfg.analyzer
         qtf = query_terms(query, acfg)
-        if not qtf:
-            return empty
         neg = sorted(set(tokenize_py(exclude, acfg)) - set(qtf)) \
             if exclude else []
         terms = sorted(qtf)
         lex = index.lookup_terms(sorted(set(terms) | set(neg)))
         known = [t for t in terms if t in lex]
         if not known or (mode == "AND" and len(known) < len(terms)):
-            return empty
+            return _held(index, GROUPS_SCHEMA,
+                         combine(_schema(ddl).empty_table().to_pandas()))
         neg = [t for t in neg if t in lex]
         qtfs = {t: float(qtf[t]) for t in known}
         idfs = {t: float(lex[t]["idf"]) for t in known}
-        scan_terms = sorted(set(known) | set(neg))
-        buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-        post = (index.postings()
-                .filter(F.col("bucket").isin(buckets)
-                        & F.col("term").isin(scan_terms))
-                .select("term", "shard", "df", "doc_ids", "tfs", "dls"))
+        scan = sorted(set(known) | set(neg))
         width = index.shard_width
         cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
                 "avgdl": index.avgdl}
         dv_dir, dv_gen = index.index_dir, int(index.n_docs)
         del_locs = _del_closure(index)
-        pcols = ["g", "shard", "n", "sm", "mx"]
 
-        def fn(key_, post_pdf):
-            import numpy as np
-            import pandas as pd
+        def fn(key, post_pdf, allowed_loc=None):
             from .docvalues import eval_filter, group_values
-            empty_r = pd.DataFrame({c: [] for c in pcols})
-            if len(post_pdf) == 0:
-                return empty_r
-            shard = int(post_pdf["shard"].iloc[0])
-            dvl = (eval_filter(dv_dir, shard, dv_gen, dv_filter)
-                   if dv_filter is not None else None)
-            dl_ = del_locs(shard) if del_locs is not None else None
+            shard = int(key[0])
             r = _score_shard_batch(
                 post_pdf, {"": qtfs}, {"": mode}, idfs, cfgd, width, width,
-                False, allowed_loc=dvl, denied_loc=dl_, negs={"": neg})
+                False, allowed_loc=None if dv_filter is None else
+                eval_filter(dv_dir, shard, dv_gen, dv_filter),
+                denied_loc=None if del_locs is None else del_locs(shard),
+                negs={"": neg})
             if r is None or len(r) == 0:
-                return empty_r
-            ids = r["doc_id"].to_numpy(np.int64)
+                return pd.DataFrame({n: [] for n, _ in _columns(ddl)})
+            r = r.sort_values("doc_id")  # doc_id order: the frozen fold
             sc = r["score"].to_numpy(np.float64)
-            o = np.argsort(ids)  # doc_id order: the frozen fold order
-            ids, sc = ids[o], sc[o]
-            vals = group_values(dv_dir, shard, dv_gen, field, ids - shard
-                                * width)
-            ok = np.asarray(vals != None, dtype=bool)  # noqa: E711
-            if not ok.any():
-                return empty_r
-            sc, vals = sc[ok], vals[ok]
+            vals = group_values(dv_dir, shard, dv_gen, field,
+                                r["doc_id"].to_numpy(np.int64)
+                                - shard * width)
             out = []
-            pdf = pd.DataFrame({"g": vals, "s": sc})
-            for g, grp in pdf.groupby("g", sort=False):
-                v = grp["s"].to_numpy(np.float64)
+            for g, idx in pd.Series(vals).groupby(vals).indices.items():
+                v = sc[idx]  # None keys never form a group
                 # np.add.accumulate is a strict sequential left-fold
                 # (unlike np.sum's pairwise blocking) — the contract
                 out.append((g, shard, v.size,
                             float(np.add.accumulate(v)[-1]),
                             float(v.max())))
-            return pd.DataFrame(out, columns=pcols)
+            return pd.DataFrame(out, columns=["g", "shard", "n", "sm",
+                                              "mx"])
 
-        partial = post.groupBy("shard").applyInPandas(
-            fn, "g string, shard int, n long, sm double, mx double")
-        agg = (partial.groupBy("g")
-               .agg(F.sum("n").cast("long").alias("n_docs"),
-                    F.max("mx").alias("_mx"),
-                    F.aggregate(
-                        F.array_sort(F.collect_list(
-                            F.struct(F.col("shard"), F.col("sm")))),
-                        F.lit(0.0),
-                        lambda a, x: a + x["sm"]).alias("_sm")))
-        score = {"max": F.col("_mx"), "sum": F.col("_sm"),
-                 "avg": F.col("_sm") / F.col("n_docs"),
-                 "count": F.col("n_docs").cast("double")}[score_mode]
-        return (agg.select(F.col("g").alias("group_key"),
-                           score.alias("score"), "n_docs")
-                .orderBy(F.desc("score"), F.asc("group_key"))
-                .limit(_doc_limit(index, k)))
+        m = _MatchSet(lex, scan, _POST_COLS + ["dls"],
+                      sum(int(lex[t]["df"]) for t in scan), None)
+        return _held(index, GROUPS_SCHEMA, combine(_partials(index, m, fn,
+                                                             ddl)))
 
-    return _plan_cached(index, key, build)
+    return _plan_cached(
+        index, ("sg", query, field, k, score_mode, mode, exclude, dv_filter),
+        build)

@@ -96,9 +96,16 @@ def _query_rows_df(spark, queries: list, acfg) -> DataFrame:
         else:
             required = arity if mode == "AND" else 1
         rows.append((qid, 0, "query", text, "", required))
-    qdf = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-              "tool string, required int")
+    # an Arrow table plans as a LocalRelation with a size estimate, so a
+    # small registration takes build_index's driver route (a list of
+    # tuples is an RDD scan Catalyst cannot size: always the Spark route)
+    import pyarrow as pa
+    cols = list(zip(*rows)) or [()] * 6
+    qdf = spark.createDataFrame(pa.table(
+        [pa.array(c, t) for c, t in zip(cols, (
+            pa.string(), pa.int32(), pa.string(), pa.string(), pa.string(),
+            pa.int32()))],
+        names=["conv_id", "turn_idx", "role", "text", "tool", "required"]))
     return (qdf.withColumn("ts", F.timestamp_seconds(F.lit(_TS0)))
             .withColumn("qid", F.col("conv_id")))
 

@@ -1,14 +1,11 @@
-"""Query engine (SURVEY.md §2.E, §3 entry point 2).
-
-M1 layer: **expression-form BM25** over the flat postings IR — the whole
-score is a Catalyst expression tree (JVM codegen, zero Python in the hot
-path), ending in ``orderBy().limit(k)`` which compiles to
-``TakeOrderedAndProject`` (per-partition top-k heap + driver merge).
-This form doubles as the oracle-parallel path: the identical formula is
-expressible in DuckDB SQL for the driver's correctness gate.
-
-The packed-index WAND path (M2/M4) lives alongside and must produce
-rank-identical results — that equivalence is itself a test.
+"""Query engine (SURVEY.md §2.E, §3 entry point 2) over the packed
+index: a partition-pruned postings scan, one per-shard scoring kernel
+(``_score_shard_batch``, exhaustive or Block-Max WAND) and a top-k cut.
+``_run_shards`` is the executor gate: small work runs on the driver and
+returns a literal VALUES relation, the rest runs as one Spark job. Every
+ranking is rank-identical to the pure-Python oracle (engine/oracle.py),
+and the BM25 formula is the one the DuckDB gate twin writes in SQL
+(``bm25_score_col`` is its Spark-expression form).
 """
 
 from __future__ import annotations
@@ -23,7 +20,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from .analyzer import tokenize_py
-from .build import FlatIndex
 from .config import BM25Config
 
 
@@ -74,66 +70,6 @@ def bm25_score_col(tf_col, dl_col, idf_col, qtf_col, avgdl: float,
     k1, b = F.lit(cfg.k1), F.lit(cfg.b)
     denom = tf_col + k1 * (F.lit(1.0) - b + b * dl_col / F.lit(float(avgdl)))
     return qtf_col * idf_col * (tf_col * (k1 + F.lit(1.0))) / denom
-
-
-def search_flat(idx: FlatIndex, query: str, k: int = 10,
-                mode: str = "OR", exclude: str | None = None,
-                doc_filter: str | None = None) -> DataFrame:
-    """BM25 top-k over the flat postings IR.
-
-    Returns (doc_id, score) ordered by (score desc, doc_id asc), k rows.
-    mode=AND keeps only docs containing ALL distinct query terms
-    (posting-list intersection as a grouped count filter — the DataFrame
-    form of a k-way semi-join). ``exclude``: boolean NOT — drop docs
-    containing ANY of these terms (posting-list set difference as a
-    ``left_anti`` join).
-
-    Frozen NOT contract (shared by the flat path, the packed path, and
-    the DuckDB oracle twin): an excluded term that is ALSO a positive
-    query term is dropped from the exclusion set — the positive
-    occurrence wins. Documented so a query like "spark NOT spark" ranks
-    normally instead of returning nothing.
-    """
-    spark = idx.docs.sparkSession
-    acfg = idx.cfg.analyzer
-    qtf = query_terms(query, acfg)
-    empty = _empty_topk(spark)
-    if not qtf:
-        return empty
-    # E2: memoized driver-side lookup of the <= |query| lexicon rows —
-    # one small job (first time per term), reused for the broadcast side,
-    # the AND-arity check, and idf; no per-query count job.
-    known = idx.lookup_terms(sorted(qtf))
-    if mode.upper() == "AND" and len(known) < len(qtf):
-        return empty  # a required term is absent from the corpus
-    if not known:
-        return empty
-    n_known = len(known)
-    lex = spark.createDataFrame(
-        [(t, float(known[t]["idf"]), float(qtf[t])) for t in sorted(known)],
-        "term string, idf double, qtf double")
-    scored = (idx.postings
-              .join(F.broadcast(lex), "term")
-              .withColumn("_s", bm25_score_col(
-                  F.col("tf").cast("double"), F.col("dl").cast("double"),
-                  F.col("idf"), F.col("qtf"), idx.avgdl, idx.cfg.bm25))
-              .groupBy("doc_id")
-              .agg(F.sum("_s").alias("score"), F.count("*").alias("_nt")))
-    if mode.upper() == "AND":
-        scored = scored.filter(F.col("_nt") == n_known)
-    neg = sorted(set(tokenize_py(exclude, acfg)) - set(qtf)) if exclude else []
-    if neg:
-        negdocs = (idx.postings.filter(F.col("term").isin(neg))
-                   .select("doc_id").distinct())
-        scored = scored.join(negdocs, "doc_id", "left_anti")
-    if doc_filter is not None:
-        # query-time candidate restriction with GLOBAL stats (same frozen
-        # semantics as the packed path): a semi-join against the filtered
-        # corpus — predicate and column pruning reach the corpus scan
-        scored = scored.join(idx.docs.filter(doc_filter).select("doc_id"),
-                             "doc_id", "left_semi")
-    return (scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 # --------------------------------------------------------------------------
@@ -370,6 +306,11 @@ def search(index, query: str, k: int = 10, mode: str = "OR",
            demote: "tuple[str, float] | None" = None) -> DataFrame:
     """BM25 top-k over the packed index (see _search_impl for the full
     plan notes). Plans are memoized per argument tuple (_plan_cached).
+
+    ``exclude``: boolean NOT — docs containing any of these terms are
+    dropped. Frozen NOT contract (shared with the DuckDB oracle twin):
+    an excluded term that is also a positive query term is dropped from
+    the exclusion set, so "spark NOT spark" ranks normally.
 
     ``min_match``: minimum_should_match (OR mode only) — a doc must
     contain at least this many DISTINCT query terms to qualify.
@@ -1686,6 +1627,37 @@ def _pruned_postings(index, lex: dict, scan_terms: list,
             .select(*cols))
 
 
+def _driver_route(mass: int, rows: int = 0) -> bool:
+    """The executor gate: work with posting mass <= LOCAL_MAX_POSTINGS
+    and at most LOCAL_MAX_ROWS result rows runs on the driver, the rest
+    as one Spark job."""
+    return mass <= LOCAL_MAX_POSTINGS and rows <= LOCAL_MAX_ROWS
+
+
+def _driver_shards(index, lex: dict, scan_terms: list, cols: list, fn,
+                   shards=None) -> list:
+    """The driver route's shard loop: read the pruned postings rows with
+    pyarrow (bucket-partition and term filters), then call ``fn(key,
+    post_pdf)`` once per shard in shard order, exactly as
+    ``groupBy("shard").applyInPandas(fn)`` would. ``shards`` lists the
+    shards to run even without postings rows (they get an empty frame);
+    None runs the shards that have rows. Returns ``fn``'s frames."""
+    import pandas as pd
+
+    from .build import any_equal
+    if scan_terms:
+        buckets = sorted({lex[t]["bucket"] for t in scan_terms})
+        pdf = index.postings_dataset().to_table(
+            columns=cols, filter=any_equal("bucket", buckets)
+            & any_equal("term", scan_terms)).to_pandas()
+    else:
+        pdf = pd.DataFrame({c: [] for c in cols})
+    groups = {int(s): g.reset_index(drop=True)
+              for s, g in pdf.groupby("shard", sort=True)}
+    return [fn((shard,), groups.get(shard, pdf.iloc[:0]))
+            for shard in (groups if shards is None else shards)]
+
+
 def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
                 k: int, entries: "dict | None" = None) -> DataFrame:
     """Run the per-shard scorer ``fn(key, post_pdf)``, which emits the
@@ -1695,16 +1667,15 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
     order. For a query set it maps each qid to ``(k_q, terms_q)`` (the
     entry's own limit and positive terms): each entry keeps its own
     top-k_q, and the answer is in (qid, score desc, doc_id asc) order.
-    Two routes, one ``fn``:
+    Two routes, one ``fn``, chosen by ``_driver_route``:
 
     * posting mass <= LOCAL_MAX_POSTINGS and at most LOCAL_MAX_ROWS
       result rows (an entry's top-k holds at most min(k_q, mass_q)
-      rows): the driver reads the pruned rows with pyarrow
-      (bucket-partition and term filters), calls ``fn`` once per shard,
-      and cuts the top-k in pandas. The result is a literal VALUES
-      relation (a LocalRelation), so ``collect()`` runs no Spark job
-      whatever the Arrow setting. Scores are bit-identical to the
-      distributed route: same kernel, same per-shard input rows.
+      rows): ``_driver_shards`` calls ``fn`` once per shard and the
+      top-k is cut in pandas. The result is a literal VALUES relation
+      (a LocalRelation), so ``collect()`` runs no Spark job whatever
+      the Arrow setting. Scores are bit-identical to the distributed
+      route: same kernel, same per-shard input rows.
     * otherwise: groupBy(shard).applyInPandas(fn), then
       orderBy(score desc, doc_id asc).limit(k) for one query (planned
       as FlatMapGroupsInPandas + TakeOrderedAndProject) or a per-qid
@@ -1718,7 +1689,7 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
         rows = min(k, mass)
     else:
         rows = sum(min(k_q, mass_of(ts)) for k_q, ts in entries.values())
-    if mass > LOCAL_MAX_POSTINGS or rows > LOCAL_MAX_ROWS:
+    if not _driver_route(mass, rows):
         scored = (_pruned_postings(index, lex, scan_terms, cols)
                   .groupBy("shard")
                   .applyInPandas(fn, T.StructType(_BATCH_FIELDS)))
@@ -1729,15 +1700,8 @@ def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
             scored, k,
             {q: k_q for q, (k_q, _) in entries.items() if k_q != k})
     import pandas as pd
-
-    from .build import any_equal
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-    pdf = index.postings_dataset().to_table(
-        columns=cols, filter=any_equal("bucket", buckets)
-        & any_equal("term", scan_terms)).to_pandas()
-    parts = [fn((shard,), g.reset_index(drop=True))
-             for shard, g in pdf.groupby("shard", sort=True)]
-    parts = [p for p in parts if len(p)]
+    parts = [p for p in _driver_shards(index, lex, scan_terms, cols, fn)
+             if len(p)]
     if not parts:
         return _empty_topk(index.spark, with_qid=entries is not None)
     top = pd.concat(parts, ignore_index=True)
@@ -3541,17 +3505,6 @@ def materialize_snippets_batch(index, topk: DataFrame,
                     F.array_join(F.slice(F.col("_toks"), start, length), " ")
                     .alias("snippet"), "_rank")
             .orderBy("_rank").drop("_rank"))
-
-
-def materialize(idx: FlatIndex, topk: DataFrame) -> DataFrame:
-    """E8: top-k (doc_id, score) -> (doc_id, conv_id, turn_idx, text, score).
-
-    topk is tiny (<= k rows) -> broadcast side of the join against the
-    corpus; Catalyst/AQE picks broadcast-hash automatically, we pin it.
-    """
-    return (idx.docs.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "conv_id", "turn_idx", "text", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")))
 
 
 FACET_SCHEMA = "facet_field string, facet_value string, n_docs long"

@@ -90,9 +90,3 @@ def corpus_df(spark, corpus_pdf):
 def oracle_idx(corpus_pdf):
     from engine.oracle import OracleIndex
     return OracleIndex(list(zip(range(len(corpus_pdf)), corpus_pdf.text)))
-
-
-@pytest.fixture(scope="session")
-def flat_index(spark, corpus_df):
-    from engine.build import build_flat_index
-    return build_flat_index(spark, corpus_df)

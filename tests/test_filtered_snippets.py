@@ -47,15 +47,20 @@ def test_filtered_packed_matches_oracle(packed_index, oracle_idx,
         assert abs(gs - ws) < 1e-9
 
 
-def test_filtered_packed_equals_flat(packed_index, flat_index, spark):
+def test_filtered_packed_equals_oracle(packed_index, oracle_idx,
+                                       corpus_pdf):
+    """The filtered top-k is the oracle's whole ranking restricted to
+    the docs with role 'user', cut at k."""
     from engine import query as Q
-    a = [(r["doc_id"], round(r["score"], 9)) for r in
+    a = [(r["doc_id"], r["score"]) for r in
          Q.search(packed_index, "hot0 w020", k=10, mode="OR",
                   doc_filter=FILTER).collect()]
-    b = [(r["doc_id"], round(r["score"], 9)) for r in
-         Q.search_flat(flat_index, "hot0 w020", k=10, mode="OR",
-                       doc_filter=FILTER).collect()]
-    assert a == b and len(a) > 0
+    user = set(np.flatnonzero((corpus_pdf.role == "user").to_numpy()))
+    b = [(d, s) for d, s in
+         oracle_idx.search("hot0 w020", k=len(corpus_pdf), mode="OR")
+         if d in user][:10]
+    assert [d for d, _ in a] == [d for d, _ in b] and len(a) > 0
+    assert all(abs(x - y) <= 1e-9 for (_, x), (_, y) in zip(a, b))
 
 
 def test_filtered_scores_equal_unfiltered_scores(packed_index):

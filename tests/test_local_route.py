@@ -747,8 +747,6 @@ TAIL_CASES = [
         i, "hot0 user", fields={"text": 1.0, "role": 2.0}, k=10 ** 9,
         doc_filter="turn_idx >= 1")),
     ("more_like_this", lambda i: M.more_like_this(i, 0, k=10 ** 9)),
-    ("search_groups", lambda i: M.search_groups(i, "hot0", "role",
-                                                k=10 ** 9)),
 ]
 
 

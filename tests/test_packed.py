@@ -117,21 +117,21 @@ def test_packed_text_roundtrip(packed_index, corpus_pdf):
         assert r["text"] == corpus_pdf.text.iloc[r["doc_id"]]
 
 
-def test_not_mode_packed_equals_flat(spark, packed_index, flat_index):
-    """Boolean NOT (set difference): packed scorer's negmask == flat
-    path's left_anti join, on a query whose positive hits include docs
-    with the excluded term."""
+def test_not_mode_packed_equals_oracle(spark, packed_index, oracle_idx):
+    """Boolean NOT (set difference): the packed scorer's negmask equals
+    the oracle's whole ranking minus every doc holding the excluded
+    term, on a query whose positive hits include such docs."""
     got = Q.search(packed_index, "hot0", k=10, mode="OR",
                    exclude="hot1").collect()
-    want = Q.search_flat(flat_index, "hot0", k=10, mode="OR",
-                         exclude="hot1").collect()
-    assert [(r.doc_id, round(r.score, 9)) for r in got] == \
-           [(r.doc_id, round(r.score, 9)) for r in want]
+    hot1_docs = {d for d, _ in oracle_idx.postings["hot1"]}
+    full = oracle_idx.search("hot0", k=oracle_idx.n_docs, mode="OR")
+    want = [(d, s) for d, s in full if d not in hot1_docs][:10]
+    assert [r.doc_id for r in got] == [d for d, _ in want]
+    assert all(abs(r.score - s) <= 1e-9 for r, (_, s) in zip(got, want))
     assert got, "exclusion query should still match something"
     # and the excluded docs are really gone
-    hot1_docs = {r.doc_id for r in
-                 Q.search_flat(flat_index, "hot1", k=10000).collect()}
     assert not ({r.doc_id for r in got} & hot1_docs)
+    assert len(want) < len(full)  # the exclusion removed real hits
 
 
 def test_index_identical_across_parallelism(spark, corpus_df, oracle_idx,

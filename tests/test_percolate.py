@@ -166,3 +166,26 @@ def test_percolate_reads_lone_increment_segment(spark, tmp_path):
                 "MiXeD-Case7! and hot0 hot1 w010 w020 rare3"):
         got = [r.query_id for r in percolate(qx, doc).collect()]
         assert got == _ref_matches(doc), doc
+
+
+def test_small_registration_builds_on_the_driver(spark, tmp_path,
+                                                 monkeypatch):
+    """The saved-query corpus is an Arrow-backed local relation, so a
+    small registration takes build_index's driver route: no Python-UDF
+    plan is built. Percolation answers are unchanged."""
+    from pyspark.sql import GroupedData
+    from pyspark.sql.pandas.map_ops import PandasMapOpsMixin
+    queries = QUERIES[:2]
+
+    def refuse(*a, **kw):
+        raise AssertionError("a Python UDF plan was built")
+    with monkeypatch.context() as m:
+        for name in ("mapInArrow", "mapInPandas"):
+            m.setattr(PandasMapOpsMixin, name, refuse)
+        m.setattr(GroupedData, "applyInPandas", refuse)
+        qidx = register_queries(spark, queries, str(tmp_path / "q"))
+    assert qidx.n_docs == 2
+    for doc in ("hot0 hot1 filler", "rare4 alone", "hot0 rare3 hot1"):
+        got = [r.query_id for r in percolate(qidx, doc).collect()]
+        assert got == [q for q in _ref_matches(doc)
+                       if q in ("q-and", "q-or")], doc

@@ -39,14 +39,12 @@ def test_postings_scan_pruned(plan_idx):
     assert m and "blocks" not in m.group(1)  # column pruning
 
 
-def test_topk_is_take_ordered(plan_idx, flat_index, monkeypatch):
+def test_topk_is_take_ordered(plan_idx, monkeypatch):
     # the distributed route (posting mass above LOCAL_MAX_POSTINGS)
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
     monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
     packed = Q.search(plan_idx, "hot0 rare3", k=10)
     assert "TakeOrderedAndProject" in _formatted(packed)
-    flat = Q.search_flat(flat_index, "hot0 rare3", k=10)
-    assert "TakeOrderedAndProject" in _formatted(flat)
 
 
 def test_batch_reads_wand_columns_only_when_routable(plan_idx,
@@ -197,14 +195,34 @@ def test_facets_plan_pruned_single_pass(plan_idx):
     assert len(re.findall(r"^\(\d+\) Expand", plan, re.M)) == 1
 
 
-def test_match_count_plan_pruned(plan_idx):
+def _collected(monkeypatch) -> list:
+    """The aggregation scaffold pinned to its distributed route
+    (LOCAL_MAX_POSTINGS 0, no prepared answers), and the partial frames
+    that route collects (``toArrow``): an aggregation's answer is a
+    driver-held VALUES relation, so its one job's plan is on the frame
+    it collects."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    frames = []
+    real = ClassicDataFrame.toArrow
+
+    def spy(self):
+        frames.append(self)
+        return real(self)
+    monkeypatch.setattr(ClassicDataFrame, "toArrow", spy)
+    return frames
+
+
+def test_match_count_plan_pruned(plan_idx, monkeypatch):
     """match_count (r4): the count's ONLY scan is the pruned postings
     read — bucket partition filter + term pushdown, and neither the
     scoring streams (dls) nor WAND columns (blocks) nor the corpus ever
     appear in any ReadSchema."""
     from engine.matchops import match_count
-    out = match_count(plan_idx, "hot0 rare3", mode="OR")
-    plan = _formatted(out)
+    frames = _collected(monkeypatch)
+    match_count(plan_idx, "hot0 rare3", mode="OR")
+    plan = _formatted(frames[-1])
     assert re.search(r"PartitionFilters: \[.*bucket.*IN", plan), plan
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term", plan), plan
     schemas = re.findall(r"ReadSchema: (\S+)", plan)
@@ -214,18 +232,19 @@ def test_match_count_plan_pruned(plan_idx):
 
 
 def test_match_histogram_plan_single_agg(plan_idx, corpus_df,
-                                         tmp_path_factory):
+                                         tmp_path_factory, monkeypatch):
     """match_histogram (r4): one pruned postings scan (no corpus read —
-    values come from the in-task docvalue slices) and ONE hash
-    aggregation over the per-shard partial buckets."""
+    values come from the in-task docvalue slices); the per-shard
+    partial buckets are combined in pandas."""
     from engine.build import build_index
     from engine.config import IndexConfig
     from engine.matchops import match_histogram
     d = str(tmp_path_factory.mktemp("plans_dv") / "idx")
     idx = build_index(spark_ := corpus_df.sparkSession, corpus_df, d,
                       cfg=IndexConfig(doc_values=("role", "ts")))
-    out = match_histogram(idx, "hot0 rare3", "ts", 86400)
-    plan = _formatted(out)
+    frames = _collected(monkeypatch)
+    match_histogram(idx, "hot0 rare3", "ts", 86400)
+    plan = _formatted(frames[-1])
     schemas = re.findall(r"ReadSchema: (\S+)", plan)
     assert len(schemas) == 1, schemas  # postings only; dv reads are in-task
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term", plan), plan
@@ -257,20 +276,22 @@ def test_late_r4_ops_ride_the_pruned_scan(spark, tmp_path_factory,
     """The late-r4 operators (dis_max, composite, filters, percolate)
     all build on the SAME bucket-pruned, term-pushed postings scan —
     plan-asserted here so a refactor can't silently widen their reads.
-    dis_max is pinned to its distributed route (LOCAL_MAX_POSTINGS 0)."""
+    All are pinned to their distributed route (LOCAL_MAX_POSTINGS 0);
+    composite and filters are asserted on the partial frame that route
+    collects."""
     from engine.build import build_index
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
-    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
     from engine.matchops import match_composite, match_filters
     d = str(tmp_path_factory.mktemp("plans_late") / "idx")
     idx = build_index(spark, corpus_df, d,
                       cfg=__import__("engine.config",
                                      fromlist=["IndexConfig"])
                       .IndexConfig(doc_values=("role",)))
+    frames = _collected(monkeypatch)
+    match_composite(idx, "hot0 rare3", ["role"], size=3)
+    match_filters(idx, "hot0 rare3", {"u": "role = 'user'"})
+    assert len(frames) == 2
     for df in (Q.search_dis_max(idx, ["hot0 hot1", "rare3"], k=5),
-               match_composite(idx, "hot0 rare3", ["role"], size=3),
-               match_filters(idx, "hot0 rare3",
-                             {"u": "role = 'user'"})):
+               *frames):
         plan = _formatted(df)
         # single-bucket queries render as (bucket = N), multi as IN
         assert re.search(r"PartitionFilters: \[.*bucket", plan), plan
@@ -292,14 +313,17 @@ def test_percolate_scan_pruned(spark, tmp_path_factory):
     assert re.search(r"PushedFilters: \[.*\(term", plan), plan
 
 
-def test_match_all_plan_scan_free(plan_idx):
+def test_match_all_plan_scan_free(plan_idx, monkeypatch):
     """match_all ('*') aggregation: NO file scan at all — the shard
     list is a driver-built local relation; with exclude, exactly ONE
     pruned postings scan of just the negative terms appears."""
     from engine.matchops import match_count
-    plan = _formatted(match_count(plan_idx, "*"))
+    frames = _collected(monkeypatch)
+    match_count(plan_idx, "*")
+    plan = _formatted(frames[-1])
     assert "FileScan" not in plan and "Scan parquet" not in plan, plan
-    plan2 = _formatted(match_count(plan_idx, "*", exclude="hot0"))
+    match_count(plan_idx, "*", exclude="hot0")
+    plan2 = _formatted(frames[-1])
     schemas = re.findall(r"ReadSchema: (\S+)", plan2)
     assert len(schemas) == 1, schemas  # the neg-terms postings scan only
     assert re.search(r"PushedFilters: \[.*\(term", plan2), plan2

@@ -1,11 +1,19 @@
-"""M1 end-to-end: flat-IR BM25 vs pure-Python oracle — rank-identical
-(SURVEY.md §5.3), plus docID determinism across partition counts (§5.2)
-and the per-turn text-equality invariant (§5.4)."""
+"""End to end: packed-index BM25 vs the pure-Python oracle —
+rank-identical (SURVEY.md §5.3) — plus docID determinism across
+partition counts (§5.2), the index stats, and the per-turn
+text-equality invariant (§5.4)."""
 
 import pytest
 
 from engine.fixtures import QUERY_SET
 from engine import query as Q
+
+
+@pytest.fixture(scope="module")
+def packed(spark, corpus_df, tmp_path_factory):
+    from engine.build import build_index
+    d = str(tmp_path_factory.mktemp("ranking") / "idx")
+    return build_index(spark, corpus_df, d)
 
 
 def _assert_rank_identical(got, want, qid):
@@ -17,8 +25,8 @@ def _assert_rank_identical(got, want, qid):
 
 
 @pytest.mark.parametrize("q", QUERY_SET, ids=[q["id"] for q in QUERY_SET])
-def test_rank_identity_vs_oracle(flat_index, oracle_idx, q):
-    got = Q.search_flat(flat_index, q["query"], k=10, mode=q["mode"]).collect()
+def test_rank_identity_vs_oracle(packed, oracle_idx, q):
+    got = Q.search(packed, q["query"], k=10, mode=q["mode"]).collect()
     want = oracle_idx.search(q["query"], k=10, mode=q["mode"])
     _assert_rank_identical(got, want, q["id"])
 
@@ -38,10 +46,10 @@ def test_docids_dense_and_deterministic(spark, corpus_df, corpus_pdf):
         assert pa_[key] == rank
 
 
-def test_stats_match_oracle(flat_index, oracle_idx):
-    assert flat_index.n_docs == oracle_idx.n_docs
-    assert abs(flat_index.avgdl - oracle_idx.avgdl) < 1e-12
-    lex = {r.term: r for r in flat_index.lexicon.collect()}
+def test_stats_match_oracle(packed, oracle_idx):
+    assert packed.n_docs == oracle_idx.n_docs
+    assert abs(packed.avgdl - oracle_idx.avgdl) < 1e-12
+    lex = {r.term: r for r in packed.lexicon().collect()}
     assert set(lex) == set(oracle_idx.postings)
     for t, rows in oracle_idx.postings.items():
         assert lex[t].df == len(rows), t
@@ -49,10 +57,10 @@ def test_stats_match_oracle(flat_index, oracle_idx):
         assert abs(lex[t].idf - oracle_idx.idf(t)) < 1e-12, t
 
 
-def test_text_equality_invariant(flat_index, corpus_pdf):
+def test_text_equality_invariant(packed, corpus_pdf):
     """E8 round-trip: text via the engine == corpus text, stable order."""
-    top = Q.search_flat(flat_index, "hot0 hot1", k=10, mode="OR")
-    rows = Q.materialize(flat_index, top).collect()
+    top = Q.search(packed, "hot0 hot1", k=10, mode="OR")
+    rows = Q.materialize_packed(packed, top).collect()
     assert len(rows) == 10
     for r in rows:
         assert r["text"] == corpus_pdf.text.iloc[r["doc_id"]]
