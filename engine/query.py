@@ -1652,10 +1652,12 @@ def _driver_shards(index, lex: dict, scan_terms: list, cols: list, fn,
             & any_equal("term", scan_terms)).to_pandas()
     else:
         pdf = pd.DataFrame({c: [] for c in cols})
-    groups = {int(s): g.reset_index(drop=True)
-              for s, g in pdf.groupby("shard", sort=True)}
-    return [fn((shard,), groups.get(shard, pdf.iloc[:0]))
-            for shard in (groups if shards is None else shards)]
+    groups = ((int(s), g.reset_index(drop=True))
+              for s, g in pdf.groupby("shard", sort=True))
+    if shards is None:
+        return [fn((s,), g) for s, g in groups]
+    groups, empty = dict(groups), pdf.iloc[:0]
+    return [fn((s,), groups.get(s, empty)) for s in shards]
 
 
 def _run_shards(index, lex: dict, scan_terms: list, cols: list, fn,
