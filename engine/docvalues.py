@@ -107,6 +107,17 @@ def _con():
     return _DUCK
 
 
+def where(pred: str) -> str:
+    """``WHERE pred`` for the embedded DuckDB, refusing a predicate that
+    would run a second statement (DuckDB's ``execute`` runs every
+    ';'-separated statement, so ``x = 1; COPY t TO 'f'`` writes a
+    file)."""
+    if len(_con().extract_statements(f"SELECT 1 WHERE {pred}")) != 1:
+        raise ValueError(f"a docvalue predicate must be one SQL "
+                         f"expression, not several statements: {pred!r}")
+    return f"WHERE {pred}"
+
+
 def eval_filter(index_dir: str, shard: int, gen: int, pred: str):
     """Shard-local offsets of docs passing the ANSI-SQL predicate over
     the shard's docvalue columns — evaluated in-task by embedded DuckDB
@@ -117,7 +128,7 @@ def eval_filter(index_dir: str, shard: int, gen: int, pred: str):
     if slice_tbl is None or slice_tbl.num_rows == 0:
         return np.empty(0, dtype=np.int64)
     out = _con().execute(
-        f"SELECT loc FROM slice_tbl WHERE {pred}").fetchnumpy()
+        f"SELECT loc FROM slice_tbl {where(pred)}").fetchnumpy()
     return out["loc"].astype(np.int64)
 
 

@@ -31,9 +31,17 @@ match set's posting mass (``n_docs`` for ``"*"``) as the work:
   A ``doc_filter`` count is always this job, cogrouped with the
   filtered corpus side.
 
-Partial rows are metadata-sized — one per shard, or one per bucket,
-group or distinct value of a shard — never one per doc, so what moves
-is bounded by what the answer holds. Every reduction is exact int64
+Partial rows are one per shard, or one per bucket, group or distinct
+value of a shard — never one per doc. What the driver collects is
+bounded by the answer: a surface whose answer holds every key of its
+partial rows (a count, stats, histogram buckets, ranges, filters)
+collects at most shards x answer rows; a surface whose answer is a cut
+or a reduction of its keys (cardinality, rare terms, histogram top,
+facet stats, percentiles' value histogram, group ranking) passes a
+``merge`` that the distributed route runs on the executors, over hash
+groups of the partial rows' keys, so it collects at most one answer
+per hash group; composite cuts each shard to its page. Every reduction
+is exact int64
 (timestamps at the frozen whole-second grain) or a float fold in a
 frozen order, so both routes give identical rows, and each surface's
 DuckDB twin in ``__spark_entry__`` reduces the same integers.
@@ -222,36 +230,57 @@ def _shard_job(index, m: _MatchSet, fn, ddl: str,
     return grouped.cogroup(allowed.groupBy("shard")).applyInPandas(fnf, ddl)
 
 
-def _partials(index, m: _MatchSet, fn, ddl: str,
-              doc_filter=None) -> pd.DataFrame:
+def _typed(pdf: "pd.DataFrame | None", ddl: str) -> pd.DataFrame:
+    """``pdf`` through the Arrow schema of ``ddl``, as the distributed
+    route's collect types it (None: no rows)."""
+    schema = _schema(ddl)
+    return (schema.empty_table() if pdf is None else pa.Table.from_pandas(
+        pdf, schema=schema, preserve_index=False)).to_pandas()
+
+
+def _partials(index, m: _MatchSet, fn, ddl: str, doc_filter=None,
+              merge=None) -> pd.DataFrame:
     """Every shard's ``fn`` rows as one pandas frame typed by ``ddl``
     (through the same Arrow schema on both routes): on the driver when
     ``query._driver_route`` takes the match set's mass and no
     ``doc_filter`` needs the corpus, else collected from one
-    ``_shard_job``."""
-    schema = _schema(ddl)
+    ``_shard_job``.
+
+    ``merge = (keys, reduce, out_ddl)``: ``reduce`` maps partial rows
+    holding EVERY row of their ``keys`` values to rows typed by
+    ``out_ddl``. The distributed route runs it on the executors, once
+    per hash group of ``keys`` (one group per shuffle partition), and
+    collects only its rows; the driver route runs it once over all the
+    partial rows. Either way the rows of one key meet in one call."""
     if doc_filter is None and Q._driver_route(m.mass):
         parts = [p for p in Q._driver_shards(
             index, m.lex, m.scan_terms, m.cols, fn,
             None if m.n_shards is None else range(m.n_shards)) if len(p)]
-        table = pa.Table.from_pandas(
-            pd.concat(parts, ignore_index=True), schema=schema,
-            preserve_index=False) if parts else schema.empty_table()
-    else:
-        table = _shard_job(index, m, fn, ddl, doc_filter).toArrow()
-    return table.to_pandas()
+        out = _typed(pd.concat(parts, ignore_index=True) if parts else None,
+                     ddl)
+        if merge is None:
+            return out
+        return _typed(merge[1](out) if len(out) else None, merge[2])
+    job = _shard_job(index, m, fn, ddl, doc_filter)
+    if merge is not None:
+        keys, reduce, out_ddl = merge
+        groups = int(index.spark.conf.get("spark.sql.shuffle.partitions"))
+        job = job.groupBy(F.pmod(F.hash(*keys), F.lit(groups))) \
+            .applyInPandas(lambda pdf: reduce(pdf), out_ddl)
+    return job.toArrow().to_pandas()
 
 
 def _gatherer(dv_dir: str, dv_gen: int, shard: int, hit):
-    """The one docvalue extractor: ``gather(field, as_str=False) ->
-    (values, present)`` for the hits ``hit`` of ``shard``, aligned with
-    ``hit``, from the shard's cached docvalue slice (read on the first
-    call only, so a partial that reads no docvalues reads no slice).
-    ``present`` is False where the value is NULL or the doc has no
-    docvalue row (both mean "unknown"; callers skip those). Values are
-    int64 (timestamps at the frozen whole-second grain) or, for a string
-    column or with ``as_str`` (any column's Arrow string rendering),
-    strings with None where not present."""
+    """The one docvalue extractor: ``gather(field)`` -> the values of
+    ``field`` for the hits ``hit`` of ``shard`` that have one, from the
+    shard's cached docvalue slice (read on the first call only, so a
+    partial that reads no docvalues reads no slice). A NULL value and a
+    doc with no docvalue row both mean "unknown" and are skipped. Values
+    are int64 (timestamps at the frozen whole-second grain) or, for a
+    string column or with ``as_str`` (any column's Arrow string
+    rendering), strings. ``aligned=True`` returns ``(values, present)``
+    aligned with ``hit`` instead: ``present`` is False where the value
+    is unknown, and a string value there is None."""
     import functools
 
     import pyarrow.compute as pc
@@ -267,7 +296,7 @@ def _gatherer(dv_dir: str, dv_gen: int, shard: int, hit):
         row = np.minimum(np.searchsorted(sloc, hit), sloc.size - 1)
         return tbl, pa.array(row), sloc[row] == hit
 
-    def gather(field, as_str=False):
+    def values(field, as_str):
         if rows() is None:
             return (np.full(hit.size, None, dtype=object),
                     np.zeros(hit.size, dtype=bool))
@@ -286,19 +315,24 @@ def _gatherer(dv_dir: str, dv_gen: int, shard: int, hit):
         return pc.fill_null(col, 0).to_numpy(
             zero_copy_only=False).astype(np.int64), present
 
+    def gather(field, as_str=False, aligned=False):
+        vals, present = values(field, as_str)
+        return (vals, present) if aligned else vals[present]
+
     return gather
 
 
 def _aggregate(index, m: "_MatchSet | None", ddl: str, partial, combine,
-               doc_filter=None):
+               doc_filter=None, merge=None):
     """The scaffold: ``combine`` over the partial rows (schema ``ddl``)
     that ``partial(shard, hit_locs, gather)`` makes of each shard's hits
-    in match set ``m``. A shard without hits, or a None ``partial``,
+    in match set ``m`` — or, with ``merge`` (``_partials``), over what
+    it reduces them to. A shard without hits, or a None ``partial``,
     adds no rows; a None ``m`` (provably empty) gives ``combine`` none
     at all."""
     names = [n for n, _ in _columns(ddl)]
     if m is None:
-        return combine(_schema(ddl).empty_table().to_pandas())
+        return combine(_typed(None, ddl if merge is None else merge[2]))
     hits, dv_dir, dv_gen = m.hits, index.index_dir, int(index.n_docs)
 
     def fn(key, post_pdf, allowed_loc=None):
@@ -308,7 +342,7 @@ def _aggregate(index, m: "_MatchSet | None", ddl: str, partial, combine,
             if hit.size else None
         return pd.DataFrame({n: [] for n in names}) if out is None else out
 
-    return combine(_partials(index, m, fn, ddl, doc_filter))
+    return combine(_partials(index, m, fn, ddl, doc_filter, merge))
 
 
 def _dv_kind(index, field: str, label: str, kinds=None) -> str:
@@ -339,17 +373,22 @@ def _dv_kind(index, field: str, label: str, kinds=None) -> str:
     return kind
 
 
-def _present(values, present):
-    """The present values of a ``gather`` result."""
-    return values[present]
+def _tuples(p: pd.DataFrame) -> list:
+    """``p``'s rows as tuples of Python values, None for NULL (which
+    pandas reads from Arrow as NaN in a numeric column)."""
+    return list(zip(*(p[c].astype(object).where(p[c].notna(), None).tolist()
+                      for c in p.columns)))
+
+
+def _summed(p: pd.DataFrame, keys, col: str = "n") -> pd.DataFrame:
+    """``col`` summed per ``keys``, in key order."""
+    return p.groupby(keys, sort=True)[col].sum().reset_index()
 
 
 def _sum_by(p: pd.DataFrame, keys, col: str = "n") -> list:
     """``col`` summed per ``keys`` over every shard's partial rows, as
     ``(*keys, sum)`` tuples in key order."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    g = p.groupby(keys, sort=True)[col].sum().reset_index()
-    return list(zip(*[g[c].tolist() for c in keys + [col]]))
+    return _tuples(_summed(p, keys, col))
 
 
 def _stats_partial(n: int, values) -> tuple:
@@ -435,7 +474,7 @@ def match_stats(index, query: str, field: str, mode: str = "OR",
             index, _prep_match(index, query, mode, exclude, dv_filter),
             "n long, nv long, mn long, mx long, sm long",
             lambda shard, hit, gather: pd.DataFrame(
-                [_stats_partial(hit.size, _present(*gather(field)))],
+                [_stats_partial(hit.size, gather(field))],
                 columns=["n", "nv", "mn", "mx", "sm"]),
             _stats_row)
         return _held(index, STATS_SCHEMA, [row])
@@ -455,24 +494,25 @@ def match_cardinality(index, query: str, field: str, mode: str = "OR",
     non-NULL values of ``field`` among docs matching the boolean query
     (timestamps at the whole-second grain), with match_count's
     membership. The oracle twin is ``COUNT(DISTINCT field)`` over the
-    matching docs. Each shard emits its own distinct values, so the
-    partial rows are bounded by the per-shard distinct values — for a
-    unique-per-doc field, the match set: the floor for an EXACT
-    distinct, which is why engines offer HLL when approximation is
-    acceptable.
+    matching docs. Each shard emits its own distinct values (for a
+    unique-per-doc field, its hits: the floor for an EXACT distinct,
+    which is why engines offer HLL when approximation is acceptable);
+    the distinct count runs where they meet, so the distributed route
+    collects one count per hash group, not the values.
     """
     _warn_if_stale(index)
     mode = mode.upper()
     kind = _dv_kind(index, field, "match_cardinality")
 
-    def partial(shard, hit, gather):
-        return pd.DataFrame({"v": np.unique(_present(*gather(field)))})
-
     def build():
         n = _aggregate(
             index, _prep_match(index, query, mode, exclude, dv_filter),
-            "v string" if kind == "str" else "v long", partial,
-            lambda p: int(p["v"].nunique()))
+            "v string" if kind == "str" else "v long",
+            lambda shard, hit, gather: pd.DataFrame(
+                {"v": np.unique(gather(field))}),
+            lambda p: int(p["n"].sum()),
+            merge=(["v"], lambda p: pd.DataFrame({"n": [p["v"].nunique()]}),
+                   "n long"))
         return _held(index, "n_values long", [(n,)])
 
     return _plan_cached(
@@ -497,9 +537,8 @@ def match_missing(index, query: str, field: str, mode: str = "OR",
     _dv_kind(index, field, "match_missing")
 
     def partial(shard, hit, gather):
-        present = gather(field)[1]
         return pd.DataFrame({"n": [hit.size],
-                             "miss": [hit.size - int(present.sum())]})
+                             "miss": [hit.size - gather(field).size]})
 
     def build():
         row = _aggregate(
@@ -533,7 +572,7 @@ def match_string_stats(index, query: str, field: str, mode: str = "OR",
     _dv_kind(index, field, "match_string_stats", ("str",))
 
     def partial(shard, hit, gather):
-        vals = _present(*gather(field)).tolist()
+        vals = gather(field).tolist()
         lens = [len(v) for v in vals]
         chars = Counter("".join(vals))
         return pd.DataFrame(
@@ -571,17 +610,26 @@ def match_string_stats(index, query: str, field: str, mode: str = "OR",
 
 
 def _histogram_rows(index, query, field, interval_s, mode, exclude,
-                    dv_filter) -> list:
-    """Sorted ``(bucket_start, n_docs)`` pairs of ``match_histogram``."""
+                    dv_filter, top=None) -> list:
+    """Sorted ``(bucket_start, n_docs)`` pairs of ``match_histogram``;
+    with ``top = (n, asc)``, only ``match_histogram_top``'s first ``n``
+    in its frozen order, cut where each bucket's shard counts meet."""
     def partial(shard, hit, gather):
-        b = np.floor_divide(_present(*gather(field)).astype(np.int64),
-                            interval_s) * interval_s
+        b = np.floor_divide(gather(field), interval_s) * interval_s
         ub, cnt = np.unique(b, return_counts=True)
         return pd.DataFrame({"b": ub, "n": cnt})
 
-    return _aggregate(
-        index, _prep_match(index, query, mode, exclude, dv_filter),
-        "b long, n long", partial, lambda p: _sum_by(p, "b"))
+    def busiest(p):
+        return _summed(p, "b").sort_values(
+            ["n", "b"], ascending=[top[1], True]).head(top[0])
+
+    m = _prep_match(index, query, mode, exclude, dv_filter)
+    if top is None:
+        return _aggregate(index, m, "b long, n long", partial,
+                          lambda p: _sum_by(p, "b"))
+    return _aggregate(index, m, "b long, n long", partial,
+                      lambda p: _tuples(busiest(p)),
+                      merge=(["b"], busiest, "b long, n long"))
 
 
 def _histogram_args(index, field: str, interval_s, label: str) -> int:
@@ -678,8 +726,9 @@ def match_histogram_having(index, query: str, field: str, interval_s: int,
     The predicate runs in the embedded DuckDB over the pipeline rows
     (the ``dv_filter`` machinery), so keep it to the ANSI subset Spark
     SQL and DuckDB parse identically; the oracle twin is the literal
-    same string."""
-    from .docvalues import _con
+    same string. It must be one expression: a ``;`` that would start a
+    second statement is refused (``ValueError``)."""
+    from .docvalues import _con, where
     _warn_if_stale(index)
     mode = mode.upper()
     interval_s = _histogram_args(index, field, interval_s,
@@ -692,7 +741,7 @@ def match_histogram_having(index, query: str, field: str, interval_s: int,
             [pa.array(c, pa.int64()) for c in zip(*rows)] if rows
             else [pa.array([], pa.int64())] * 4,
             names=["bucket_start", "n_docs", "cum_docs", "delta_docs"])
-        kept = _con().execute(f"SELECT * FROM buckets WHERE {having} "
+        kept = _con().execute(f"SELECT * FROM buckets {where(having)} "
                               f"ORDER BY bucket_start").fetchall()
         return _held(index, PIPELINE_SCHEMA, kept)
 
@@ -722,15 +771,12 @@ def match_histogram_top(index, query: str, field: str, interval_s: int,
     interval_s = _histogram_args(index, field, interval_s,
                                  "match_histogram_top")
 
-    def build():
-        rows = _histogram_rows(index, query, field, interval_s, mode,
-                               exclude, dv_filter)
-        rows.sort(key=lambda r: (r[1] if asc else -r[1], r[0]))
-        return _held(index, HISTOGRAM_SCHEMA, rows[:n])
-
     return _plan_cached(
         index, ("mht", query, field, interval_s, n, bool(asc), mode,
-                exclude, dv_filter), build)
+                exclude, dv_filter),
+        lambda: _held(index, HISTOGRAM_SCHEMA, _histogram_rows(
+            index, query, field, interval_s, mode, exclude, dv_filter,
+            top=(n, bool(asc)))))
 
 
 def match_ranges(index, query: str, field: str, edges,
@@ -759,7 +805,7 @@ def match_ranges(index, query: str, field: str, edges,
 
     def partial(shard, hit, gather):
         b = np.searchsorted(np.asarray(edges, dtype=np.int64),
-                            _present(*gather(field)).astype(np.int64),
+                            gather(field).astype(np.int64),
                             side="right")
         cnt = np.bincount(b, minlength=len(edges) + 1)
         nz = np.flatnonzero(cnt)
@@ -815,10 +861,13 @@ def facet_stats(index, query: str, group_field: str, stat_field: str,
     if n is not None and int(n) <= 0:
         raise ValueError("n must be >= 1")
     pos = {"count": 1, "min": 3, "max": 4, "sum": 5, "avg": 6}[order_by]
+    cut = None if n is None else int(n)
+    out = ("facet_value string, n_docs long, n_with_value long, "
+           "min_val double, max_val double, sum_val double, avg_val double")
 
     def partial(shard, hit, gather):
-        groups = pd.Series(gather(group_field, as_str=True)[0])
-        vals, present = gather(stat_field)
+        groups = pd.Series(gather(group_field, as_str=True, aligned=True)[0])
+        vals, present = gather(stat_field, aligned=True)
         return pd.DataFrame(
             [(None if pd.isna(g) else g,
               *_stats_partial(idx.size, vals[idx][present[idx]]))
@@ -831,19 +880,19 @@ def facet_stats(index, query: str, group_field: str, stat_field: str,
         return (m is None, 0 if m is None else m if ascending else -m,
                 row[0] is not None, row[0] or "")
 
+    def facets(p):  # exact over rows holding every row of their groups
+        rows = sorted(((None if pd.isna(g) else g, *_stats_row(grp))
+                       for g, grp in p.groupby("g", dropna=False,
+                                               sort=False)), key=order)
+        return pd.DataFrame(rows[:cut], columns=[c for c, _ in _columns(out)])
+
     def build():
         rows = _aggregate(
             index, _prep_match(index, query, mode, exclude, dv_filter),
             "g string, n long, nv long, mn long, mx long, sm long", partial,
-            lambda p: [(None if pd.isna(g) else g, *_stats_row(grp))
-                       for g, grp in p.groupby("g", dropna=False,
-                                               sort=False)])
-        rows.sort(key=order)
-        return _held(index, "facet_value string, n_docs long, "
-                            "n_with_value long, min_val double, "
-                            "max_val double, sum_val double, "
-                            "avg_val double",
-                     rows if n is None else rows[:int(n)])
+            lambda p: sorted(_tuples(p), key=order)[:cut],
+            merge=(["g"], facets, out))
+        return _held(index, out, rows)
 
     return _plan_cached(
         index, ("fs", query, group_field, stat_field, mode, exclude,
@@ -864,8 +913,10 @@ def rare_terms(index, query: str, field: str, max_doc_count: int = 1,
 
     Returns ``(facet_value:string, n_docs:long)`` ordered
     (n_docs asc, facet_value asc), limited to ``n`` rows. The rarity
-    filter runs after the global merge (a value can be rare in one
-    shard and common overall)."""
+    filter and the cut run where a value's shard counts meet (a value
+    can be rare in one shard and common overall): on the executors on
+    the distributed route, which collects at most ``n`` rows per hash
+    group."""
     _warn_if_stale(index)
     mode = mode.upper()
     max_doc_count = int(max_doc_count)
@@ -877,17 +928,21 @@ def rare_terms(index, query: str, field: str, max_doc_count: int = 1,
     _dv_kind(index, field, "rare_terms")
 
     def partial(shard, hit, gather):
-        v, cnt = np.unique(_present(*gather(field, as_str=True)).astype(str),
+        v, cnt = np.unique(gather(field, as_str=True).astype(str),
                            return_counts=True)
         return pd.DataFrame({"v": v, "cnt": cnt})
 
+    def rarest(p):  # exact over rows holding every row of their values
+        c = p.groupby("v", sort=False)["cnt"].sum().reset_index()
+        return c[c["cnt"] <= max_doc_count].sort_values(["cnt", "v"]).head(n)
+
     def build():
-        rows = [(v, c) for v, c in _aggregate(
+        rows = _aggregate(
             index, _prep_match(index, query, mode, exclude, dv_filter),
-            "v string, cnt long", partial, lambda p: _sum_by(p, "v", "cnt"))
-            if c <= max_doc_count]
-        rows.sort(key=lambda r: (r[1], r[0]))
-        return _held(index, "facet_value string, n_docs long", rows[:n])
+            "v string, cnt long", partial,
+            lambda p: _tuples(rarest(p)),
+            merge=(["v"], rarest, "v string, cnt long"))
+        return _held(index, "facet_value string, n_docs long", rows)
 
     return _plan_cached(
         index, ("rare", query, field, max_doc_count, n, mode, exclude,
@@ -923,9 +978,12 @@ def match_composite(index, query: str, fields, size: int = 10,
     * counts are exact int64 over ``search``'s exact match set
       (AND/OR arity, NOT via ``exclude``, ``dv_filter``, tombstones).
 
-    The after key also filters inside each shard, so buckets an earlier
-    page walked never leave their shard: a full walk moves every bucket
-    once, not once per page.
+    Each shard emits only its first ``size`` buckets past ``after``,
+    in key order. That is exact: a bucket among the page's ``size`` has
+    fewer than ``size`` smaller keys past ``after`` in any shard, so
+    every shard holding it sends it. What a page collects is at most
+    shards x ``size`` rows, however many buckets the match set holds,
+    and a page never reads the buckets of earlier pages back.
     """
     _warn_if_stale(index)
     mode = mode.upper()
@@ -949,26 +1007,29 @@ def match_composite(index, query: str, fields, size: int = 10,
     ddl = ", ".join(f"{f_} {'string' if k_ == 'str' else 'long'}"
                     for f_, k_ in zip(fields, kinds))
 
-    def walked(keys) -> bool:
-        return after is not None and tuple(keys) <= after
-
     def partial(shard, hit, gather):
-        cols = [gather(f_) for f_ in fields]
+        cols = [gather(f_, aligned=True) for f_ in fields]
         keep = np.logical_and.reduce([present for _, present in cols])
-        if not keep.any():
-            return None
         keys = pd.DataFrame({f_: vals[keep] for f_, (vals, _) in
                              zip(fields, cols)})
-        out = keys.groupby(fields, sort=False).size().reset_index(name="n")
-        return out[np.array([not walked(k) for k in zip(
-            *[out[f_].tolist() for f_ in fields])], dtype=bool)]
+        if after is not None:  # key tuple > after, lexicographically
+            past = np.zeros(len(keys), dtype=bool)
+            tied = ~past
+            for f_, a in zip(fields, after):
+                v = keys[f_].to_numpy()
+                past |= tied & (v > a)
+                tied &= v == a
+            keys = keys[past]
+        if not len(keys):
+            return None
+        return keys.groupby(fields, sort=True).size().head(size) \
+            .reset_index(name="n")
 
     def build():
-        rows = [r for r in _aggregate(
+        return _held(index, ddl + ", n_docs long", _aggregate(
             index, _prep_match(index, query, mode, exclude, dv_filter),
-            ddl + ", n long", partial, lambda p: _sum_by(p, fields))
-            if not walked(r[:-1])]
-        return _held(index, ddl + ", n_docs long", rows[:size])
+            ddl + ", n long", partial,
+            lambda p: _sum_by(p, fields)[:size]))
 
     return _plan_cached(
         index, ("cmp", query, tuple(fields), size, after, mode, exclude,
@@ -1029,6 +1090,18 @@ def _named_filters(index, filters: dict, what: str) -> list:
     return filters
 
 
+def _filtered_match(index, query, mode, exclude, dv_filter, preds):
+    """``_prep_match`` for a surface that evaluates each of ``preds``
+    over every docvalue row of each shard with hits. That work joins the
+    gate's posting mass at a third of a posting per doc and predicate:
+    forcing both routes over a sweep (the table next to
+    ``query.LOCAL_MAX_POSTINGS``), the driver lost past ~3.5M postings
+    with 3 predicates and past ~2M with 10, against ~4.2M with none."""
+    m = _prep_match(index, query, mode, exclude, dv_filter)
+    return m if m is None else dataclasses.replace(
+        m, mass=m.mass + len(preds) * int(index.n_docs) // 3)
+
+
 def match_filters(index, query: str, filters: dict,
                   mode: str = "OR", exclude: str | None = None,
                   dv_filter: str | None = None) -> DataFrame:
@@ -1062,7 +1135,8 @@ def match_filters(index, query: str, filters: dict,
 
     def build():
         counts = dict(_aggregate(
-            index, _prep_match(index, query, mode, exclude, dv_filter),
+            index, _filtered_match(index, query, mode, exclude, dv_filter,
+                                   preds),
             "bucket string, n long", partial,
             lambda p: _sum_by(p, "bucket")))
         return _held(index, "bucket string, n_docs long",
@@ -1109,7 +1183,8 @@ def match_adjacency(index, query: str, filters: dict,
 
     def build():
         return _held(index, "a string, b string, n_docs long", _aggregate(
-            index, _prep_match(index, query, mode, exclude, dv_filter),
+            index, _filtered_match(index, query, mode, exclude, dv_filter,
+                                   preds),
             "a string, b string, n long", partial,
             lambda p: _sum_by(p, ["a", "b"])))
 
@@ -1372,7 +1447,9 @@ def _value_hist(index, query: str, field: str, mode: str, exclude,
     count, min, max, distinct count) freezes the integer bin edges
     (``_bin_width``), then each value counts under its bin's LOWER EDGE
     ``vmin + width * bin`` — at most n_bins rows, each reported value
-    off by less than one bin width (exact when the width is 1).
+    off by less than one bin width (exact when the width is 1). Either
+    way the counts are summed where a value's shard counts meet, so the
+    distributed route collects the histogram, not shards x histogram.
     ``"auto"`` runs the bounds pass and bins only when the sum of the
     per-shard distinct counts (an upper bound on the global distinct
     count, so on the exact histogram's size) exceeds
@@ -1381,7 +1458,7 @@ def _value_hist(index, query: str, field: str, mode: str, exclude,
     vmin, wd = 0, 1
     if method != "exact":
         def bounds(shard, hit, gather):
-            v = _present(*gather(field)).astype(np.int64)
+            v = gather(field).astype(np.int64)
             return pd.DataFrame(
                 [(v.size, v.min(), v.max(), np.unique(v).size)],
                 columns=["n", "vmin", "vmax", "nd"]) if v.size else None
@@ -1396,13 +1473,14 @@ def _value_hist(index, query: str, field: str, mode: str, exclude,
             vmin, wd = b[0], _bin_width(b[0], b[1], n_bins)
 
     def partial(shard, hit, gather):
-        v = _present(*gather(field)).astype(np.int64)
+        v = gather(field).astype(np.int64)
         ub, cnt = np.unique((v - vmin) // wd, return_counts=True)
         return pd.DataFrame({"b": ub, "cnt": cnt})
 
     return [(vmin + wd * b, c) for b, c in _aggregate(
         index, m, "b long, cnt long", partial,
-        lambda p: _sum_by(p, "b", "cnt"))]
+        lambda p: _sum_by(p, "b", "cnt"),
+        merge=(["b"], lambda p: _summed(p, "b", "cnt"), "b long, cnt long"))]
 
 
 def match_mad(index, query: str, field: str, mode: str = "OR",
@@ -1534,6 +1612,9 @@ def search_groups(index, query: str, field: str, k: int = 10,
     scoring shard function in place of ``hits``: ``search``'s kernel
     ``_score_shard_batch`` scores every hit of the shard (a one-entry
     set at k=width), and the shard emits one partial row per group.
+    Each group's fold and the top-k cut run where its shard rows meet
+    (on the executors on the distributed route, which collects at most
+    ``k`` groups per hash group).
     """
     from .query import _score_shard_batch
     _warn_if_stale(index)
@@ -1545,8 +1626,12 @@ def search_groups(index, query: str, field: str, k: int = 10,
     _dv_kind(index, field, "search_groups")
     _require_dv(index, dv_filter)
     ddl = "g string, shard int, n long, sm double, mx double"
+    limit = _doc_limit(index, k)
 
-    def combine(p):
+    def best(rows):
+        return sorted(rows, key=lambda r: (-r[1], r[0]))[:limit]
+
+    def groups(p):  # exact over rows holding every row of their groups
         rows = []
         for g, grp in p.sort_values("shard").groupby("g", sort=False):
             n, sm = int(grp["n"].sum()), 0.0
@@ -1555,8 +1640,8 @@ def search_groups(index, query: str, field: str, k: int = 10,
             rows.append((g, {"max": float(grp["mx"].max()), "sum": sm,
                              "avg": sm / n, "count": float(n)}[score_mode],
                          n))
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        return rows[:_doc_limit(index, k)]
+        return pd.DataFrame(best(rows),
+                            columns=["group_key", "score", "n_docs"])
 
     def build():
         acfg = index.cfg.analyzer
@@ -1567,8 +1652,7 @@ def search_groups(index, query: str, field: str, k: int = 10,
         lex = index.lookup_terms(sorted(set(terms) | set(neg)))
         known = [t for t in terms if t in lex]
         if not known or (mode == "AND" and len(known) < len(terms)):
-            return _held(index, GROUPS_SCHEMA,
-                         combine(_schema(ddl).empty_table().to_pandas()))
+            return _held(index, GROUPS_SCHEMA, [])
         neg = [t for t in neg if t in lex]
         qtfs = {t: float(qtf[t]) for t in known}
         idfs = {t: float(lex[t]["idf"]) for t in known}
@@ -1608,8 +1692,8 @@ def search_groups(index, query: str, field: str, k: int = 10,
 
         m = _MatchSet(lex, scan, _POST_COLS + ["dls"],
                       sum(int(lex[t]["df"]) for t in scan), None)
-        return _held(index, GROUPS_SCHEMA, combine(_partials(index, m, fn,
-                                                             ddl)))
+        return _held(index, GROUPS_SCHEMA, best(_tuples(_partials(
+            index, m, fn, ddl, merge=(["g"], groups, GROUPS_SCHEMA)))))
 
     return _plan_cached(
         index, ("sg", query, field, k, score_mode, mode, exclude, dv_filter),

@@ -234,6 +234,9 @@ def _require_dv(index, dv_filter: "str | None") -> None:
             "dv_filter requires an index built with a docvalue store "
             "(IndexConfig(doc_values=...)); for arbitrary corpus "
             "predicates use doc_filter instead")
+    if dv_filter is not None:
+        from .docvalues import where
+        where(dv_filter)
 
 
 def _boost_key(boost: "dict | None"):
@@ -1592,6 +1595,23 @@ def _wand_route(index, qs: "_QuerySet", lex: dict, use_wand, single: bool):
 # 0.80 vs 2.02 s at 2.1M, 1.54 vs 2.34 s at 4.2M and 1.83 vs 2.43 s at
 # 6.0M, and tied at 8.4M (2.97 vs 2.96 s): the driver wins at and below
 # the bound.
+# The match-set aggregations (matchops._aggregate) take the same bound on
+# their match set's posting mass (n_docs for "*"). Both routes forced on
+# the same index (docvalues role/ts/conv_id/tool, greedy heaviest-term OR
+# queries, plan cache off; a median of 3 in ascending mass, then of 5 in
+# descending mass for the filter surfaces; driver vs distributed, s):
+# match_stats("*") 0.19/0.87 at 0.65M (n_docs), 0.47/1.41 at 2.8M and
+# 0.80/1.62 at 5.1M (with exclude terms); match_stats 0.37/0.95 at 0.63M,
+# 0.99/1.30 at 4.45M, 1.61/1.34 at 8.4M; match_percentiles (auto: two
+# passes) 0.92/2.66 at 0.63M, 2.21/2.41 at 4.2M, 3.20/3.33 at 8.4M;
+# match_cardinality(conv_id, 100k values) 1.69/2.87 at 0.63M, 1.50/1.54
+# at 4.2M, 2.41/2.12 at 8.4M. Those cross where scoring does. Surfaces
+# that evaluate docvalue predicates per shard cross earlier: 3-filter
+# match_filters 0.72/1.24 at 0.63M, 0.98/1.04 at 3.2M, 1.36/1.26 at 4.45M;
+# 10-filter match_adjacency 1.04/1.59 at 0.63M, 1.25/1.77 at 1.7M,
+# 1.39/1.26 at 2.5M, 1.90/1.25 at 4.45M. Both fit one rule in this unit:
+# a predicate evaluated over the docvalue slices costs a third of a
+# posting per doc (matchops._filtered_match adds it to the mass).
 LOCAL_MAX_POSTINGS = 1 << 22
 # The local route also caps its result rows: its top-k is a literal
 # VALUES relation (_values_relation), which Spark parses and analyzes at

@@ -205,3 +205,78 @@ def test_answer_above_local_max_rows_collects_and_shows(
     df.show(3)
     out = capsys.readouterr().out
     assert f"|{T0}|" in out.replace(" ", "") and "only showing top 3" in out
+
+
+def test_composite_collects_at_most_a_page_per_shard(aidx, monkeypatch,
+                                                     collected):
+    """Each shard sends only its first ``size`` buckets past ``after``:
+    a page over a near-unique key collects at most shards x size
+    partial rows, and the walk gives the driver route's buckets."""
+    size = 3
+    whole = [tuple(r) for r in M.match_composite(
+        aidx, "hot0", ["ts"], size=10 ** 6).collect()]
+    n_shards = -(-int(aidx.n_docs) // aidx.shard_width)
+    assert len(whole) > 4 * n_shards * size
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    walked, after = [], None
+    for _ in range(4):
+        page = [tuple(r) for r in M.match_composite(
+            aidx, "hot0", ["ts"], size=size, after=after).collect()]
+        assert collected[-1].count() <= n_shards * size
+        walked += page
+        after = [page[-1][0]]
+    assert walked == whole[:4 * size]
+
+
+@pytest.mark.parametrize("case", ["cardinality", "rare_terms"])
+def test_reductions_collect_per_hash_group(spark, aidx, monkeypatch,
+                                           collected, case):
+    """Cardinality and rare terms reduce on the executors: the
+    distributed route collects one count (cardinality) or at most ``n``
+    values (rare terms) per hash group of the values, not the values."""
+    groups = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    distinct = M.match_cardinality(aidx, "hot0", "ts").collect()[0][0]
+    assert distinct > 2 * groups
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    if case == "cardinality":
+        out = M.match_cardinality(aidx, "hot0", "ts").collect()
+        assert out[0][0] == distinct
+        assert collected[-1].count() <= groups
+    else:
+        out = M.rare_terms(aidx, "hot0", "ts", n=2).collect()
+        assert len(out) == 2 and all(r.n_docs == 1 for r in out)
+        assert collected[-1].count() <= 2 * groups
+
+
+def test_predicates_are_one_statement(aidx, tmp_path):
+    """A docvalue predicate runs in the embedded DuckDB: one that would
+    start a second statement is refused before it runs."""
+    target = tmp_path / "leak.csv"
+    bad = f"n_docs > 0; COPY buckets TO '{target}'"
+    with pytest.raises(ValueError, match="one SQL expression"):
+        M.match_histogram_having(aidx, "hot0", "ts", 3600, bad)
+    with pytest.raises(ValueError, match="one SQL expression"):
+        M.match_count(aidx, "hot0",
+                      dv_filter=f"role = 'user'; COPY (SELECT 1) TO "
+                                f"'{target}'")
+    assert not target.exists()
+    assert M.match_histogram_having(
+        aidx, "hot0", "ts", 3600, "n_docs > 0").collect()
+
+
+def test_filter_predicates_count_toward_the_gate(aidx, monkeypatch,
+                                                 collected):
+    """match_filters / match_adjacency evaluate each predicate over
+    every docvalue row of a shard, so that work (a third of a posting
+    per doc and predicate) joins the match set's posting mass at the
+    gate: a bound between the two masses sends them to Spark."""
+    mass = M._prep_match(aidx, "rare3", "OR", None, None).mass
+    work = len(USERS) * int(aidx.n_docs) // 3
+    assert M._filtered_match(aidx, "rare3", "OR", None, None,
+                             sorted(USERS.items())).mass == mass + work
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", mass + work - 1)
+    local = M.match_count(aidx, "rare3").collect()
+    assert not collected and local[0].n_docs > 0
+    for agg in (M.match_filters, M.match_adjacency):
+        agg(aidx, "rare3", USERS).collect()
+    assert len(collected) == 2
