@@ -266,7 +266,7 @@ def _partials(index, m: _MatchSet, fn, ddl: str, doc_filter=None,
         keys, reduce, out_ddl = merge
         groups = int(index.spark.conf.get("spark.sql.shuffle.partitions"))
         job = job.groupBy(F.pmod(F.hash(*keys), F.lit(groups))) \
-            .applyInPandas(lambda pdf: reduce(pdf), out_ddl)
+            .applyInPandas(reduce, out_ddl)
     return job.toArrow().to_pandas()
 
 
